@@ -8,11 +8,14 @@ phrase's unique terms (Lucene k1/b from the index stats), ties broken by
 url. This is the classic "phrase by verification" plan for an index without
 positional postings:
 
-  1. candidate retrieval — conjunctive BM25 over the phrase's unique terms,
-     straight from the existing pruned-postings scan + vectorized brute
-     scorer (engine/query.py): bucket-partition-pruned scan, broadcast
-     stats, map-side partial aggregation. No top-k cut here: adjacency
-     filtering happens next, so every conjunctive doc stays a candidate.
+  1. candidate retrieval — conjunctive BM25 over the phrase's unique terms
+     (`scored_docs`) from the query engine's one decode-and-score kernel
+     (engine/query.py): small candidate sets come from the driver-local
+     kernel over a pyarrow-pruned read (terms' postings within
+     LOCAL_MAX_POSTINGS, zero Spark jobs), larger ones from distributed
+     brute force (bucket-partition-pruned scan, broadcast stats, map-side
+     partial aggregation). No top-k cut here: adjacency filtering happens
+     next, so every conjunctive doc stays a candidate.
   2. adjacency verification — semi-join the corpus to the candidate set
      (candidates ≪ corpus for any selective phrase), re-extract + tokenize
      ONLY those rows with the byte-identical analyzer, and keep docs whose
@@ -46,13 +49,14 @@ from engine.analyzer import extract_series, tokenize, tokenize_series
 from engine.build import IndexHandle, open_index
 from engine.query import (
     LOCAL_MAX_POSTINGS,
-    SCORE_SCHEMA,
-    _brute_scorer,
     _docs_df,
-    _local_term_stats,
-    _pruned_postings,
+    _lookup_term_stats,
+    _result_df,
+    _score_all,
+    _top_by_url,
     local_scored_arrays,
-    term_stats,
+    parse_query,
+    query_topk,
 )
 
 _VERIFY_SCHEMA = T.StructType([T.StructField("url", T.StringType())])
@@ -62,20 +66,6 @@ _VERIFY_SCHEMA = T.StructType([T.StructField("url", T.StringType())])
 # pass runs instead (keeps the driver's collect volume and the url IN
 # pushdown list bounded)
 _PREFIX_CAP = 4096
-
-
-def _local_topk_df(spark, rows, out_schema):
-    """Collected top-k rows → local DataFrame preserving row order."""
-    pdf = pd.DataFrame(
-        {
-            "doc_id": pd.Series([int(r["doc_id"]) for r in rows], dtype="int64"),
-            "url": [r["url"] for r in rows],
-            "score": pd.Series(
-                [float(r["score"]) for r in rows], dtype="float64"
-            ),
-        }
-    )
-    return spark.createDataFrame(pdf, out_schema)
 
 
 def _phrase_verifier(phrase_tokens: list[str]):
@@ -103,48 +93,22 @@ def scored_docs(
     terms: list[str],
     conjunctive: bool = True,
 ) -> DataFrame:
-    """All matching docs with their summed BM25 score — query_topk's brute
-    path without the top-k cut. Returns (doc_id, score)."""
-    st = None
-    local_ok = True
-    try:
-        st = _local_term_stats(handle, terms)
-    except Exception:
-        local_ok = False
-        st = term_stats(spark, handle, terms)
+    """All matching docs with their summed BM25 score — query_topk without
+    the top-k cut, with auto mode's choice of path. Returns (doc_id, score).
+    """
+    st, driver_readable = _lookup_term_stats(spark, handle, terms)
     live = [t for t in terms if t in st]
     if (conjunctive and len(live) < len(terms)) or not live:
-        return spark.createDataFrame([], "doc_id long, score double")
-    if local_ok and sum(st[t]["df"] for t in live) <= LOCAL_MAX_POSTINGS:
+        return _result_df(spark, [], [], None, with_url=False)
+    if driver_readable and sum(st[t]["df"] for t in live) <= LOCAL_MAX_POSTINGS:
         # driver-local fast path (same auto-mode crossover as query_topk):
         # when the terms' postings fit the local budget, the pyarrow-pruned
         # read + numpy kernel produces all candidate scores in ~0.1 s with
         # zero Spark jobs — the distributed scan + Arrow scorer + exchange
-        # + agg pipeline below costs ~0.5 s of pure overhead at that size
-        uniq, scores = local_scored_arrays(handle, live, st, conjunctive)
-        pdf = pd.DataFrame(
-            {
-                "doc_id": pd.Series(uniq, dtype="int64"),
-                "score": pd.Series(scores, dtype="float64"),
-            }
-        )
-        return spark.createDataFrame(pdf, "doc_id long, score double")
-    k1, b = handle.stats["k1"], handle.stats["b"]
-    avgdl = handle.stats["avgdl"]
-    blocks = _pruned_postings(spark, handle, live)
-    scored = blocks.mapInPandas(_brute_scorer(st, k1, b, avgdl), SCORE_SCHEMA)
-    agg = scored.groupBy("doc_id").agg(
-        F.sum("contrib").alias("score"), F.count("*").alias("nt")
-    )
-    if conjunctive:
-        agg = agg.filter(F.col("nt") == len(live))
-    return agg.select("doc_id", F.col("score").cast("double"))
-
-
-def conjunctive_scored(
-    spark: SparkSession, handle: IndexHandle, terms: list[str]
-) -> DataFrame:
-    return scored_docs(spark, handle, terms, conjunctive=True)
+        # + agg pipeline costs ~0.5 s of pure overhead at that size
+        ids, scores = local_scored_arrays(handle, live, st, conjunctive)
+        return _result_df(spark, ids, scores, None, with_url=False)
+    return _score_all(spark, handle, live, st, conjunctive)
 
 
 def filtered_topk(
@@ -180,9 +144,12 @@ def filtered_topk(
     the brute plan. At 10^12 docs the capped path corresponds to shipping
     a compressed id set/bitmap with the query; per-facet block maxima at
     build time remain the declared design for dense pre-declared facets.
-    Returns (doc_id, url, score) ordered by (score desc, url asc)."""
+    Returns (doc_id, url, score) ordered by (score desc, url asc). An
+    unknown mode raises ValueError."""
+    if mode not in ("brute", "wand"):
+        raise ValueError(f"mode must be 'brute' or 'wand', got {mode!r}")
     handle = open_index(index) if isinstance(index, str) else index
-    terms = list(dict.fromkeys(tokenize(query)))
+    terms = parse_query(query)
     docs_full = _docs_df(spark, handle)
     docs = docs_full.select("doc_id", "url")
     # Resolve the predicate against the index's own docs table when it only
@@ -211,14 +178,10 @@ def filtered_topk(
         rows = resolve.limit(max_filter_ids + 1).collect()
         if len(rows) <= max_filter_ids:
             if not rows:
-                return spark.createDataFrame(
-                    [], "doc_id long, url string, score double"
-                )
+                return _result_df(spark, [], [], None, with_url=True)
             allowed = np.asarray(
                 sorted(int(r["doc_id"]) for r in rows), dtype=np.int64
             )
-            from engine.query import query_topk
-
             return query_topk(
                 spark, handle, query, k=k, mode="wand",
                 conjunctive=conjunctive, with_url=True, tiebreak="url",
@@ -237,11 +200,7 @@ def filtered_topk(
         matched = scored.join(docs, "doc_id").join(
             keep_urls, "url", "left_semi"
         )
-    return (
-        matched.select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("url"))
-        .limit(k)
-    )
+    return _top_by_url(matched, k)
 
 
 def phrase_topk(
@@ -258,25 +217,14 @@ def phrase_topk(
     Returns (doc_id, url, score) ordered by (score desc, url asc)."""
     handle = open_index(index) if isinstance(index, str) else index
     ordered = tokenize(phrase)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
     if not ordered:
-        return spark.createDataFrame([], out_schema)
+        return _result_df(spark, [], [], None, with_url=True)
     uniq = list(dict.fromkeys(ordered))
-    cand = conjunctive_scored(spark, handle, uniq)
+    cand = scored_docs(spark, handle, uniq)
     docs = _docs_df(spark, handle).select("doc_id", "url")
     cand_urls = cand.join(docs, "doc_id")  # (doc_id, score, url)
     if len(ordered) == 1:
-        return (
-            cand_urls.select("doc_id", "url", "score")
-            .orderBy(F.desc("score"), F.asc("url"))
-            .limit(k)
-        )
+        return _top_by_url(cand_urls, k)
     # Prefix verification: adjacency only ever REMOVES candidates, so the
     # verified top-k is the first k rows of the (score desc, url asc)
     # ordered candidate list that pass verification. Verify the ordered
@@ -305,14 +253,10 @@ def phrase_topk(
         # fill k in ONE round
         batch = max(8 * k, 512)
         while checked < _PREFIX_CAP:
-            prefix = (
-                cand_urls.orderBy(F.desc("score"), F.asc("url"))
-                .limit(checked + batch)
-                .collect()
-            )
+            prefix = _top_by_url(cand_urls, checked + batch).collect()
             new = prefix[checked:]
             if not new:  # candidate list exhausted — done, however many
-                return _local_topk_df(spark, verified_rows[:k], out_schema)
+                break
             urls = [r["url"] for r in new]
             ok = {
                 r["url"]
@@ -329,25 +273,26 @@ def phrase_topk(
             }
             verified_rows.extend(r for r in new if r["url"] in ok)
             if len(verified_rows) >= k:
-                return _local_topk_df(spark, verified_rows[:k], out_schema)
+                break
             checked = len(prefix)
             batch *= 4
-        # fallback: full verification of the remaining candidate set (the
-        # pre-round-6 plan), still over the persisted candidates
-        verified = (
-            verify_in.join(cand_urls.select("url"), "url", "left_semi")
-            .select("url", "html", "text")
-            .mapInPandas(verifier, _VERIFY_SCHEMA)
-        )
-        rows = (
-            cand_urls.join(verified, "url", "left_semi")
-            .select("doc_id", "url", "score")
-            .orderBy(F.desc("score"), F.asc("url"))
-            .limit(k)
-            .collect()
-        )
-        return _local_topk_df(spark, rows, out_schema)
+        else:
+            # fallback: full verification of the remaining candidate set
+            # (the pre-round-6 plan), still over the persisted candidates
+            verified = (
+                verify_in.join(cand_urls.select("url"), "url", "left_semi")
+                .select("url", "html", "text")
+                .mapInPandas(verifier, _VERIFY_SCHEMA)
+            )
+            verified_rows = _top_by_url(
+                cand_urls.join(verified, "url", "left_semi"), k
+            ).collect()
     finally:
-        # every return above is a collected local relation, so the cache
-        # can be dropped before returning — no persist leak per query
+        # the result is a collected local relation, so the cache can be
+        # dropped before returning — no persist leak per query
         cand_urls.unpersist()
+    top = verified_rows[:k]
+    return _result_df(
+        spark, [r["doc_id"] for r in top], [r["score"] for r in top],
+        [r["url"] for r in top], with_url=True,
+    )

@@ -5,11 +5,12 @@ The verification-based `engine.phrase.phrase_topk` is exact but its cost is
 O(candidate text volume): for a stopword-grade phrase ("the data") the
 conjunctive candidate set approaches the corpus, and verification
 re-tokenizes a large corpus slice per query. The standard escape hatch —
-named in engine/phrase.py:23-29 — is a positional index: per (term, doc)
-the token-stream positions of the term, delta-encoded with the same varint
-machinery as the main postings (engine/codec.py round-trips arbitrary uint
-streams). A phrase query then verifies adjacency from the index artifact
-alone and never touches corpus text.
+named in the "Scale notes" of engine.phrase's module docstring — is a
+positional index: per (term, doc) the token-stream positions of the term,
+delta-encoded with the same varint machinery as the main postings
+(engine/codec.py round-trips arbitrary uint streams). A phrase query then
+verifies adjacency from the index artifact alone and never touches corpus
+text.
 
 Artifact layout (mirrors the main postings table):
 
@@ -48,6 +49,7 @@ behavior is identical.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import zlib
@@ -66,7 +68,14 @@ from engine.codec import (
     varint_decode_concat,
     varint_encode_rows,
 )
-from engine.query import _local_term_stats, _wand_n_groups, term_stats
+from engine.query import (
+    _lookup_term_stats,
+    _result_df,
+    _run_shards,
+    _shard_layout,
+    _term_buckets,
+    _top_by_url,
+)
 
 POS_PARTIAL_SCHEMA = T.StructType(
     [
@@ -430,16 +439,9 @@ def phrase_match_docs(
     uniq = list(dict.fromkeys(ordered_terms))
     if not uniq:
         return spark.createDataFrame([], MATCH_SCHEMA)
-    try:
-        st = _local_term_stats(handle, uniq)
-    except Exception:
-        st = term_stats(spark, handle, uniq)
+    st, _ = _lookup_term_stats(spark, handle, uniq)
     if any(t not in st for t in uniq):
         return spark.createDataFrame([], MATCH_SCHEMA)
-    n_buckets = int(handle.stats["n_term_buckets"])
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % n_buckets for t in uniq}
-    )
     # memoized base scan with explicit schema (skips footer inference and
     # directory re-listing per query; lazy plan only, data read per query)
     pos_cache = handle.__dict__.setdefault("_pos_df_cache", {})
@@ -448,39 +450,14 @@ def phrase_match_docs(
         base = spark.read.schema(POS_BLOCK_SCHEMA).parquet(positions_dir)
         pos_cache[positions_dir] = base
     blocks = (
-        base.filter(F.col("bucket").isin(buckets))
+        base.filter(F.col("bucket").isin(_term_buckets(handle, uniq)))
         .filter(F.col("term").isin(uniq))
     )
-    range_size = int(handle.stats["range_size"])
-    n_ranges = int(handle.stats.get("n_doc_ranges", 32))
-    n_groups = _wand_n_groups(handle, st, uniq, shard_target)
-    width = range_size * (-(-n_ranges // n_groups))
-    if n_groups == 1:
-        kernel = _adjacency_kernel(ordered_terms, 1 << 62)
-
-        def _single(batches):
-            pdfs = [p for p in batches if len(p)]
-            if pdfs:
-                out = kernel(pd.concat(pdfs, ignore_index=True))
-                if len(out):
-                    yield out
-
-        return (
-            blocks.withColumn("shard", F.lit(0).cast("long"))
-            .coalesce(1)
-            .mapInPandas(_single, MATCH_SCHEMA)
-        )
-    kernel = _adjacency_kernel(ordered_terms, width)
-    shard = blocks.withColumn(
-        "shard",
-        F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / width).cast("long"),
-                (F.col("last_doc_id") / width).cast("long"),
-            )
-        ),
+    n_groups, width = _shard_layout(handle, st, uniq, shard_target)
+    return _run_shards(
+        blocks, n_groups, width,
+        functools.partial(_adjacency_kernel, ordered_terms), MATCH_SCHEMA,
     )
-    return shard.groupBy("shard").applyInPandas(kernel, MATCH_SCHEMA)
 
 
 def phrase_topk_positional(
@@ -495,27 +472,21 @@ def phrase_topk_positional(
     phrase's unique terms, same (score desc, url asc) order), but adjacency
     is verified from index blocks — query cost is O(phrase terms' position
     blocks), independent of corpus text volume."""
-    from engine.phrase import conjunctive_scored
+    from engine.phrase import scored_docs
 
     handle = open_index(index) if isinstance(index, str) else index
     ordered = tokenize(phrase)
-    out_schema = "doc_id long, url string, score double"
     if not ordered:
-        return spark.createDataFrame([], out_schema)
+        return _result_df(spark, [], [], None, with_url=True)
     uniq = list(dict.fromkeys(ordered))
-    cand = conjunctive_scored(spark, handle, uniq)
+    cand = scored_docs(spark, handle, uniq)
     if len(ordered) > 1:
         matched = phrase_match_docs(spark, handle, positions_dir, ordered)
         cand = cand.join(matched, "doc_id", "left_semi")
     from engine.query import _docs_df
 
     docs = _docs_df(spark, handle).select("doc_id", "url")
-    return (
-        cand.join(docs, "doc_id")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("url"))
-        .limit(k)
-    )
+    return _top_by_url(cand.join(docs, "doc_id"), k)
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,13 @@
 """BM25 top-k query engine (SURVEY.md §2.B10–B14, §3.3).
 
-Two physical strategies, rank-identical by construction (property-tested):
+Three physical strategies, rank-identical by construction (property-tested)
+because all of them score with one decode-and-score kernel — the per-term
+block decoder ``_decode_blocks`` and the per-doc aggregator
+``_sum_per_doc``, which sums each doc's term contributions in sorted-term
+order, so WAND and local scores are bit-equal:
 
-- ``brute``: decode every posting of the query terms, explode to
-  (doc_id, contrib), groupBy(doc_id).sum → TakeOrderedAndProject. Fully
+- ``brute``: decode every posting of the query terms and sum per doc within
+  each Arrow batch, then groupBy(doc_id).sum → TakeOrderedAndProject. Fully
   distributed, no pruning — the correctness baseline.
 - ``wand``: block-max WAND (BASELINE.json:6). Blocks are grouped into
   doc-range shards (hot-term salts are doc-range-aligned by the build, so
@@ -14,10 +18,15 @@ Two physical strategies, rank-identical by construction (property-tested):
   skipped, so results are rank-identical to brute force (§2.B14 exactness
   guard). Local top-k per shard, then a global TakeOrdered over ≤ shards·k
   rows.
+- ``local``: the kernel runs on the driver over a pyarrow read of the pruned
+  blocks — zero Spark jobs, for interactive p50 (SURVEY.md §7.2.6).
 
-Both paths prune the postings scan to the query terms' hash buckets
-(partition pruning on the `bucket=` directory column) and push `term IN`
-down to parquet row groups (rows are term-sorted within buckets).
+``auto`` runs ``local`` when the query terms' postings fit
+LOCAL_MAX_POSTINGS and ``wand`` otherwise.
+
+Every scan prunes the postings to the query terms' hash buckets (partition
+pruning on the `bucket=` directory column) and pushes `term IN` down to
+parquet row groups (rows are term-sorted within buckets).
 
 Term stats (df/idf) are broadcast to executors (B11) — they ride the
 mapInPandas closure after a driver-side lookup of ≤|query| rows.
@@ -31,25 +40,28 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as ds
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from engine.analyzer import tokenize
-from engine.build import IndexHandle, open_index
-from engine.codec import (
-    bm25_tf_norm,
-    decode,
-    decode_concat,
-    delta_decode,
-    delta_decode_blocks,
-    idf,
+from engine.build import POSTINGS_SCHEMA, IndexHandle, open_index
+from engine.codec import bm25_tf_norm, decode_concat, delta_decode_blocks, idf
+
+RESULT_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("url", T.StringType()),
+        T.StructField("score", T.DoubleType()),
+    ]
 )
 
 SCORE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("contrib", T.DoubleType()),
+        T.StructField("nt", T.LongType()),
     ]
 )
 
@@ -57,7 +69,6 @@ TOPK_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("score", T.DoubleType()),
-        T.StructField("n_terms", T.IntegerType()),
         # max score among candidates the shard's top-k heap DROPPED
         # (constant per shard; -inf if nothing was dropped): the url
         # tie-break needs its floor rescan only when a dropped candidate
@@ -89,8 +100,6 @@ def _postings_df(spark: SparkSession, handle: IndexHandle) -> DataFrame:
     reads the parquet files."""
     df = handle.__dict__.get("_postings_df")
     if df is None:
-        from engine.build import POSTINGS_SCHEMA
-
         df = spark.read.schema(POSTINGS_SCHEMA).parquet(handle.postings_path)
         handle.__dict__["_postings_df"] = df
     return df
@@ -102,18 +111,9 @@ def _pa_dataset(handle: IndexHandle, key: str, path: str, partitioning=None):
     is read per query."""
     dset = handle.__dict__.get(key)
     if dset is None:
-        import pyarrow.dataset as ds
-
-        kw = {"partitioning": partitioning} if partitioning else {}
-        dset = ds.dataset(path, format="parquet", **kw)
+        dset = ds.dataset(path, format="parquet", partitioning=partitioning)
         handle.__dict__[key] = dset
     return dset
-
-
-def _pa_field(name: str):
-    import pyarrow.dataset as ds
-
-    return ds.field(name)
 
 
 def _docs_df(spark: SparkSession, handle: IndexHandle) -> DataFrame:
@@ -126,15 +126,19 @@ def _docs_df(spark: SparkSession, handle: IndexHandle) -> DataFrame:
     return df
 
 
+def _term_buckets(handle: IndexHandle, terms: list[str]) -> list[int]:
+    """The `bucket=` partitions holding these terms' postings (and
+    positions): crc32(term) % n_term_buckets, as the build lays them out."""
+    n_buckets = int(handle.stats["n_term_buckets"])
+    return sorted({zlib.crc32(t.encode("utf-8")) % n_buckets for t in terms})
+
+
 def _pruned_postings(
     spark: SparkSession, handle: IndexHandle, terms: list[str]
 ) -> DataFrame:
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % handle.stats["n_term_buckets"] for t in terms}
-    )
     return (
         _postings_df(spark, handle)
-        .filter(F.col("bucket").isin(buckets))
+        .filter(F.col("bucket").isin(_term_buckets(handle, terms)))
         .filter(F.col("term").isin(terms))
     )
 
@@ -155,47 +159,110 @@ def term_stats(spark: SparkSession, handle: IndexHandle, terms: list[str]) -> di
     }
 
 
+def _lookup_term_stats(
+    spark: SparkSession, handle: IndexHandle, terms: list[str]
+) -> tuple[dict, bool]:
+    """Term stats for a query: a driver-side pyarrow read (no Spark job),
+    falling back to the Spark `term_stats` read when pyarrow can't read the
+    index store (non-local filesystem). Returns (stats, driver_readable);
+    the driver-local scoring kernel needs driver_readable."""
+    try:
+        return _local_term_stats(handle, terms), True
+    except Exception:
+        return term_stats(spark, handle, terms), False
+
+
+def _decode_blocks(cols: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The query-time postings decoder: one term's blocks as postings
+    columns (column name → per-block values) → concatenated int64
+    (doc_ids, tfs, dls), one batched decode pass per column. Each block's
+    ids are delta-coded from an absolute first id, so any subset of a
+    term's blocks decodes on its own."""
+    ns = cols["n"]
+    gaps = decode_concat(cols["codec_ids"], cols["ids_enc"], ns)
+    tfs = decode_concat(cols["codec_tfs"], cols["tfs_enc"], ns)
+    dls = decode_concat(cols["codec_dls"], cols["dls_enc"], ns)
+    return (
+        delta_decode_blocks(gaps, ns).astype(np.int64),
+        tfs.astype(np.int64),
+        dls.astype(np.int64),
+    )
+
+
 def _decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    ids = delta_decode(decode(row.codec_ids, row.ids_enc, row.n)).astype(np.int64)
-    tfs = decode(row.codec_tfs, row.tfs_enc, row.n).astype(np.int64)
-    dls = decode(row.codec_dls, row.dls_enc, row.n).astype(np.int64)
-    return ids, tfs, dls
+    """One block (an itertuples row): the WAND sweep's unit of lazy
+    decode."""
+    return _decode_blocks({c: [v] for c, v in row._asdict().items()})
+
+
+def _sum_per_doc(
+    ids_parts: list[np.ndarray], con_parts: list[np.ndarray]
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The per-doc aggregator: per-term (doc_ids, contribs) parts →
+    (doc_ids ascending, BM25 sums, matched-term counts). np.add.at adds in
+    part order and every caller passes its parts in sorted-term order, so a
+    doc's sum is bit-identical on the WAND and driver-local paths — the url
+    tie-break compares scores exactly. (Brute adds partial sums of
+    different Arrow batches in Spark, in no fixed order.)"""
+    if not ids_parts:
+        return (np.empty(0, np.int64), np.empty(0, np.float64),
+                np.empty(0, np.int64))
+    uniq, inv = np.unique(np.concatenate(ids_parts), return_inverse=True)
+    scores = np.zeros(len(uniq), dtype=np.float64)
+    np.add.at(scores, inv, np.concatenate(con_parts))
+    return uniq, scores, np.bincount(inv, minlength=len(uniq))
+
+
+def _score_blocks(
+    cols: dict, stats: dict, k1: float, b: float, avgdl: float
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode and score postings blocks of any mix of the query's terms,
+    given as columns (column name → per-block values): one batched decode
+    per term, idf · tf-norm per posting, summed per doc in sorted-term
+    order → _sum_per_doc's arrays. Brute runs it per Arrow batch, the
+    driver-local path once over the pyarrow read."""
+    rows_of: dict[str, list[int]] = {}
+    for i, t in enumerate(cols["term"]):
+        rows_of.setdefault(t, []).append(i)
+    ids_parts: list[np.ndarray] = []
+    con_parts: list[np.ndarray] = []
+    for tm in sorted(rows_of):
+        idx = rows_of[tm]
+        ids, tfs, dls = _decode_blocks(
+            {c: [v[i] for i in idx] for c, v in cols.items()}
+        )
+        ids_parts.append(ids)
+        con_parts.append(stats[tm]["idf"] * bm25_tf_norm(tfs, dls, k1, b, avgdl))
+    return _sum_per_doc(ids_parts, con_parts)
 
 
 def _brute_scorer(stats: dict, k1: float, b: float, avgdl: float):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids_out: list[np.ndarray] = []
-            contrib_out: list[np.ndarray] = []
-            for tm, g in pdf.groupby("term", sort=True):
-                ns = g["n"].tolist()
-                gaps = decode_concat(
-                    g["codec_ids"].tolist(), g["ids_enc"].tolist(), ns
-                )
-                ids = delta_decode_blocks(gaps, ns).astype(np.int64)
-                tfs = decode_concat(
-                    g["codec_tfs"].tolist(), g["tfs_enc"].tolist(), ns
-                ).astype(np.int64)
-                dls = decode_concat(
-                    g["codec_dls"].tolist(), g["dls_enc"].tolist(), ns
-                ).astype(np.int64)
-                ids_out.append(ids)
-                contrib_out.append(
-                    stats[tm]["idf"] * bm25_tf_norm(tfs, dls, k1, b, avgdl)
-                )
-            if not ids_out:
-                yield pd.DataFrame({"doc_id": [], "contrib": []}).astype(
-                    {"doc_id": np.int64, "contrib": np.float64}
-                )
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(ids_out),
-                    "contrib": np.concatenate(contrib_out),
-                }
+            ids, scores, nts = _score_blocks(
+                pdf.to_dict("list"), stats, k1, b, avgdl
             )
+            yield pd.DataFrame({"doc_id": ids, "contrib": scores, "nt": nts})
 
     return fn
+
+
+def _score_all(
+    spark: SparkSession, handle: IndexHandle, terms: list[str], st: dict,
+    conjunctive: bool,
+) -> DataFrame:
+    """Distributed brute force: every matching doc with its BM25 sum, no
+    top-k cut → (doc_id, score). `terms` are the query's live terms."""
+    k1, b = handle.stats["k1"], handle.stats["b"]
+    scored = _pruned_postings(spark, handle, terms).mapInPandas(
+        _brute_scorer(st, k1, b, handle.stats["avgdl"]), SCORE_SCHEMA
+    )
+    agg = scored.groupBy("doc_id").agg(
+        F.sum("contrib").alias("score"), F.sum("nt").alias("nt")
+    )
+    if conjunctive:
+        agg = agg.filter(F.col("nt") == len(terms))
+    return agg.select("doc_id", "score")
 
 
 def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
@@ -231,13 +298,12 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
 
     Interval accumulation is vectorized: postings inside a block are
     doc-sorted, so an interval is a searchsorted slice; per-interval scores
-    come from one np.add.at over the concatenated slices (no per-posting
-    Python — the same kernel query_topk_local uses)."""
+    come from the shared per-doc aggregator over the concatenated slices
+    (no per-posting Python — the same kernel brute and local use)."""
 
     empty = pd.DataFrame(
         {"doc_id": pd.Series(dtype=np.int64),
          "score": pd.Series(dtype=np.float64),
-         "n_terms": pd.Series(dtype=np.int32),
          "dropped_max": pd.Series(dtype=np.float64)}
     )
 
@@ -299,8 +365,6 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
         dropped_max = -np.inf  # max score this shard's heap ever dropped
         flo_ids: list[np.ndarray] = []
         flo_scores: list[np.ndarray] = []
-        flo_nts: list[np.ndarray] = []
-        nterms_out: dict[int, int] = {}
         decoded: dict[tuple[str, int], tuple] = {}
         for ii in order:
             if ub[ii] <= 0:
@@ -345,23 +409,16 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
             if not ids_parts:
                 continue
             # intervals partition the doc-id space → each doc lands in
-            # exactly one interval of exactly one shard; one add.at pass
-            # aggregates its per-term contributions
-            ids_cat = np.concatenate(ids_parts)
-            con_cat = np.concatenate(con_parts)
-            uniq, inv = np.unique(ids_cat, return_inverse=True)
-            scores = np.zeros(len(uniq), dtype=np.float64)
-            np.add.at(scores, inv, con_cat)
-            nts = np.bincount(inv, minlength=len(uniq)).astype(np.int32)
+            # exactly one interval of exactly one shard; one aggregator pass
+            # sums its per-term contributions
+            uniq, scores, nts = _sum_per_doc(ids_parts, con_parts)
             if conjunctive:
                 sel = nts == n_query_terms
-                uniq, scores, nts = uniq[sel], scores[sel], nts[sel]
+                uniq, scores = uniq[sel], scores[sel]
             if floor is not None:  # collect the whole >= floor set, no heap
                 sel = scores >= floor
-                if sel.any():
-                    flo_ids.append(uniq[sel])
-                    flo_scores.append(scores[sel])
-                    flo_nts.append(nts[sel])
+                flo_ids.append(uniq[sel])
+                flo_scores.append(scores[sel])
                 continue
             if len(heap) >= k:  # only candidates that can beat the threshold
                 thr_s, thr_nd = heap[0]
@@ -371,40 +428,29 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
                     dm = float(drp.max())
                     if dm > dropped_max:
                         dropped_max = dm
-                uniq, scores, nts = uniq[sel], scores[sel], nts[sel]
-            for d, s, nt in zip(uniq.tolist(), scores.tolist(), nts.tolist()):
+                uniq, scores = uniq[sel], scores[sel]
+            for d, s in zip(uniq.tolist(), scores.tolist()):
                 item = (s, -d)
                 if len(heap) < k:
                     heapq.heappush(heap, item)
-                    nterms_out[d] = nt
                 elif item > heap[0]:
                     ev = heapq.heapreplace(heap, item)
-                    nterms_out[d] = nt
                     if ev[0] > dropped_max:
                         dropped_max = ev[0]
                 elif s > dropped_max:
                     dropped_max = s
-        if floor is not None:
-            if not flo_ids:
-                return empty
-            ids_f2 = np.concatenate(flo_ids).astype(np.int64)
-            return pd.DataFrame(
-                {
-                    "doc_id": ids_f2,
-                    "score": np.concatenate(flo_scores).astype(np.float64),
-                    "n_terms": np.concatenate(flo_nts).astype(np.int32),
-                    "dropped_max": np.full(len(ids_f2), -np.inf),
-                }
-            )
-        top = sorted(((s, -nd) for s, nd in heap), key=lambda x: (-x[0], x[1]))
+        if floor is not None:  # dropped_max stays -inf: no heap ran
+            ids_out = np.concatenate([np.empty(0, np.int64), *flo_ids])
+            scores_out = np.concatenate([np.empty(0), *flo_scores])
+        else:  # heap items (score, -doc_id) → score desc, doc_id asc
+            top = sorted(heap, reverse=True)
+            ids_out = [-nd for _, nd in top]
+            scores_out = [s for s, _ in top]
         return pd.DataFrame(
             {
-                "doc_id": np.asarray([d for _, d in top], dtype=np.int64),
-                "score": np.asarray([s for s, _ in top], dtype=np.float64),
-                "n_terms": np.asarray(
-                    [nterms_out[d] for _, d in top], dtype=np.int32
-                ),
-                "dropped_max": np.full(len(top), dropped_max),
+                "doc_id": np.asarray(ids_out, dtype=np.int64),
+                "score": np.asarray(scores_out, dtype=np.float64),
+                "dropped_max": np.full(len(ids_out), dropped_max),
             }
         )
 
@@ -420,8 +466,7 @@ def _resolve_urls(
         return {}
     try:
         dt = _pa_dataset(handle, "_docs_ds", handle.docs_path).to_table(
-            columns=["doc_id", "url"],
-            filter=_pa_field("doc_id").isin(ids),
+            columns=["doc_id", "url"], filter=ds.field("doc_id").isin(ids)
         )
         return dict(zip(dt["doc_id"].to_pylist(), dt["url"].to_pylist()))
     except Exception:
@@ -432,6 +477,109 @@ def _resolve_urls(
             .select("doc_id", "url")
             .collect()
         }
+
+
+def _url_topk(
+    spark: SparkSession, handle: IndexHandle, ids: list[int],
+    scores: list[float], k: int,
+) -> tuple[list[int], list[float], list[str]]:
+    """The driver-side url tie-break: top-k of a candidate set ordered by
+    (score desc, url asc), the order the ANSI-SQL oracle expresses. EXACT
+    only when the candidates hold every doc scoring above the kth score
+    plus the ENTIRE kth-score tie group — callers guarantee that; ties are
+    exact float equalities because WAND and local sum with one kernel in
+    one order. Resolves the candidates' urls once. Returns (ids, scores,
+    urls)."""
+    url_map = _resolve_urls(spark, handle, ids)
+    urls = [url_map.get(d) for d in ids]
+    top = sorted(range(len(ids)), key=lambda i: (-scores[i], urls[i]))[:k]
+    return ([ids[i] for i in top], [scores[i] for i in top],
+            [urls[i] for i in top])
+
+
+def _top_by_url(df: DataFrame, k: int) -> DataFrame:
+    """The distributed form of the url tie-break, for plans that stay in
+    Spark: (doc_id, url, score) rows of `df`, top k by (score desc,
+    url asc)."""
+    return (
+        df.select("doc_id", "url", "score")
+        .orderBy(F.desc("score"), F.asc("url"))
+        .limit(k)
+    )
+
+
+def _result_df(
+    spark: SparkSession, ids, scores, urls: list | None, with_url: bool
+) -> DataFrame:
+    """The one top-k result frame: RESULT_SCHEMA rows in the given order,
+    url null where `urls` (aligned with ids) is None, and no url column
+    when with_url is False."""
+    schema = T.StructType(
+        [f for f in RESULT_SCHEMA.fields if with_url or f.name != "url"]
+    )
+    pdf = pd.DataFrame(
+        {
+            "doc_id": pd.Series(ids, dtype="int64"),
+            "url": urls,
+            "score": pd.Series(scores, dtype="float64"),
+        }
+    )
+    # pandas→Arrow createDataFrame is ~10x cheaper than the row-list path
+    return spark.createDataFrame(pdf[schema.fieldNames()], schema)
+
+
+def _run_shards(
+    blocks: DataFrame, n_groups: int, width: int, kernel_for, schema
+) -> DataFrame:
+    """The one per-shard dispatcher (WAND top-k, its floor rescan,
+    positional adjacency): runs `kernel_for(range_size)` — a pandas
+    frame → pandas frame kernel over one doc-range shard — on the pruned
+    block scan."""
+    if n_groups == 1:
+        # single shard ⇒ no co-location needed: fold the pruned scan into
+        # one task and run the kernel there — one stage, no shuffle. The
+        # range is unbounded: doc ids may exceed range_size × n_ranges when
+        # the id buckets are skewed, and nothing may be clipped away here.
+        kernel = kernel_for(1 << 62)
+
+        def _single(batches):
+            pdfs = [p for p in batches if len(p)]
+            if pdfs:
+                yield kernel(pd.concat(pdfs, ignore_index=True))
+
+        return (
+            blocks.withColumn("shard", F.lit(0).cast("long"))
+            .coalesce(1)
+            .mapInPandas(_single, schema)
+        )
+    # a block overlapping multiple doc-range shards is replicated to each
+    # (kernels clip to their own range); the shuffle payload is
+    # ≤ blocks × spanned shards rows
+    shard = F.explode(
+        F.sequence(
+            (F.col("first_doc_id") / width).cast("long"),
+            (F.col("last_doc_id") / width).cast("long"),
+        )
+    )
+    return (
+        blocks.withColumn("shard", shard)
+        .groupBy("shard")
+        .applyInPandas(kernel_for(width), schema)
+    )
+
+
+def _collect_topk(
+    scored: DataFrame, k: int
+) -> tuple[list[int], list[float]]:
+    """Top-k (doc_id, score) of a distributed scored frame in
+    (score desc, doc_id asc) order, collected in one Spark job."""
+    rows = (
+        scored.orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+        .select("doc_id", "score")
+        .collect()
+    )
+    return [int(r["doc_id"]) for r in rows], [float(r["score"]) for r in rows]
 
 
 def query_topk(
@@ -448,8 +596,11 @@ def query_topk(
 ) -> DataFrame:
     """Top-k BM25. Returns (doc_id, url?, score) ordered by
     (score desc, doc_id asc) — the golden tie-break (SURVEY.md §5.2).
-    tiebreak="url" (brute and wand modes) breaks exact-score ties by url
-    instead, which is what the ANSI-SQL oracle can express.
+    mode is "brute", "wand", "local" or "auto" (see the module docstring);
+    local and auto run wand when the driver can't read the index files.
+    tiebreak="url" breaks exact-score ties by url instead, which is what
+    the ANSI-SQL oracle can express. k=0 returns no rows without running a
+    Spark job; an unknown mode or tiebreak, or k < 0, raises ValueError.
     shard_target overrides WAND_SHARD_TARGET (postings per WAND shard) —
     the scorer is exact for any doc-range partitioning, so this only moves
     the fan-out/latency trade-off; the bench uses it to exercise the
@@ -459,140 +610,98 @@ def query_topk(
     is cut over allowed docs only, and allowed-empty intervals are skipped
     before any block decode (engine.phrase.filtered_topk resolves a facet
     predicate to this array and is the intended entry point)."""
-    handle = open_index(index) if isinstance(index, str) else index
+    if mode not in ("brute", "wand", "local", "auto"):
+        raise ValueError(
+            f"mode must be 'brute', 'wand', 'local' or 'auto', got {mode!r}"
+        )
+    if tiebreak not in ("doc_id", "url"):
+        raise ValueError(f"tiebreak must be 'doc_id' or 'url', got {tiebreak!r}")
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
     if doc_filter is not None and mode != "wand":
         raise ValueError("doc_filter requires mode='wand'")
-    terms = parse_query(query)
-    if mode in ("local", "auto"):
-        # the driver-local path needs pyarrow-readable index files; on a
-        # non-local index store fall back to the distributed wand path (same
-        # guard the stats lookup below uses)
-        try:
-            st_local = _local_term_stats(handle, terms)
-        except Exception:
-            st_local = None
-        if st_local is not None:
-            total = sum(v["df"] for v in st_local.values())
-            if mode == "local" or total <= LOCAL_MAX_POSTINGS:
-                return query_topk_local(
-                    spark, handle, query, k=k, conjunctive=conjunctive,
-                    with_url=with_url, stats=st_local, tiebreak=tiebreak,
-                )
-        mode = "wand"
-    try:
-        # driver-side stats lookup via pyarrow (no Spark job); the dict is
-        # shipped to executors in the scoring closure (B11 broadcast stats)
-        st = _local_term_stats(handle, terms)
-    except Exception:  # non-local filesystem → fall back to a Spark read
-        st = term_stats(spark, handle, terms)
-    terms = [t for t in terms if t in st]  # zero-hit terms drop out
-    empty = spark.createDataFrame(
-        [],
-        schema=T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("url", T.StringType()),
-                T.StructField("score", T.DoubleType()),
-            ]
-        ),
-    )
-    if not terms or (conjunctive and len(terms) < len(parse_query(query))):
-        return empty.drop(*([] if with_url else ["url"]))
-    if doc_filter is not None and len(doc_filter) == 0:
-        return empty.drop(*([] if with_url else ["url"]))
-    k1, b = handle.stats["k1"], handle.stats["b"]
-    avgdl, n_docs = handle.stats["avgdl"], handle.stats["n_docs"]
-    blocks = _pruned_postings(spark, handle, terms)
+    handle = open_index(index) if isinstance(index, str) else index
+    all_terms = parse_query(query)
+    if k == 0 or not all_terms or (
+        doc_filter is not None and len(doc_filter) == 0
+    ):
+        return _result_df(spark, [], [], None, with_url)
+    # the dict is shipped to executors in the scoring closure (B11
+    # broadcast stats)
+    st, driver_readable = _lookup_term_stats(spark, handle, all_terms)
+    terms = [t for t in all_terms if t in st]  # zero-hit terms drop out
+    if not terms or (conjunctive and len(terms) < len(all_terms)):
+        return _result_df(spark, [], [], None, with_url)
 
-    if mode == "brute":
-        scored = blocks.mapInPandas(_brute_scorer(st, k1, b, avgdl), SCORE_SCHEMA)
-        agg = scored.groupBy("doc_id").agg(
-            F.sum("contrib").alias("score"), F.count("*").alias("nt")
-        )
-        if conjunctive:
-            agg = agg.filter(F.col("nt") == len(terms))
+    if mode in ("local", "auto") and driver_readable and (
+        mode == "local"
+        or sum(st[t]["df"] for t in terms) <= LOCAL_MAX_POSTINGS
+    ):
+        ids, scores = local_scored_arrays(handle, terms, st, conjunctive)
+        if tiebreak == "url" and len(scores) > k:
+            # every matching doc's score is in memory here: keep every doc
+            # scoring >= the kth score — the ENTIRE kth-score tie group —
+            # for the url sort. No heuristic margin.
+            sel = scores >= -np.partition(-scores, k - 1)[k - 1]
+            ids, scores = ids[sel], scores[sel]
+        elif tiebreak == "doc_id":
+            order = np.lexsort((ids, -scores))[:k]
+            ids, scores = ids[order], scores[order]
+        ids, scores = ids.tolist(), scores.tolist()
+    elif mode == "brute":
+        scored = _score_all(spark, handle, terms, st, conjunctive)
         if tiebreak == "url":
+            # the distributed reference for the oracle tie-break: SQL join
+            # + orderBy, no driver-side step
             docs = _docs_df(spark, handle).select("doc_id", "url")
-            agg = agg.join(docs, "doc_id")
-            topk = agg.orderBy(F.desc("score"), F.asc("url")).limit(k)
-            return topk.select(
-                *(["doc_id", "url"] if with_url else ["doc_id"]),
-                F.col("score").cast("double"),
-            ).orderBy(F.desc("score"), F.asc("url"))
-        topk = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    elif mode == "wand":
+            topk = _top_by_url(scored.join(docs, "doc_id"), k)
+            return topk if with_url else topk.drop("url")
+        ids, scores = _collect_topk(scored, k)
+    else:
         # Query-time shard width adapts to the query's posting volume: the
         # scorer is exact for ANY doc-range partitioning (it clips to its
-        # own range), so light queries run as one shard (one Python task, no
-        # per-group scheduling overhead) while stopword-grade queries fan out
-        # to up to n_doc_ranges shards (~TARGET postings each — seconds of
-        # vectorized kernel work per task at 10^12 docs, bounded memory).
-        range_size = handle.stats["range_size"]
-        n_ranges = handle.stats.get("n_doc_ranges", 32)
-        n_groups = _wand_n_groups(handle, st, terms, shard_target)
+        # own range), so light queries run as one shard (one Python task,
+        # no per-group scheduling overhead) while stopword-grade queries fan
+        # out to up to n_doc_ranges shards (~TARGET postings each — seconds
+        # of vectorized kernel work per task at 10^12 docs, bounded memory).
+        n_groups, width = _shard_layout(handle, st, terms, shard_target)
+        blocks = _pruned_postings(spark, handle, terms)
+        k1, b = handle.stats["k1"], handle.stats["b"]
+        avgdl = handle.stats["avgdl"]
         # ship the allowed-id array via a SparkContext broadcast (torrent,
         # sent once per executor) instead of pickling up to ~32 MB into
         # every task closure (r5 verdict "What's wrong #2"); tiny arrays
         # stay in the closure — a broadcast's setup costs more than
         # shipping a few hundred KB once
-        doc_filter_bc = None
-        if doc_filter is not None:
-            doc_filter_bc = (
-                spark.sparkContext.broadcast(doc_filter)
-                if doc_filter.nbytes > (1 << 20)
-                else doc_filter
-            )
-        width = range_size * (-(-n_ranges // n_groups))
-        if n_groups == 1:
-            # single shard ⇒ no co-location needed: fold the pruned scan into
-            # one task and score it there — one stage, no shuffle. The range
-            # is unbounded: doc ids may exceed range_size × n_ranges when the
-            # id buckets are skewed, and nothing may be clipped away here.
-            scorer = _wand_shard_scorer(
-                st, k1, b, avgdl, k, conjunctive, len(terms), 1 << 62,
-                allowed=doc_filter_bc,
-            )
+        doc_filter_bc = doc_filter
+        if doc_filter is not None and doc_filter.nbytes > (1 << 20):
+            doc_filter_bc = spark.sparkContext.broadcast(doc_filter)
 
-            def _single(batches):
-                pdfs = [p for p in batches if len(p)]
-                if pdfs:
-                    yield scorer(pd.concat(pdfs, ignore_index=True))
-
-            local = (
-                blocks.withColumn("shard", F.lit(0).cast("long"))
-                .coalesce(1)
-                .mapInPandas(_single, TOPK_SCHEMA)
-            )
-        else:
-            scorer = _wand_shard_scorer(
-                st, k1, b, avgdl, k, conjunctive, len(terms), width,
-                allowed=doc_filter_bc,
-            )
-            # a block overlapping multiple doc-range shards is replicated to
-            # each; the shuffle payload is ≤ blocks × spanned shards rows
-            shard = blocks.withColumn(
-                "shard",
-                F.explode(
-                    F.sequence(
-                        (F.col("first_doc_id") / width).cast("long"),
-                        (F.col("last_doc_id") / width).cast("long"),
-                    )
+        def wand(floor=None):
+            return _run_shards(
+                blocks, n_groups, width,
+                lambda rs: _wand_shard_scorer(
+                    st, k1, b, avgdl, k, conjunctive, len(terms), rs,
+                    floor=floor, allowed=doc_filter_bc,
                 ),
+                TOPK_SCHEMA,
             )
-            local = shard.groupBy("shard").applyInPandas(scorer, TOPK_SCHEMA)
-        if tiebreak == "url":
-            # ≤ shards·k candidate rows: collect, resolve urls driver-side,
-            # re-sort by the oracle tie-break. EXACT: every doc scoring
-            # strictly above the global kth candidate score s_k is provably
-            # in the candidate set (a shard that dropped it would have had
-            # k better rows, pushing s_k above that doc's score). Only docs
-            # TYING s_k can be missing — detectable as a shard that
-            # returned exactly k rows with min score == s_k. When detected,
-            # one floor-mode rescan (score >= s_k, block-max pruned)
-            # fetches the complete tie group before the url sort.
-            cand_rows = local.collect()
+
+        if tiebreak == "doc_id":
+            ids, scores = _collect_topk(wand(), k)
+        else:
+            # ≤ shards·k candidate rows: collect, then the url sort. EXACT:
+            # every doc scoring strictly above the global kth candidate
+            # score s_k is provably in the candidate set (a shard that
+            # dropped it would have had k better rows, pushing s_k above
+            # that doc's score). Only docs TYING s_k can be missing —
+            # detectable as a shard that returned exactly k rows with min
+            # score == s_k. When detected, one floor-mode rescan
+            # (score >= s_k, block-max pruned) fetches the complete tie
+            # group before the url sort.
+            cand_rows = wand().collect()
             cand = {int(r["doc_id"]): float(r["score"]) for r in cand_rows}
-            if len(cand) >= k > 0:
+            if len(cand) >= k:
                 s_k = sorted(cand.values(), reverse=True)[k - 1]
                 per_shard: dict[int, list[float]] = {}
                 per_shard_dm: dict[int, float] = {}
@@ -613,99 +722,22 @@ def query_topk(
                 if any(len(v) == k and min(v) == s_k
                        and per_shard_dm.get(sh2, float("-inf")) == s_k
                        for sh2, v in per_shard.items()):
-                    fscorer = _wand_shard_scorer(
-                        st, k1, b, avgdl, k, conjunctive, len(terms),
-                        (1 << 62) if n_groups == 1 else width, floor=s_k,
-                        allowed=doc_filter_bc,
-                    )
-                    if n_groups == 1:
-                        def _single_f(batches):
-                            pdfs = [p for p in batches if len(p)]
-                            if pdfs:
-                                yield fscorer(
-                                    pd.concat(pdfs, ignore_index=True)
-                                )
-
-                        extra = (
-                            blocks.withColumn(
-                                "shard", F.lit(0).cast("long")
-                            )
-                            .coalesce(1)
-                            .mapInPandas(_single_f, TOPK_SCHEMA)
-                            .collect()
-                        )
-                    else:
-                        extra = (
-                            shard.groupBy("shard")
-                            .applyInPandas(fscorer, TOPK_SCHEMA)
-                            .collect()
-                        )
-                    for r in extra:
+                    for r in wand(floor=s_k).collect():
                         cand.setdefault(int(r["doc_id"]), float(r["score"]))
-            url_map = _resolve_urls(spark, handle, list(cand))
-            ranked = sorted(
-                ((s, url_map.get(d), d) for d, s in cand.items()),
-                key=lambda x: (-x[0], x[1]),
-            )[:k]
-            pdf = pd.DataFrame(
-                {
-                    "doc_id": pd.Series([d for _, _, d in ranked], dtype="int64"),
-                    "url": [u for _, u, _ in ranked],
-                    "score": pd.Series([s for s, _, _ in ranked], dtype="float64"),
-                }
-            )
-            df = spark.createDataFrame(
-                pdf,
-                T.StructType(
-                    [
-                        T.StructField("doc_id", T.LongType()),
-                        T.StructField("url", T.StringType()),
-                        T.StructField("score", T.DoubleType()),
-                    ]
-                ),
-            )
-            return df if with_url else df.drop("url")
-        topk = (
-            local.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", "score")
-        )
+            ids, scores = list(cand), list(cand.values())
+
+    # urls of the ≤k rows (or of the tie group) come from a driver-side
+    # pyarrow lookup — avoids a second job scanning the docs table per
+    # query. Row order is preserved.
+    if tiebreak == "url":
+        ids, scores, urls = _url_topk(spark, handle, ids, scores, k)
+    elif with_url:
+        url_map = _resolve_urls(spark, handle, ids)
+        urls = [url_map.get(d) for d in ids]
     else:
-        raise ValueError(f"unknown mode {mode!r}")
+        urls = None
+    return _result_df(spark, ids, scores, urls, with_url)
 
-    # Materialize the ≤k result now (one Spark job) and resolve urls with a
-    # driver-side pyarrow lookup — avoids a second job scanning the docs
-    # table per query. Row order (score desc, doc_id asc) is preserved.
-    rows = topk.select("doc_id", F.col("score").cast("double")).collect()
-    top_ids = [int(r["doc_id"]) for r in rows]
-    urls: dict[int, str] = {}
-    if with_url and top_ids:
-        urls = _resolve_urls(spark, handle, top_ids)
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    pdf = pd.DataFrame(
-        {
-            "doc_id": pd.Series(top_ids, dtype="int64"),
-            "url": [urls.get(d) for d in top_ids],
-            "score": pd.Series([float(r["score"]) for r in rows], dtype="float64"),
-        }
-    )
-    df = spark.createDataFrame(pdf, out_schema)
-    return df if with_url else df.drop("url")
-
-
-# ---------------------------------------------------------------------------
-# driver-local fast path (SURVEY.md §7.2.6): for interactive p50, when the
-# query terms' postings are small enough, read the pruned blocks directly
-# with pyarrow (partition pruning on bucket= dirs + row-group pruning on the
-# term-sorted rows) and score in numpy on the driver — zero Spark jobs on
-# the hot path, same scoring code, rank-identical by construction.
-# ---------------------------------------------------------------------------
 
 # auto-mode crossover: the driver-local path decodes ~1M postings/s
 # single-threaded (incl. the pyarrow read), while the distributed WAND floor
@@ -713,18 +745,19 @@ def query_topk(
 LOCAL_MAX_POSTINGS = 500_000
 
 
-def _wand_n_groups(
+def _shard_layout(
     handle: IndexHandle, st: dict, terms: list[str],
     shard_target: int | None = None,
-) -> int:
-    """The ONE (total_df, n_doc_ranges) → shard-count formula, shared by
-    query_topk's fan-out decision and wand_shard_count's report so the
-    two can never drift (ADVICE r3). Terms absent from the stats table
-    contribute no postings."""
+) -> tuple[int, int]:
+    """The ONE (total_df, n_doc_ranges) → (shard count, shard width in doc
+    ids) formula, shared by the WAND and positional query paths and
+    wand_shard_count's report so they can never drift (ADVICE r3). Terms
+    absent from the stats table contribute no postings."""
     tgt = shard_target or WAND_SHARD_TARGET
     total_df = sum(st[t]["df"] for t in terms if t in st)
     n_ranges = handle.stats.get("n_doc_ranges", 32)
-    return max(1, min(n_ranges, -(-total_df // tgt)))
+    n_groups = max(1, min(n_ranges, -(-total_df // tgt)))
+    return n_groups, handle.stats["range_size"] * (-(-n_ranges // n_groups))
 
 
 def wand_shard_count(
@@ -733,16 +766,16 @@ def wand_shard_count(
     """How many doc-range shards the adaptive WAND path fans this query out
     to (1 = single shuffle-free task). Exposed so the bench can report the
     salted-shard fan-out per query per round (BENCH_r{N}.json)."""
-    terms = [t for t in parse_query(query)]
-    return _wand_n_groups(
+    terms = parse_query(query)
+    return _shard_layout(
         handle, _local_term_stats(handle, terms), terms, shard_target
-    )
+    )[0]
 
 
 def _local_term_stats(handle: IndexHandle, terms: list[str]) -> dict:
     dset = _pa_dataset(handle, "_terms_ds", handle.terms_path)
     tbl = dset.to_table(
-        columns=["term", "df", "cf"], filter=_pa_field("term").isin(terms)
+        columns=["term", "df", "cf"], filter=ds.field("term").isin(terms)
     )
     n = handle.stats["n_docs"]
     return {
@@ -756,143 +789,26 @@ def _local_term_stats(handle: IndexHandle, terms: list[str]) -> dict:
 def local_scored_arrays(
     handle: IndexHandle, terms: list[str], st: dict, conjunctive: bool
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-local scoring kernel shared by query_topk_local and the
-    phrase/filtered candidate paths: pyarrow-pruned read of the terms'
-    postings (bucket partition + term row-group pruning), batched block
-    decode, one np.add.at aggregation. Returns (doc_ids, scores) after the
-    optional conjunctive mask; empty arrays when nothing matches. Fixed
-    term order for float-sum determinism (golden parity)."""
-    import pyarrow.dataset as ds
-
-    k1, b = handle.stats["k1"], handle.stats["b"]
-    avgdl = handle.stats["avgdl"]
-    empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-    if not terms:
-        return empty
-    buckets = sorted(
-        {zlib.crc32(t.encode()) % handle.stats["n_term_buckets"] for t in terms}
-    )
+    """Driver-local run of the decode-and-score kernel, shared by
+    query_topk's local/auto path and the phrase/filtered candidate paths:
+    pyarrow-pruned read of the terms' postings (bucket partition + term
+    row-group pruning), then the same per-term decode and per-doc sum as
+    brute and WAND. Returns (doc_ids, scores) after the optional
+    conjunctive mask; empty arrays when nothing matches."""
     dset = _pa_dataset(
         handle, "_postings_ds", handle.postings_path, partitioning="hive"
     )
     tbl = dset.to_table(
         columns=["term", "n", "codec_ids", "ids_enc", "codec_tfs", "tfs_enc",
                  "codec_dls", "dls_enc"],
-        filter=ds.field("bucket").isin(buckets) & ds.field("term").isin(terms),
+        filter=ds.field("bucket").isin(_term_buckets(handle, terms))
+        & ds.field("term").isin(terms),
     )
-    ids_all, contrib_all = [], []
-    cols = {c: tbl[c].to_pylist() for c in tbl.column_names}
-    # per-term batched block decode (one vectorized pass per column per
-    # term); fixed term order for float-sum determinism (golden parity)
-    by_term: dict[str, list[int]] = {}
-    for i, tm in enumerate(cols["term"]):
-        by_term.setdefault(tm, []).append(i)
-    for tm in sorted(by_term):
-        idxs = by_term[tm]
-        ns = [cols["n"][i] for i in idxs]
-        gaps = decode_concat(
-            [cols["codec_ids"][i] for i in idxs],
-            [cols["ids_enc"][i] for i in idxs], ns,
-        )
-        ids = delta_decode_blocks(gaps, ns).astype(np.int64)
-        tfs = decode_concat(
-            [cols["codec_tfs"][i] for i in idxs],
-            [cols["tfs_enc"][i] for i in idxs], ns,
-        ).astype(np.int64)
-        dls = decode_concat(
-            [cols["codec_dls"][i] for i in idxs],
-            [cols["dls_enc"][i] for i in idxs], ns,
-        ).astype(np.int64)
-        ids_all.append(ids)
-        contrib_all.append(
-            st[tm]["idf"] * bm25_tf_norm(tfs, dls, k1, b, avgdl)
-        )
-    if not ids_all:
-        return empty
-    ids_cat = np.concatenate(ids_all)
-    con_cat = np.concatenate(contrib_all)
-    uniq, inv = np.unique(ids_cat, return_inverse=True)
-    scores = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(scores, inv, con_cat)
+    ids, scores, nts = _score_blocks(
+        tbl.to_pydict(), st, handle.stats["k1"], handle.stats["b"],
+        handle.stats["avgdl"],
+    )
     if conjunctive:
-        counts = np.bincount(inv, minlength=len(uniq))
-        sel = counts == len(terms)
-        uniq, scores = uniq[sel], scores[sel]
-    return uniq, scores
-
-
-def query_topk_local(
-    spark: SparkSession,
-    handle: IndexHandle,
-    query: str,
-    k: int = 10,
-    conjunctive: bool = False,
-    with_url: bool = True,
-    stats: dict | None = None,
-    tiebreak: str = "doc_id",
-):
-    import pyarrow.dataset as ds
-
-    terms = parse_query(query)
-    st = stats if stats is not None else _local_term_stats(handle, terms)
-    all_terms = terms
-    terms = [t for t in terms if t in st]
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    empty = spark.createDataFrame([], out_schema)
-    if not terms or (conjunctive and len(terms) < len(all_terms)):
-        return empty.drop(*([] if with_url else ["url"]))
-    uniq, scores = local_scored_arrays(handle, terms, st, conjunctive)
-    if len(uniq) == 0:
-        return empty.drop(*([] if with_url else ["url"]))
-    if tiebreak == "url":
-        # oracle tie-break, EXACT: all matching docs' scores are in memory
-        # here, so take every doc scoring above the kth score plus the
-        # ENTIRE kth-score tie group (ties are exact float equalities — all
-        # scores come from the same kernel), resolve urls for just that
-        # set, re-sort by (score desc, url). No heuristic margin.
-        if len(scores) > k:
-            s_k = -np.partition(-scores, k - 1)[k - 1]
-            sel = scores >= s_k
-            cand_ids, cand_scores = uniq[sel], scores[sel]
-        else:
-            cand_ids, cand_scores = uniq, scores
-        dd = _pa_dataset(handle, "_docs_ds", handle.docs_path)
-        dt = dd.to_table(
-            columns=["doc_id", "url"],
-            filter=ds.field("doc_id").isin([int(x) for x in cand_ids]),
-        )
-        urls = dict(zip(dt["doc_id"].to_pylist(), dt["url"].to_pylist()))
-        ranked = sorted(
-            zip(cand_scores.tolist(), [urls.get(int(d)) for d in cand_ids],
-                cand_ids.tolist()),
-            key=lambda x: (-x[0], x[1]),
-        )[:k]
-        top_ids = np.asarray([d for _, _, d in ranked], dtype=np.int64)
-        top_scores = np.asarray([s for s, _, _ in ranked], dtype=np.float64)
-    else:
-        order2 = np.lexsort((uniq, -scores))[:k]
-        top_ids, top_scores = uniq[order2], scores[order2]
-    urls = {}
-    if with_url:
-        dd = _pa_dataset(handle, "_docs_ds", handle.docs_path)
-        dt = dd.to_table(
-            columns=["doc_id", "url"],
-            filter=ds.field("doc_id").isin([int(x) for x in top_ids]),
-        )
-        urls = dict(zip(dt["doc_id"].to_pylist(), dt["url"].to_pylist()))
-    pdf = pd.DataFrame(
-        {
-            "doc_id": top_ids.astype(np.int64),
-            "url": [urls.get(int(d)) for d in top_ids],
-            "score": top_scores.astype(np.float64),
-        }
-    )
-    # pandas→Arrow createDataFrame is ~10x cheaper than the row-list path
-    df = spark.createDataFrame(pdf, out_schema)
-    return df if with_url else df.drop("url")
+        sel = nts == len(terms)
+        ids, scores = ids[sel], scores[sel]
+    return ids, scores

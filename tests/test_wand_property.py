@@ -12,7 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from engine.codec import bm25_tf_norm, delta_encode, encode_best, idf
-from engine.query import _wand_shard_scorer
+from engine.query import _score_blocks, _wand_shard_scorer
 
 K1, B = 1.2, 0.75
 BLOCK = 4  # tiny blocks → many intervals → pruning actually exercised
@@ -155,3 +155,34 @@ def test_wand_multishard_rank_identical(corpus, qterms, conjunctive, k,
     )
     for gs, (_, ws) in zip(merged["score"], want):
         assert abs(gs - ws) < 1e-9
+
+
+@settings(max_examples=120, deadline=None)
+@given(corpus_strategy, query_strategy, st.booleans(), st.integers(2, 6))
+def test_shared_kernel_matches_brute_and_wand_bit_equal(corpus, qterms,
+                                                        conjunctive, k):
+    """The shared decoder + per-doc aggregator over the full block table
+    equals brute force, and its top-k scores are bit-equal (==) to the WAND
+    shard scorer's — the invariant the url tie-break relies on when it
+    compares scores from different paths exactly."""
+    blocks, stats, avgdl, n_docs, tf, dls = _build_blocks(corpus)
+    terms = [t for t in qterms if t in tf]
+    if not terms:
+        return
+    sterms = [str(t) for t in terms]
+    pdf = blocks[blocks["term"].isin(sterms)].assign(shard=0)
+    ids, scores, nts = _score_blocks(pdf.to_dict("list"), stats, K1, B, avgdl)
+    if conjunctive:
+        sel = nts == len(sterms)
+        ids, scores = ids[sel], scores[sel]
+    order = np.lexsort((ids, -scores))
+    ids, scores = ids[order], scores[order]
+    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive)
+    assert ids.tolist() == [d for d, _ in want], (corpus, qterms, conjunctive)
+    for s, (_, ws) in zip(scores, want):
+        assert abs(s - ws) < 1e-9
+    wand = _wand_shard_scorer(
+        stats, K1, B, avgdl, k, conjunctive, len(sterms), range_size=n_docs + 1
+    )(pdf)
+    assert wand["doc_id"].tolist() == ids[:k].tolist()
+    assert wand["score"].tolist() == scores[:k].tolist()
