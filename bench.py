@@ -155,29 +155,19 @@ def main() -> None:
     # phrase + filtered rows (B18/B19/B20) — gated to the unreplicated
     # corpus so the scaling campaign's reps (whose metric is build
     # throughput) don't pay these scans each rep. All min-of-reps like the
-    # other query rows. The positional pair ("data table" selective,
-    # "the data" stopword-grade) is the B20 claim made measurable: the
-    # verification path re-tokenizes candidate text (≈corpus for stopword
-    # phrases) while the positional path reads only index blocks.
+    # other query rows. The phrase pair is "data table" (selective) and
+    # "the data" (stopword-grade); both read only index blocks.
     if scale == 1:
-        from engine.phrase import filtered_topk, phrase_topk
-        from engine.positional import build_positions, phrase_topk_positional
+        from engine.phrase import filtered_topk
+        from engine.positional import phrase_topk_positional
 
         for q in ("data table", "the data"):
             per = []
             for _ in range(reps):
                 t1 = time.time()
-                phrase_topk(spark, handle, wp, q, k=10).collect()
-                per.append(time.time() - t1)
-            timings[f"q_phrase:{q}"] = round(min(per), 4)
-        t1 = time.time()
-        pos_dir = build_positions(spark, handle, wp)
-        timings["build_positions"] = round(time.time() - t1, 3)
-        for q in ("data table", "the data"):
-            per = []
-            for _ in range(reps):
-                t1 = time.time()
-                phrase_topk_positional(spark, handle, pos_dir, q, k=10).collect()
+                phrase_topk_positional(
+                    spark, handle, handle.positions_path, q, k=10
+                ).collect()
                 per.append(time.time() - t1)
             timings[f"q_phrase_pos:{q}"] = round(min(per), 4)
         for m in ("brute", "wand"):

@@ -22,8 +22,11 @@ Pipeline (all DataFrame-declared; Python boundaries are Arrow-batched):
 6.  per-(term,salt) applyInPandas: merge-sort postings, chunk into blocks of
     128, delta+varint/FOR compress, per-block max BM25 score (§2.B8).
 7.  sinks: postings partitioned by term bucket (query-time partition
-    pruning), terms/docs/metrics parquet, stats JSON; atomic manifest publish
-    (reference A15 alias swap analog).
+    pruning), positions (the same layout, for exact-phrase search; see
+    engine/positional.py), terms/docs/metrics parquet, stats JSON; all
+    inside one atomic manifest publish (reference A15 alias swap analog).
+    Positions come from the SPIMI pass of step 3: each term partial also
+    carries its postings' token positions, so the corpus is tokenized once.
 
 Resumable from per-partition checkpoints (north rule): stage-3 partials are
 checkpointed per build-bucket; a re-run recomputes only missing buckets
@@ -33,7 +36,6 @@ checkpointed per build-bucket; a re-run recomputes only missing buckets
 from __future__ import annotations
 
 import json
-import math
 import os
 import time
 import zlib
@@ -65,7 +67,9 @@ DOC_PSEUDO_TERM = ""
 # Term partials travel TRANSIT-ENCODED (varint bytes, ~4-6x smaller than
 # int64 arrays): the term shuffle is the build's largest data movement, so
 # postings cross it as (n, tf_sum, ids_enc=varint gaps w/ absolute first,
-# tfs_enc, dls_enc). The at-rest block codec in the merge stage is
+# tfs_enc, dls_enc, pos_enc). pos_enc concatenates the postings' token
+# positions, one stream per doc (within-doc deltas, absolute first value;
+# the doc's tf is its count). The at-rest block codec in the merge stage is
 # unchanged — index bytes stay identical. Pseudo rows (term="") carry the
 # per-pid docmap as plain arrays (they are exploded JVM-side for the docs
 # table and are a tiny fraction of the volume).
@@ -78,6 +82,7 @@ PARTIALS_SCHEMA = T.StructType(
         T.StructField("ids_enc", T.BinaryType()),
         T.StructField("tfs_enc", T.BinaryType()),
         T.StructField("dls_enc", T.BinaryType()),
+        T.StructField("pos_enc", T.BinaryType()),
         # docmap payload, set only on the pseudo row (term = "")
         T.StructField("doc_ids", T.ArrayType(T.LongType())),
         T.StructField("dls", T.ArrayType(T.IntegerType())),
@@ -104,6 +109,36 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("tfs_enc", T.BinaryType()),
         T.StructField("codec_dls", T.IntegerType()),
         T.StructField("dls_enc", T.BinaryType()),
+        T.StructField("bucket", T.IntegerType()),
+    ]
+)
+
+# per-(term, doc) position rows between the SPIMI partials and the block cut
+POS_ROW_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("salt", T.IntegerType()),
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("n_pos", T.IntegerType()),
+        T.StructField("pos_enc", T.BinaryType()),
+    ]
+)
+
+# positions table: blocks of `block_size` docs per (term, salt) group, in
+# doc order. ids_enc: doc ids, within-block delta varint (first absolute);
+# cnts_enc: positions per doc, varint; pos_enc: the docs' position streams
+# back to back, each within-doc delta varint with an absolute first value.
+POS_BLOCK_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("salt", T.IntegerType()),
+        T.StructField("block_seq", T.IntegerType()),
+        T.StructField("n", T.IntegerType()),
+        T.StructField("first_doc_id", T.LongType()),
+        T.StructField("last_doc_id", T.LongType()),
+        T.StructField("ids_enc", T.BinaryType()),
+        T.StructField("cnts_enc", T.BinaryType()),
+        T.StructField("pos_enc", T.BinaryType()),
         T.StructField("bucket", T.IntegerType()),
     ]
 )
@@ -141,6 +176,31 @@ def assign_doc_ids(webpages: DataFrame, cfg: IndexConfig) -> DataFrame:
     )
 
 
+def _row_deltas(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """uint64 deltas of `values` with the absolute value at each row start:
+    every encoded row or block is a self-contained delta stream."""
+    v = values.astype(np.uint64)
+    gaps = v.copy()
+    gaps[1:] -= v[:-1]
+    gaps[starts] = v[starts]
+    return gaps
+
+
+def _block_seq(blk_grp: np.ndarray) -> np.ndarray:
+    """Each block's index within its group (group ids ascending)."""
+    return (
+        np.arange(len(blk_grp)) - np.searchsorted(blk_grp, blk_grp)
+    ).astype(np.int32)
+
+
+def _term_bucket(terms: np.ndarray, n_buckets: int) -> np.ndarray:
+    """The on-disk term bucket, crc32(term) % n_buckets."""
+    return np.asarray(
+        [zlib.crc32(t.encode("utf-8")) % n_buckets for t in terms],
+        dtype=np.int32,
+    )
+
+
 def _fused_spimi(cfg: IndexConfig, dedup: bool):
     """mapInPandas body fusing three stages into the single corpus shuffle
     (repartition by pid + sortWithinPartitions(url, warc_ts desc, len desc)):
@@ -170,6 +230,7 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
         acc_docs: list[np.ndarray] = []
         acc_dls: list[np.ndarray] = []
         acc_pids: list[np.ndarray] = []
+        acc_pos: list[np.ndarray] = []
         doc_ids_all: dict[int, list[np.ndarray]] = {}
         dls_all: dict[int, list[np.ndarray]] = {}
         urls_all: dict[int, list[np.ndarray]] = {}
@@ -177,16 +238,16 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
         fps_all: dict[int, list[np.ndarray]] = {}
         rank_ctr: dict[int, int] = {}
         last_url: str | None = None
-        n_cells = 0  # accumulated posting cells ≈ 20 B each across streams
+        n_cells = 0  # accumulated token cells ≈ 24 B each across streams
         n_dcells = 0  # docmap entries ≈ 32 B/doc, counted as 2 cells each
         budget_cells = (
-            max(1, int(cfg.spimi_flush_mb * (1 << 20)) // 20)
+            max(1, int(cfg.spimi_flush_mb * (1 << 20)) // 24)
             if cfg.spimi_flush_mb
             else None
         )
         _ROW_COLS = (
             "pid", "term", "n", "tf_sum", "ids_enc", "tfs_enc", "dls_enc",
-            "doc_ids", "dls", "urls", "langs", "fps",
+            "pos_enc", "doc_ids", "dls", "urls", "langs", "fps",
         )
 
         def _drain_postings(out_rows: dict) -> None:
@@ -202,7 +263,7 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
             before block-cutting, so extra partial rows per (term, pid)
             merge exactly like partials from distinct pids."""
             nonlocal vocab, vocab_list, acc_codes, acc_docs, acc_dls
-            nonlocal acc_pids, n_cells
+            nonlocal acc_pids, acc_pos, n_cells
             if not acc_codes:
                 return
             codes = np.concatenate(acc_codes)
@@ -212,13 +273,15 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
             # ONE stable argsort on a combined (pid, code) key: doc_ids are
             # already ascending within each pid (rows arrive url-sorted), so
             # stability gives doc-sorted runs for free — ~3x cheaper than a
-            # 3-key lexsort, which dominated this stage at 32 workers
+            # 3-key lexsort, which dominated this stage at 32 workers.
+            # Stability also keeps each posting's positions ascending.
             V = np.int64(len(vocab_list))
             key = pids_f.astype(np.int64) * V + codes
             order = np.argsort(key, kind="stable")
             key_s = key[order]
             docs_f = docs_f[order]
             dls_f = dls_f[order]
+            pos_f = np.concatenate(acc_pos)[order]
             # run boundaries at (key, doc) change → tf per posting
             change = np.empty(len(key_s), dtype=bool)
             change[0] = True
@@ -237,12 +300,14 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
             rstarts = np.flatnonzero(rchange)
             # transit encode (one vectorized pass per stream): doc ids as
             # within-row deltas with an absolute first value
-            gaps = p_doc.astype(np.uint64).copy()
-            gaps[1:] = p_doc[1:].astype(np.uint64) - p_doc[:-1].astype(np.uint64)
-            gaps[rstarts] = p_doc[rstarts].astype(np.uint64)
-            ids_bufs = varint_encode_rows(gaps, rstarts)
+            ids_bufs = varint_encode_rows(_row_deltas(p_doc, rstarts), rstarts)
             tfs_bufs = varint_encode_rows(tf.astype(np.uint64), rstarts)
             dls_bufs = varint_encode_rows(p_dl.astype(np.uint64), rstarts)
+            # positions: within-posting deltas, absolute at each posting
+            # start; a row's buffer is its postings' streams back to back
+            pos_bufs = varint_encode_rows(
+                _row_deltas(pos_f, starts), starts[rstarts]
+            )
             row_n = np.diff(np.append(rstarts, len(starts)))
             row_tf_sum = np.add.reduceat(tf.astype(np.int64), rstarts)
             out_rows["pid"].extend(p_pid[rstarts].tolist())
@@ -254,12 +319,13 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
             out_rows["ids_enc"].extend(ids_bufs)
             out_rows["tfs_enc"].extend(tfs_bufs)
             out_rows["dls_enc"].extend(dls_bufs)
+            out_rows["pos_enc"].extend(pos_bufs)
             nrows_t = len(rstarts)
             for col in ("doc_ids", "dls", "urls", "langs", "fps"):
                 out_rows[col].extend([None] * nrows_t)
             vocab = {}
             vocab_list = []
-            acc_codes, acc_docs, acc_dls, acc_pids = [], [], [], []
+            acc_codes, acc_docs, acc_dls, acc_pids, acc_pos = [], [], [], [], []
             n_cells = 0
 
         def _drain_docmap(out_rows: dict) -> None:
@@ -283,6 +349,7 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
                 out_rows["ids_enc"].append(None)
                 out_rows["tfs_enc"].append(None)
                 out_rows["dls_enc"].append(None)
+                out_rows["pos_enc"].append(None)
                 out_rows["doc_ids"].append(np.concatenate(ids))
                 out_rows["dls"].append(
                     np.concatenate(dls_all[pid]).astype(np.int32)
@@ -334,6 +401,11 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
                 acc_docs.append(np.repeat(doc_ids, dls))
                 acc_pids.append(np.repeat(pids.astype(np.int32), dls))
                 acc_dls.append(np.repeat(dls.astype(np.int32), dls))
+                # token position within its doc
+                acc_pos.append(
+                    np.arange(len(bcodes), dtype=np.int32)
+                    - np.repeat((np.cumsum(dls) - dls).astype(np.int32), dls)
+                )
                 n_cells += int(dls.sum())
             url_arr = pdf["url"].to_numpy(dtype=object)
             lang_arr = (
@@ -429,12 +501,6 @@ def _salt_split(cfg: IndexConfig, range_size: int, hot_df: dict[str, int]):
                 )
             starts = np.flatnonzero(boundary)
             seg_row = row_of[starts]
-            # re-delta at segment boundaries (absolute first per segment)
-            seg_gaps = ids_f.astype(np.uint64).copy()
-            seg_gaps[1:] = ids_f[1:].astype(np.uint64) - ids_f[:-1].astype(
-                np.uint64
-            )
-            seg_gaps[starts] = ids_f[starts].astype(np.uint64)
             out = pd.DataFrame(
                 {
                     "pid": pdf["pid"].to_numpy()[seg_row],
@@ -444,7 +510,10 @@ def _salt_split(cfg: IndexConfig, range_size: int, hot_df: dict[str, int]):
                     "n": np.diff(np.append(starts, len(ids_f))).astype(
                         np.int32
                     ),
-                    "ids_enc": varint_encode_rows(seg_gaps, starts),
+                    # re-delta at segment boundaries
+                    "ids_enc": varint_encode_rows(
+                        _row_deltas(ids_f, starts), starts
+                    ),
                     "tfs_enc": varint_encode_rows(tfs_f, starts),
                     "dls_enc": varint_encode_rows(dls_f, starts),
                 }
@@ -519,30 +588,15 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float):
         # delta with per-block absolute first value (self-contained blocks;
         # group boundaries always coincide with block starts, so deltas
         # never leak across groups)
-        gaps = ids.astype(np.uint64).copy()
-        gaps[1:] = ids[1:].astype(np.uint64) - ids[:-1].astype(np.uint64)
-        gaps[starts] = ids[starts].astype(np.uint64)
-        ci, ebufs = encode_blocks(gaps, starts)
+        ci, ebufs = encode_blocks(_row_deltas(ids, starts), starts)
         ct, tbufs = encode_blocks(tfs.astype(np.uint64), starts)
         cd, dbufs = encode_blocks(dls.astype(np.uint64), starts)
-        # block_seq = block index minus its group's first block index
-        blk_first = np.empty(len(starts), dtype=bool)
-        blk_first[0] = True
-        blk_first[1:] = blk_grp[1:] != blk_grp[:-1]
-        grp_blk0 = np.zeros(n_grp, dtype=np.int64)
-        first_idx = np.flatnonzero(blk_first)
-        grp_blk0[blk_grp[first_idx]] = first_idx
-        blk_seq = np.arange(len(starts), dtype=np.int64) - grp_blk0[blk_grp]
         term_g = terms_arr[grp_first_row]
-        bucket_g = np.asarray(
-            [zlib.crc32(t.encode("utf-8")) % n_buckets for t in term_g],
-            dtype=np.int32,
-        )
         return pd.DataFrame(
             {
                 "term": term_g[blk_grp],
                 "salt": salts_arr[grp_first_row][blk_grp],
-                "block_seq": blk_seq.astype(np.int32),
+                "block_seq": _block_seq(blk_grp),
                 "n": (ends - starts).astype(np.int32),
                 "first_doc_id": ids[starts],
                 "last_doc_id": ids[ends - 1],
@@ -553,9 +607,18 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float):
                 "tfs_enc": tbufs,
                 "codec_dls": np.asarray(cd, dtype=np.int32),
                 "dls_enc": dbufs,
-                "bucket": bucket_g[blk_grp],
+                "bucket": _term_bucket(term_g, n_buckets)[blk_grp],
             }
         )
+
+    return _stream_groups(process)
+
+
+def _stream_groups(process):
+    """mapInPandas body over a (term, salt)-sorted stream: run `process` on
+    whole (term, salt) groups, all of an Arrow batch's groups in one call.
+    A group that straddles a batch boundary is held back and stitched onto
+    the next batch, so each group is processed exactly once, whole."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         held: pd.DataFrame | None = None  # trailing (possibly split) group
@@ -583,6 +646,125 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float):
     return fn
 
 
+def _positions_rows(range_size: int, hot_terms: set[str]):
+    """mapInPandas body: split term partials into one row per (term, doc)
+    with the doc's salt (hot terms by doc range, as in _salt_split; cold
+    terms 0), its position count (the posting's tf) and its own position
+    stream, which is self-contained (absolute first position)."""
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ns = pdf["n"].to_numpy(np.int64)
+            ids = delta_decode_blocks(
+                varint_decode_concat(pdf["ids_enc"]), ns
+            ).astype(np.int64)
+            cnts = varint_decode_concat(pdf["tfs_enc"]).astype(np.int64)
+            pos_gaps = varint_decode_concat(pdf["pos_enc"])
+            hot = np.repeat(pdf["term"].isin(hot_terms).to_numpy(), ns)
+            yield pd.DataFrame(
+                {
+                    "term": np.repeat(pdf["term"].to_numpy(object), ns),
+                    "salt": np.where(hot, ids // range_size + 1, 0).astype(
+                        np.int32
+                    ),
+                    "doc_id": ids,
+                    "n_pos": cnts.astype(np.int32),
+                    "pos_enc": varint_encode_rows(pos_gaps, np.cumsum(cnts) - cnts),
+                }
+            )
+
+    return fn
+
+
+def _block_cut(block_size: int, n_buckets: int):
+    """mapInPandas body over a (term, salt, doc_id)-sorted stream of
+    per-(term, doc) position rows: cut each group's rows into blocks of
+    `block_size` docs, delta+varint the doc ids, varint the per-doc counts
+    and concatenate the per-doc position streams."""
+
+    def process(pdf: pd.DataFrame) -> pd.DataFrame:
+        nrows = len(pdf)
+        terms_arr = pdf["term"].to_numpy(object)
+        salts_arr = pdf["salt"].to_numpy(np.int32)
+        ids = pdf["doc_id"].to_numpy(np.int64)
+        cnts = pdf["n_pos"].to_numpy(np.int64)
+        bufs = pdf["pos_enc"].tolist()
+        new_grp = np.empty(nrows, dtype=bool)
+        new_grp[0] = True
+        new_grp[1:] = (terms_arr[1:] != terms_arr[:-1]) | (
+            salts_arr[1:] != salts_arr[:-1]
+        )
+        grp_of = np.cumsum(new_grp) - 1
+        grp_first = np.flatnonzero(new_grp)
+        pos_in_grp = np.arange(nrows, dtype=np.int64) - grp_first[grp_of]
+        starts = np.flatnonzero(pos_in_grp % block_size == 0)
+        ends = np.append(starts[1:], nrows)
+        term_b = terms_arr[starts]
+        return pd.DataFrame(
+            {
+                "term": term_b,
+                "salt": salts_arr[starts],
+                "block_seq": _block_seq(grp_of[starts]),
+                "n": (ends - starts).astype(np.int32),
+                "first_doc_id": ids[starts],
+                "last_doc_id": ids[ends - 1],
+                "ids_enc": varint_encode_rows(_row_deltas(ids, starts), starts),
+                "cnts_enc": varint_encode_rows(cnts.astype(np.uint64), starts),
+                "pos_enc": [b"".join(bufs[s:e]) for s, e in zip(starts, ends)],
+                "bucket": _term_bucket(term_b, n_buckets),
+            }
+        )
+
+    return _stream_groups(process)
+
+
+def _bucket_exchange(df: DataFrame, n_buckets: int, *sort_cols: str) -> DataFrame:
+    """Partition rows by the on-disk term bucket (crc32(term) % n_buckets)
+    and sort them by `sort_cols` within each partition: the one exchange a
+    bucketed table's merge stage and its write share."""
+    return (
+        df.withColumn(
+            "bucket",
+            (F.crc32(F.encode(F.col("term"), "utf-8")) % n_buckets).cast("int"),
+        )
+        .repartition(n_buckets, F.col("bucket"))
+        .sortWithinPartitions(*sort_cols)
+        .drop("bucket")
+    )
+
+
+def _write_bucketed(blocks: DataFrame, path: str) -> None:
+    """Write a bucket-partitioned block table. The rows are already
+    partitioned by bucket, so the local sort restores the on-disk row order
+    (bucket, term, salt, block_seq) and satisfies partitionBy's required
+    ordering: no further exchange or writer-inserted sort is paid."""
+    (
+        blocks.sortWithinPartitions("bucket", "term", "salt", "block_seq")
+        .write.partitionBy("bucket")
+        .mode("overwrite")
+        .parquet(path)
+    )
+
+
+def _positions_blocks(
+    pos_partials: DataFrame, cfg: IndexConfig, range_size: int,
+    hot_df: dict[str, int],
+) -> DataFrame:
+    """The positions table (engine/positional.py) from the term partials'
+    pos_enc column: per-(term, doc) rows salted like the postings, one term
+    bucket exchange, doc-ordered block cut."""
+    rows = pos_partials.mapInPandas(
+        _positions_rows(range_size, set(hot_df)), schema=POS_ROW_SCHEMA
+    )
+    return _bucket_exchange(
+        rows, cfg.n_term_buckets, "term", "salt", "doc_id"
+    ).mapInPandas(
+        _block_cut(cfg.block_size, cfg.n_term_buckets), schema=POS_BLOCK_SCHEMA
+    )
+
+
 @dataclass
 class IndexHandle:
     path: str
@@ -604,6 +786,10 @@ class IndexHandle:
     @property
     def metrics_path(self) -> str:
         return os.path.join(self.version_dir, "metrics")
+
+    @property
+    def positions_path(self) -> str:
+        return os.path.join(self.version_dir, "positions")
 
 
 def open_index(path: str, version: str | None = None) -> IndexHandle:
@@ -716,6 +902,9 @@ def build_index(
     term_partials = partials.filter(
         F.col("term") != DOC_PSEUDO_TERM
     ).select("pid", "term", "n", "tf_sum", "ids_enc", "tfs_enc", "dls_enc")
+    pos_partials = partials.filter(F.col("term") != DOC_PSEUDO_TERM).select(
+        "term", "n", "ids_enc", "tfs_enc", "pos_enc"
+    )
 
     # --- stage: stats (B5/B6): docmap rides the pseudo rows -----------------
     docs = doc_rows.select(
@@ -802,19 +991,9 @@ def build_index(
     # each task still compresses thousands of groups per Arrow batch in one
     # vectorized pass (see _merge_compress docstring). Within-bucket
     # parallelism is governed by n_term_buckets (raise it at cluster scale).
-    postings = (
-        salted.withColumn(
-            "bucket",
-            (
-                F.crc32(F.encode(F.col("term"), "utf-8"))
-                % cfg.n_term_buckets
-            ).cast("int"),
-        )
-        .repartition(cfg.n_term_buckets, F.col("bucket"))
-        .sortWithinPartitions("term", "salt")
-        .drop("bucket")
-        .mapInPandas(_merge_compress(cfg, n_docs, avgdl), schema=POSTINGS_SCHEMA)
-    )
+    postings = _bucket_exchange(
+        salted, cfg.n_term_buckets, "term", "salt"
+    ).mapInPandas(_merge_compress(cfg, n_docs, avgdl), schema=POSTINGS_SCHEMA)
 
     # --- stage: per-partition lineage metrics (B15) --------------------------
     metrics = (
@@ -834,18 +1013,7 @@ def build_index(
         _t = time.time()
 
         def _postings_sink() -> None:
-            # already bucket-partitioned by the merge exchange: the local
-            # sort restores the exact on-disk row order (bucket, term, salt,
-            # block_seq) and satisfies partitionBy's required ordering, so
-            # no further exchange or writer-inserted sort is paid
-            (
-                postings.sortWithinPartitions(
-                    "bucket", "term", "salt", "block_seq"
-                )
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(vdir, "postings"))
-            )
+            _write_bucketed(postings, os.path.join(vdir, "postings"))
             phases["merge_compress_write"] = round(time.time() - _t, 3)
             # per-write-task byte/block metrics (B15: doc/term/byte
             # metrics): one row per term bucket = one written partition
@@ -880,15 +1048,22 @@ def build_index(
         def _metrics_sink() -> None:
             metrics.write.mode("overwrite").parquet(os.path.join(vdir, "metrics"))
 
-        # the four sinks are independent jobs over already-persisted inputs:
-        # submit them from a small thread pool so the small aux writes
+        def _positions_sink() -> None:
+            _write_bucketed(
+                _positions_blocks(pos_partials, cfg, range_size, hot_df),
+                os.path.join(vdir, "positions"),
+            )
+
+        # the five sinks are independent jobs over already-persisted inputs:
+        # submit them from a small thread pool so the smaller writes
         # back-fill executors idled by the postings write's task tail
         # (guide §2.6 overlap independent jobs) instead of running serially
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [
-                pool.submit(f)
-                for f in (_postings_sink, _terms_sink, _docs_sink, _metrics_sink)
-            ]
+        sinks = (
+            _postings_sink, _terms_sink, _docs_sink, _metrics_sink,
+            _positions_sink,
+        )
+        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+            futs = [pool.submit(f) for f in sinks]
             for fu in futs:
                 fu.result()
         phases["aux_writes"] = round(time.time() - _t, 3)
@@ -910,7 +1085,12 @@ def build_index(
             json.dump(stats, f, indent=2)
         return stats
 
-    version_dir, stats = atomic_publish(index_dir, writer)
+    try:
+        version_dir, stats = atomic_publish(index_dir, writer)
+    finally:
+        partials.unpersist()
+        docs.unpersist()
+        terms.unpersist()
     if cfg.keep_snapshots is not None:
         # Iceberg-style retention from the build path (A15): prune committed
         # snapshots beyond the configured tail; orphan dirs are age-gated
@@ -918,9 +1098,6 @@ def build_index(
         from engine.publish import expire_snapshots
 
         expire_snapshots(index_dir, keep_last=cfg.keep_snapshots)
-    partials.unpersist()
-    docs.unpersist()
-    terms.unpersist()
     return IndexHandle(path=index_dir, version_dir=version_dir, stats=stats)
 
 
@@ -984,24 +1161,19 @@ def _checkpointed_partials(
     if os.path.exists(manifest_path):
         with open(manifest_path) as f:
             manifest = json.load(f)
-    if manifest.get("n_build_partitions", cfg.n_build_partitions) != (
-        cfg.n_build_partitions
+    if manifest and (
+        manifest.get("n_build_partitions") != cfg.n_build_partitions
+        or manifest.get("partials_fields") != PARTIALS_SCHEMA.fieldNames()
     ):
-        # P changed ⇒ every pid's content is redefined; start clean
+        # P or the partials layout changed ⇒ every pid's content is
+        # redefined; start clean
         shutil.rmtree(ckpt_path, ignore_errors=True)
         manifest = {}
     cur_fps = _pid_fingerprints(spimi_input)
     prev_done = set(manifest.get("completed_pids", []))
-    prev_fps = manifest.get("pid_fingerprints")
+    prev_fps = manifest.get("pid_fingerprints", {})
     all_pids = list(range(cfg.n_build_partitions))
-    if prev_fps is None:  # pre-fingerprint manifest: trust completed set
-        done = sorted(prev_done)
-    else:
-        done = sorted(
-            p
-            for p in prev_done
-            if prev_fps.get(str(p)) == cur_fps.get(p)
-        )
+    done = sorted(p for p in prev_done if prev_fps.get(str(p)) == cur_fps.get(p))
     missing = sorted(set(all_pids) - set(done))
     if missing:
         for p in missing:  # idempotent re-run of changed/stale pids
@@ -1022,6 +1194,7 @@ def _checkpointed_partials(
                         str(p): cur_fps[p] for p in cur_fps
                     },
                     "n_build_partitions": cfg.n_build_partitions,
+                    "partials_fields": PARTIALS_SCHEMA.fieldNames(),
                 },
                 f,
             )
@@ -1030,6 +1203,6 @@ def _checkpointed_partials(
     # partitionBy moved pid to a partition column; restore column order/types
     return out.select(
         F.col("pid").cast("int"), "term", "n", "tf_sum",
-        "ids_enc", "tfs_enc", "dls_enc",
+        "ids_enc", "tfs_enc", "dls_enc", "pos_enc",
         "doc_ids", "dls", "urls", "langs", "fps",
     )

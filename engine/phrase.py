@@ -1,51 +1,27 @@
-"""Round-4 query-surface extensions over the inverted index (SURVEY.md
-§2.B18/§2.B19): exact-phrase top-k and facet-filtered top-k.
+"""Query-surface extensions over the inverted index (SURVEY.md
+§2.B18/§2.B19): the conjunctive candidate scorer behind exact-phrase
+search, and facet-filtered top-k.
 
-Semantics: top-k documents whose token stream contains the query's tokens
-CONSECUTIVELY (exact phrase under the engine analyzer — lowercase + Unicode
-word segmentation, engine/analyzer.py), ranked by the BM25 sum of the
-phrase's unique terms (Lucene k1/b from the index stats), ties broken by
-url. This is the classic "phrase by verification" plan for an index without
-positional postings:
+`scored_docs` is conjunctive (or disjunctive) BM25 over a term list
+without the top-k cut, from the query engine's one decode-and-score kernel
+(engine/query.py): small candidate sets come from the driver-local kernel
+over a pyarrow-pruned read (terms' postings within LOCAL_MAX_POSTINGS,
+zero Spark jobs), larger ones from distributed brute force
+(bucket-partition-pruned scan, broadcast stats, map-side partial
+aggregation). Exact-phrase top-k (`engine.positional.
+phrase_topk_positional`) keeps the candidates whose adjacency the
+positions table confirms, then orders by (score desc, url asc).
 
-  1. candidate retrieval — conjunctive BM25 over the phrase's unique terms
-     (`scored_docs`) from the query engine's one decode-and-score kernel
-     (engine/query.py): small candidate sets come from the driver-local
-     kernel over a pyarrow-pruned read (terms' postings within
-     LOCAL_MAX_POSTINGS, zero Spark jobs), larger ones from distributed
-     brute force (bucket-partition-pruned scan, broadcast stats, map-side
-     partial aggregation). No top-k cut here: adjacency filtering happens
-     next, so every conjunctive doc stays a candidate.
-  2. adjacency verification — semi-join the corpus to the candidate set
-     (candidates ≪ corpus for any selective phrase), re-extract + tokenize
-     ONLY those rows with the byte-identical analyzer, and keep docs whose
-     space-joined token stream contains the space-joined phrase. One
-     Arrow-batched mapInPandas pass; no per-row Python UDFs.
-  3. top-k — order by (score desc, url asc), limit k.
-
-Scale notes (100 TB): every stage is distributed — the verification cost is
-O(candidate text volume), which for stopword-grade phrases ("the data") is
-the known worst case of verification-based phrase search; the standard
-escape hatch — positional postings — is BUILT as of round 5
-(`engine/positional.py`: a separate `positions/` artifact + a
-`phrase_topk_positional` that verifies adjacency from index blocks alone,
-rank-identical to this module's verification path). This module remains
-the zero-extra-artifact path and the oracle for the positional one. The
-candidate semi-join pushes the url filter into the corpus scan, so only
-candidate rows' html/text bytes move.
+`filtered_topk` applies a facet predicate before the top-k cut; see its
+docstring for the brute and filter-aware WAND plans.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from engine.analyzer import extract_series, tokenize, tokenize_series
 from engine.build import IndexHandle, open_index
 from engine.query import (
     LOCAL_MAX_POSTINGS,
@@ -58,33 +34,6 @@ from engine.query import (
     parse_query,
     query_topk,
 )
-
-_VERIFY_SCHEMA = T.StructType([T.StructField("url", T.StringType())])
-
-# prefix-verification escalation cap: beyond this many checked candidates
-# the driver-side prefix rounds stop and one full distributed verification
-# pass runs instead (keeps the driver's collect volume and the url IN
-# pushdown list bounded)
-_PREFIX_CAP = 4096
-
-
-def _phrase_verifier(phrase_tokens: list[str]):
-    """Arrow-batched adjacency check: keep urls whose analyzer token stream
-    contains the phrase tokens consecutively. Token streams are compared as
-    single-space joins, so token boundaries are exact (no substring false
-    positives: 'data tables' does not contain the phrase 'data table')."""
-    needle = " " + " ".join(phrase_tokens) + " "
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            text = extract_series(pdf["url"], pdf["html"], pdf["text"])
-            stream = " " + tokenize_series(text).str.join(" ") + " "
-            hit = stream.str.contains(needle, regex=False)
-            yield pd.DataFrame({"url": pdf["url"][hit]})
-
-    return fn
 
 
 def scored_docs(
@@ -144,10 +93,15 @@ def filtered_topk(
     the brute plan. At 10^12 docs the capped path corresponds to shipping
     a compressed id set/bitmap with the query; per-facet block maxima at
     build time remain the declared design for dense pre-declared facets.
-    Returns (doc_id, url, score) ordered by (score desc, url asc). An
-    unknown mode raises ValueError."""
+    Returns (doc_id, url, score) ordered by (score desc, url asc). k=0
+    returns no rows without running a Spark job; an unknown mode or k < 0
+    raises ValueError."""
     if mode not in ("brute", "wand"):
         raise ValueError(f"mode must be 'brute' or 'wand', got {mode!r}")
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+    if k == 0:
+        return _result_df(spark, [], [], None, with_url=True)
     handle = open_index(index) if isinstance(index, str) else index
     terms = parse_query(query)
     docs_full = _docs_df(spark, handle)
@@ -159,15 +113,15 @@ def filtered_topk(
     # same doc set while skipping the corpus scan AND the url semi-join
     # (that resolution join alone measured 0.5–1.2 s at sf1.0, r5 verdict
     # "What's wrong #2"). Predicates touching corpus-only columns (text,
-    # html, warc_ts) fail analysis on the probe and keep the corpus path.
-    docs_pred = None
+    # html, warc_ts) fail analysis on the probe with an unresolved column
+    # and keep the corpus path; any other error propagates.
+    corpus_cols = set(corpus.columns)
+    shared = [c for c in docs_full.columns if c in corpus_cols]
     try:
-        corpus_cols = set(corpus.columns)
-        shared = [c for c in docs_full.columns if c in corpus_cols]
-        probe = docs_full.select(*shared).filter(predicate)
-        probe.schema  # force analysis; raises if predicate needs other cols
+        # .schema forces analysis of the probe
+        docs_full.select(*shared).filter(predicate).schema
         docs_pred = docs_full.filter(predicate)
-    except Exception:
+    except AnalysisException:
         docs_pred = None
     keep_urls = corpus.filter(predicate).select("url")
     if mode == "wand":
@@ -201,98 +155,3 @@ def filtered_topk(
             keep_urls, "url", "left_semi"
         )
     return _top_by_url(matched, k)
-
-
-def phrase_topk(
-    spark: SparkSession,
-    index: IndexHandle | str,
-    corpus: DataFrame,
-    phrase: str,
-    k: int = 10,
-) -> DataFrame:
-    """Top-k exact-phrase matches ranked by BM25 over the phrase's unique
-    terms. `corpus` is the webpages table the index was built over
-    (url, warc_ts, html, text, lang) — one row per url, i.e. post
-    latest-crawl dedup (build_index dedups internally; feed the same input).
-    Returns (doc_id, url, score) ordered by (score desc, url asc)."""
-    handle = open_index(index) if isinstance(index, str) else index
-    ordered = tokenize(phrase)
-    if not ordered:
-        return _result_df(spark, [], [], None, with_url=True)
-    uniq = list(dict.fromkeys(ordered))
-    cand = scored_docs(spark, handle, uniq)
-    docs = _docs_df(spark, handle).select("doc_id", "url")
-    cand_urls = cand.join(docs, "doc_id")  # (doc_id, score, url)
-    if len(ordered) == 1:
-        return _top_by_url(cand_urls, k)
-    # Prefix verification: adjacency only ever REMOVES candidates, so the
-    # verified top-k is the first k rows of the (score desc, url asc)
-    # ordered candidate list that pass verification. Verify the ordered
-    # prefix in geometrically growing batches instead of re-tokenizing the
-    # WHOLE candidate set (for a stopword-grade phrase that set approaches
-    # the corpus — the r5 plan re-ran extraction over ~60% of all rows, and
-    # evaluated the scoring subtree twice to do it). Each round collects a
-    # bounded prefix (<= _PREFIX_CAP rows), prunes the corpus scan with a
-    # pushed-down url IN filter, and verifies only those rows. Phrases
-    # whose matches are pathologically deep in the candidate list (or
-    # absent) fall back to the full verification plan once, bounded by the
-    # same cost the unconditional plan always paid.
-    cand_urls = cand_urls.persist()
-    try:
-        verifier = _phrase_verifier(ordered)
-        verify_in = corpus.withColumn(
-            # ship the (dominant) html payload only for rows whose
-            # extraction actually needs the fallback (guide §4.1)
-            "html", F.when(F.col("text").isNull(), F.col("html"))
-        )
-        verified_rows: list = []
-        checked = 0
-        # round sizing: a verify round's cost is dominated by fixed job
-        # overhead, not tokenize volume (vectorized kernel ~50 µs/doc), so
-        # start wide enough that typical adjacency pass-rates (a few %)
-        # fill k in ONE round
-        batch = max(8 * k, 512)
-        while checked < _PREFIX_CAP:
-            prefix = _top_by_url(cand_urls, checked + batch).collect()
-            new = prefix[checked:]
-            if not new:  # candidate list exhausted — done, however many
-                break
-            urls = [r["url"] for r in new]
-            ok = {
-                r["url"]
-                for r in verify_in.filter(F.col("url").isin(urls))
-                # a prefix round holds <= _PREFIX_CAP rows: coalesce so the
-                # Python stage runs a handful of tasks instead of one per
-                # corpus partition (task overhead, not tokenize volume,
-                # dominates at this size — measured 1.5 s @128 tasks vs
-                # 0.55 s @8 for a 512-row round)
-                .coalesce(8)
-                .select("url", "html", "text")
-                .mapInPandas(verifier, _VERIFY_SCHEMA)
-                .collect()
-            }
-            verified_rows.extend(r for r in new if r["url"] in ok)
-            if len(verified_rows) >= k:
-                break
-            checked = len(prefix)
-            batch *= 4
-        else:
-            # fallback: full verification of the remaining candidate set
-            # (the pre-round-6 plan), still over the persisted candidates
-            verified = (
-                verify_in.join(cand_urls.select("url"), "url", "left_semi")
-                .select("url", "html", "text")
-                .mapInPandas(verifier, _VERIFY_SCHEMA)
-            )
-            verified_rows = _top_by_url(
-                cand_urls.join(verified, "url", "left_semi"), k
-            ).collect()
-    finally:
-        # the result is a collected local relation, so the cache can be
-        # dropped before returning — no persist leak per query
-        cand_urls.unpersist()
-    top = verified_rows[:k]
-    return _result_df(
-        spark, [r["doc_id"] for r in top], [r["score"] for r in top],
-        [r["url"] for r in top], with_url=True,
-    )

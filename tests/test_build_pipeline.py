@@ -151,7 +151,40 @@ def test_resume_from_partial_checkpoint(spark, index_cfg):
         assert [(r["doc_id"], round(r["score"], 9)) for r in a] == [
             (r["doc_id"], round(r["score"], 9)) for r in b_
         ]
-    _ = h1  # first checkpointed build sanity-held above
+    want = _positions_hash(spark, clean.positions_path)
+    for h in (h1, h2):
+        assert _positions_hash(spark, h.positions_path) == want
+
+
+def test_checkpoint_of_older_partials_layout_is_rebuilt(spark, index_cfg):
+    """A checkpoint written before the partials carried positions (no
+    pos_enc column, no partials_fields in its manifest) is discarded and
+    rebuilt, not read with a missing column."""
+    import shutil
+
+    wp = load_webpages(spark, SF_DIR_001)
+    ck = tempfile.mkdtemp(prefix="ckpt_old_")
+    h1 = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_old1_"),
+                     index_cfg, checkpoint_dir=ck)
+    pdir = os.path.join(ck, "partials")
+    old = tempfile.mkdtemp(prefix="partials_old_")
+    spark.read.parquet(pdir).drop("pos_enc").write.partitionBy("pid") \
+        .mode("overwrite").parquet(old)
+    shutil.rmtree(pdir)
+    shutil.copytree(old, pdir)
+    mpath = os.path.join(ck, "_partials_manifest.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    del manifest["partials_fields"]
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+
+    h2 = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_old2_"),
+                     index_cfg, checkpoint_dir=ck)
+    assert _postings_hash(spark, h2) == _postings_hash(spark, h1)
+    assert _positions_hash(spark, h2.positions_path) == _positions_hash(
+        spark, h1.positions_path
+    )
 
 
 def test_atomic_publish_versions(spark, index_cfg):
@@ -166,6 +199,30 @@ def test_atomic_publish_versions(spark, index_cfg):
     assert m1["version"] == "v_0" and m2["version"] == "v_1"
     h = open_index(root)
     assert h.version_dir.endswith("v_1")
+
+
+def test_positions_sink_failure_publishes_nothing(spark, index_cfg, monkeypatch):
+    """Fault injection: the positions sink raises inside build_index. The
+    manifest stays on the previous version and open_index shows no new
+    one."""
+    import engine.build
+    from engine.publish import list_snapshots, read_manifest
+
+    wp = load_webpages(spark, SF_DIR_001).limit(100)
+    root = tempfile.mkdtemp(prefix="idx_fault_")
+    build_index(spark, wp, root, index_cfg)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("positions sink crashed")
+
+    monkeypatch.setattr(engine.build, "_positions_blocks", crash)
+    with pytest.raises(RuntimeError, match="positions sink crashed"):
+        build_index(spark, wp, root, index_cfg)
+    assert read_manifest(root)["version"] == "v_0"
+    assert [s["version"] for s in list_snapshots(root)] == ["v_0"]
+    assert open_index(root).version_dir.endswith("v_0")
+    with pytest.raises(KeyError):
+        open_index(root, version="v_1")
 
 
 def test_lineage_metrics_per_partition(spark, built_index, index_cfg):
@@ -277,6 +334,21 @@ def _postings_hash(spark, handle):
     )
 
 
+def _positions_hash(spark, pos_dir):
+    """The same xor-of-block-hashes over the positions table."""
+    return (
+        spark.read.parquet(pos_dir)
+        .select(
+            F.xxhash64(
+                "term", "salt", "block_seq", "n", "first_doc_id",
+                "last_doc_id", "ids_enc", "cnts_enc", "pos_enc"
+            ).alias("h")
+        )
+        .agg(F.expr("bit_xor(h)").alias("x"))
+        .collect()[0]["x"]
+    )
+
+
 def test_spimi_spill_byte_identical_index(spark, index_cfg):
     """SPIMI partial spill (cfg.spimi_flush_mb): a build forced to flush its
     posting accumulators many times mid-partition must produce a
@@ -293,6 +365,9 @@ def test_spimi_spill_byte_identical_index(spark, index_cfg):
     b = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_flush_"), cfg_spill)
     assert a.stats["n_docs"] == b.stats["n_docs"]
     assert _postings_hash(spark, a) == _postings_hash(spark, b)
+    assert _positions_hash(spark, a.positions_path) == _positions_hash(
+        spark, b.positions_path
+    )
 
 
 def test_spimi_flush_emits_multiple_partial_frames(index_cfg):
@@ -306,7 +381,7 @@ def test_spimi_flush_emits_multiple_partial_frames(index_cfg):
 
     from engine.build import _fused_spimi
 
-    cfg = dataclasses.replace(index_cfg, spimi_flush_mb=0.001)  # ~52 cells
+    cfg = dataclasses.replace(index_cfg, spimi_flush_mb=0.001)  # ~43 cells
     fn = _fused_spimi(cfg, dedup=False)
     batches = [
         pd.DataFrame(

@@ -1,7 +1,9 @@
-"""Phrase-query semantics (engine/phrase.py, SURVEY.md §2.B18): adjacency
-under the engine analyzer, token-boundary exactness, BM25-sum ranking
-consistency with the brute scorer, and degenerate inputs. The exact-values
-gate vs ANSI SQL is tests/test_oracle_parity.py::bm25_phrase."""
+"""Phrase-query semantics (engine/positional.py over engine/phrase.py's
+candidate scorer, SURVEY.md §2.B18): adjacency under the engine analyzer,
+token-boundary exactness, BM25-sum ranking consistency with the brute scorer
+and with the pure-Python reference in tests/phrase_reference.py, and
+degenerate inputs; plus facet-filtered top-k. The exact-values gate vs ANSI
+SQL is tests/test_oracle_parity.py::bm25_phrase."""
 
 from __future__ import annotations
 
@@ -9,6 +11,8 @@ import datetime
 import tempfile
 
 import pytest
+
+from tests.phrase_reference import PhraseReference, assert_same_topk
 
 
 def _wp_rows():
@@ -37,30 +41,36 @@ def tiny_index(spark, index_cfg):
     )
     h = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_phrase_"),
                     index_cfg)
-    return h, wp
+    ref = PhraseReference([(r[0], r[3]) for r in _wp_rows()],
+                          P=index_cfg.n_build_partitions)
+    return h, ref
+
+
+def _phrase(spark, h, phrase, k):
+    from engine.positional import phrase_topk_positional
+
+    return phrase_topk_positional(spark, h, h.positions_path, phrase, k=k)
 
 
 def test_phrase_adjacency_and_token_boundaries(spark, tiny_index):
-    from engine.phrase import phrase_topk
-
-    h, wp = tiny_index
-    out = phrase_topk(spark, h, wp, "data table", k=10).collect()
+    h, ref = tiny_index
+    out = _phrase(spark, h, "data table", 10).collect()
     urls = {r["url"] for r in out}
     assert urls == {
         "https://t.example.com/doc/0",
         "https://t.example.com/doc/4",
         "https://t.example.com/doc/6",
     }
+    assert_same_topk(out, ref.topk("data table", 10))
 
 
 def test_phrase_scores_match_conjunctive_brute(spark, tiny_index):
     """Phrase ranking = conjunctive BM25 sum restricted to phrase hits."""
-    from engine.phrase import phrase_topk
     from engine.query import query_topk
 
-    h, wp = tiny_index
+    h, _ = tiny_index
     phrase = {r["url"]: r["score"]
-              for r in phrase_topk(spark, h, wp, "data table", k=10).collect()}
+              for r in _phrase(spark, h, "data table", 10).collect()}
     brute = {r["url"]: r["score"]
              for r in query_topk(spark, h, "data table", k=10, mode="brute",
                                  conjunctive=True, with_url=True).collect()}
@@ -69,38 +79,35 @@ def test_phrase_scores_match_conjunctive_brute(spark, tiny_index):
 
 
 def test_phrase_degenerate_inputs(spark, tiny_index):
-    from engine.phrase import phrase_topk
-
-    h, wp = tiny_index
-    assert phrase_topk(spark, h, wp, "", k=5).count() == 0
-    assert phrase_topk(spark, h, wp, "data zzznope", k=5).count() == 0
+    h, ref = tiny_index
+    assert _phrase(spark, h, "", 5).count() == 0
+    assert _phrase(spark, h, "data zzznope", 5).count() == 0
     # single-term "phrase" degenerates to plain conjunctive top-k
-    one = phrase_topk(spark, h, wp, "alpha", k=5).collect()
+    one = _phrase(spark, h, "alpha", 5).collect()
     assert {r["url"] for r in one} == {
         "https://t.example.com/doc/0", "https://t.example.com/doc/5"
     }
+    assert_same_topk(one, ref.topk("alpha", 5))
 
 
-def test_phrase_on_fixture_counts(spark, built_index):
-    """sf0.001 sanity: every returned doc's token stream really contains the
-    phrase (independent pandas re-check), and k caps the result."""
-    from engine.phrase import phrase_topk
-    from engine.analyzer import tokenize
+def test_phrase_on_fixture_counts(spark, built_index, index_cfg):
+    """sf0.001: the top 10 of "sort merge" equal the pure-Python reference
+    (every returned doc's token stream contains the phrase, scores
+    descending with url tiebreak), and k caps the result."""
     from engine.webpages import load_webpages
 
     wp = load_webpages(spark, "/root/testdata/sf0.001")
-    out = phrase_topk(spark, built_index, wp, "sort merge", k=10).collect()
+    ref = PhraseReference(
+        [(r["url"], r["text"]) for r in wp.select("url", "text").collect()],
+        P=index_cfg.n_build_partitions,
+    )
+    out = _phrase(spark, built_index, "sort merge", 10).collect()
     assert len(out) == 10  # 39 matching docs at sf0.001 (duckdb probe)
-    texts = {r["url"]: r["text"] for r in
-             wp.join(spark.createDataFrame([(r["url"],) for r in out],
-                                           "url string"),
-                     "url", "left_semi").select("url", "text").collect()}
     for r in out:
-        toks = " ".join(tokenize(texts[r["url"]]))
-        assert " sort merge " in f" {toks} "
-    # scores are descending with url tiebreak
+        assert ref.contains(r["url"], ["sort", "merge"])
     pairs = [(r["score"], r["url"]) for r in out]
     assert pairs == sorted(pairs, key=lambda p: (-p[0], p[1]))
+    assert_same_topk(out, ref.topk("sort merge", 10))
 
 
 @pytest.fixture(scope="module")

@@ -1,7 +1,9 @@
-"""Positional-postings phrase search (engine/positional.py): rank identity
-with the verification-based phrase path, adjacency semantics (repeated
-terms, boundaries), multi-shard exactness, artifact determinism across
-input partitioning, and the no-corpus-access plan property."""
+"""Positional-postings phrase search (engine/positional.py) over the
+positions table build_index writes: rank identity with the pure-Python
+reference in tests/phrase_reference.py, adjacency semantics (repeated
+terms, boundaries), multi-shard exactness, table determinism across input
+partitioning, positions consistent with the terms table (df, cf) on a
+corpus with recrawls, and the no-corpus-access plan property."""
 
 from __future__ import annotations
 
@@ -10,6 +12,13 @@ import random
 import tempfile
 
 import pytest
+
+from tests.phrase_reference import PhraseReference, assert_same_topk
+from tests.test_build_pipeline import _positions_hash
+
+# positions content hash (xor of per-block xxhash64) of the session index,
+# tests/conftest.py::built_index over sf0.001
+SF0001_POSITIONS_HASH = 3191333307470414653
 
 
 def _wp_rows():
@@ -31,29 +40,25 @@ def _wp_rows():
 @pytest.fixture(scope="module")
 def pos_index(spark, index_cfg):
     from engine.build import build_index
-    from engine.positional import build_positions
 
     wp = spark.createDataFrame(
         _wp_rows(),
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
     h = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_pos_"), index_cfg)
-    pos_dir = build_positions(spark, h, wp)
-    return h, wp, pos_dir
+    return h, wp, h.positions_path
 
 
-def test_positional_rank_identical_to_verification(spark, pos_index):
-    from engine.phrase import phrase_topk
+def test_positional_rank_identical_to_reference(spark, pos_index, index_cfg):
     from engine.positional import phrase_topk_positional
 
-    h, wp, pos_dir = pos_index
-    for phrase in ("data table", "table data", "data x table", "alpha"):
-        ver = [(r["url"], round(r["score"], 9))
-               for r in phrase_topk(spark, h, wp, phrase, k=10).collect()]
-        pos = [(r["url"], round(r["score"], 9))
-               for r in phrase_topk_positional(
-                   spark, h, pos_dir, phrase, k=10).collect()]
-        assert pos == ver, phrase
+    h, _, pos_dir = pos_index
+    ref = PhraseReference([(r[0], r[3]) for r in _wp_rows()],
+                          P=index_cfg.n_build_partitions)
+    for phrase in ("data table", "table data", "data x table", "alpha",
+                   "data table data", "tables"):
+        got = phrase_topk_positional(spark, h, pos_dir, phrase, k=10)
+        assert_same_topk(got.collect(), ref.topk(phrase, 10))
 
 
 def test_positional_adjacency_semantics(spark, pos_index):
@@ -90,7 +95,7 @@ def test_positional_randomized_equivalence(spark, index_cfg):
     tokens)."""
     from engine.analyzer import tokenize
     from engine.build import build_index
-    from engine.positional import build_positions, phrase_match_docs
+    from engine.positional import phrase_match_docs
 
     rng = random.Random(7)
     vocab = ["the", "data", "a", "b", "c", "dd"]
@@ -110,7 +115,7 @@ def test_positional_randomized_equivalence(spark, index_cfg):
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
     h = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_rnd_"), index_cfg)
-    pos_dir = build_positions(spark, h, wp)
+    pos_dir = h.positions_path
     docs = {
         r["doc_id"]: r["url"]
         for r in spark.read.parquet(h.docs_path).collect()
@@ -155,40 +160,58 @@ def test_positional_multi_shard_exact(spark, pos_index):
 
 
 def test_positions_artifact_deterministic(spark, index_cfg):
-    """The positions artifact is a pure function of (url set, config):
-    building from a 1-partition and a 16-partition copy of the same corpus
-    yields identical block bytes (xor of per-block hashes)."""
-    import pyspark.sql.functions as F
-
+    """The positions table is a pure function of (url set, config):
+    indexes built from a 1-partition and a 16-partition copy of the same
+    corpus have identical position blocks (xor of per-block hashes)."""
     from engine.build import build_index
-    from engine.positional import build_positions
 
     wp = spark.createDataFrame(
         _wp_rows(),
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    h = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_det_"), index_cfg)
-
-    def content_hash(pos_dir):
-        return (
-            spark.read.parquet(pos_dir)
-            .select(
-                F.xxhash64(
-                    "term", "salt", "block_seq", "n", "first_doc_id",
-                    "last_doc_id", "ids_enc", "cnts_enc", "pos_enc"
-                ).alias("x")
-            )
-            .agg(F.expr("bit_xor(x)").alias("x"))
-            .collect()[0]["x"]
-        )
-
-    d1 = build_positions(
-        spark, h, wp.repartition(1), tempfile.mkdtemp(prefix="pos_a_")
+    h1 = build_index(spark, wp.repartition(1),
+                     tempfile.mkdtemp(prefix="idx_det_a_"), index_cfg)
+    h16 = build_index(spark, wp.repartition(16),
+                      tempfile.mkdtemp(prefix="idx_det_b_"), index_cfg)
+    assert _positions_hash(spark, h1.positions_path) == _positions_hash(
+        spark, h16.positions_path
     )
-    d2 = build_positions(
-        spark, h, wp.repartition(16), tempfile.mkdtemp(prefix="pos_b_")
+
+
+def test_positions_hash_pinned(spark, built_index):
+    assert (
+        _positions_hash(spark, built_index.positions_path)
+        == SF0001_POSITIONS_HASH
     )
-    assert content_hash(d1) == content_hash(d2)
+
+
+def test_positions_match_terms_on_recrawls(spark, index_cfg):
+    """A corpus with recrawls: positions come from the deduplicated docs
+    the index holds, so per term the positions' doc count equals df and
+    their position count equals cf. build_positions keeps accepting the
+    raw corpus."""
+    from engine.build import build_index
+    from engine.codec import varint_decode
+    from engine.positional import build_positions
+    from engine.webpages import load_webpages, with_recrawl
+
+    wp = with_recrawl(load_webpages(spark, "/root/testdata/sf0.001"))
+    h = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_recrawl_"),
+                    index_cfg)
+    pos_dir = build_positions(spark, h, wp)
+    assert pos_dir == h.positions_path
+    terms = {
+        r["term"]: (r["df"], r["cf"])
+        for r in spark.read.parquet(h.terms_path).collect()
+    }
+    n_urls = wp.select("url").distinct().count()
+    assert h.stats["n_docs"] == n_urls < wp.count()
+    pos: dict[str, list[int]] = {}
+    for r in spark.read.parquet(pos_dir).select("term", "n", "cnts_enc").collect():
+        df_cf = pos.setdefault(r["term"], [0, 0])
+        df_cf[0] += r["n"]
+        df_cf[1] += int(varint_decode(r["cnts_enc"]).sum())
+    assert pos == {t: [df, cf] for t, (df, cf) in terms.items()}
 
 
 def test_positional_plan_reads_only_positions(spark, pos_index):

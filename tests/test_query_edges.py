@@ -4,8 +4,11 @@
 Every query_topk mode must return the same rows on degenerate inputs —
 k=0, k beyond the match count, zero-hit, empty, punctuation-only, repeated
 and non-ASCII terms, mixed hit + zero-hit queries — under both tie-breaks;
-unknown modes and tie-breaks are rejected up front; and every entry point
-returns the one result schema, also on its early-return paths."""
+unknown modes and tie-breaks, and k < 0 on every entry point, are rejected
+up front; k=0 returns no rows without a Spark job; every entry point
+returns the one result schema, also on its early-return paths; and
+filtered_topk's predicate probe sends only unresolved columns to the
+corpus path."""
 
 from __future__ import annotations
 
@@ -73,8 +76,9 @@ def test_edge_inputs_all_modes_agree(spark, built_index, tiebreak):
     )
 
 
-def test_bad_arguments_rejected(spark, built_index):
+def test_bad_arguments_rejected(spark, built_index, webpages):
     from engine.phrase import filtered_topk
+    from engine.positional import phrase_topk_positional
 
     for kw in ({"mode": "bogus"}, {"mode": "WAND"}, {"tiebreak": "URL"},
                {"k": -1}):
@@ -82,6 +86,16 @@ def test_bad_arguments_rejected(spark, built_index):
             query_topk(spark, built_index, "spark", **kw)
     with pytest.raises(ValueError, match="brute.*wand"):
         filtered_topk(spark, built_index, None, "spark", None, mode="WAND")
+    pos_dir = built_index.positions_path
+    with pytest.raises(ValueError, match="k must be"):
+        phrase_topk_positional(spark, built_index, pos_dir, "the data", k=-1)
+    # "zz" resolves to an empty allowed set: k is checked before the
+    # empty-set early return
+    for mode in ("brute", "wand"):
+        for lang in ("en", "zz"):
+            with pytest.raises(ValueError, match="k must be"):
+                filtered_topk(spark, built_index, webpages, "spark join",
+                              F.col("lang") == lang, k=-1, mode=mode)
 
 
 @pytest.fixture(scope="module")
@@ -113,14 +127,104 @@ def test_filtered_topk_result_schema(spark, built_index, webpages, mode):
         assert _fields(df) == RESULT, lang
 
 
-def test_phrase_result_schemas(spark, built_index, webpages):
-    from engine.phrase import phrase_topk
-    from engine.positional import build_positions, phrase_topk_positional
+def test_phrase_result_schemas(spark, built_index):
+    from engine.positional import phrase_topk_positional
 
-    pos_dir = build_positions(spark, built_index, webpages,
-                              out_dir=tempfile.mkdtemp(prefix="pos_edges_"))
+    pos_dir = built_index.positions_path
     for phrase in ("the data", "spark", "", "zzzqqq data"):
-        assert _fields(phrase_topk(spark, built_index, webpages, phrase,
-                                   k=5)) == RESULT, phrase
         assert _fields(phrase_topk_positional(spark, built_index, pos_dir,
                                               phrase, k=5)) == RESULT, phrase
+
+
+def _no_spark_job(spark, fn):
+    """fn's result, asserting that calling it launched no Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup("no-spark-job", "k=0 early return")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("no-spark-job")) == []
+    return out
+
+
+def test_k0_returns_empty_without_spark_job(spark, built_index, webpages):
+    from engine.phrase import filtered_topk
+    from engine.positional import phrase_topk_positional
+
+    calls = [
+        lambda: phrase_topk_positional(
+            spark, built_index, built_index.positions_path, "the data", k=0),
+    ] + [
+        lambda m=m: filtered_topk(spark, built_index, webpages, "spark join",
+                                  F.col("lang") == "en", k=0, mode=m)
+        for m in ("brute", "wand")
+    ]
+    for call in calls:
+        df = _no_spark_job(spark, call)
+        assert _fields(df) == RESULT
+        assert df.collect() == []
+
+
+@pytest.fixture(scope="module")
+def text_pred_index(spark, index_cfg):
+    """A fresh index with its corpus: the text predicate below matches
+    docs across languages."""
+    import datetime
+
+    from engine.build import build_index
+
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        (f"https://p.example.com/doc/{i}", ts, None,
+         f"spark join {'window ' * (i % 4)}{'needle' if i % 3 == 0 else ''}",
+         "en" if i % 2 else "fr")
+        for i in range(60)
+    ]
+    wp = spark.createDataFrame(
+        rows,
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    h = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_textpred_"),
+                    index_cfg)
+    return h, wp, rows
+
+
+def test_filtered_text_predicate_takes_corpus_path(spark, text_pred_index):
+    """A predicate on a corpus-only column (text) fails the docs-table
+    probe with an unresolved column and resolves through the corpus: both
+    modes return the same rows, which are exactly the matching docs."""
+    from engine.phrase import filtered_topk
+
+    h, wp, rows = text_pred_index
+    pred = F.col("text").contains("needle")
+    out = {}
+    for mode in ("brute", "wand"):
+        df = filtered_topk(spark, h, wp, "spark window", pred, k=100,
+                           mode=mode)
+        out[mode] = [(r["url"], r["score"]) for r in df.collect()]
+    plan = filtered_topk(spark, h, wp, "spark window", pred, k=100)._jdf \
+        .queryExecution().executedPlan().toString()
+    assert "text#" in plan  # the brute plan scans the corpus's text
+    assert out["wand"] == out["brute"]
+    assert {u for u, _ in out["brute"]} == {
+        u for u, _, _, t, _ in rows if "needle" in t
+    }
+
+
+def test_filtered_probe_errors_propagate(spark, built_index, webpages):
+    """Only an unresolved-column AnalysisException sends the predicate to
+    the corpus path; any other error in the probe propagates from it, and
+    the corpus is never touched."""
+    from engine.phrase import filtered_topk
+
+    class Corpus:
+        columns = webpages.columns
+
+        def filter(self, predicate):
+            raise AssertionError("corpus path taken")
+
+    for mode in ("brute", "wand"):
+        with pytest.raises(TypeError):
+            filtered_topk(spark, built_index, Corpus(), "spark", 42,
+                          mode=mode)
