@@ -166,7 +166,7 @@ def main() -> None:
             for _ in range(reps):
                 t1 = time.time()
                 phrase_topk_positional(
-                    spark, handle, handle.positions_path, q, k=10
+                    spark, handle, handle.postings_path, q, k=10
                 ).collect()
                 per.append(time.time() - t1)
             timings[f"q_phrase_pos:{q}"] = round(min(per), 4)

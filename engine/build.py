@@ -22,11 +22,11 @@ Pipeline (all DataFrame-declared; Python boundaries are Arrow-batched):
 6.  per-(term,salt) applyInPandas: merge-sort postings, chunk into blocks of
     128, delta+varint/FOR compress, per-block max BM25 score (§2.B8).
 7.  sinks: postings partitioned by term bucket (query-time partition
-    pruning), positions (the same layout, for exact-phrase search; see
-    engine/positional.py), terms/docs/metrics parquet, stats JSON; all
-    inside one atomic manifest publish (reference A15 alias swap analog).
-    Positions come from the SPIMI pass of step 3: each term partial also
-    carries its postings' token positions, so the corpus is tokenized once.
+    pruning), terms/docs/metrics parquet, stats JSON; all inside one atomic
+    manifest publish (reference A15 alias swap analog). Each postings block
+    also carries its postings' token positions (`pos_enc`, for exact-phrase
+    search; see engine/positional.py). They come from the SPIMI pass of
+    step 3, so the corpus is tokenized once.
 
 Resumable from per-partition checkpoints (north rule): stage-3 partials are
 checkpointed per build-bucket; a re-run recomputes only missing buckets
@@ -69,8 +69,10 @@ DOC_PSEUDO_TERM = ""
 # postings cross it as (n, tf_sum, ids_enc=varint gaps w/ absolute first,
 # tfs_enc, dls_enc, pos_enc). pos_enc concatenates the postings' token
 # positions, one stream per doc (within-doc deltas, absolute first value;
-# the doc's tf is its count). The at-rest block codec in the merge stage is
-# unchanged — index bytes stay identical. Pseudo rows (term="") carry the
+# the doc's tf is its count) — the same layout as the postings blocks'
+# pos_enc column, so salt split and merge cut it without a re-delta. The
+# at-rest block codec in the merge stage is unchanged — index bytes stay
+# identical. Pseudo rows (term="") carry the
 # per-pid docmap as plain arrays (they are exploded JVM-side for the docs
 # table and are a tiny fraction of the volume).
 PARTIALS_SCHEMA = T.StructType(
@@ -109,35 +111,9 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("tfs_enc", T.BinaryType()),
         T.StructField("codec_dls", T.IntegerType()),
         T.StructField("dls_enc", T.BinaryType()),
-        T.StructField("bucket", T.IntegerType()),
-    ]
-)
-
-# per-(term, doc) position rows between the SPIMI partials and the block cut
-POS_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("salt", T.IntegerType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_pos", T.IntegerType()),
-        T.StructField("pos_enc", T.BinaryType()),
-    ]
-)
-
-# positions table: blocks of `block_size` docs per (term, salt) group, in
-# doc order. ids_enc: doc ids, within-block delta varint (first absolute);
-# cnts_enc: positions per doc, varint; pos_enc: the docs' position streams
-# back to back, each within-doc delta varint with an absolute first value.
-POS_BLOCK_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("salt", T.IntegerType()),
-        T.StructField("block_seq", T.IntegerType()),
-        T.StructField("n", T.IntegerType()),
-        T.StructField("first_doc_id", T.LongType()),
-        T.StructField("last_doc_id", T.LongType()),
-        T.StructField("ids_enc", T.BinaryType()),
-        T.StructField("cnts_enc", T.BinaryType()),
+        # the postings' token positions (varint, per-posting streams with an
+        # absolute first value, tfs are the counts); read by phrase search
+        # only
         T.StructField("pos_enc", T.BinaryType()),
         T.StructField("bucket", T.IntegerType()),
     ]
@@ -484,13 +460,17 @@ def _salt_split(cfg: IndexConfig, range_size: int, hot_df: dict[str, int]):
             # (row, salt) boundaries, and re-encode the segments with one
             # pass per stream. Postings inside a partial are doc-sorted
             # (SPIMI emits sorted runs), so salts are monotonic within a
-            # row — boundary detection needs no sort.
+            # row — boundary detection needs no sort. Each posting's
+            # position stream starts absolute, so positions are cut at the
+            # segments' first postings with no re-delta.
             nrows = len(pdf)
             lens = pdf["n"].to_numpy(np.int64)
             gaps_f = varint_decode_concat(pdf["ids_enc"])
             ids_f = delta_decode_blocks(gaps_f, lens).astype(np.int64)
             tfs_f = varint_decode_concat(pdf["tfs_enc"])
             dls_f = varint_decode_concat(pdf["dls_enc"])
+            pos_f = varint_decode_concat(pdf["pos_enc"])
+            pos_off = np.cumsum(tfs_f) - tfs_f  # each posting's first position
             row_of = np.repeat(np.arange(nrows, dtype=np.int64), lens)
             salt_f = (ids_f // range_size + 1).astype(np.int64)
             boundary = np.empty(len(ids_f), dtype=bool)
@@ -516,6 +496,7 @@ def _salt_split(cfg: IndexConfig, range_size: int, hot_df: dict[str, int]):
                     ),
                     "tfs_enc": varint_encode_rows(tfs_f, starts),
                     "dls_enc": varint_encode_rows(dls_f, starts),
+                    "pos_enc": varint_encode_rows(pos_f, pos_off[starts]),
                 }
             )
             if len(out):
@@ -538,7 +519,9 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float):
     vectorized pass across all its groups (group ids from term/salt change
     detection, one lexsort, reduceat aggregation, batched encodes); a group
     that straddles an Arrow batch boundary is held back and stitched onto
-    the next batch, so each group is still compressed exactly once, whole."""
+    the next batch, so each group is still compressed exactly once, whole.
+    Each posting's token positions move with it through the merge sort and
+    are written per block (`pos_enc`) in one varint pass."""
     k1, b, bs = cfg.k1, cfg.b, cfg.block_size
     n_buckets = cfg.n_term_buckets
 
@@ -566,7 +549,15 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float):
         if len(grp_of_post) == 0:
             return pd.DataFrame()
         order = np.lexsort((ids, grp_of_post))
+        # each posting's position run moves with it: gather the runs in
+        # `order` (a posting's run starts at the cumulative tf before it)
+        pos_g = varint_decode_concat(pdf["pos_enc"])
+        run_src = (np.cumsum(tfs) - tfs)[order]
         ids, tfs, dls = ids[order], tfs[order], dls[order]
+        run_dst = np.cumsum(tfs) - tfs
+        pos_g = pos_g[
+            np.arange(len(pos_g)) + np.repeat(run_src - run_dst, tfs)
+        ]
         gsorted = grp_of_post[order]
         grp_counts = np.bincount(grp_of_post, minlength=n_grp)
         grp_off = np.concatenate(([0], np.cumsum(grp_counts)))
@@ -591,6 +582,7 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float):
         ci, ebufs = encode_blocks(_row_deltas(ids, starts), starts)
         ct, tbufs = encode_blocks(tfs.astype(np.uint64), starts)
         cd, dbufs = encode_blocks(dls.astype(np.uint64), starts)
+        pbufs = varint_encode_rows(pos_g, run_dst[starts])
         term_g = terms_arr[grp_first_row]
         return pd.DataFrame(
             {
@@ -607,18 +599,10 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float):
                 "tfs_enc": tbufs,
                 "codec_dls": np.asarray(cd, dtype=np.int32),
                 "dls_enc": dbufs,
+                "pos_enc": pbufs,
                 "bucket": _term_bucket(term_g, n_buckets)[blk_grp],
             }
         )
-
-    return _stream_groups(process)
-
-
-def _stream_groups(process):
-    """mapInPandas body over a (term, salt)-sorted stream: run `process` on
-    whole (term, salt) groups, all of an Arrow batch's groups in one call.
-    A group that straddles a batch boundary is held back and stitched onto
-    the next batch, so each group is processed exactly once, whole."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         held: pd.DataFrame | None = None  # trailing (possibly split) group
@@ -646,122 +630,17 @@ def _stream_groups(process):
     return fn
 
 
-def _positions_rows(range_size: int, hot_terms: set[str]):
-    """mapInPandas body: split term partials into one row per (term, doc)
-    with the doc's salt (hot terms by doc range, as in _salt_split; cold
-    terms 0), its position count (the posting's tf) and its own position
-    stream, which is self-contained (absolute first position)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ns = pdf["n"].to_numpy(np.int64)
-            ids = delta_decode_blocks(
-                varint_decode_concat(pdf["ids_enc"]), ns
-            ).astype(np.int64)
-            cnts = varint_decode_concat(pdf["tfs_enc"]).astype(np.int64)
-            pos_gaps = varint_decode_concat(pdf["pos_enc"])
-            hot = np.repeat(pdf["term"].isin(hot_terms).to_numpy(), ns)
-            yield pd.DataFrame(
-                {
-                    "term": np.repeat(pdf["term"].to_numpy(object), ns),
-                    "salt": np.where(hot, ids // range_size + 1, 0).astype(
-                        np.int32
-                    ),
-                    "doc_id": ids,
-                    "n_pos": cnts.astype(np.int32),
-                    "pos_enc": varint_encode_rows(pos_gaps, np.cumsum(cnts) - cnts),
-                }
-            )
-
-    return fn
-
-
-def _block_cut(block_size: int, n_buckets: int):
-    """mapInPandas body over a (term, salt, doc_id)-sorted stream of
-    per-(term, doc) position rows: cut each group's rows into blocks of
-    `block_size` docs, delta+varint the doc ids, varint the per-doc counts
-    and concatenate the per-doc position streams."""
-
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        nrows = len(pdf)
-        terms_arr = pdf["term"].to_numpy(object)
-        salts_arr = pdf["salt"].to_numpy(np.int32)
-        ids = pdf["doc_id"].to_numpy(np.int64)
-        cnts = pdf["n_pos"].to_numpy(np.int64)
-        bufs = pdf["pos_enc"].tolist()
-        new_grp = np.empty(nrows, dtype=bool)
-        new_grp[0] = True
-        new_grp[1:] = (terms_arr[1:] != terms_arr[:-1]) | (
-            salts_arr[1:] != salts_arr[:-1]
-        )
-        grp_of = np.cumsum(new_grp) - 1
-        grp_first = np.flatnonzero(new_grp)
-        pos_in_grp = np.arange(nrows, dtype=np.int64) - grp_first[grp_of]
-        starts = np.flatnonzero(pos_in_grp % block_size == 0)
-        ends = np.append(starts[1:], nrows)
-        term_b = terms_arr[starts]
-        return pd.DataFrame(
-            {
-                "term": term_b,
-                "salt": salts_arr[starts],
-                "block_seq": _block_seq(grp_of[starts]),
-                "n": (ends - starts).astype(np.int32),
-                "first_doc_id": ids[starts],
-                "last_doc_id": ids[ends - 1],
-                "ids_enc": varint_encode_rows(_row_deltas(ids, starts), starts),
-                "cnts_enc": varint_encode_rows(cnts.astype(np.uint64), starts),
-                "pos_enc": [b"".join(bufs[s:e]) for s, e in zip(starts, ends)],
-                "bucket": _term_bucket(term_b, n_buckets),
-            }
-        )
-
-    return _stream_groups(process)
-
-
-def _bucket_exchange(df: DataFrame, n_buckets: int, *sort_cols: str) -> DataFrame:
-    """Partition rows by the on-disk term bucket (crc32(term) % n_buckets)
-    and sort them by `sort_cols` within each partition: the one exchange a
-    bucketed table's merge stage and its write share."""
-    return (
-        df.withColumn(
-            "bucket",
-            (F.crc32(F.encode(F.col("term"), "utf-8")) % n_buckets).cast("int"),
-        )
-        .repartition(n_buckets, F.col("bucket"))
-        .sortWithinPartitions(*sort_cols)
-        .drop("bucket")
-    )
-
-
 def _write_bucketed(blocks: DataFrame, path: str) -> None:
-    """Write a bucket-partitioned block table. The rows are already
-    partitioned by bucket, so the local sort restores the on-disk row order
-    (bucket, term, salt, block_seq) and satisfies partitionBy's required
-    ordering: no further exchange or writer-inserted sort is paid."""
+    """Write the postings blocks, partitioned by term bucket. The rows are
+    already partitioned by bucket, so the local sort restores the on-disk
+    row order (bucket, term, salt, block_seq) and satisfies partitionBy's
+    required ordering: no further exchange or writer-inserted sort is
+    paid."""
     (
         blocks.sortWithinPartitions("bucket", "term", "salt", "block_seq")
         .write.partitionBy("bucket")
         .mode("overwrite")
         .parquet(path)
-    )
-
-
-def _positions_blocks(
-    pos_partials: DataFrame, cfg: IndexConfig, range_size: int,
-    hot_df: dict[str, int],
-) -> DataFrame:
-    """The positions table (engine/positional.py) from the term partials'
-    pos_enc column: per-(term, doc) rows salted like the postings, one term
-    bucket exchange, doc-ordered block cut."""
-    rows = pos_partials.mapInPandas(
-        _positions_rows(range_size, set(hot_df)), schema=POS_ROW_SCHEMA
-    )
-    return _bucket_exchange(
-        rows, cfg.n_term_buckets, "term", "salt", "doc_id"
-    ).mapInPandas(
-        _block_cut(cfg.block_size, cfg.n_term_buckets), schema=POS_BLOCK_SCHEMA
     )
 
 
@@ -786,10 +665,6 @@ class IndexHandle:
     @property
     def metrics_path(self) -> str:
         return os.path.join(self.version_dir, "metrics")
-
-    @property
-    def positions_path(self) -> str:
-        return os.path.join(self.version_dir, "positions")
 
 
 def open_index(path: str, version: str | None = None) -> IndexHandle:
@@ -901,9 +776,8 @@ def build_index(
     doc_rows = partials.filter(F.col("term") == DOC_PSEUDO_TERM)
     term_partials = partials.filter(
         F.col("term") != DOC_PSEUDO_TERM
-    ).select("pid", "term", "n", "tf_sum", "ids_enc", "tfs_enc", "dls_enc")
-    pos_partials = partials.filter(F.col("term") != DOC_PSEUDO_TERM).select(
-        "term", "n", "ids_enc", "tfs_enc", "pos_enc"
+    ).select(
+        "pid", "term", "n", "tf_sum", "ids_enc", "tfs_enc", "dls_enc", "pos_enc"
     )
 
     # --- stage: stats (B5/B6): docmap rides the pseudo rows -----------------
@@ -957,6 +831,7 @@ def build_index(
             T.StructField("ids_enc", T.BinaryType()),
             T.StructField("tfs_enc", T.BinaryType()),
             T.StructField("dls_enc", T.BinaryType()),
+            T.StructField("pos_enc", T.BinaryType()),
         ]
     )
     # Only HOT rows cross the Python boundary: cold partials (the vast
@@ -970,14 +845,14 @@ def build_index(
         .select(
             "pid", "term", F.lit(0).cast("int").alias("salt"),
             F.lit(0).cast("long").alias("df"), "n",
-            "ids_enc", "tfs_enc", "dls_enc",
+            "ids_enc", "tfs_enc", "dls_enc", "pos_enc",
         )
     )
     hot_salted = (
         term_partials.filter(F.col("term").isin(hot_terms))
         .select(
             "pid", "term", F.lit(0).cast("int").alias("salt"), "n",
-            "ids_enc", "tfs_enc", "dls_enc",
+            "ids_enc", "tfs_enc", "dls_enc", "pos_enc",
         )
         .mapInPandas(_salt_split(cfg, range_size, hot_df), schema=salt_schema)
     )
@@ -991,9 +866,17 @@ def build_index(
     # each task still compresses thousands of groups per Arrow batch in one
     # vectorized pass (see _merge_compress docstring). Within-bucket
     # parallelism is governed by n_term_buckets (raise it at cluster scale).
-    postings = _bucket_exchange(
-        salted, cfg.n_term_buckets, "term", "salt"
-    ).mapInPandas(_merge_compress(cfg, n_docs, avgdl), schema=POSTINGS_SCHEMA)
+    n_buckets = cfg.n_term_buckets
+    postings = (
+        salted.withColumn(
+            "bucket",
+            (F.crc32(F.encode(F.col("term"), "utf-8")) % n_buckets).cast("int"),
+        )
+        .repartition(n_buckets, F.col("bucket"))
+        .sortWithinPartitions("term", "salt")
+        .drop("bucket")
+        .mapInPandas(_merge_compress(cfg, n_docs, avgdl), schema=POSTINGS_SCHEMA)
+    )
 
     # --- stage: per-partition lineage metrics (B15) --------------------------
     metrics = (
@@ -1048,20 +931,11 @@ def build_index(
         def _metrics_sink() -> None:
             metrics.write.mode("overwrite").parquet(os.path.join(vdir, "metrics"))
 
-        def _positions_sink() -> None:
-            _write_bucketed(
-                _positions_blocks(pos_partials, cfg, range_size, hot_df),
-                os.path.join(vdir, "positions"),
-            )
-
-        # the five sinks are independent jobs over already-persisted inputs:
+        # the four sinks are independent jobs over already-persisted inputs:
         # submit them from a small thread pool so the smaller writes
         # back-fill executors idled by the postings write's task tail
         # (guide §2.6 overlap independent jobs) instead of running serially
-        sinks = (
-            _postings_sink, _terms_sink, _docs_sink, _metrics_sink,
-            _positions_sink,
-        )
+        sinks = (_postings_sink, _terms_sink, _docs_sink, _metrics_sink)
         with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
             futs = [pool.submit(f) for f in sinks]
             for fu in futs:

@@ -7,7 +7,7 @@ reference relied on (SURVEY.md §2.B13).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -40,9 +40,6 @@ class IndexConfig:
     # scans prune to the query terms' buckets (partition pruning on disk).
     n_term_buckets: int = 16
 
-    # Arrow batch size for mapInPandas stages.
-    arrow_batch_rows: int = 10_000
-
     # SPIMI in-memory posting budget per task (MB of accumulated int32
     # posting cells). When a task's accumulators exceed this, it flushes the
     # current partial rows and resets — the merge stage already unions
@@ -62,12 +59,6 @@ class IndexConfig:
     # — time-travel reads (`open_index(version=...)`) stay valid forever,
     # which the snapshot oracle rows rely on. At production scale set e.g. 2.
     keep_snapshots: int | None = None
-
-    extra: dict = field(default_factory=dict)
-
-    @property
-    def hot_df(self) -> int:
-        return self.min_hot_df
 
     def range_size(self, n_docs: int) -> int:
         return max(1, -(-n_docs // self.n_doc_ranges))

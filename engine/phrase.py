@@ -10,7 +10,7 @@ zero Spark jobs), larger ones from distributed brute force
 (bucket-partition-pruned scan, broadcast stats, map-side partial
 aggregation). Exact-phrase top-k (`engine.positional.
 phrase_topk_positional`) keeps the candidates whose adjacency the
-positions table confirms, then orders by (score desc, url asc).
+postings blocks' positions confirm, then orders by (score desc, url asc).
 
 `filtered_topk` applies a facet predicate before the top-k cut; see its
 docstring for the brute and filter-aware WAND plans.

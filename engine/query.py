@@ -127,19 +127,30 @@ def _docs_df(spark: SparkSession, handle: IndexHandle) -> DataFrame:
 
 
 def _term_buckets(handle: IndexHandle, terms: list[str]) -> list[int]:
-    """The `bucket=` partitions holding these terms' postings (and
-    positions): crc32(term) % n_term_buckets, as the build lays them out."""
+    """The `bucket=` partitions holding these terms' postings:
+    crc32(term) % n_term_buckets, as the build lays them out."""
     n_buckets = int(handle.stats["n_term_buckets"])
     return sorted({zlib.crc32(t.encode("utf-8")) % n_buckets for t in terms})
 
 
+# the postings columns the scoring kernel decodes; WAND's sweep also reads
+# the block bounds. No scoring path reads pos_enc (phrase search only).
+_SCORE_COLS = ["term", "n", "codec_ids", "ids_enc", "codec_tfs", "tfs_enc",
+               "codec_dls", "dls_enc"]
+_WAND_COLS = _SCORE_COLS + ["first_doc_id", "last_doc_id", "max_score"]
+
+
 def _pruned_postings(
-    spark: SparkSession, handle: IndexHandle, terms: list[str]
+    spark: SparkSession, handle: IndexHandle, terms: list[str],
+    columns: list[str],
 ) -> DataFrame:
+    """The terms' postings blocks, pruned to their term buckets and rows,
+    reading only `columns` (the ones the caller decodes)."""
     return (
         _postings_df(spark, handle)
         .filter(F.col("bucket").isin(_term_buckets(handle, terms)))
         .filter(F.col("term").isin(terms))
+        .select(*columns)
     )
 
 
@@ -254,7 +265,7 @@ def _score_all(
     """Distributed brute force: every matching doc with its BM25 sum, no
     top-k cut → (doc_id, score). `terms` are the query's live terms."""
     k1, b = handle.stats["k1"], handle.stats["b"]
-    scored = _pruned_postings(spark, handle, terms).mapInPandas(
+    scored = _pruned_postings(spark, handle, terms, _SCORE_COLS).mapInPandas(
         _brute_scorer(st, k1, b, handle.stats["avgdl"]), SCORE_SCHEMA
     )
     agg = scored.groupBy("doc_id").agg(
@@ -665,7 +676,7 @@ def query_topk(
         # out to up to n_doc_ranges shards (~TARGET postings each — seconds
         # of vectorized kernel work per task at 10^12 docs, bounded memory).
         n_groups, width = _shard_layout(handle, st, terms, shard_target)
-        blocks = _pruned_postings(spark, handle, terms)
+        blocks = _pruned_postings(spark, handle, terms, _WAND_COLS)
         k1, b = handle.stats["k1"], handle.stats["b"]
         avgdl = handle.stats["avgdl"]
         # ship the allowed-id array via a SparkContext broadcast (torrent,
@@ -799,8 +810,7 @@ def local_scored_arrays(
         handle, "_postings_ds", handle.postings_path, partitioning="hive"
     )
     tbl = dset.to_table(
-        columns=["term", "n", "codec_ids", "ids_enc", "codec_tfs", "tfs_enc",
-                 "codec_dls", "dls_enc"],
+        columns=_SCORE_COLS,
         filter=ds.field("bucket").isin(_term_buckets(handle, terms))
         & ds.field("term").isin(terms),
     )

@@ -170,12 +170,12 @@ def bm25_topk_filtered(spark, sf_dir):
 @register("bm25_phrase", _phrase_sql("data table", 10))
 def bm25_phrase(spark, sf_dir):
     """Exact-phrase top-k (B18): conjunctive BM25 candidate retrieval from
-    the index, adjacency checked on the index's positions table, rank by
+    the index, adjacency checked on the postings blocks' positions, rank by
     unique-term BM25 sum (engine/positional.py)."""
     from engine.positional import phrase_topk_positional
 
     h = get_index(spark, sf_dir)
-    out = phrase_topk_positional(spark, h, h.positions_path, "data table", k=10)
+    out = phrase_topk_positional(spark, h, h.postings_path, "data table", k=10)
     return out.select("url", F.round("score", 4).alias("score"))
 
 

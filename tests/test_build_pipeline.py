@@ -151,9 +151,9 @@ def test_resume_from_partial_checkpoint(spark, index_cfg):
         assert [(r["doc_id"], round(r["score"], 9)) for r in a] == [
             (r["doc_id"], round(r["score"], 9)) for r in b_
         ]
-    want = _positions_hash(spark, clean.positions_path)
+    want = _positions_hash(spark, clean)
     for h in (h1, h2):
-        assert _positions_hash(spark, h.positions_path) == want
+        assert _positions_hash(spark, h) == want
 
 
 def test_checkpoint_of_older_partials_layout_is_rebuilt(spark, index_cfg):
@@ -182,9 +182,7 @@ def test_checkpoint_of_older_partials_layout_is_rebuilt(spark, index_cfg):
     h2 = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_old2_"),
                      index_cfg, checkpoint_dir=ck)
     assert _postings_hash(spark, h2) == _postings_hash(spark, h1)
-    assert _positions_hash(spark, h2.positions_path) == _positions_hash(
-        spark, h1.positions_path
-    )
+    assert _positions_hash(spark, h2) == _positions_hash(spark, h1)
 
 
 def test_atomic_publish_versions(spark, index_cfg):
@@ -201,10 +199,10 @@ def test_atomic_publish_versions(spark, index_cfg):
     assert h.version_dir.endswith("v_1")
 
 
-def test_positions_sink_failure_publishes_nothing(spark, index_cfg, monkeypatch):
-    """Fault injection: the positions sink raises inside build_index. The
-    manifest stays on the previous version and open_index shows no new
-    one."""
+def test_postings_sink_failure_publishes_nothing(spark, index_cfg, monkeypatch):
+    """Fault injection: the postings sink, which also writes the positions,
+    raises inside build_index. The manifest stays on the previous version
+    and open_index shows no new one."""
     import engine.build
     from engine.publish import list_snapshots, read_manifest
 
@@ -213,10 +211,10 @@ def test_positions_sink_failure_publishes_nothing(spark, index_cfg, monkeypatch)
     build_index(spark, wp, root, index_cfg)
 
     def crash(*args, **kwargs):
-        raise RuntimeError("positions sink crashed")
+        raise RuntimeError("postings sink crashed")
 
-    monkeypatch.setattr(engine.build, "_positions_blocks", crash)
-    with pytest.raises(RuntimeError, match="positions sink crashed"):
+    monkeypatch.setattr(engine.build, "_write_bucketed", crash)
+    with pytest.raises(RuntimeError, match="postings sink crashed"):
         build_index(spark, wp, root, index_cfg)
     assert read_manifest(root)["version"] == "v_0"
     assert [s["version"] for s in list_snapshots(root)] == ["v_0"]
@@ -334,14 +332,14 @@ def _postings_hash(spark, handle):
     )
 
 
-def _positions_hash(spark, pos_dir):
-    """The same xor-of-block-hashes over the positions table."""
+def _positions_hash(spark, handle):
+    """The same xor-of-block-hashes over the blocks' positions column."""
     return (
-        spark.read.parquet(pos_dir)
+        spark.read.parquet(handle.postings_path)
         .select(
             F.xxhash64(
                 "term", "salt", "block_seq", "n", "first_doc_id",
-                "last_doc_id", "ids_enc", "cnts_enc", "pos_enc"
+                "last_doc_id", "pos_enc"
             ).alias("h")
         )
         .agg(F.expr("bit_xor(h)").alias("x"))
@@ -354,20 +352,28 @@ def test_spimi_spill_byte_identical_index(spark, index_cfg):
     posting accumulators many times mid-partition must produce a
     byte-identical index to the unflushed build — the merge stage unions
     multi-row partials per (term, pid) exactly like partials from distinct
-    pids, and doc ids keep ascending across flushes."""
+    pids, and doc ids keep ascending across flushes. The flushed build also
+    runs with 64-row Arrow batches, so its Python stages see many batches
+    and the merge stitches groups that straddle them."""
     import dataclasses
 
     wp = load_webpages(spark, SF_DIR_001)
     a = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_noflush_"), index_cfg)
-    cfg_spill = dataclasses.replace(
-        index_cfg, spimi_flush_mb=0.02, arrow_batch_rows=64
-    )
-    b = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_flush_"), cfg_spill)
+    cfg_spill = dataclasses.replace(index_cfg, spimi_flush_mb=0.02)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "64")
+    try:
+        b = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_flush_"),
+                        cfg_spill)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
     assert a.stats["n_docs"] == b.stats["n_docs"]
     assert _postings_hash(spark, a) == _postings_hash(spark, b)
-    assert _positions_hash(spark, a.positions_path) == _positions_hash(
-        spark, b.positions_path
-    )
+    assert _positions_hash(spark, a) == _positions_hash(spark, b)
 
 
 def test_spimi_flush_emits_multiple_partial_frames(index_cfg):

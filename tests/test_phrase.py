@@ -49,7 +49,7 @@ def tiny_index(spark, index_cfg):
 def _phrase(spark, h, phrase, k):
     from engine.positional import phrase_topk_positional
 
-    return phrase_topk_positional(spark, h, h.positions_path, phrase, k=k)
+    return phrase_topk_positional(spark, h, h.postings_path, phrase, k=k)
 
 
 def test_phrase_adjacency_and_token_boundaries(spark, tiny_index):

@@ -1,9 +1,10 @@
 """Positional-postings phrase search (engine/positional.py) over the
-positions table build_index writes: rank identity with the pure-Python
-reference in tests/phrase_reference.py, adjacency semantics (repeated
-terms, boundaries), multi-shard exactness, table determinism across input
-partitioning, positions consistent with the terms table (df, cf) on a
-corpus with recrawls, and the no-corpus-access plan property."""
+positions build_index writes on the postings blocks (`pos_enc`): rank
+identity with the pure-Python reference in tests/phrase_reference.py,
+adjacency semantics (repeated terms, boundaries), multi-shard exactness,
+positions determinism across input partitioning, positions consistent with
+the terms table (df, cf) and the docs' lengths on a corpus with recrawls,
+and the no-corpus-access plan property."""
 
 from __future__ import annotations
 
@@ -15,10 +16,11 @@ import pytest
 
 from tests.phrase_reference import PhraseReference, assert_same_topk
 from tests.test_build_pipeline import _positions_hash
+from tests.test_scale_plans import _file_scans, _plan
 
-# positions content hash (xor of per-block xxhash64) of the session index,
-# tests/conftest.py::built_index over sf0.001
-SF0001_POSITIONS_HASH = 3191333307470414653
+# positions content hash (xor of per-block xxhash64 over the block keys and
+# pos_enc) of the session index, tests/conftest.py::built_index over sf0.001
+SF0001_POSITIONS_HASH = 3046176315897967210
 
 
 def _wp_rows():
@@ -46,7 +48,7 @@ def pos_index(spark, index_cfg):
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
     h = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_pos_"), index_cfg)
-    return h, wp, h.positions_path
+    return h, wp, h.postings_path
 
 
 def test_positional_rank_identical_to_reference(spark, pos_index, index_cfg):
@@ -115,7 +117,6 @@ def test_positional_randomized_equivalence(spark, index_cfg):
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
     h = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_rnd_"), index_cfg)
-    pos_dir = h.positions_path
     docs = {
         r["doc_id"]: r["url"]
         for r in spark.read.parquet(h.docs_path).collect()
@@ -125,7 +126,7 @@ def test_positional_randomized_equivalence(spark, index_cfg):
         terms = tokenize(phrase)
         got = {
             docs[r["doc_id"]]
-            for r in phrase_match_docs(spark, h, pos_dir, terms).collect()
+            for r in phrase_match_docs(spark, h, terms).collect()
         }
         want = set()
         for u, t_ in text_by_url.items():
@@ -144,25 +145,22 @@ def test_positional_multi_shard_exact(spark, pos_index):
     from engine.analyzer import tokenize
     from engine.positional import phrase_match_docs
 
-    h, _, pos_dir = pos_index
+    h, _, _ = pos_index
     terms = tokenize("data table")
     single = {
-        r["doc_id"]
-        for r in phrase_match_docs(spark, h, pos_dir, terms).collect()
+        r["doc_id"] for r in phrase_match_docs(spark, h, terms).collect()
     }
     sharded = {
         r["doc_id"]
-        for r in phrase_match_docs(
-            spark, h, pos_dir, terms, shard_target=1
-        ).collect()
+        for r in phrase_match_docs(spark, h, terms, shard_target=1).collect()
     }
     assert sharded == single and len(single) == 3
 
 
 def test_positions_artifact_deterministic(spark, index_cfg):
-    """The positions table is a pure function of (url set, config):
-    indexes built from a 1-partition and a 16-partition copy of the same
-    corpus have identical position blocks (xor of per-block hashes)."""
+    """The positions are a pure function of (url set, config): indexes
+    built from a 1-partition and a 16-partition copy of the same corpus
+    have identical blocks' positions (xor of per-block hashes)."""
     from engine.build import build_index
 
     wp = spark.createDataFrame(
@@ -173,33 +171,29 @@ def test_positions_artifact_deterministic(spark, index_cfg):
                      tempfile.mkdtemp(prefix="idx_det_a_"), index_cfg)
     h16 = build_index(spark, wp.repartition(16),
                       tempfile.mkdtemp(prefix="idx_det_b_"), index_cfg)
-    assert _positions_hash(spark, h1.positions_path) == _positions_hash(
-        spark, h16.positions_path
-    )
+    assert _positions_hash(spark, h1) == _positions_hash(spark, h16)
 
 
 def test_positions_hash_pinned(spark, built_index):
-    assert (
-        _positions_hash(spark, built_index.positions_path)
-        == SF0001_POSITIONS_HASH
-    )
+    assert _positions_hash(spark, built_index) == SF0001_POSITIONS_HASH
 
 
 def test_positions_match_terms_on_recrawls(spark, index_cfg):
     """A corpus with recrawls: positions come from the deduplicated docs
-    the index holds, so per term the positions' doc count equals df and
-    their position count equals cf. build_positions keeps accepting the
-    raw corpus."""
+    the index holds, so per term the positions' doc count equals df, their
+    position count equals cf, and every position lies below its doc's
+    length. build_positions keeps accepting the raw corpus."""
+    import numpy as np
+
     from engine.build import build_index
-    from engine.codec import varint_decode
+    from engine.codec import decode_concat, delta_decode_blocks, varint_decode
     from engine.positional import build_positions
     from engine.webpages import load_webpages, with_recrawl
 
     wp = with_recrawl(load_webpages(spark, "/root/testdata/sf0.001"))
     h = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_recrawl_"),
                     index_cfg)
-    pos_dir = build_positions(spark, h, wp)
-    assert pos_dir == h.positions_path
+    assert build_positions(spark, h, wp) == h.postings_path
     terms = {
         r["term"]: (r["df"], r["cf"])
         for r in spark.read.parquet(h.terms_path).collect()
@@ -207,24 +201,38 @@ def test_positions_match_terms_on_recrawls(spark, index_cfg):
     n_urls = wp.select("url").distinct().count()
     assert h.stats["n_docs"] == n_urls < wp.count()
     pos: dict[str, list[int]] = {}
-    for r in spark.read.parquet(pos_dir).select("term", "n", "cnts_enc").collect():
+    blocks = spark.read.parquet(h.postings_path).select(
+        "term", "n", "codec_tfs", "tfs_enc", "codec_dls", "dls_enc", "pos_enc"
+    ).collect()
+    for r in blocks:
+        n = [r["n"]]
+        tfs = decode_concat([r["codec_tfs"]], [r["tfs_enc"]], n)
+        dls = decode_concat([r["codec_dls"]], [r["dls_enc"]], n)
+        gaps = varint_decode(r["pos_enc"])
+        assert len(gaps) == int(tfs.sum()), r["term"]
+        positions = delta_decode_blocks(gaps, tfs)
+        assert (positions < np.repeat(dls, tfs.astype(np.int64))).all(), r["term"]
         df_cf = pos.setdefault(r["term"], [0, 0])
         df_cf[0] += r["n"]
-        df_cf[1] += int(varint_decode(r["cnts_enc"]).sum())
+        df_cf[1] += len(positions)
     assert pos == {t: [df, cf] for t, (df, cf) in terms.items()}
 
 
-def test_positional_plan_reads_only_positions(spark, pos_index):
-    """The phrase-match plan scans the positions artifact with term-bucket
-    partition pruning and never touches the corpus or the main postings."""
+def test_phrase_scan_reads_positions_not_corpus(spark, pos_index):
+    """The phrase-match plan scans the postings blocks with term-bucket
+    partition pruning and reads their positions, but never a column it
+    does not decode (the doc lengths) nor the corpus."""
     from engine.analyzer import tokenize
     from engine.positional import phrase_match_docs
 
-    h, _, pos_dir = pos_index
-    plan = phrase_match_docs(
-        spark, h, pos_dir, tokenize("data table")
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "positions" in plan
-    # corpus (webpages) and main postings never appear in the scan set
+    h, _, _ = pos_index
+    df = phrase_match_docs(spark, h, tokenize("data table"))
+    scans = _file_scans(df)
+    assert scans
+    for ln, cols in scans:
+        assert "postings" in ln
+        assert "PartitionFilters" in ln and "bucket" in ln
+        assert "pos_enc" in cols and "dls_enc" not in cols
+    # corpus (webpages) columns never appear in the plan
+    plan = _plan(df)
     assert "text#" not in plan and "html#" not in plan
-    assert "tfs_enc" not in plan

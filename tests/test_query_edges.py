@@ -86,9 +86,13 @@ def test_bad_arguments_rejected(spark, built_index, webpages):
             query_topk(spark, built_index, "spark", **kw)
     with pytest.raises(ValueError, match="brute.*wand"):
         filtered_topk(spark, built_index, None, "spark", None, mode="WAND")
-    pos_dir = built_index.positions_path
+    pos_dir = built_index.postings_path
     with pytest.raises(ValueError, match="k must be"):
         phrase_topk_positional(spark, built_index, pos_dir, "the data", k=-1)
+    # the positions live on the postings blocks: any other dir is refused
+    for bad in (built_index.docs_path, built_index.version_dir):
+        with pytest.raises(ValueError, match="postings_path"):
+            phrase_topk_positional(spark, built_index, bad, "the data", k=5)
     # "zz" resolves to an empty allowed set: k is checked before the
     # empty-set early return
     for mode in ("brute", "wand"):
@@ -130,7 +134,7 @@ def test_filtered_topk_result_schema(spark, built_index, webpages, mode):
 def test_phrase_result_schemas(spark, built_index):
     from engine.positional import phrase_topk_positional
 
-    pos_dir = built_index.positions_path
+    pos_dir = built_index.postings_path
     for phrase in ("the data", "spark", "", "zzzqqq data"):
         assert _fields(phrase_topk_positional(spark, built_index, pos_dir,
                                               phrase, k=5)) == RESULT, phrase
@@ -154,7 +158,7 @@ def test_k0_returns_empty_without_spark_job(spark, built_index, webpages):
 
     calls = [
         lambda: phrase_topk_positional(
-            spark, built_index, built_index.positions_path, "the data", k=0),
+            spark, built_index, built_index.postings_path, "the data", k=0),
     ] + [
         lambda m=m: filtered_topk(spark, built_index, webpages, "spark join",
                                   F.col("lang") == "en", k=0, mode=m)

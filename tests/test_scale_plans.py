@@ -18,6 +18,17 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _file_scans(df) -> list[tuple[str, str]]:
+    """(scan line, its output columns) per parquet scan in df's plan. The
+    output list is the read schema plus partition columns and, unlike
+    ReadSchema, is never abbreviated in the plan string."""
+    out = []
+    for ln in _plan(df).splitlines():
+        if "FileScan parquet" in ln:
+            out.append((ln, ln[ln.index("[") + 1 : ln.index("]")]))
+    return out
+
+
 def test_filter_and_projection_pushdown(spark):
     df = QUERIES["scan_project_filter"](spark, SF_DIR_01)
     plan = _plan(df)
@@ -112,11 +123,29 @@ def test_ann_index_probe_scan_pruned(spark, tmp_path):
     assert "PushedFilters" in plan and "sig" in plan
 
 
-def test_query_scan_prunes_term_buckets(spark, built_index):
-    """The pruned postings scan must hit only the query terms' bucket
-    directories (partition pruning), not the full postings table."""
-    from engine.query import _pruned_postings
+def test_query_scan_prunes_term_buckets(spark, built_index, monkeypatch):
+    """The scoring scans (brute and WAND) must hit only the query terms'
+    bucket directories (partition pruning), not the full postings table,
+    and read only the columns the scoring kernel decodes: never the
+    blocks' positions (pos_enc), which only phrase search reads."""
+    import engine.query as q
 
-    df = _pruned_postings(spark, built_index, ["spark"])
-    plan = _plan(df)
-    assert "PartitionFilters" in plan and "bucket" in plan
+    terms = ["spark", "join"]
+    wand_blocks = []
+    run_shards = q._run_shards
+
+    def spy(blocks, *args):
+        wand_blocks.append(blocks)
+        return run_shards(blocks, *args)
+
+    monkeypatch.setattr(q, "_run_shards", spy)
+    q.query_topk(spark, built_index, "spark join", mode="wand").collect()
+    assert wand_blocks
+    brute = q._score_all(spark, built_index, terms,
+                         q._local_term_stats(built_index, terms), False)
+    for df in [brute, *wand_blocks]:
+        scans = _file_scans(df)
+        assert scans
+        for ln, cols in scans:
+            assert "PartitionFilters" in ln and "bucket" in ln
+            assert "tfs_enc" in cols and "pos_enc" not in cols
