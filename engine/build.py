@@ -22,7 +22,9 @@ Pipeline (all DataFrame-declared; Python boundaries are Arrow-batched):
 6.  per-(term,salt) applyInPandas: merge-sort postings, chunk into blocks of
     128, delta+varint/FOR compress, per-block max BM25 score (§2.B8).
 7.  sinks: postings partitioned by term bucket (query-time partition
-    pruning), terms/docs/metrics parquet, stats JSON; all inside one atomic
+    pruning), terms/docs parquet, stats JSON (with per-pid lineage and
+    per-bucket byte metrics, B15, taken from the step-4 aggregation and the
+    step-6 kernel rather than a second pass); all inside one atomic
     manifest publish (reference A15 alias swap analog). Each postings block
     also carries its postings' token positions (`pos_enc`, for exact-phrase
     search; see engine/positional.py). They come from the SPIMI pass of
@@ -45,6 +47,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+from pyspark import inheritable_thread_target
+from pyspark.accumulators import AddingAccumulatorParam
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import types as T
 
@@ -505,7 +509,7 @@ def _salt_split(cfg: IndexConfig, range_size: int, hot_df: dict[str, int]):
     return fn
 
 
-def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float):
+def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float, bucket_acc):
     """Merge + compress over a (term, salt)-sorted partition stream: merge-
     sort each group's partials, block-chunk, delta + varint/FOR compress
     (analytic per-block codec choice, one vectorized encode pass per
@@ -521,7 +525,13 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float):
     that straddles an Arrow batch boundary is held back and stitched onto
     the next batch, so each group is still compressed exactly once, whole.
     Each posting's token positions move with it through the merge sort and
-    are written per block (`pos_enc`) in one varint pass."""
+    are written per block (`pos_enc`) in one varint pass.
+
+    Per-bucket byte metrics (B15) ride `bucket_acc`, an (n_buckets, 3)
+    accumulator of [n_blocks, n_postings, encoded_bytes]. This kernel runs
+    in the result stage of the postings write, and the DAGScheduler applies
+    a result task's accumulator update once per partition, even when the
+    task is retried or speculated, so the totals are exact."""
     k1, b, bs = cfg.k1, cfg.b, cfg.block_size
     n_buckets = cfg.n_term_buckets
 
@@ -584,6 +594,11 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float):
         cd, dbufs = encode_blocks(dls.astype(np.uint64), starts)
         pbufs = varint_encode_rows(pos_g, run_dst[starts])
         term_g = terms_arr[grp_first_row]
+        bucket = _term_bucket(term_g, n_buckets)[blk_grp]
+        enc = [len(i) + len(t) + len(d) for i, t, d in zip(ebufs, tbufs, dbufs)]
+        per_bucket = np.zeros((n_buckets, 3), np.int64)
+        np.add.at(per_bucket, bucket, np.c_[np.ones_like(starts), ends - starts, enc])
+        bucket_acc.add(per_bucket)
         return pd.DataFrame(
             {
                 "term": term_g[blk_grp],
@@ -600,7 +615,7 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float):
                 "codec_dls": np.asarray(cd, dtype=np.int32),
                 "dls_enc": dbufs,
                 "pos_enc": pbufs,
-                "bucket": _term_bucket(term_g, n_buckets)[blk_grp],
+                "bucket": bucket,
             }
         )
 
@@ -661,10 +676,6 @@ class IndexHandle:
     @property
     def docs_path(self) -> str:
         return os.path.join(self.version_dir, "docs")
-
-    @property
-    def metrics_path(self) -> str:
-        return os.path.join(self.version_dir, "metrics")
 
 
 def open_index(path: str, version: str | None = None) -> IndexHandle:
@@ -791,11 +802,19 @@ def build_index(
         F.col("z.urls").alias("url"),
         F.col("z.langs").alias("lang"),
         F.col("z.fps").alias("text_fp"),
-    ).persist()
-    g = docs.agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = int(g["n"]), float(g["avgdl"] or 0.0)
+    )
+    # per-pid lineage (B15) and the global stats in one pass over the
+    # partials (pseudo rows carry n = tf_sum = 0): a doc's tfs sum to its dl
+    # and both sums are exact integers, so n_tokens / n_docs is bit-equal to
+    # avg(dl) over the docs table
+    pid_metrics = [r.asDict() for r in sorted(partials.groupBy("pid").agg(
+        F.sum(F.when(F.col("term") == DOC_PSEUDO_TERM, F.size("doc_ids")))
+        .alias("n_docs"),
+        F.sum("n").alias("n_postings"),
+        F.sum("tf_sum").alias("n_tokens"),
+    ).collect())]
+    n_docs = sum(r["n_docs"] for r in pid_metrics)
+    avgdl = sum(r["n_tokens"] for r in pid_metrics) / n_docs if n_docs else 0.0
     phases["spimi_and_doc_stats"] = round(time.time() - t0, 3)
 
     terms = (
@@ -867,6 +886,10 @@ def build_index(
     # vectorized pass (see _merge_compress docstring). Within-bucket
     # parallelism is governed by n_term_buckets (raise it at cluster scale).
     n_buckets = cfg.n_term_buckets
+    # tasks start from the param's zero and add in place; the driver-side
+    # total is a separate array so it never leaks into a task's zero
+    zero = np.zeros((n_buckets, 3), np.int64)
+    bucket_acc = spark.sparkContext.accumulator(zero.copy(), AddingAccumulatorParam(zero))
     postings = (
         salted.withColumn(
             "bucket",
@@ -875,18 +898,9 @@ def build_index(
         .repartition(n_buckets, F.col("bucket"))
         .sortWithinPartitions("term", "salt")
         .drop("bucket")
-        .mapInPandas(_merge_compress(cfg, n_docs, avgdl), schema=POSTINGS_SCHEMA)
-    )
-
-    # --- stage: per-partition lineage metrics (B15) --------------------------
-    metrics = (
-        term_partials.groupBy("pid")
-        .agg(
-            F.count("*").alias("n_terms"),
-            F.sum("n").alias("n_postings"),
-            F.sum("tf_sum").alias("n_tokens"),
+        .mapInPandas(
+            _merge_compress(cfg, n_docs, avgdl, bucket_acc), schema=POSTINGS_SCHEMA
         )
-        .join(docs.groupBy("pid").agg(F.count("*").alias("n_docs")), "pid", "full")
     )
 
     # --- sinks + atomic publish (B9/A15) ------------------------------------
@@ -898,23 +912,6 @@ def build_index(
         def _postings_sink() -> None:
             _write_bucketed(postings, os.path.join(vdir, "postings"))
             phases["merge_compress_write"] = round(time.time() - _t, 3)
-            # per-write-task byte/block metrics (B15: doc/term/byte
-            # metrics): one row per term bucket = one written partition
-            (
-                spark.read.parquet(os.path.join(vdir, "postings"))
-                .groupBy("bucket")
-                .agg(
-                    F.count("*").alias("n_blocks"),
-                    F.sum("n").alias("n_postings"),
-                    F.sum(
-                        F.octet_length("ids_enc")
-                        + F.octet_length("tfs_enc")
-                        + F.octet_length("dls_enc")
-                    ).alias("encoded_bytes"),
-                )
-                .write.mode("overwrite")
-                .parquet(os.path.join(vdir, "bucket_metrics"))
-            )
 
         def _terms_sink() -> None:
             terms.withColumn(
@@ -928,16 +925,14 @@ def build_index(
         def _docs_sink() -> None:
             docs.write.mode("overwrite").parquet(os.path.join(vdir, "docs"))
 
-        def _metrics_sink() -> None:
-            metrics.write.mode("overwrite").parquet(os.path.join(vdir, "metrics"))
-
-        # the four sinks are independent jobs over already-persisted inputs:
-        # submit them from a small thread pool so the smaller writes
-        # back-fill executors idled by the postings write's task tail
-        # (guide §2.6 overlap independent jobs) instead of running serially
-        sinks = (_postings_sink, _terms_sink, _docs_sink, _metrics_sink)
+        # the three sinks are independent jobs over persisted inputs: submit
+        # them from a small thread pool so the smaller writes back-fill
+        # executors idled by the postings write's task tail (guide §2.6
+        # overlap independent jobs) instead of running serially. The threads
+        # inherit the caller's job group and other local properties.
+        sinks = (_postings_sink, _terms_sink, _docs_sink)
         with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
-            futs = [pool.submit(f) for f in sinks]
+            futs = [pool.submit(inheritable_thread_target(spark)(f)) for f in sinks]
             for fu in futs:
                 fu.result()
         phases["aux_writes"] = round(time.time() - _t, 3)
@@ -954,6 +949,11 @@ def build_index(
             "hot_threshold": hot_thr,
             "build_seconds": time.time() - t0,
             "phase_seconds": phases,
+            "pid_metrics": pid_metrics,
+            "bucket_metrics": [
+                dict(zip(("bucket", "n_blocks", "n_postings", "encoded_bytes"), (b, *m)))
+                for b, m in enumerate(bucket_acc.value.tolist()) if m[0]
+            ],
         }
         with open(os.path.join(vdir, "stats.json"), "w") as f:
             json.dump(stats, f, indent=2)
@@ -963,7 +963,6 @@ def build_index(
         version_dir, stats = atomic_publish(index_dir, writer)
     finally:
         partials.unpersist()
-        docs.unpersist()
         terms.unpersist()
     if cfg.keep_snapshots is not None:
         # Iceberg-style retention from the build path (A15): prune committed

@@ -154,6 +154,7 @@ def test_resume_from_partial_checkpoint(spark, index_cfg):
     want = _positions_hash(spark, clean)
     for h in (h1, h2):
         assert _positions_hash(spark, h) == want
+        assert h.stats["pid_metrics"] == clean.stats["pid_metrics"]
 
 
 def test_checkpoint_of_older_partials_layout_is_rebuilt(spark, index_cfg):
@@ -223,12 +224,58 @@ def test_postings_sink_failure_publishes_nothing(spark, index_cfg, monkeypatch):
         open_index(root, version="v_1")
 
 
+def test_build_shape_and_job_group(spark, index_cfg):
+    """A version dir holds exactly postings/, terms/, docs/ and stats.json.
+    Every Spark job a build starts, including those of its sink threads,
+    runs in the caller's job group, and an sf0.001 build launches at most
+    11 jobs, so a metric or sink cannot return as its own job unnoticed."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    def last_job_id(group):
+        in_group(group, lambda: spark.range(1).collect())
+        return max(tracker.getJobIdsForGroup(group))
+
+    wp = load_webpages(spark, SF_DIR_001)
+    first = last_job_id("before-build")
+    h = in_group("build", lambda: build_index(
+        spark, wp, tempfile.mkdtemp(prefix="idx_shape_"), index_cfg
+    ))
+    started = set(range(first + 1, last_job_id("after-build")))
+    assert set(tracker.getJobIdsForGroup("build")) == started
+    assert 0 < len(started) <= 11
+    assert sorted(os.listdir(h.version_dir)) == [
+        "docs", "postings", "stats.json", "terms"
+    ]
+
+
 def test_lineage_metrics_per_partition(spark, built_index, index_cfg):
-    m = spark.read.parquet(built_index.metrics_path)
-    rows = m.collect()
+    """B15: the per-pid lineage in stats.json adds up to the published
+    tables: docs and tokens per pid match the docs table, and the postings
+    and tokens over all pids match the terms table's df and cf."""
+    stats = open_index(built_index.path).stats
+    rows = stats["pid_metrics"]
     assert 0 < len(rows) <= index_cfg.n_build_partitions
-    assert sum(r["n_docs"] for r in rows) == built_index.stats["n_docs"]
-    assert all(r["n_postings"] >= r["n_terms"] for r in rows)
+    assert sum(r["n_docs"] for r in rows) == stats["n_docs"]
+    docs = spark.read.parquet(built_index.docs_path).groupBy("pid").agg(
+        F.count("*").alias("n_docs"), F.sum("dl").alias("n_tokens")
+    )
+    assert {r["pid"]: (r["n_docs"], r["n_tokens"]) for r in rows} == {
+        r["pid"]: (r["n_docs"], r["n_tokens"]) for r in docs.collect()
+    }
+    df, cf = spark.read.parquet(built_index.terms_path).agg(
+        F.sum("df"), F.sum("cf")
+    ).collect()[0]
+    assert sum(r["n_postings"] for r in rows) == df
+    assert sum(r["n_tokens"] for r in rows) == cf
 
 
 def test_facet_counts(spark, built_index):
@@ -242,19 +289,38 @@ def test_facet_counts(spark, built_index):
     assert set(facets) == {"de", "en", "es", "fr", "zh"}
 
 
-def test_bucket_byte_metrics(spark, built_index):
-    """B15: per-write-task byte metrics — encoded bytes per bucket sum to
-    the real on-disk payload and cover every posting."""
-    import os
-
-    bm = spark.read.parquet(
-        os.path.join(built_index.version_dir, "bucket_metrics")
-    ).collect()
-    assert len(bm) > 0
-    total_postings = sum(r["n_postings"] for r in bm)
-    terms = spark.read.parquet(built_index.terms_path)
-    assert total_postings == terms.agg(F.sum("df")).collect()[0][0]
-    assert all(r["encoded_bytes"] > 0 for r in bm)
+def test_bucket_byte_metrics(spark, built_index, index_cfg):
+    """B15: per-write-task byte metrics in stats.json, one row per term
+    bucket, equal what the written postings/bucket=b partition holds: its
+    block count, the df of the bucket's terms, and the ids/tfs/dls bytes."""
+    got = {
+        r["bucket"]: (r["n_blocks"], r["n_postings"], r["encoded_bytes"])
+        for r in open_index(built_index.path).stats["bucket_metrics"]
+    }
+    blocks = {
+        r["bucket"]: (r["n_blocks"], r["encoded_bytes"])
+        for r in spark.read.parquet(built_index.postings_path)
+        .groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_blocks"),
+            F.sum(
+                F.octet_length("ids_enc")
+                + F.octet_length("tfs_enc")
+                + F.octet_length("dls_enc")
+            ).alias("encoded_bytes"),
+        )
+        .collect()
+    }
+    term_bucket = F.crc32(F.encode("term", "utf-8")) % index_cfg.n_term_buckets
+    dfs = {
+        r["bucket"]: r["df"]
+        for r in spark.read.parquet(built_index.terms_path)
+        .groupBy(term_bucket.cast("int").alias("bucket"))
+        .agg(F.sum("df").alias("df"))
+        .collect()
+    }
+    assert len(got) > 1
+    assert got == {b: (nb, dfs[b], eb) for b, (nb, eb) in blocks.items()}
 
 
 def test_pid_fingerprint_sees_content_changes(spark):
@@ -374,6 +440,8 @@ def test_spimi_spill_byte_identical_index(spark, index_cfg):
     assert a.stats["n_docs"] == b.stats["n_docs"]
     assert _postings_hash(spark, a) == _postings_hash(spark, b)
     assert _positions_hash(spark, a) == _positions_hash(spark, b)
+    for key in ("pid_metrics", "bucket_metrics"):
+        assert a.stats[key] == b.stats[key]
 
 
 def test_spimi_flush_emits_multiple_partial_frames(index_cfg):
