@@ -26,7 +26,7 @@ from engine.build import IndexHandle, open_index
 from engine.query import (
     LOCAL_MAX_POSTINGS,
     _docs_df,
-    _lookup_term_stats,
+    _local_term_stats,
     _result_df,
     _score_all,
     _top_by_url,
@@ -45,11 +45,11 @@ def scored_docs(
     """All matching docs with their summed BM25 score — query_topk without
     the top-k cut, with auto mode's choice of path. Returns (doc_id, score).
     """
-    st, driver_readable = _lookup_term_stats(spark, handle, terms)
+    st = _local_term_stats(handle, terms)
     live = [t for t in terms if t in st]
     if (conjunctive and len(live) < len(terms)) or not live:
         return _result_df(spark, [], [], None, with_url=False)
-    if driver_readable and sum(st[t]["df"] for t in live) <= LOCAL_MAX_POSTINGS:
+    if sum(st[t]["df"] for t in live) <= LOCAL_MAX_POSTINGS:
         # driver-local fast path (same auto-mode crossover as query_topk):
         # when the terms' postings fit the local budget, the pyarrow-pruned
         # read + numpy kernel produces all candidate scores in ~0.1 s with

@@ -51,7 +51,7 @@ from engine.build import IndexHandle, open_index
 from engine.codec import decode_concat, delta_decode_blocks, varint_decode_concat
 from engine.query import (
     _docs_df,
-    _lookup_term_stats,
+    _local_term_stats,
     _pruned_postings,
     _result_df,
     _run_shards,
@@ -152,7 +152,7 @@ def phrase_match_docs(
     uniq = list(dict.fromkeys(ordered_terms))
     if not uniq:
         return spark.createDataFrame([], MATCH_SCHEMA)
-    st, _ = _lookup_term_stats(spark, handle, uniq)
+    st = _local_term_stats(handle, uniq)
     if any(t not in st for t in uniq):
         return spark.createDataFrame([], MATCH_SCHEMA)
     n_groups, width = _shard_layout(handle, st, uniq, shard_target)

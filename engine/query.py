@@ -1,10 +1,11 @@
 """BM25 top-k query engine (SURVEY.md §2.B10–B14, §3.3).
 
 Three physical strategies, rank-identical by construction (property-tested)
-because all of them score with one decode-and-score kernel — the per-term
-block decoder ``_decode_blocks`` and the per-doc aggregator
-``_sum_per_doc``, which sums each doc's term contributions in sorted-term
-order, so WAND and local scores are bit-equal:
+because all of them score with one decode-and-score kernel — the decode
+step ``_decode_scored`` (one batched ``_decode_blocks`` call over any set
+of blocks) and the per-doc aggregator ``_sum_per_doc``, which sums each
+doc's term contributions in sorted-term order, so WAND and local scores
+are bit-equal:
 
 - ``brute``: decode every posting of the query terms and sum per doc within
   each Arrow batch, then groupBy(doc_id).sum → TakeOrderedAndProject. Fully
@@ -12,12 +13,14 @@ order, so WAND and local scores are bit-equal:
 - ``wand``: block-max WAND (BASELINE.json:6). Blocks are grouped into
   doc-range shards (hot-term salts are doc-range-aligned by the build, so
   most blocks land in exactly one shard); each shard runs an exact
-  interval-sweep BMW — intervals between block boundaries are processed in
-  descending upper-bound order, stopping when the next interval's bound
-  can't beat the shard's kth score. Only provably-dominated blocks are
-  skipped, so results are rank-identical to brute force (§2.B14 exactness
-  guard). Local top-k per shard, then a global TakeOrdered over ≤ shards·k
-  rows.
+  interval-sweep BMW as a columnar sweep — intervals between block
+  boundaries are visited in descending upper-bound order, in chunks of
+  1, 2, 4, … intervals, each decoding its new blocks in one decode step
+  and cutting the candidates to k with one lexsort; the sweep stops at the
+  first interval whose bound can't reach the shard's kth score. Only
+  provably-dominated blocks are skipped, so results are rank-identical to
+  brute force (§2.B14 exactness guard). Local top-k per shard, then a
+  global TakeOrdered over ≤ shards·k rows.
 - ``local``: the kernel runs on the driver over a pyarrow read of the pruned
   blocks — zero Spark jobs, for interactive p50 (SURVEY.md §7.2.6).
 
@@ -34,7 +37,6 @@ mapInPandas closure after a driver-side lookup of ≤|query| rows.
 
 from __future__ import annotations
 
-import heapq
 import zlib
 from typing import Iterator
 
@@ -69,10 +71,12 @@ TOPK_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("score", T.DoubleType()),
-        # max score among candidates the shard's top-k heap DROPPED
-        # (constant per shard; -inf if nothing was dropped): the url
-        # tie-break needs its floor rescan only when a dropped candidate
-        # ties the global kth score exactly — see query_topk
+        # max score among candidates the shard's top-k cut DROPPED
+        # (constant per shard; -inf if nothing was dropped). It may count
+        # candidates that a one-interval-at-a-time sweep would have
+        # skipped, but never exceeds the shard's kth score, and equals it
+        # exactly when a doc tying that score was cut: the url tie-break
+        # needs its floor rescan only then — see query_topk
         T.StructField("dropped_max", T.DoubleType()),
     ]
 )
@@ -135,8 +139,9 @@ def _term_buckets(handle: IndexHandle, terms: list[str]) -> list[int]:
 
 # the postings columns the scoring kernel decodes; WAND's sweep also reads
 # the block bounds. No scoring path reads pos_enc (phrase search only).
-_SCORE_COLS = ["term", "n", "codec_ids", "ids_enc", "codec_tfs", "tfs_enc",
+_CODEC_COLS = ["n", "codec_ids", "ids_enc", "codec_tfs", "tfs_enc",
                "codec_dls", "dls_enc"]
+_SCORE_COLS = ["term", *_CODEC_COLS]
 _WAND_COLS = _SCORE_COLS + ["first_doc_id", "last_doc_id", "max_score"]
 
 
@@ -154,41 +159,30 @@ def _pruned_postings(
     )
 
 
-def term_stats(spark: SparkSession, handle: IndexHandle, terms: list[str]) -> dict:
-    """B11: driver-side lookup of the ≤|query| term rows; result is shipped
-    to executors in the scoring closure (broadcast of a tiny dict)."""
-    rows = (
-        spark.read.parquet(handle.terms_path)
-        .filter(F.col("term").isin(terms))
-        .select("term", "df", "cf")
-        .collect()
+def _local_term_stats(handle: IndexHandle, terms: list[str]) -> dict:
+    """B11: the query terms' df, cf and idf — a driver-side pyarrow read of
+    ≤|query| rows of the terms table (no Spark job). The dict rides the
+    scoring closure to the executors (broadcast of a tiny dict). Terms
+    missing from the index are absent from it."""
+    dset = _pa_dataset(handle, "_terms_ds", handle.terms_path)
+    tbl = dset.to_table(
+        columns=["term", "df", "cf"], filter=ds.field("term").isin(terms)
     )
     n = handle.stats["n_docs"]
     return {
-        r["term"]: {"df": int(r["df"]), "cf": int(r["cf"]), "idf": idf(n, int(r["df"]))}
-        for r in rows
+        t: {"df": int(d), "cf": int(c), "idf": idf(n, int(d))}
+        for t, d, c in zip(
+            tbl["term"].to_pylist(), tbl["df"].to_pylist(), tbl["cf"].to_pylist()
+        )
     }
 
 
-def _lookup_term_stats(
-    spark: SparkSession, handle: IndexHandle, terms: list[str]
-) -> tuple[dict, bool]:
-    """Term stats for a query: a driver-side pyarrow read (no Spark job),
-    falling back to the Spark `term_stats` read when pyarrow can't read the
-    index store (non-local filesystem). Returns (stats, driver_readable);
-    the driver-local scoring kernel needs driver_readable."""
-    try:
-        return _local_term_stats(handle, terms), True
-    except Exception:
-        return term_stats(spark, handle, terms), False
-
-
 def _decode_blocks(cols: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The query-time postings decoder: one term's blocks as postings
-    columns (column name → per-block values) → concatenated int64
-    (doc_ids, tfs, dls), one batched decode pass per column. Each block's
-    ids are delta-coded from an absolute first id, so any subset of a
-    term's blocks decodes on its own."""
+    """The query-time postings decoder: blocks as postings columns
+    (column name → per-block values) → concatenated int64 (doc_ids, tfs,
+    dls), one batched decode pass per column. Each block's ids are
+    delta-coded from an absolute first id, so any set of blocks, of any
+    terms, decodes on its own."""
     ns = cols["n"]
     gaps = decode_concat(cols["codec_ids"], cols["ids_enc"], ns)
     tfs = decode_concat(cols["codec_tfs"], cols["tfs_enc"], ns)
@@ -200,51 +194,58 @@ def _decode_blocks(cols: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     )
 
 
-def _decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """One block (an itertuples row): the WAND sweep's unit of lazy
-    decode."""
-    return _decode_blocks({c: [v] for c, v in row._asdict().items()})
+def _decode_scored(
+    cols: dict, rows: np.ndarray, tcode: np.ndarray, idfs: np.ndarray,
+    k1: float, b: float, avgdl: float,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one decode step of every scoring path: block `rows` of `cols`
+    (column name → per-block values; `tcode` the blocks' term codes,
+    `idfs` the idf per code) → (doc_ids, idf · tf-norm contributions,
+    term code) per posting, in `rows` order, from one _decode_blocks
+    call."""
+    if not len(rows):
+        return np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64)
+    sub = {c: [cols[c][i] for i in rows.tolist()] for c in _CODEC_COLS}
+    ids, tfs, dls = _decode_blocks(sub)
+    tc = np.repeat(tcode[rows], sub["n"])
+    return ids, idfs[tc] * bm25_tf_norm(tfs, dls, k1, b, avgdl), tc
 
 
 def _sum_per_doc(
-    ids_parts: list[np.ndarray], con_parts: list[np.ndarray]
+    ids: np.ndarray, con: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The per-doc aggregator: per-term (doc_ids, contribs) parts →
-    (doc_ids ascending, BM25 sums, matched-term counts). np.add.at adds in
-    part order and every caller passes its parts in sorted-term order, so a
+    """The per-doc aggregator: (doc_id, contrib) per posting → (doc_ids
+    ascending, BM25 sums, matched-term counts). np.add.at adds in array
+    order and every caller passes its postings in sorted-term order, so a
     doc's sum is bit-identical on the WAND and driver-local paths — the url
     tie-break compares scores exactly. (Brute adds partial sums of
     different Arrow batches in Spark, in no fixed order.)"""
-    if not ids_parts:
-        return (np.empty(0, np.int64), np.empty(0, np.float64),
-                np.empty(0, np.int64))
-    uniq, inv = np.unique(np.concatenate(ids_parts), return_inverse=True)
+    uniq, inv = np.unique(ids, return_inverse=True)
     scores = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(scores, inv, np.concatenate(con_parts))
+    np.add.at(scores, inv, con)
     return uniq, scores, np.bincount(inv, minlength=len(uniq))
+
+
+def _term_codes(cols: dict, stats: dict) -> tuple[np.ndarray, np.ndarray]:
+    """Per-block term codes in sorted-term order, and the idf per code."""
+    terms, tcode = np.unique(np.asarray(cols["term"], dtype=object),
+                             return_inverse=True)
+    return tcode, np.asarray([stats[t]["idf"] for t in terms], np.float64)
 
 
 def _score_blocks(
     cols: dict, stats: dict, k1: float, b: float, avgdl: float
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode and score postings blocks of any mix of the query's terms,
-    given as columns (column name → per-block values): one batched decode
-    per term, idf · tf-norm per posting, summed per doc in sorted-term
-    order → _sum_per_doc's arrays. Brute runs it per Arrow batch, the
+    given as columns (column name → per-block values): one decode step
+    over the blocks in sorted-term order, summed per doc →
+    _sum_per_doc's arrays. Brute runs it per Arrow batch, the
     driver-local path once over the pyarrow read."""
-    rows_of: dict[str, list[int]] = {}
-    for i, t in enumerate(cols["term"]):
-        rows_of.setdefault(t, []).append(i)
-    ids_parts: list[np.ndarray] = []
-    con_parts: list[np.ndarray] = []
-    for tm in sorted(rows_of):
-        idx = rows_of[tm]
-        ids, tfs, dls = _decode_blocks(
-            {c: [v[i] for i in idx] for c, v in cols.items()}
-        )
-        ids_parts.append(ids)
-        con_parts.append(stats[tm]["idf"] * bm25_tf_norm(tfs, dls, k1, b, avgdl))
-    return _sum_per_doc(ids_parts, con_parts)
+    tcode, idfs = _term_codes(cols, stats)
+    ids, con, _ = _decode_scored(
+        cols, np.argsort(tcode, kind="stable"), tcode, idfs, k1, b, avgdl
+    )
+    return _sum_per_doc(ids, con)
 
 
 def _brute_scorer(stats: dict, k1: float, b: float, avgdl: float):
@@ -280,219 +281,161 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
                        conjunctive: bool, n_query_terms: int, range_size: int,
                        floor: float | None = None,
                        allowed: np.ndarray | None = None):
-    """Exact interval-sweep block-max WAND over one doc-range shard.
+    """Exact interval-sweep block-max WAND over one doc-range shard, as one
+    columnar sweep.
 
-    floor mode (``floor`` set): instead of the top-k heap, return EVERY doc
-    in the shard with score >= floor — used by the url tie-break to fetch
-    the complete kth-score tie group when the heap path may have truncated
-    it (block-max pruning still applies: intervals with UB < floor are
-    skipped). Scores are bit-identical to heap mode (same kernel).
+    The shard's block edges cut its doc range into intervals; an
+    interval's upper bound ``ub`` is the sum, over the terms, of the
+    max_score of the block covering it. Intervals are visited in
+    ub-descending order in chunks of 1, 2, 4, … intervals, and the sweep
+    stops at the first interval whose ub is below the threshold: the
+    shard's kth score so far. Each chunk decodes the blocks it reaches
+    that are not decoded yet in one decode step (_decode_scored), scores
+    the postings of its intervals with the shared per-doc aggregator in
+    sorted-term order (so scores are bit-equal to brute and
+    driver-local), merges them with the kept candidates and keeps the top
+    k by (score desc, doc_id asc). Only intervals whose bound cannot reach
+    the kth score are skipped, so results are exact.
+
+    floor mode (``floor`` set): the same sweep with the threshold fixed at
+    ``floor`` and no cut — returns EVERY doc in the shard with score >=
+    floor, unordered. The url tie-break uses it to fetch the complete
+    kth-score tie group.
+
+    ``dropped_max`` is the max score of every candidate the cut dropped
+    (-inf if none, and always in floor mode). A chunk can score intervals
+    that a one-interval-at-a-time sweep would have skipped, so the value
+    can be higher than that sweep's; but a dropped doc never outranks the
+    shard's kth row, so dropped_max equals the shard's kth score s_k
+    exactly when a doc tying s_k was cut — the case query_topk's url
+    tie-break rescans for.
 
     allowed mode (``allowed`` set, sorted int64 doc ids — either a plain
     array or a SparkContext.broadcast of one, resolved once per task so the
     array ships via the torrent broadcast path instead of being pickled
-    into every task closure): facet-filtered
-    WAND (B19 scale path) — intervals containing no allowed doc are skipped
-    BEFORE any block decode (one vectorized searchsorted on the filter
-    array), and decoded postings are masked to the allowed set, so
-    block-max pruning survives filtering and a selective filter prunes
-    MORE, not less. Exact: it scores a subset of docs with unchanged
-    corpus-level stats (ES filter-context semantics).
+    into every task closure): facet-filtered WAND (B19 scale path).
+    Intervals containing no allowed doc get ub 0 BEFORE any block decode
+    (one vectorized searchsorted on the filter array), and decoded
+    postings are masked to the allowed set, so block-max pruning survives
+    filtering and a selective filter prunes MORE, not less. Exact: it
+    scores a subset of docs with unchanged corpus-level stats (ES
+    filter-context semantics).
 
     A block overlapping several doc-range shards is replicated to each (the
-    explode in query_topk), so every shard sees every block covering its own
-    doc range — scoring is therefore clipped to [shard*range_size,
-    (shard+1)*range_size): each doc is scored exactly once, in its home
-    shard, with all its covering blocks present (full scores). Without the
-    clip a spanning cold-term block would be scored in every shard it was
-    replicated to, emitting duplicate doc_ids into the global top-k.
-
-    Interval accumulation is vectorized: postings inside a block are
-    doc-sorted, so an interval is a searchsorted slice; per-interval scores
-    come from the shared per-doc aggregator over the concatenated slices
-    (no per-posting Python — the same kernel brute and local use)."""
-
-    empty = pd.DataFrame(
-        {"doc_id": pd.Series(dtype=np.int64),
-         "score": pd.Series(dtype=np.float64),
-         "dropped_max": pd.Series(dtype=np.float64)}
-    )
+    explode in _run_shards), so every shard sees every block covering its
+    own doc range — the intervals are therefore clipped to
+    [shard*range_size, (shard+1)*range_size): each doc is scored exactly
+    once, in its home shard, with all its covering blocks present (full
+    scores). Without the clip a spanning cold-term block would be scored in
+    every shard it was replicated to, emitting duplicate doc_ids into the
+    global top-k."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         allow = allowed.value if hasattr(allowed, "value") else allowed
-        rows = list(pdf.itertuples(index=False))
-        shard = int(rows[0].shard)
-        shard_lo = shard * range_size
-        shard_hi = shard_lo + range_size
-        terms = sorted({r.term for r in rows})
-        if conjunctive and len(terms) < n_query_terms:
-            return empty
-        # per-term block tables sorted by first_doc_id
-        per_term: dict[str, list] = {t: [] for t in terms}
-        for r in rows:
-            per_term[r.term].append(r)
-        for t in terms:
-            per_term[t].sort(key=lambda r: r.first_doc_id)
-        # interval boundaries = all block edges, clipped to the shard range
-        edges = sorted(
-            {r.first_doc_id for r in rows} | {r.last_doc_id + 1 for r in rows}
-        )
-        lo = np.clip(np.asarray(edges[:-1], dtype=np.int64), shard_lo, shard_hi)
-        hi = np.clip(np.asarray(edges[1:], dtype=np.int64), shard_lo, shard_hi)
-        keep = lo < hi
-        lo, hi = lo[keep], hi[keep]
-        n_int = len(lo)
-        if n_int == 0:
-            return empty
-        # UB per interval: sum over terms of covering block's max_score
-        ub = np.zeros(n_int, dtype=np.float64)
-        covered = np.zeros(n_int, dtype=np.int32)
-        cover: dict[str, np.ndarray] = {}
-        for t in terms:
-            blocks = per_term[t]
-            firsts = np.asarray([b_.first_doc_id for b_ in blocks], np.int64)
-            lasts = np.asarray([b_.last_doc_id for b_ in blocks], np.int64)
-            maxes = np.asarray([b_.max_score for b_ in blocks], np.float64)
-            # block index covering each interval start (blocks disjoint sorted)
-            bi = np.searchsorted(firsts, lo, side="right") - 1
-            ok = (bi >= 0) & (lo <= np.where(bi >= 0, lasts[np.maximum(bi, 0)], -1))
-            ub += np.where(ok, maxes[np.maximum(bi, 0)], 0.0)
-            covered += ok.astype(np.int32)
-            cover[t] = np.where(ok, bi, -1)
-        if conjunctive:
-            valid = covered == len(terms)
-            ub = np.where(valid, ub, 0.0)
-        if allow is not None:
-            # filter-aware pruning: an interval with no allowed doc can
-            # never contribute — zero its UB so the sweep skips it without
-            # decoding any of its blocks (one vectorized searchsorted)
-            has_allowed = (
-                np.searchsorted(allow, hi, side="left")
-                > np.searchsorted(allow, lo, side="left")
-            )
-            ub = np.where(has_allowed, ub, 0.0)
+        cols = {c: pdf[c].tolist() for c in _WAND_COLS}
+        tcode, idfs = _term_codes(cols, stats)
+        first = np.asarray(cols["first_doc_id"], np.int64)
+        last = np.asarray(cols["last_doc_id"], np.int64)
+        max_score = np.asarray(cols["max_score"], np.float64)
+        # intervals between block edges, clipped to the shard's range
+        shard_lo = int(pdf["shard"].iat[0]) * range_size
+        edges = np.unique(np.concatenate([first, last + 1]))
+        lo = np.clip(edges[:-1], shard_lo, shard_lo + range_size)
+        hi = np.clip(edges[1:], shard_lo, shard_lo + range_size)
+        lo, hi = lo[lo < hi], hi[lo < hi]
+        # per-term block tables (rows by term, then first_doc_id) →
+        # cover[t, i]: the block row of term t covering interval i, or -1
+        by_term = np.lexsort((first, tcode))
+        bounds = np.searchsorted(tcode[by_term], np.arange(len(idfs) + 1))
+        cover = np.full((len(idfs), len(lo)), -1, np.int64)
+        ub = np.zeros(len(lo))
+        for t in range(len(idfs)):
+            rows = by_term[bounds[t]:bounds[t + 1]]
+            bi = np.searchsorted(first[rows], lo, side="right") - 1
+            ok = bi >= 0
+            ok[ok] = lo[ok] <= last[rows[bi[ok]]]
+            cover[t, ok] = rows[bi[ok]]
+            ub += np.where(ok, max_score[cover[t]], 0.0)
+        if conjunctive:  # a shard missing a query term matches no doc
+            ub[(cover >= 0).sum(axis=0) < n_query_terms] = 0.0
+        if allow is not None:  # no allowed doc in the interval
+            ub[np.searchsorted(allow, hi) == np.searchsorted(allow, lo)] = 0.0
+
         order = np.argsort(-ub, kind="stable")
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-        dropped_max = -np.inf  # max score this shard's heap ever dropped
-        flo_ids: list[np.ndarray] = []
-        flo_scores: list[np.ndarray] = []
-        decoded: dict[tuple[str, int], tuple] = {}
-        for ii in order:
-            if ub[ii] <= 0:
+        ub_desc = ub[order]
+        decoded = np.zeros(len(first), bool)
+        # decoded postings whose interval is not scored yet: doc ids,
+        # contributions, term codes, interval
+        pend = (np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64),
+                np.empty(0, np.int64))
+        top_ids, top_s = np.empty(0, np.int64), np.empty(0)
+        dropped_max = -np.inf
+        thr = -np.inf if floor is None else floor
+        pos, size = 0, 1
+        while True:
+            seg = ub_desc[pos:pos + size]  # ub descending: a prefix passes
+            n_take = np.count_nonzero((seg > 0) & (seg >= thr))
+            if n_take == 0:
                 break
-            if floor is not None:
-                if ub[ii] < floor:
-                    break  # ub sorted desc: nothing below can reach floor
-            elif len(heap) >= k and ub[ii] < heap[0][0]:
-                break  # every remaining interval is provably dominated
-            ids_parts: list[np.ndarray] = []
-            con_parts: list[np.ndarray] = []
-            for t in terms:
-                bi = int(cover[t][ii])
-                if bi < 0:
-                    continue
-                key = (t, bi)
-                if key not in decoded:
-                    decoded[key] = _decode_block(per_term[t][bi])
-                ids, tfs, dls = decoded[key]
-                a = int(np.searchsorted(ids, lo[ii], side="left"))
-                z = int(np.searchsorted(ids, hi[ii], side="left"))
-                if a == z:
-                    continue
-                sub_ids = ids[a:z]
-                sub_con = (
-                    stats[t]["idf"]
-                    * bm25_tf_norm(tfs[a:z], dls[a:z], k1, b, avgdl)
-                )
-                if allow is not None:
-                    seg_a = np.searchsorted(allow, lo[ii], side="left")
-                    seg_z = np.searchsorted(allow, hi[ii], side="left")
-                    seg = allow[seg_a:seg_z]
-                    idx = np.minimum(
-                        np.searchsorted(seg, sub_ids), len(seg) - 1
-                    )
-                    m = seg[idx] == sub_ids
-                    if not m.any():
-                        continue
-                    sub_ids, sub_con = sub_ids[m], sub_con[m]
-                ids_parts.append(sub_ids)
-                con_parts.append(sub_con)
-            if not ids_parts:
-                continue
-            # intervals partition the doc-id space → each doc lands in
-            # exactly one interval of exactly one shard; one aggregator pass
-            # sums its per-term contributions
-            uniq, scores, nts = _sum_per_doc(ids_parts, con_parts)
+            chunk = order[pos:pos + n_take]
+            pos, size = pos + n_take, 2 * size
+            rows = np.unique(cover[:, chunk])
+            rows = rows[rows >= 0]
+            rows = rows[~decoded[rows]]
+            decoded[rows] = True
+            ids, con, tc = _decode_scored(cols, rows, tcode, idfs, k1, b, avgdl)
+            iv = np.searchsorted(lo, ids, side="right") - 1
+            keep = (iv >= 0) & (ids < hi[iv])
+            if allow is not None:
+                at = np.minimum(np.searchsorted(allow, ids), len(allow) - 1)
+                keep &= allow[at] == ids
+            pend = tuple(np.concatenate([p, x[keep]])
+                         for p, x in zip(pend, (ids, con, tc, iv)))
+            in_chunk = np.zeros(len(lo), bool)
+            in_chunk[chunk] = True
+            sel = in_chunk[pend[3]]
+            # intervals partition the doc ids, so each doc is scored once,
+            # summing its postings in sorted-term order
+            by_t = np.argsort(pend[2][sel], kind="stable")
+            uniq, scores, nts = _sum_per_doc(pend[0][sel][by_t],
+                                             pend[1][sel][by_t])
+            pend = tuple(p[~sel] for p in pend)
             if conjunctive:
-                sel = nts == n_query_terms
-                uniq, scores = uniq[sel], scores[sel]
-            if floor is not None:  # collect the whole >= floor set, no heap
-                sel = scores >= floor
-                flo_ids.append(uniq[sel])
-                flo_scores.append(scores[sel])
+                m = nts == n_query_terms
+                uniq, scores = uniq[m], scores[m]
+            if floor is not None:
+                top_ids = np.concatenate([top_ids, uniq[scores >= floor]])
+                top_s = np.concatenate([top_s, scores[scores >= floor]])
                 continue
-            if len(heap) >= k:  # only candidates that can beat the threshold
-                thr_s, thr_nd = heap[0]
-                sel = (scores > thr_s) | ((scores == thr_s) & (-uniq > thr_nd))
-                drp = scores[~sel]
-                if drp.size:
-                    dm = float(drp.max())
-                    if dm > dropped_max:
-                        dropped_max = dm
-                uniq, scores = uniq[sel], scores[sel]
-            for d, s in zip(uniq.tolist(), scores.tolist()):
-                item = (s, -d)
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    ev = heapq.heapreplace(heap, item)
-                    if ev[0] > dropped_max:
-                        dropped_max = ev[0]
-                elif s > dropped_max:
-                    dropped_max = s
-        if floor is not None:  # dropped_max stays -inf: no heap ran
-            ids_out = np.concatenate([np.empty(0, np.int64), *flo_ids])
-            scores_out = np.concatenate([np.empty(0), *flo_scores])
-        else:  # heap items (score, -doc_id) → score desc, doc_id asc
-            top = sorted(heap, reverse=True)
-            ids_out = [-nd for _, nd in top]
-            scores_out = [s for s, _ in top]
+            cand_ids = np.concatenate([top_ids, uniq])
+            cand_s = np.concatenate([top_s, scores])
+            rank = np.lexsort((cand_ids, -cand_s))
+            if len(rank) > k:
+                dropped_max = max(dropped_max, float(cand_s[rank[k:]].max()))
+            top_ids, top_s = cand_ids[rank[:k]], cand_s[rank[:k]]
+            if len(top_s) == k:
+                thr = top_s[-1]
         return pd.DataFrame(
-            {
-                "doc_id": np.asarray(ids_out, dtype=np.int64),
-                "score": np.asarray(scores_out, dtype=np.float64),
-                "dropped_max": np.full(len(ids_out), dropped_max),
-            }
+            {"doc_id": top_ids, "score": top_s,
+             "dropped_max": np.full(len(top_ids), dropped_max)}
         )
 
     return fn
 
 
-def _resolve_urls(
-    spark: SparkSession, handle: IndexHandle, ids: list[int]
-) -> dict[int, str]:
-    """doc_id → url for a tiny id set: driver-side pyarrow lookup, falling
-    back to a Spark read on non-local index stores."""
+def _resolve_urls(handle: IndexHandle, ids: list[int]) -> dict[int, str]:
+    """doc_id → url for a tiny id set: a driver-side pyarrow lookup (no
+    Spark job)."""
     if not ids:
         return {}
-    try:
-        dt = _pa_dataset(handle, "_docs_ds", handle.docs_path).to_table(
-            columns=["doc_id", "url"], filter=ds.field("doc_id").isin(ids)
-        )
-        return dict(zip(dt["doc_id"].to_pylist(), dt["url"].to_pylist()))
-    except Exception:
-        docs = _docs_df(spark, handle)
-        return {
-            r["doc_id"]: r["url"]
-            for r in docs.filter(F.col("doc_id").isin(ids))
-            .select("doc_id", "url")
-            .collect()
-        }
+    dt = _pa_dataset(handle, "_docs_ds", handle.docs_path).to_table(
+        columns=["doc_id", "url"], filter=ds.field("doc_id").isin(ids)
+    )
+    return dict(zip(dt["doc_id"].to_pylist(), dt["url"].to_pylist()))
 
 
 def _url_topk(
-    spark: SparkSession, handle: IndexHandle, ids: list[int],
-    scores: list[float], k: int,
+    handle: IndexHandle, ids: list[int], scores: list[float], k: int,
 ) -> tuple[list[int], list[float], list[str]]:
     """The driver-side url tie-break: top-k of a candidate set ordered by
     (score desc, url asc), the order the ANSI-SQL oracle expresses. EXACT
@@ -501,7 +444,7 @@ def _url_topk(
     exact float equalities because WAND and local sum with one kernel in
     one order. Resolves the candidates' urls once. Returns (ids, scores,
     urls)."""
-    url_map = _resolve_urls(spark, handle, ids)
+    url_map = _resolve_urls(handle, ids)
     urls = [url_map.get(d) for d in ids]
     top = sorted(range(len(ids)), key=lambda i: (-scores[i], urls[i]))[:k]
     return ([ids[i] for i in top], [scores[i] for i in top],
@@ -607,8 +550,7 @@ def query_topk(
 ) -> DataFrame:
     """Top-k BM25. Returns (doc_id, url?, score) ordered by
     (score desc, doc_id asc) — the golden tie-break (SURVEY.md §5.2).
-    mode is "brute", "wand", "local" or "auto" (see the module docstring);
-    local and auto run wand when the driver can't read the index files.
+    mode is "brute", "wand", "local" or "auto" (see the module docstring).
     tiebreak="url" breaks exact-score ties by url instead, which is what
     the ANSI-SQL oracle can express. k=0 returns no rows without running a
     Spark job; an unknown mode or tiebreak, or k < 0, raises ValueError.
@@ -639,14 +581,13 @@ def query_topk(
         return _result_df(spark, [], [], None, with_url)
     # the dict is shipped to executors in the scoring closure (B11
     # broadcast stats)
-    st, driver_readable = _lookup_term_stats(spark, handle, all_terms)
+    st = _local_term_stats(handle, all_terms)
     terms = [t for t in all_terms if t in st]  # zero-hit terms drop out
     if not terms or (conjunctive and len(terms) < len(all_terms)):
         return _result_df(spark, [], [], None, with_url)
 
-    if mode in ("local", "auto") and driver_readable and (
-        mode == "local"
-        or sum(st[t]["df"] for t in terms) <= LOCAL_MAX_POSTINGS
+    if mode == "local" or (
+        mode == "auto" and sum(st[t]["df"] for t in terms) <= LOCAL_MAX_POSTINGS
     ):
         ids, scores = local_scored_arrays(handle, terms, st, conjunctive)
         if tiebreak == "url" and len(scores) > k:
@@ -723,7 +664,7 @@ def query_topk(
                     if dm > per_shard_dm.get(sh, float("-inf")):
                         per_shard_dm[sh] = dm
                 # a doc tying s_k can only be missing if its home shard's
-                # heap actually DROPPED a candidate scoring exactly s_k
+                # cut actually DROPPED a candidate scoring exactly s_k
                 # (every dropped score is <= the shard's final min, so
                 # dropped_max == s_k iff a true tie was lost). Without a
                 # recorded drop at s_k the candidate set provably contains
@@ -741,9 +682,9 @@ def query_topk(
     # pyarrow lookup — avoids a second job scanning the docs table per
     # query. Row order is preserved.
     if tiebreak == "url":
-        ids, scores, urls = _url_topk(spark, handle, ids, scores, k)
+        ids, scores, urls = _url_topk(handle, ids, scores, k)
     elif with_url:
-        url_map = _resolve_urls(spark, handle, ids)
+        url_map = _resolve_urls(handle, ids)
         urls = [url_map.get(d) for d in ids]
     else:
         urls = None
@@ -781,20 +722,6 @@ def wand_shard_count(
     return _shard_layout(
         handle, _local_term_stats(handle, terms), terms, shard_target
     )[0]
-
-
-def _local_term_stats(handle: IndexHandle, terms: list[str]) -> dict:
-    dset = _pa_dataset(handle, "_terms_ds", handle.terms_path)
-    tbl = dset.to_table(
-        columns=["term", "df", "cf"], filter=ds.field("term").isin(terms)
-    )
-    n = handle.stats["n_docs"]
-    return {
-        t: {"df": int(d), "cf": int(c), "idf": idf(n, int(d))}
-        for t, d, c in zip(
-            tbl["term"].to_pylist(), tbl["df"].to_pylist(), tbl["cf"].to_pylist()
-        )
-    }
 
 
 def local_scored_arrays(

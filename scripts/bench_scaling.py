@@ -141,9 +141,10 @@ def main() -> None:
     }
     eff = {name: v[n4] / (4 * v[n]) for name, v in est.items()}
     # per-pair ratios: each interleaved (N, 4N) pair shares one ~17-minute
-    # window, so host drift hits both levels near-symmetrically — the
-    # max over pairs is the most drift-robust single summary (best-of-levels
-    # can be depressed forever by one lucky quiet rep at N only)
+    # window, so host drift hits both levels near-symmetrically. The median
+    # pair leads the report: a transient that slows only a pair's N rep
+    # inflates that pair's ratio, and the max over pairs keeps exactly
+    # those pairs
     by_rep: dict[int, dict[int, float]] = {}
     for r in runs:
         if r["_rep"] >= 0 and r["_cpus"] in (n, n4):
@@ -162,16 +163,40 @@ def main() -> None:
     # the series but EXCLUDED from the official best/median estimators.
     PAIR_SANITY_CAP = 1.05
     sane_pairs = {i: v for i, v in pair_effs.items() if v <= PAIR_SANITY_CAP}
-    if sane_pairs:
-        eff["best_pair"] = max(sane_pairs.values())
-        eff["median_pair"] = statistics.median(sane_pairs.values())
-    elif pair_effs:  # every pair implausible — report raw, flagged below
-        eff["best_pair"] = max(pair_effs.values())
-        eff["median_pair"] = statistics.median(pair_effs.values())
+    implausible = {i: v for i, v in pair_effs.items() if v > PAIR_SANITY_CAP}
+    official = sane_pairs or pair_effs  # every pair implausible: raw pairs
+    if official:
+        eff["median_pair"] = statistics.median(official.values())
+        eff["best_pair"] = max(official.values())
+    if sane_pairs or not pair_effs:
+        cap_txt = (
+            f"Pairs with ratio > {PAIR_SANITY_CAP} are physically implausible "
+            "on this memory-bound dataflow (contention hit the N rep alone) "
+            "and are excluded from the median/best pair estimators above "
+            "while remaining in the series: {"
+            + (", ".join(f"rep {i}: {v:.3f}" for i, v in implausible.items())
+               or "none excluded")
+            + "}."
+        )
+    else:
+        cap_txt = (
+            f"No pair passed the sanity cap (ratio <= {PAIR_SANITY_CAP}): "
+            "every pair is physically implausible on this memory-bound "
+            "dataflow, so the median/best pair estimators above are computed "
+            "from the raw pairs, none excluded, and carry the contention "
+            "inflation the cap exists to remove."
+        )
     hashes = {r["index_content_hash"] for r in runs}
     hash_ok = len(hashes) == 1
     r0 = runs[0]
     nreps = len(level(n))
+    cut = nreps // 4
+    trim_txt = (
+        f"for this table's n={nreps}: drop {cut} per side, average the "
+        f"middle {nreps - 2 * cut}"
+        + ("; with n < 4 nothing is dropped, so trimmed equals the mean"
+           if nreps < 4 else "")
+    )
 
     per_level = {
         c: [r for r in runs if r["_cpus"] == c and r["_rep"] >= 0]
@@ -260,32 +285,23 @@ median is reported as the typical-shared-load number. Reproduce:
 | local[{ref_cpus}] (ref)¹ | {ref_tp} | | | | |
 
 **Scaling efficiency N→4N** = docs/sec@{n4} / (4 × docs/sec@{n}).
-Official estimator — **best interleaved pair =
-{eff.get('best_pair', float('nan')):.3f}** (target ≥ 0.8); median pair =
-{eff.get('median_pair', float('nan')):.3f}; per-pair series
+Official estimator — **median interleaved pair =
+{eff.get('median_pair', float('nan')):.3f}** over {len(official)} pairs
+(target ≥ 0.8); best pair = {eff.get('best_pair', float('nan')):.3f};
+per-pair series
 {{{", ".join(f"rep {i}: {v:.3f}" for i, v in pair_effs.items())}}}.
-Pairs with ratio > 1.05 are physically implausible on this memory-bound
-dataflow (contention hit the N rep alone) and are excluded from the
-official best/median estimators above while remaining in the series:
-{{{", ".join(f"rep {i}: {v:.3f}" for i, v in pair_effs.items() if v > 1.05) or "none excluded"}}}.
+{cap_txt}
 Each interleaved pair shares one ~17-minute window, so slow host drift
-hits both of its levels near-symmetrically and cancels in the ratio;
-under the additive-noise model the max over pairs is then the consistent
-estimator of the noise-free dataflow ratio, and unlike best-of-LEVELS it
-cannot be permanently depressed by one lucky quiet rep at a single level.
-Known limitation, stated for honesty: a transient that hits only the N
-rep of a pair inflates that pair's ratio, so no single pair is taken on
-faith — the ≥0.8 capability claim rests on the controlled quiet-window
-measurement of this exact pair (below) agreeing with the best pairs,
-while every sub-target pair coincides with directly measured host
-contention (its reps run far below the quiet-reference throughput; see
-campaign conditions). Per-level estimators over the same reps:
+hits both of its levels near-symmetrically and cancels in the ratio.
+A transient that hits only the N rep of a pair inflates that pair's
+ratio, so the best pair is an optimistic bound and no single pair is
+taken on faith. Per-level estimators over the same reps:
 best-of = {eff['best']:.3f}, trimmed = {eff['trimmed']:.3f},
 median = {eff['median']:.3f}. "Trimmed" is the mean of the middle ~50%
-of each level's reps — sort, drop floor(n/4) from EACH end (for n=13:
-drop 3 per side, average the middle 7; equivalently scipy.stats.trim_mean
-with proportiontocut≈0.25) — stated here so the number is reproducible
-from the json without guessing the trim rule. Every per-rep value and timestamp is in
+of each level's reps — sort, drop floor(n/4) from EACH end ({trim_txt};
+equivalently scipy.stats.trim_mean with proportiontocut≈0.25) — stated
+here so the number is reproducible from the json without guessing the
+trim rule. Every per-rep value and timestamp is in
 `BENCH/scaling_runs.json`, so the estimator can be recomputed any way.
 {extra_txt}
 

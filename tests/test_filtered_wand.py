@@ -112,14 +112,14 @@ def test_filtered_wand_prunes_blocks(spark, lang_corpus, monkeypatch):
     k1, b = h.stats["k1"], h.stats["b"]
     avgdl = h.stats["avgdl"]
 
-    calls = {"n": 0}
-    real = Q._decode_block
+    calls = {"n": 0}  # blocks decoded
+    real = Q._decode_blocks
 
-    def counting(row):
-        calls["n"] += 1
-        return real(row)
+    def counting(cols):
+        calls["n"] += len(cols["n"])
+        return real(cols)
 
-    monkeypatch.setattr(Q, "_decode_block", counting)
+    monkeypatch.setattr(Q, "_decode_blocks", counting)
 
     # allowed = exactly one doc id → at most a couple of intervals overlap
     docs = spark.read.parquet(h.docs_path).filter(

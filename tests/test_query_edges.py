@@ -232,3 +232,25 @@ def test_filtered_probe_errors_propagate(spark, built_index, webpages):
         with pytest.raises(TypeError):
             filtered_topk(spark, built_index, Corpus(), "spark", 42,
                           mode=mode)
+
+
+def test_unreadable_index_store_raises_without_spark_job(
+    spark, built_index, monkeypatch
+):
+    """query_topk reads term stats and urls on the driver with pyarrow. When
+    that read fails, the error propagates — no Spark job is started as a
+    silent fallback."""
+    import engine.query as Q
+
+    def unreadable(*args, **kwargs):
+        raise OSError("index store unreadable")
+
+    monkeypatch.setattr(Q, "_pa_dataset", unreadable)
+    sc = spark.sparkContext
+    sc.setJobGroup("unreadable-store", "pyarrow read fails")
+    try:
+        with pytest.raises(OSError, match="unreadable"):
+            query_topk(spark, built_index, "spark join", mode="auto")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("unreadable-store")) == []

@@ -186,3 +186,59 @@ def test_shared_kernel_matches_brute_and_wand_bit_equal(corpus, qterms,
     )(pdf)
     assert wand["doc_id"].tolist() == ids[:k].tolist()
     assert wand["score"].tolist() == scores[:k].tolist()
+
+
+def _shard_frames(pdf, range_size):
+    """{shard: the blocks it sees}: each block replicated to every doc-range
+    shard it overlaps, as query_topk's explode does."""
+    parts = [
+        {**row.to_dict(), "shard": shard}
+        for _, row in pdf.iterrows()
+        for shard in range(int(row.first_doc_id) // range_size,
+                           int(row.last_doc_id) // range_size + 1)
+    ]
+    return dict(list(pd.DataFrame(parts).groupby("shard")))
+
+
+@settings(max_examples=120, deadline=None)
+@given(
+    corpus_strategy, query_strategy, st.booleans(), st.integers(1, 6),
+    st.one_of(st.none(), st.integers(1, 9)),
+)
+def test_wand_url_tiebreak_contract(corpus, qterms, conjunctive, k,
+                                    range_size):
+    """The kernel's side of the url tie-break, per shard (range_size None =
+    one shard): floor mode at the shard's kth score returns exactly the
+    brute docs of the shard scoring >= it, with bit-equal scores; and
+    dropped_max never exceeds the kth score and equals it (with k rows
+    returned) exactly when a brute doc outside the result ties the kth
+    score — the case query_topk rescans for."""
+    blocks, stats, avgdl, n_docs, tf, dls = _build_blocks(corpus)
+    terms = [t for t in qterms if t in tf]
+    if not terms:
+        return
+    sterms = [str(t) for t in terms]
+    range_size = range_size or n_docs + 1
+    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive)
+
+    def scorer(floor=None):
+        return _wand_shard_scorer(stats, K1, B, avgdl, k, conjunctive,
+                                  len(sterms), range_size, floor=floor)
+
+    for shard, g in _shard_frames(
+        blocks[blocks["term"].isin(sterms)], range_size
+    ).items():
+        home = [(d, s) for d, s in want if d // range_size == shard]
+        got = scorer()(g)
+        ids, scores = got["doc_id"].tolist(), got["score"].tolist()
+        assert ids == [d for d, _ in home[:k]]
+        if not ids:
+            continue
+        s_k, dropped_max = scores[-1], float(got["dropped_max"].iloc[0])
+        assert dropped_max <= s_k
+        tie_cut = any(s == s_k for _, s in home[len(ids):])
+        assert (len(ids) == k and dropped_max == s_k) == tie_cut, (
+            corpus, qterms, conjunctive, k, range_size, shard)
+        flo = scorer(floor=s_k)(g)
+        assert sorted(zip(flo["doc_id"].tolist(), flo["score"].tolist())) \
+            == sorted((d, s) for d, s in home if s >= s_k)
