@@ -1,19 +1,16 @@
-"""Query-surface extensions over the inverted index (SURVEY.md
-§2.B18/§2.B19): the conjunctive candidate scorer behind exact-phrase
-search, and facet-filtered top-k.
-
-`scored_docs` is conjunctive (or disjunctive) BM25 over a term list
-without the top-k cut, from the query engine's one decode-and-score kernel
-(engine/query.py): small candidate sets come from the driver-local kernel
-over a pyarrow-pruned read (terms' postings within LOCAL_MAX_POSTINGS,
-zero Spark jobs), larger ones from distributed brute force
-(bucket-partition-pruned scan, broadcast stats, map-side partial
-aggregation). Exact-phrase top-k (`engine.positional.
-phrase_topk_positional`) keeps the candidates whose adjacency the
-postings blocks' positions confirm, then orders by (score desc, url asc).
+"""Facet-filtered top-k over the inverted index (SURVEY.md §2.B19).
 
 `filtered_topk` applies a facet predicate before the top-k cut; see its
 docstring for the brute and filter-aware WAND plans.
+
+`scored_docs`, the candidates of the brute plan, is conjunctive (or
+disjunctive) BM25 over a term list without the top-k cut, from the query
+engine's one decode-and-score kernel (engine/query.py): small candidate
+sets come from the driver-local kernel over a pyarrow-pruned read (terms'
+postings within LOCAL_MAX_POSTINGS, zero Spark jobs), larger ones from
+distributed brute force (bucket-partition-pruned scan, broadcast stats,
+map-side partial aggregation). Exact-phrase search does not use it: it
+runs on query_topk's path (engine/positional.py).
 """
 
 from __future__ import annotations
@@ -34,6 +31,10 @@ from engine.query import (
     parse_query,
     query_topk,
 )
+
+# the largest allowed doc-id set filtered WAND resolves and ships with the
+# query; a less selective filter runs the brute plan
+MAX_FILTER_IDS = 4_000_000
 
 
 def scored_docs(
@@ -69,7 +70,6 @@ def filtered_topk(
     k: int = 10,
     conjunctive: bool = False,
     mode: str = "brute",
-    max_filter_ids: int = 4_000_000,
 ) -> DataFrame:
     """Facet-filtered BM25 top-k: the filter applies BEFORE the top-k cut
     (post-filtering a plain top-k under-fills or skews the result set —
@@ -88,7 +88,7 @@ def filtered_topk(
     array rides the scoring closure and allowed-empty intervals are
     skipped before any block decode, so pruning survives (and improves
     under) selective filters. The resolved set is capped at
-    max_filter_ids (one bounded limit() probe); an unselective filter
+    MAX_FILTER_IDS (one bounded limit() probe); an unselective filter
     beyond the cap — where pruning wouldn't pay anyway — falls back to
     the brute plan. At 10^12 docs the capped path corresponds to shipping
     a compressed id set/bitmap with the query; per-facet block maxima at
@@ -129,8 +129,8 @@ def filtered_topk(
             resolve = docs_pred.select("doc_id")
         else:
             resolve = docs.join(keep_urls, "url", "left_semi").select("doc_id")
-        rows = resolve.limit(max_filter_ids + 1).collect()
-        if len(rows) <= max_filter_ids:
+        rows = resolve.limit(MAX_FILTER_IDS + 1).collect()
+        if len(rows) <= MAX_FILTER_IDS:
             if not rows:
                 return _result_df(spark, [], [], None, with_url=True)
             allowed = np.asarray(

@@ -18,16 +18,17 @@ them on each block, next to the block's doc ids and tfs:
                    delta_decode_blocks(flat_gaps, tfs) kernel; a doc's tf
                    is its position count)
 
-Positions index the analyzer token stream (0-based). Only this module reads
-`pos_enc`; the scoring scans never select it, so it costs them no IO.
+Positions index the analyzer token stream (0-based). Only a phrase query
+reads `pos_enc`; the scoring scans never select it, so it costs them no IO.
 
-Query plan (`phrase_match_docs`): bucket-partition-pruned scan of the
-phrase terms' blocks (ids, tfs and positions only) → doc-range shards
-exactly like block-max WAND (blocks spanning several shards are
-replicated, checking clipped to the home shard) → per-shard vectorized
-adjacency chain on (doc, pos) keys → matched doc_ids.
-`phrase_topk_positional` semi-joins them to the conjunctive candidates of
-`engine.phrase.scored_docs` and cuts the top k.
+Query plan: a phrase is conjunctive top-k over its unique terms with one
+more predicate, adjacency, on the one top-k path of `engine.query` (`auto`
+mode, url tie-break). The driver-local kernel checks it once over all of
+the terms' blocks (zero Spark jobs); the WAND sweep checks it per chunk of
+intervals, so positions are decoded only for intervals whose bound can
+still reach the top k, and the url tie-break's floor rescan sees the same
+predicate. The check chain-intersects (doc, pos) keys along the ordered
+tokens (`engine.query._phrase_mask`).
 
 Scale notes (100 TB): the query reads ONLY index blocks — for "the data"
 the bytes read are the two terms' blocks, independent of corpus text
@@ -37,34 +38,14 @@ identical.
 
 from __future__ import annotations
 
-import functools
 import os
 
-import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from engine.analyzer import tokenize
 from engine.build import IndexHandle, open_index
-from engine.codec import decode_concat, delta_decode_blocks, varint_decode_concat
-from engine.query import (
-    _docs_df,
-    _local_term_stats,
-    _pruned_postings,
-    _result_df,
-    _run_shards,
-    _shard_layout,
-    _top_by_url,
-)
-
-MATCH_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
-
-# the postings columns the adjacency kernel decodes (plus the block bounds
-# the shard dispatcher reads)
-_PHRASE_COLS = ["term", "n", "first_doc_id", "last_doc_id", "codec_ids",
-                "ids_enc", "codec_tfs", "tfs_enc", "pos_enc"]
+from engine.query import _topk
 
 
 def build_positions(
@@ -76,90 +57,6 @@ def build_positions(
     working."""
     handle = open_index(index) if isinstance(index, str) else index
     return handle.postings_path
-
-
-# ---------------------------------------------------------------------------
-# query side
-# ---------------------------------------------------------------------------
-
-
-def _adjacency_kernel(ordered_terms: list[str], range_size: int):
-    """Exact phrase adjacency over one doc-range shard: build per-term
-    (doc, pos) key arrays and chain-intersect S ← (S + 1) ∩ keys(t_next).
-    Fully vectorized (np.intersect1d over the whole shard); handles
-    repeated phrase terms ("the the") because the chain walks the ORDERED
-    token list. Each doc is verified in exactly one shard (clip), mirroring
-    the WAND scorer's replication contract."""
-    uniq_terms = list(dict.fromkeys(ordered_terms))
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype=np.int64)})
-        if len(pdf) == 0:
-            return empty
-        shard = int(pdf["shard"].iloc[0])
-        lo, hi = shard * range_size, (shard + 1) * range_size
-        # one batched decode of the shard's blocks (ids and tfs with their
-        # block codecs, then each posting's positions), clipped to the shard
-        ns = pdf["n"].to_numpy(np.int64)
-        ids = delta_decode_blocks(
-            decode_concat(pdf["codec_ids"].tolist(), pdf["ids_enc"].tolist(), ns),
-            ns,
-        ).astype(np.int64)
-        tfs = decode_concat(
-            pdf["codec_tfs"].tolist(), pdf["tfs_enc"].tolist(), ns
-        ).astype(np.int64)
-        pos = delta_decode_blocks(
-            varint_decode_concat(pdf["pos_enc"]), tfs
-        ).astype(np.int64)
-        term_of = np.repeat(pdf["term"].to_numpy(object), ns)
-        in_shard = (ids >= lo) & (ids < hi)
-        sel = {t: in_shard & (term_of == t) for t in uniq_terms}
-        if not all(m.any() for m in sel.values()):
-            return empty
-        union = np.unique(np.concatenate([ids[m] for m in sel.values()]))
-        M = np.int64(pos.max() + 2)
-        keys: dict[str, np.ndarray] = {}
-        for t, m in sel.items():
-            local = np.searchsorted(union, np.repeat(ids[m], tfs[m]))
-            keys[t] = local.astype(np.int64) * M + pos[np.repeat(m, tfs)]
-        s = keys[ordered_terms[0]]
-        for t in ordered_terms[1:]:
-            if len(s) == 0:
-                return empty
-            s = np.intersect1d(s + 1, keys[t], assume_unique=True)
-        if len(s) == 0:
-            return empty
-        matched = union[np.unique(s // M)]
-        return pd.DataFrame({"doc_id": matched.astype(np.int64)})
-
-    return fn
-
-
-def phrase_match_docs(
-    spark: SparkSession,
-    index: IndexHandle | str,
-    ordered_terms: list[str],
-    shard_target: int | None = None,
-) -> DataFrame:
-    """doc_ids whose token stream contains `ordered_terms` consecutively,
-    answered from the postings blocks' positions alone (no corpus access).
-
-    Physical plan mirrors the WAND query path: bucket-partition-pruned scan
-    of the phrase terms' blocks, adaptive doc-range sharding (1 task for
-    light phrases, fan-out for stopword-grade ones, blocks replicated to
-    every shard they span and clipped in the kernel)."""
-    handle = open_index(index) if isinstance(index, str) else index
-    uniq = list(dict.fromkeys(ordered_terms))
-    if not uniq:
-        return spark.createDataFrame([], MATCH_SCHEMA)
-    st = _local_term_stats(handle, uniq)
-    if any(t not in st for t in uniq):
-        return spark.createDataFrame([], MATCH_SCHEMA)
-    n_groups, width = _shard_layout(handle, st, uniq, shard_target)
-    return _run_shards(
-        _pruned_postings(spark, handle, uniq, _PHRASE_COLS), n_groups, width,
-        functools.partial(_adjacency_kernel, ordered_terms), MATCH_SCHEMA,
-    )
 
 
 def phrase_topk_positional(
@@ -176,8 +73,6 @@ def phrase_topk_positional(
     `build_positions` returns), whose blocks carry the positions; any other
     path raises ValueError. k=0 returns no rows without running a Spark
     job; k < 0 raises ValueError."""
-    from engine.phrase import scored_docs
-
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
     handle = open_index(index) if isinstance(index, str) else index
@@ -187,15 +82,11 @@ def phrase_topk_positional(
             f"{handle.postings_path!r}, got {postings_dir!r}"
         )
     ordered = tokenize(phrase)
-    if k == 0 or not ordered:
-        return _result_df(spark, [], [], None, with_url=True)
-    uniq = list(dict.fromkeys(ordered))
-    cand = scored_docs(spark, handle, uniq)
-    if len(ordered) > 1:
-        matched = phrase_match_docs(spark, handle, ordered)
-        cand = cand.join(matched, "doc_id", "left_semi")
-    docs = _docs_df(spark, handle).select("doc_id", "url")
-    return _top_by_url(cand.join(docs, "doc_id"), k)
+    return _topk(
+        spark, handle, list(dict.fromkeys(ordered)), k, "auto",
+        conjunctive=True, with_url=True, tiebreak="url",
+        phrase=ordered if len(ordered) > 1 else None,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -27,6 +27,14 @@ are bit-equal:
 ``auto`` runs ``local`` when the query terms' postings fit
 LOCAL_MAX_POSTINGS and ``wand`` otherwise.
 
+Exact-phrase search (engine.positional) is conjunctive top-k with one more
+predicate, adjacency (``_phrase_mask``): a doc counts only when its token
+stream holds the phrase's terms consecutively, read from the blocks'
+``pos_enc`` column. ``local`` applies it once to all candidates; the WAND
+sweep applies it to each chunk's candidates, so positions are decoded only
+for intervals whose bound can still reach the top k. Only a phrase scan
+selects ``pos_enc``.
+
 Every scan prunes the postings to the query terms' hash buckets (partition
 pruning on the `bucket=` directory column) and pushes `term IN` down to
 parquet row groups (rows are term-sorted within buckets).
@@ -49,7 +57,8 @@ from pyspark.sql import types as T
 
 from engine.analyzer import tokenize
 from engine.build import POSTINGS_SCHEMA, IndexHandle, open_index
-from engine.codec import bm25_tf_norm, decode_concat, delta_decode_blocks, idf
+from engine.codec import (bm25_tf_norm, decode_concat, delta_decode_blocks,
+                          idf, varint_decode_concat)
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -138,7 +147,7 @@ def _term_buckets(handle: IndexHandle, terms: list[str]) -> list[int]:
 
 
 # the postings columns the scoring kernel decodes; WAND's sweep also reads
-# the block bounds. No scoring path reads pos_enc (phrase search only).
+# the block bounds. Only a phrase also reads pos_enc.
 _CODEC_COLS = ["n", "codec_ids", "ids_enc", "codec_tfs", "tfs_enc",
                "codec_dls", "dls_enc"]
 _SCORE_COLS = ["term", *_CODEC_COLS]
@@ -211,6 +220,36 @@ def _decode_scored(
     return ids, idfs[tc] * bm25_tf_norm(tfs, dls, k1, b, avgdl), tc
 
 
+def _phrase_mask(
+    cols: dict, rows: np.ndarray, phrase: list[str], cand: np.ndarray
+) -> np.ndarray:
+    """Adjacency, the phrase predicate of the top-k path: which of the
+    sorted candidate doc ids `cand` hold the ordered terms `phrase`
+    consecutively in their token stream. Block `rows` of `cols` must hold
+    every block of a phrase term that covers a candidate; ids and tfs come
+    from _decode_blocks, positions from the blocks' pos_enc. The (doc,
+    pos) keys are chain-intersected S ← (S + 1) ∩ keys(next term) along
+    the ORDERED terms, so a repeated term ("the the") needs consecutive
+    occurrences."""
+    if not len(cand):
+        return np.zeros(0, bool)
+    sub = {c: [cols[c][i] for i in rows.tolist()]
+           for c in (*_SCORE_COLS, "pos_enc")}
+    ids, tfs, _ = _decode_blocks(sub)
+    pos = delta_decode_blocks(varint_decode_concat(sub["pos_enc"]), tfs)
+    at = np.minimum(np.searchsorted(cand, ids), len(cand) - 1)
+    hit = cand[at] == ids
+    m = np.int64(pos.max()) + 2  # keys of one doc never reach the next
+    key = np.repeat(at, tfs) * m + pos.astype(np.int64)
+    term = np.asarray(sub["term"], dtype=object)
+    keys = {t: key[np.repeat(np.repeat(term == t, sub["n"]) & hit, tfs)]
+            for t in set(phrase)}
+    s = keys[phrase[0]]
+    for t in phrase[1:]:
+        s = np.intersect1d(s + 1, keys[t], assume_unique=True)
+    return np.isin(np.arange(len(cand)), s // m)
+
+
 def _sum_per_doc(
     ids: np.ndarray, con: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -280,7 +319,8 @@ def _score_all(
 def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
                        conjunctive: bool, n_query_terms: int, range_size: int,
                        floor: float | None = None,
-                       allowed: np.ndarray | None = None):
+                       allowed: np.ndarray | None = None,
+                       phrase: list[str] | None = None):
     """Exact interval-sweep block-max WAND over one doc-range shard, as one
     columnar sweep.
 
@@ -321,6 +361,13 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
     scores a subset of docs with unchanged corpus-level stats (ES
     filter-context semantics).
 
+    phrase mode (``phrase`` set, the ordered tokens; conjunctive, and the
+    shard's rows carry ``pos_enc``): each chunk's candidates must also pass
+    _phrase_mask over the blocks covering the chunk's intervals — those
+    hold every block of every candidate, since intervals partition the doc
+    ids. The bounds and the cut are unchanged, so the sweep stays exact,
+    and positions are decoded only for chunks the sweep reaches.
+
     A block overlapping several doc-range shards is replicated to each (the
     explode in _run_shards), so every shard sees every block covering its
     own doc range — the intervals are therefore clipped to
@@ -332,7 +379,8 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         allow = allowed.value if hasattr(allowed, "value") else allowed
-        cols = {c: pdf[c].tolist() for c in _WAND_COLS}
+        cols = {c: pdf[c].tolist()
+                for c in _WAND_COLS + (["pos_enc"] if phrase else [])}
         tcode, idfs = _term_codes(cols, stats)
         first = np.asarray(cols["first_doc_id"], np.int64)
         last = np.asarray(cols["last_doc_id"], np.int64)
@@ -379,9 +427,9 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
                 break
             chunk = order[pos:pos + n_take]
             pos, size = pos + n_take, 2 * size
-            rows = np.unique(cover[:, chunk])
-            rows = rows[rows >= 0]
-            rows = rows[~decoded[rows]]
+            covering = np.unique(cover[:, chunk])
+            covering = covering[covering >= 0]
+            rows = covering[~decoded[covering]]
             decoded[rows] = True
             ids, con, tc = _decode_scored(cols, rows, tcode, idfs, k1, b, avgdl)
             iv = np.searchsorted(lo, ids, side="right") - 1
@@ -402,6 +450,9 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
             pend = tuple(p[~sel] for p in pend)
             if conjunctive:
                 m = nts == n_query_terms
+                uniq, scores = uniq[m], scores[m]
+            if phrase:
+                m = _phrase_mask(cols, covering, phrase, uniq)
                 uniq, scores = uniq[m], scores[m]
             if floor is not None:
                 top_ids = np.concatenate([top_ids, uniq[scores >= floor]])
@@ -485,10 +536,9 @@ def _result_df(
 def _run_shards(
     blocks: DataFrame, n_groups: int, width: int, kernel_for, schema
 ) -> DataFrame:
-    """The one per-shard dispatcher (WAND top-k, its floor rescan,
-    positional adjacency): runs `kernel_for(range_size)` — a pandas
-    frame → pandas frame kernel over one doc-range shard — on the pruned
-    block scan."""
+    """The per-shard dispatcher of the WAND top-k and its floor rescan:
+    runs `kernel_for(range_size)` — a pandas frame → pandas frame kernel
+    over one doc-range shard — on the pruned block scan."""
     if n_groups == 1:
         # single shard ⇒ no co-location needed: fold the pruned scan into
         # one task and run the kernel there — one stage, no shuffle. The
@@ -574,7 +624,20 @@ def query_topk(
     if doc_filter is not None and mode != "wand":
         raise ValueError("doc_filter requires mode='wand'")
     handle = open_index(index) if isinstance(index, str) else index
-    all_terms = parse_query(query)
+    return _topk(spark, handle, parse_query(query), k, mode, conjunctive,
+                 with_url, tiebreak, shard_target, doc_filter)
+
+
+def _topk(
+    spark: SparkSession, handle: IndexHandle, all_terms: list[str], k: int,
+    mode: str, conjunctive: bool, with_url: bool, tiebreak: str,
+    shard_target: int | None = None, doc_filter: np.ndarray | None = None,
+    phrase: list[str] | None = None,
+) -> DataFrame:
+    """query_topk over checked arguments and the query's unique terms.
+    `phrase` (the ordered tokens, with conjunctive and mode "local", "auto"
+    or "wand") keeps only the docs whose token stream holds them
+    consecutively — engine.positional's exact-phrase search."""
     if k == 0 or not all_terms or (
         doc_filter is not None and len(doc_filter) == 0
     ):
@@ -589,7 +652,7 @@ def query_topk(
     if mode == "local" or (
         mode == "auto" and sum(st[t]["df"] for t in terms) <= LOCAL_MAX_POSTINGS
     ):
-        ids, scores = local_scored_arrays(handle, terms, st, conjunctive)
+        ids, scores = _local_scored(handle, terms, st, conjunctive, phrase)
         if tiebreak == "url" and len(scores) > k:
             # every matching doc's score is in memory here: keep every doc
             # scoring >= the kth score — the ENTIRE kth-score tie group —
@@ -617,7 +680,9 @@ def query_topk(
         # out to up to n_doc_ranges shards (~TARGET postings each — seconds
         # of vectorized kernel work per task at 10^12 docs, bounded memory).
         n_groups, width = _shard_layout(handle, st, terms, shard_target)
-        blocks = _pruned_postings(spark, handle, terms, _WAND_COLS)
+        blocks = _pruned_postings(
+            spark, handle, terms, _WAND_COLS + (["pos_enc"] if phrase else [])
+        )
         k1, b = handle.stats["k1"], handle.stats["b"]
         avgdl = handle.stats["avgdl"]
         # ship the allowed-id array via a SparkContext broadcast (torrent,
@@ -634,7 +699,7 @@ def query_topk(
                 blocks, n_groups, width,
                 lambda rs: _wand_shard_scorer(
                     st, k1, b, avgdl, k, conjunctive, len(terms), rs,
-                    floor=floor, allowed=doc_filter_bc,
+                    floor=floor, allowed=doc_filter_bc, phrase=phrase,
                 ),
                 TOPK_SCHEMA,
             )
@@ -702,7 +767,7 @@ def _shard_layout(
     shard_target: int | None = None,
 ) -> tuple[int, int]:
     """The ONE (total_df, n_doc_ranges) → (shard count, shard width in doc
-    ids) formula, shared by the WAND and positional query paths and
+    ids) formula, shared by the WAND query path (phrases included) and
     wand_shard_count's report so they can never drift (ADVICE r3). Terms
     absent from the stats table contribute no postings."""
     tgt = shard_target or WAND_SHARD_TARGET
@@ -727,25 +792,39 @@ def wand_shard_count(
 def local_scored_arrays(
     handle: IndexHandle, terms: list[str], st: dict, conjunctive: bool
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Driver-local run of the decode-and-score kernel, shared by
-    query_topk's local/auto path and the phrase/filtered candidate paths:
-    pyarrow-pruned read of the terms' postings (bucket partition + term
-    row-group pruning), then the same per-term decode and per-doc sum as
-    brute and WAND. Returns (doc_ids, scores) after the optional
-    conjunctive mask; empty arrays when nothing matches."""
+    """Driver-local run of the decode-and-score kernel, for filtered
+    search's brute candidates: pyarrow-pruned read of the terms' postings
+    (bucket partition + term row-group pruning), then the same per-term
+    decode and per-doc sum as brute and WAND. Returns (doc_ids, scores)
+    after the optional conjunctive mask; empty arrays when nothing
+    matches."""
+    return _local_scored(handle, terms, st, conjunctive)
+
+
+def _local_scored(
+    handle: IndexHandle, terms: list[str], st: dict, conjunctive: bool,
+    phrase: list[str] | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """local_scored_arrays, as query_topk's local/auto path runs it, plus
+    the phrase predicate when `phrase` (the ordered tokens) is set: the
+    read then adds pos_enc, and _phrase_mask runs once over all the
+    rows."""
     dset = _pa_dataset(
         handle, "_postings_ds", handle.postings_path, partitioning="hive"
     )
     tbl = dset.to_table(
-        columns=_SCORE_COLS,
+        columns=_SCORE_COLS + (["pos_enc"] if phrase else []),
         filter=ds.field("bucket").isin(_term_buckets(handle, terms))
         & ds.field("term").isin(terms),
     )
+    cols = tbl.to_pydict()
     ids, scores, nts = _score_blocks(
-        tbl.to_pydict(), st, handle.stats["k1"], handle.stats["b"],
-        handle.stats["avgdl"],
+        cols, st, handle.stats["k1"], handle.stats["b"], handle.stats["avgdl"]
     )
     if conjunctive:
         sel = nts == len(terms)
+        ids, scores = ids[sel], scores[sel]
+    if phrase:
+        sel = _phrase_mask(cols, np.arange(len(cols["n"])), phrase, ids)
         ids, scores = ids[sel], scores[sel]
     return ids, scores

@@ -110,8 +110,8 @@ def _warm_python_workers(spark: SparkSession) -> None:
             .write.format("noop").mode("overwrite").save()
         )
         # also warm the grouped-map (applyInPandas) serializer + exchange
-        # codegen path, which the multi-shard WAND/phrase queries use —
-        # measured ~0.5 s of first-call JIT otherwise
+        # codegen path, which multi-shard WAND queries (phrases included)
+        # use — measured ~0.5 s of first-call JIT otherwise
         from pyspark.sql import functions as _F
 
         (

@@ -200,22 +200,27 @@ def test_atomic_publish_versions(spark, index_cfg):
     assert h.version_dir.endswith("v_1")
 
 
-def test_postings_sink_failure_publishes_nothing(spark, index_cfg, monkeypatch):
-    """Fault injection: the postings sink, which also writes the positions,
-    raises inside build_index. The manifest stays on the previous version
-    and open_index shows no new one."""
-    import engine.build
+@pytest.mark.parametrize("sink", ["postings", "terms", "docs"])
+def test_sink_failure_publishes_nothing(spark, index_cfg, monkeypatch, sink):
+    """Fault injection: one sink (postings, which also writes the
+    positions, terms or docs) raises inside build_index. The manifest stays
+    on the previous version and open_index shows no new one."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     from engine.publish import list_snapshots, read_manifest
 
     wp = load_webpages(spark, SF_DIR_001).limit(100)
     root = tempfile.mkdtemp(prefix="idx_fault_")
     build_index(spark, wp, root, index_cfg)
+    parquet = DataFrameWriter.parquet
 
-    def crash(*args, **kwargs):
-        raise RuntimeError("postings sink crashed")
+    def crash(self, path, *args, **kwargs):
+        if os.path.basename(path) == sink:
+            raise RuntimeError(f"{sink} sink crashed")
+        return parquet(self, path, *args, **kwargs)
 
-    monkeypatch.setattr(engine.build, "_write_bucketed", crash)
-    with pytest.raises(RuntimeError, match="postings sink crashed"):
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash)
+    with pytest.raises(RuntimeError, match=f"{sink} sink crashed"):
         build_index(spark, wp, root, index_cfg)
     assert read_manifest(root)["version"] == "v_0"
     assert [s["version"] for s in list_snapshots(root)] == ["v_0"]

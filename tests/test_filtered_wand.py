@@ -77,19 +77,22 @@ def test_filtered_wand_empty_filter(spark, lang_corpus):
     assert out.count() == 0
 
 
-def test_filtered_wand_cap_falls_back_to_brute(spark, lang_corpus):
-    """An unselective filter (resolved id set beyond max_filter_ids) must
+def test_filtered_wand_cap_falls_back_to_brute(spark, lang_corpus,
+                                               monkeypatch):
+    """An unselective filter (resolved id set beyond MAX_FILTER_IDS) must
     fall back to the brute score-all plan and still return the exact
     result — the cap moves the plan, never the answer."""
+    import engine.phrase
     from engine.phrase import filtered_topk
 
     h, wp = lang_corpus
     pred = F.col("lang") == "fr"  # 6 docs > cap of 2
     brute = [(r["url"], round(r["score"], 9)) for r in
              filtered_topk(spark, h, wp, "spark", pred, k=10).collect()]
+    monkeypatch.setattr(engine.phrase, "MAX_FILTER_IDS", 2)
     capped = [(r["url"], round(r["score"], 9)) for r in
               filtered_topk(spark, h, wp, "spark", pred, k=10,
-                            mode="wand", max_filter_ids=2).collect()]
+                            mode="wand").collect()]
     assert capped == brute and len(capped) == 6
 
 

@@ -1,10 +1,11 @@
 """Positional-postings phrase search (engine/positional.py) over the
 positions build_index writes on the postings blocks (`pos_enc`): rank
 identity with the pure-Python reference in tests/phrase_reference.py,
-adjacency semantics (repeated terms, boundaries), multi-shard exactness,
-positions determinism across input partitioning, positions consistent with
-the terms table (df, cf) and the docs' lengths on a corpus with recrawls,
-and the no-corpus-access plan property."""
+adjacency semantics (repeated terms, boundaries), one result through the
+driver-local kernel and forced WAND at any fan-out, positions determinism
+across input partitioning, positions consistent with the terms table (df,
+cf) and the docs' lengths on a corpus with recrawls, the no-corpus-access
+plan property and the Spark jobs a phrase starts."""
 
 from __future__ import annotations
 
@@ -91,13 +92,15 @@ def test_positional_degenerate_inputs(spark, pos_index):
     )
 
 
-def test_positional_randomized_equivalence(spark, index_cfg):
-    """Random corpora: the positional match set equals pure-Python token
-    adjacency for every probed phrase (incl. stopword-grade and repeated
-    tokens)."""
+def test_positional_randomized_equivalence(spark, index_cfg, monkeypatch):
+    """Random corpora: the phrase match set, through the driver-local
+    kernel and through forced WAND at the maximum doc-range fan-out,
+    equals pure-Python token adjacency for every probed phrase (incl.
+    stopword-grade and repeated tokens)."""
+    import engine.query as Q
     from engine.analyzer import tokenize
     from engine.build import build_index
-    from engine.positional import phrase_match_docs
+    from engine.positional import phrase_topk_positional
 
     rng = random.Random(7)
     vocab = ["the", "data", "a", "b", "c", "dd"]
@@ -117,17 +120,17 @@ def test_positional_randomized_equivalence(spark, index_cfg):
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
     h = build_index(spark, wp, tempfile.mkdtemp(prefix="idx_rnd_"), index_cfg)
-    docs = {
-        r["doc_id"]: r["url"]
-        for r in spark.read.parquet(h.docs_path).collect()
-    }
+    n_docs = h.stats["n_docs"]
     text_by_url = {u: t for u, _, _, t, _ in rows}
+
+    def matches(phrase):
+        return {
+            r["url"] for r in phrase_topk_positional(
+                spark, h, h.postings_path, phrase, k=n_docs).collect()
+        }
+
     for phrase in ("the data", "data the data", "a b c", "the the", "dd"):
         terms = tokenize(phrase)
-        got = {
-            docs[r["doc_id"]]
-            for r in phrase_match_docs(spark, h, terms).collect()
-        }
         want = set()
         for u, t_ in text_by_url.items():
             toks = tokenize(t_)
@@ -136,25 +139,33 @@ def test_positional_randomized_equivalence(spark, index_cfg):
                 for i in range(len(toks) - len(terms) + 1)
             ):
                 want.add(u)
-        assert got == want, phrase
+        assert matches(phrase) == want, phrase
+        with monkeypatch.context() as m:
+            m.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
+            m.setattr(Q, "WAND_SHARD_TARGET", 1)
+            assert matches(phrase) == want, phrase
 
 
-def test_positional_multi_shard_exact(spark, pos_index):
-    """shard_target=1 forces the maximum doc-range fan-out; the sharded
-    kernel (block replication + clipping) returns the identical match set."""
-    from engine.analyzer import tokenize
-    from engine.positional import phrase_match_docs
+def test_positional_multi_shard_exact(spark, pos_index, monkeypatch):
+    """The phrase's rows are identical through the driver-local kernel,
+    through forced WAND on one shard and at the maximum doc-range fan-out
+    (block replication + clipping)."""
+    import engine.query as Q
+    from engine.positional import phrase_topk_positional
 
-    h, _, _ = pos_index
-    terms = tokenize("data table")
-    single = {
-        r["doc_id"] for r in phrase_match_docs(spark, h, terms).collect()
-    }
-    sharded = {
-        r["doc_id"]
-        for r in phrase_match_docs(spark, h, terms, shard_target=1).collect()
-    }
-    assert sharded == single and len(single) == 3
+    h, _, pos_dir = pos_index
+
+    def rows():
+        return phrase_topk_positional(spark, h, pos_dir, "data table",
+                                      k=10).collect()
+
+    local = rows()
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
+    assert Q.wand_shard_count(h, "data table") == 1
+    single = rows()
+    monkeypatch.setattr(Q, "WAND_SHARD_TARGET", 1)
+    assert Q.wand_shard_count(h, "data table") > 1
+    assert rows() == single == local and len(local) == 3
 
 
 def test_positions_artifact_deterministic(spark, index_cfg):
@@ -218,21 +229,58 @@ def test_positions_match_terms_on_recrawls(spark, index_cfg):
     assert pos == {t: [df, cf] for t, (df, cf) in terms.items()}
 
 
-def test_phrase_scan_reads_positions_not_corpus(spark, pos_index):
-    """The phrase-match plan scans the postings blocks with term-bucket
-    partition pruning and reads their positions, but never a column it
-    does not decode (the doc lengths) nor the corpus."""
-    from engine.analyzer import tokenize
-    from engine.positional import phrase_match_docs
+def test_phrase_scan_reads_positions_not_corpus(spark, pos_index,
+                                                 monkeypatch):
+    """The phrase's WAND scan reads the postings blocks with term-bucket
+    partition pruning, together with their positions, and never the
+    corpus."""
+    import engine.query as Q
+    from engine.positional import phrase_topk_positional
 
-    h, _, _ = pos_index
-    df = phrase_match_docs(spark, h, tokenize("data table"))
-    scans = _file_scans(df)
-    assert scans
-    for ln, cols in scans:
-        assert "postings" in ln
-        assert "PartitionFilters" in ln and "bucket" in ln
-        assert "pos_enc" in cols and "dls_enc" not in cols
-    # corpus (webpages) columns never appear in the plan
-    plan = _plan(df)
-    assert "text#" not in plan and "html#" not in plan
+    h, _, pos_dir = pos_index
+    scanned = []
+    run_shards = Q._run_shards
+
+    def spy(blocks, *args):
+        scanned.append(blocks)
+        return run_shards(blocks, *args)
+
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
+    monkeypatch.setattr(Q, "_run_shards", spy)
+    phrase_topk_positional(spark, h, pos_dir, "data table", k=10).collect()
+    assert scanned
+    for df in scanned:
+        scans = _file_scans(df)
+        assert scans
+        for ln, cols in scans:
+            assert "postings" in ln
+            assert "PartitionFilters" in ln and "bucket" in ln
+            assert "pos_enc" in cols
+        # corpus (webpages) columns never appear in the plan
+        plan = _plan(df)
+        assert "text#" not in plan and "html#" not in plan
+
+
+def test_phrase_spark_jobs(spark, built_index, monkeypatch):
+    """A phrase whose postings fit the driver starts no Spark job, and
+    through forced WAND it starts one, the sweep, when no tie rescan
+    fires."""
+    import engine.query as Q
+    from engine.positional import phrase_topk_positional
+
+    sc = spark.sparkContext
+
+    def n_jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            rows = phrase_topk_positional(
+                spark, built_index, built_index.postings_path, "the data",
+                k=10).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == 10
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert n_jobs("phrase-auto") == 0
+    monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
+    assert n_jobs("phrase-wand") == 1

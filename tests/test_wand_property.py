@@ -1,6 +1,8 @@
 """Property test (SURVEY.md §5.2): block-max WAND pruning is rank-identical
 to brute force on random corpora — exercised directly on the shard-scorer
-function (no Spark), with tiny blocks so pruning paths actually trigger."""
+function (no Spark), with tiny blocks so pruning paths actually trigger.
+A phrase (ordered term ids, repeats allowed) is one more input: the sweep's
+adjacency predicate must match pure-Python adjacency over the docs."""
 
 from __future__ import annotations
 
@@ -11,7 +13,8 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from engine.codec import bm25_tf_norm, delta_encode, encode_best, idf
+from engine.codec import (bm25_tf_norm, delta_encode, encode_best, idf,
+                          varint_encode_rows)
 from engine.query import _score_blocks, _wand_shard_scorer
 
 K1, B = 1.2, 0.75
@@ -25,19 +28,27 @@ corpus_strategy = st.lists(  # each doc: list of term ids 0..5
 query_strategy = st.lists(
     st.integers(min_value=0, max_value=5), min_size=1, max_size=3, unique=True
 )
+# an ordered phrase of 2-3 term ids, repeats allowed; None = no phrase
+phrase_strategy = st.one_of(
+    st.none(),
+    st.lists(st.integers(min_value=0, max_value=5), min_size=2, max_size=3),
+)
 
 
 def _build_blocks(corpus):
     """Replicates the merge/compress stage locally: per-term doc-sorted
-    postings → blocks of BLOCK with real codec bytes + block-max scores."""
+    postings → blocks of BLOCK with real codec bytes + block-max scores,
+    and each posting's positions (within-doc delta varint) in pos_enc."""
     n_docs = len(corpus)
     dls = [len(d) for d in corpus]
     avgdl = sum(dls) / n_docs
     tf: dict[int, dict[int, int]] = {}
+    at: dict[int, dict[int, list[int]]] = {}  # term → doc → positions
     for did, doc in enumerate(corpus):
-        for t in doc:
+        for i, t in enumerate(doc):
             tf.setdefault(t, {}).setdefault(did, 0)
             tf[t][did] += 1
+            at.setdefault(t, {}).setdefault(did, []).append(i)
     rows = []
     stats = {}
     for t, posts in tf.items():
@@ -47,6 +58,9 @@ def _build_blocks(corpus):
         idf_t = idf(n_docs, len(ids))
         stats[str(t)] = {"df": len(ids), "cf": int(tfs.sum()), "idf": idf_t}
         contrib = idf_t * bm25_tf_norm(tfs, dl, K1, B, avgdl)
+        gaps = np.concatenate([np.diff(at[t][d], prepend=0) for d in ids])
+        starts = np.concatenate(([0], np.cumsum(tfs)[BLOCK - 1:-1:BLOCK]))
+        pos_enc = varint_encode_rows(gaps, starts)
         for i in range(math.ceil(len(ids) / BLOCK)):
             lo, hi = i * BLOCK, min((i + 1) * BLOCK, len(ids))
             ci, eb = encode_best(delta_encode(ids[lo:hi]).astype(np.uint64))
@@ -59,13 +73,13 @@ def _build_blocks(corpus):
                     "max_score": float(contrib[lo:hi].max()),
                     "codec_ids": ci, "ids_enc": eb,
                     "codec_tfs": ct, "tfs_enc": tb,
-                    "codec_dls": cd, "dls_enc": db,
+                    "codec_dls": cd, "dls_enc": db, "pos_enc": pos_enc[i],
                 }
             )
     return pd.DataFrame(rows), stats, avgdl, n_docs, tf, dls
 
 
-def _brute(corpus, tf, dls, avgdl, terms, conjunctive):
+def _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase=None):
     n_docs = len(corpus)
     scores: dict[int, float] = {}
     hits: dict[int, int] = {}
@@ -80,7 +94,10 @@ def _brute(corpus, tf, dls, avgdl, terms, conjunctive):
             hits[did] = hits.get(did, 0) + 1
     items = [
         (d, s) for d, s in scores.items()
-        if not conjunctive or hits[d] == len(terms)
+        if (not conjunctive or hits[d] == len(terms))
+        and (phrase is None or any(
+            corpus[d][i:i + len(phrase)] == phrase
+            for i in range(len(corpus[d]) - len(phrase) + 1)))
     ]
     items.sort(key=lambda x: (-x[1], x[0]))
     return items
@@ -110,18 +127,27 @@ def test_wand_rank_identical_to_brute(corpus, qterms, conjunctive, k):
         assert abs(gs - ws) < 1e-9
 
 
+def _phrase_query(qterms, conjunctive, phrase):
+    """(query terms, conjunctive, the kernel's phrase): a phrase is
+    conjunctive top-k over its unique terms."""
+    if phrase is None:
+        return qterms, conjunctive, None
+    return list(dict.fromkeys(phrase)), True, [str(t) for t in phrase]
+
+
 @settings(max_examples=120, deadline=None)
 @given(
     corpus_strategy, query_strategy, st.booleans(), st.integers(2, 6),
-    st.integers(1, 9),
+    st.integers(1, 9), phrase_strategy,
 )
 def test_wand_multishard_rank_identical(corpus, qterms, conjunctive, k,
-                                        range_size):
+                                        range_size, phrase):
     """Multi-shard regression for the shard-clipping bug: blocks spanning
     several doc-range shards are replicated to each shard (the query-side
     explode), and the union of shard-local top-k must be duplicate-free and
     rank-identical to brute — i.e. each doc is scored exactly once, in its
     home shard, with full score."""
+    qterms, conjunctive, sphrase = _phrase_query(qterms, conjunctive, phrase)
     blocks, stats, avgdl, n_docs, tf, dls = _build_blocks(corpus)
     terms = [t for t in qterms if t in tf]
     if not terms:
@@ -131,7 +157,8 @@ def test_wand_multishard_rank_identical(corpus, qterms, conjunctive, k,
     if len(pdf) == 0:
         return
     scorer = _wand_shard_scorer(
-        stats, K1, B, avgdl, k, conjunctive, len(sterms), range_size
+        stats, K1, B, avgdl, k, conjunctive, len(sterms), range_size,
+        phrase=sphrase,
     )
     # replicate each block to every shard it overlaps, exactly as query_topk
     parts = []
@@ -148,9 +175,9 @@ def test_wand_multishard_rank_identical(corpus, qterms, conjunctive, k,
     merged = merged.sort_values(
         ["score", "doc_id"], ascending=[False, True], kind="mergesort"
     ).head(k)
-    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive)[:k]
+    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase)[:k]
     assert list(merged["doc_id"]) == [d for d, _ in want], (
-        corpus, qterms, conjunctive, k, range_size,
+        corpus, qterms, conjunctive, k, range_size, phrase,
         list(zip(merged["doc_id"], merged["score"])), want,
     )
     for gs, (_, ws) in zip(merged["score"], want):
@@ -203,27 +230,29 @@ def _shard_frames(pdf, range_size):
 @settings(max_examples=120, deadline=None)
 @given(
     corpus_strategy, query_strategy, st.booleans(), st.integers(1, 6),
-    st.one_of(st.none(), st.integers(1, 9)),
+    st.one_of(st.none(), st.integers(1, 9)), phrase_strategy,
 )
 def test_wand_url_tiebreak_contract(corpus, qterms, conjunctive, k,
-                                    range_size):
+                                    range_size, phrase):
     """The kernel's side of the url tie-break, per shard (range_size None =
     one shard): floor mode at the shard's kth score returns exactly the
     brute docs of the shard scoring >= it, with bit-equal scores; and
     dropped_max never exceeds the kth score and equals it (with k rows
     returned) exactly when a brute doc outside the result ties the kth
     score — the case query_topk rescans for."""
+    qterms, conjunctive, sphrase = _phrase_query(qterms, conjunctive, phrase)
     blocks, stats, avgdl, n_docs, tf, dls = _build_blocks(corpus)
     terms = [t for t in qterms if t in tf]
     if not terms:
         return
     sterms = [str(t) for t in terms]
     range_size = range_size or n_docs + 1
-    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive)
+    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase)
 
     def scorer(floor=None):
         return _wand_shard_scorer(stats, K1, B, avgdl, k, conjunctive,
-                                  len(sterms), range_size, floor=floor)
+                                  len(sterms), range_size, floor=floor,
+                                  phrase=sphrase)
 
     for shard, g in _shard_frames(
         blocks[blocks["term"].isin(sterms)], range_size
@@ -238,7 +267,7 @@ def test_wand_url_tiebreak_contract(corpus, qterms, conjunctive, k,
         assert dropped_max <= s_k
         tie_cut = any(s == s_k for _, s in home[len(ids):])
         assert (len(ids) == k and dropped_max == s_k) == tie_cut, (
-            corpus, qterms, conjunctive, k, range_size, shard)
+            corpus, qterms, conjunctive, k, range_size, phrase, shard)
         flo = scorer(floor=s_k)(g)
         assert sorted(zip(flo["doc_id"].tolist(), flo["score"].tolist())) \
             == sorted((d, s) for d, s in home if s >= s_k)
