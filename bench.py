@@ -170,7 +170,7 @@ def main() -> None:
                 ).collect()
                 per.append(time.time() - t1)
             timings[f"q_phrase_pos:{q}"] = round(min(per), 4)
-        for m in ("brute", "wand"):
+        for m in ("brute", "wand", "auto"):
             per = []
             for _ in range(reps):
                 t1 = time.time()

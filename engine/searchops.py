@@ -152,10 +152,11 @@ def _bm25_filtered_sql(terms: list[str], where: str, k: int = 10) -> str:
 )
 def bm25_topk_filtered(spark, sf_dir):
     """Facet-filtered top-k (B19): the lang predicate applies BEFORE the
-    top-k cut. mode="wand" exercises the round-5 filter-aware WAND (the
-    allowed doc-id set intersected during the shard sweep, allowed-empty
-    intervals skipped pre-decode) — exactness vs the brute semi-join plan
-    is additionally pinned by tests/test_filtered_wand.py."""
+    top-k cut. mode="wand" exercises filter-aware WAND (the allowed doc-id
+    set intersected during the shard sweep, allowed-empty intervals
+    skipped pre-decode) — exactness of every mode vs distributed brute
+    under the same allowed set is additionally pinned by
+    tests/test_filtered_wand.py."""
     from engine.phrase import filtered_topk
 
     h = get_index(spark, sf_dir)

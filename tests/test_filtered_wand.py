@@ -1,7 +1,8 @@
-"""Filter-aware WAND (round-4 verdict "Next round #5"): facet-filtered
-top-k with a doc-id filter intersected during the shard sweep — exactness
-vs the brute semi-join path, and the pruning property (allowed-empty
-intervals are skipped without decoding their blocks)."""
+"""Facet-filtered top-k (B19): the allowed doc-id set is a predicate of
+query_topk's one top-k path — exactness of the local, auto and
+filter-aware WAND modes vs explicit distributed brute, and the pruning
+property (allowed-empty intervals are skipped without decoding their
+blocks)."""
 
 from __future__ import annotations
 
@@ -12,6 +13,9 @@ import numpy as np
 import pandas as pd
 import pytest
 import pyspark.sql.functions as F
+
+# the modes checked against an explicit mode="brute"
+FAST_MODES = ("local", "auto", "wand")
 
 
 @pytest.fixture(scope="module")
@@ -45,27 +49,33 @@ def test_filtered_wand_matches_brute(spark, lang_corpus):
     h, wp = lang_corpus
     pred = F.col("lang") == "fr"
     brute = [(r["url"], round(r["score"], 9)) for r in
-             filtered_topk(spark, h, wp, "spark", pred, k=10).collect()]
-    wand = [(r["url"], round(r["score"], 9)) for r in
-            filtered_topk(spark, h, wp, "spark", pred, k=10,
-                          mode="wand").collect()]
-    assert wand == brute
-    assert len(wand) == 6 and all(u.startswith("https://fr.") for u, _ in wand)
+             filtered_topk(spark, h, wp, "spark", pred, k=10,
+                           mode="brute").collect()]
+    assert len(brute) == 6
+    assert all(u.startswith("https://fr.") for u, _ in brute)
+    for mode in FAST_MODES:
+        got = [(r["url"], round(r["score"], 9)) for r in
+               filtered_topk(spark, h, wp, "spark", pred, k=10,
+                             mode=mode).collect()]
+        assert got == brute, mode
 
 
 def test_filtered_wand_multi_shard_and_k_cut(spark, lang_corpus):
-    """Filter keeping more docs than k, across doc ranges: the wand path
+    """Filter keeping more docs than k, across doc ranges: every mode
     still returns exactly the brute top-k in (score desc, url) order."""
     from engine.phrase import filtered_topk
 
     h, wp = lang_corpus
     pred = F.col("url").startswith("https://bulk.")
     brute = [(r["url"], round(r["score"], 9)) for r in
-             filtered_topk(spark, h, wp, "spark bulk", pred, k=7).collect()]
-    wand = [(r["url"], round(r["score"], 9)) for r in
-            filtered_topk(spark, h, wp, "spark bulk", pred, k=7,
-                          mode="wand").collect()]
-    assert wand == brute and len(wand) == 7
+             filtered_topk(spark, h, wp, "spark bulk", pred, k=7,
+                           mode="brute").collect()]
+    assert len(brute) == 7
+    for mode in FAST_MODES:
+        got = [(r["url"], round(r["score"], 9)) for r in
+               filtered_topk(spark, h, wp, "spark bulk", pred, k=7,
+                             mode=mode).collect()]
+        assert got == brute, mode
 
 
 def test_filtered_wand_empty_filter(spark, lang_corpus):
@@ -77,23 +87,22 @@ def test_filtered_wand_empty_filter(spark, lang_corpus):
     assert out.count() == 0
 
 
-def test_filtered_wand_cap_falls_back_to_brute(spark, lang_corpus,
-                                               monkeypatch):
-    """An unselective filter (resolved id set beyond MAX_FILTER_IDS) must
-    fall back to the brute score-all plan and still return the exact
-    result — the cap moves the plan, never the answer."""
-    import engine.phrase
+def test_filtered_unselective_filter_exact(spark, lang_corpus):
+    """A predicate keeping every doc returns exactly the unfiltered url
+    tie-break top-k, in every mode: the allowed set changes the candidate
+    set, never the plan's answer."""
     from engine.phrase import filtered_topk
+    from engine.query import query_topk
 
     h, wp = lang_corpus
-    pred = F.col("lang") == "fr"  # 6 docs > cap of 2
-    brute = [(r["url"], round(r["score"], 9)) for r in
-             filtered_topk(spark, h, wp, "spark", pred, k=10).collect()]
-    monkeypatch.setattr(engine.phrase, "MAX_FILTER_IDS", 2)
-    capped = [(r["url"], round(r["score"], 9)) for r in
-              filtered_topk(spark, h, wp, "spark", pred, k=10,
-                            mode="wand").collect()]
-    assert capped == brute and len(capped) == 6
+    pred = F.col("url").isNotNull()
+    for mode in ("brute", *FAST_MODES):
+        want = query_topk(spark, h, "spark", k=10, mode=mode,
+                          tiebreak="url").collect()
+        got = filtered_topk(spark, h, wp, "spark", pred, k=10,
+                            mode=mode).collect()
+        assert len(want) == 10
+        assert [tuple(r) for r in got] == [tuple(r) for r in want], mode
 
 
 def test_filtered_wand_prunes_blocks(spark, lang_corpus, monkeypatch):

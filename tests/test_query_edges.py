@@ -6,8 +6,9 @@ k=0, k beyond the match count, zero-hit, empty, punctuation-only, repeated
 and non-ASCII terms, mixed hit + zero-hit queries — under both tie-breaks;
 unknown modes and tie-breaks, and k < 0 on every entry point, are rejected
 up front; k=0 returns no rows without a Spark job; every entry point
-returns the one result schema, also on its early-return paths; and
-filtered_topk's predicate probe sends only unresolved columns to the
+returns the one result schema, also on its early-return paths;
+filtered_topk takes query_topk's modes, resolves its predicate in one
+Spark job, and its predicate probe sends only unresolved columns to the
 corpus path."""
 
 from __future__ import annotations
@@ -95,7 +96,7 @@ def test_bad_arguments_rejected(spark, built_index, webpages):
             phrase_topk_positional(spark, built_index, bad, "the data", k=5)
     # "zz" resolves to an empty allowed set: k is checked before the
     # empty-set early return
-    for mode in ("brute", "wand"):
+    for mode in MODES:
         for lang in ("en", "zz"):
             with pytest.raises(ValueError, match="k must be"):
                 filtered_topk(spark, built_index, webpages, "spark join",
@@ -121,7 +122,7 @@ def test_query_topk_result_schema(spark, built_index, mode, with_url):
             assert _fields(df) == want, (query, tiebreak)
 
 
-@pytest.mark.parametrize("mode", ["brute", "wand"])
+@pytest.mark.parametrize("mode", MODES)
 def test_filtered_topk_result_schema(spark, built_index, webpages, mode):
     from engine.phrase import filtered_topk
 
@@ -140,15 +141,22 @@ def test_phrase_result_schemas(spark, built_index):
                                               phrase, k=5)) == RESULT, phrase
 
 
-def _no_spark_job(spark, fn):
-    """fn's result, asserting that calling it launched no Spark job."""
+def _spark_jobs(spark, fn, group):
+    """(fn's result, the number of Spark jobs calling it launched); each
+    call needs its own job `group`."""
     sc = spark.sparkContext
-    sc.setJobGroup("no-spark-job", "k=0 early return")
+    sc.setJobGroup(group, group)
     try:
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup("no-spark-job")) == []
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _no_spark_job(spark, fn):
+    """fn's result, asserting that calling it launched no Spark job."""
+    out, n_jobs = _spark_jobs(spark, fn, "no-spark-job")
+    assert n_jobs == 0
     return out
 
 
@@ -162,12 +170,29 @@ def test_k0_returns_empty_without_spark_job(spark, built_index, webpages):
     ] + [
         lambda m=m: filtered_topk(spark, built_index, webpages, "spark join",
                                   F.col("lang") == "en", k=0, mode=m)
-        for m in ("brute", "wand")
+        for m in MODES
     ]
     for call in calls:
         df = _no_spark_job(spark, call)
         assert _fields(df) == RESULT
         assert df.collect() == []
+
+
+def test_filtered_spark_jobs(spark, built_index, webpages):
+    """filtered_topk resolves its predicate in one Spark job. auto and
+    local then score on the driver; WAND adds one job, the sweep, when no
+    tie rescan fires."""
+    from engine.phrase import filtered_topk
+
+    for mode, want in (("auto", 1), ("local", 1), ("wand", 2)):
+        df, n_jobs = _spark_jobs(
+            spark,
+            lambda: filtered_topk(spark, built_index, webpages, "spark join",
+                                  F.col("lang") == "en", k=10, mode=mode),
+            f"filtered-{mode}",
+        )
+        assert n_jobs == want, mode
+        assert len(df.collect()) == 10, mode
 
 
 @pytest.fixture(scope="module")
@@ -196,24 +221,34 @@ def text_pred_index(spark, index_cfg):
 
 def test_filtered_text_predicate_takes_corpus_path(spark, text_pred_index):
     """A predicate on a corpus-only column (text) fails the docs-table
-    probe with an unresolved column and resolves through the corpus: both
-    modes return the same rows, which are exactly the matching docs."""
+    probe with an unresolved column and resolves through the corpus: every
+    mode filters the corpus once and returns the same rows, which are
+    exactly the matching docs."""
     from engine.phrase import filtered_topk
 
     h, wp, rows = text_pred_index
     pred = F.col("text").contains("needle")
+    calls = []
+
+    class Corpus:
+        columns = wp.columns
+
+        def filter(self, predicate):
+            calls.append(predicate)
+            return wp.filter(predicate)
+
     out = {}
-    for mode in ("brute", "wand"):
-        df = filtered_topk(spark, h, wp, "spark window", pred, k=100,
+    for mode in MODES:
+        calls.clear()
+        df = filtered_topk(spark, h, Corpus(), "spark window", pred, k=100,
                            mode=mode)
+        assert len(calls) == 1, mode  # the corpus path was taken
         out[mode] = [(r["url"], r["score"]) for r in df.collect()]
-    plan = filtered_topk(spark, h, wp, "spark window", pred, k=100)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "text#" in plan  # the brute plan scans the corpus's text
-    assert out["wand"] == out["brute"]
     assert {u for u, _ in out["brute"]} == {
         u for u, _, _, t, _ in rows if "needle" in t
     }
+    for mode in MODES[1:]:
+        assert out[mode] == out["brute"], mode
 
 
 def test_filtered_probe_errors_propagate(spark, built_index, webpages):
@@ -228,7 +263,7 @@ def test_filtered_probe_errors_propagate(spark, built_index, webpages):
         def filter(self, predicate):
             raise AssertionError("corpus path taken")
 
-    for mode in ("brute", "wand"):
+    for mode in MODES:
         with pytest.raises(TypeError):
             filtered_topk(spark, built_index, Corpus(), "spark", 42,
                           mode=mode)

@@ -2,20 +2,25 @@
 to brute force on random corpora — exercised directly on the shard-scorer
 function (no Spark), with tiny blocks so pruning paths actually trigger.
 A phrase (ordered term ids, repeats allowed) is one more input: the sweep's
-adjacency predicate must match pure-Python adjacency over the docs."""
+adjacency predicate must match pure-Python adjacency over the docs. So is
+an allowed doc-id set, the facet filter every strategy applies."""
 
 from __future__ import annotations
 
 import math
+import types
+import zlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from engine.codec import (bm25_tf_norm, delta_encode, encode_best, idf,
                           varint_encode_rows)
-from engine.query import _score_blocks, _wand_shard_scorer
+from engine.query import _brute_scorer, _local_scored, _wand_shard_scorer
 
 K1, B = 1.2, 0.75
 BLOCK = 4  # tiny blocks → many intervals → pruning actually exercised
@@ -32,6 +37,13 @@ query_strategy = st.lists(
 phrase_strategy = st.one_of(
     st.none(),
     st.lists(st.integers(min_value=0, max_value=5), min_size=2, max_size=3),
+)
+# a sorted allowed doc-id set (possibly empty, possibly missing every
+# matching doc); None = no filter
+allowed_strategy = st.one_of(
+    st.none(),
+    st.sets(st.integers(min_value=0, max_value=45)).map(
+        lambda s: np.asarray(sorted(s), dtype=np.int64)),
 )
 
 
@@ -79,7 +91,8 @@ def _build_blocks(corpus):
     return pd.DataFrame(rows), stats, avgdl, n_docs, tf, dls
 
 
-def _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase=None):
+def _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase=None,
+           allowed=None):
     n_docs = len(corpus)
     scores: dict[int, float] = {}
     hits: dict[int, int] = {}
@@ -92,9 +105,11 @@ def _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase=None):
             )
             scores[did] = scores.get(did, 0.0) + c
             hits[did] = hits.get(did, 0) + 1
+    allow = None if allowed is None else set(allowed.tolist())
     items = [
         (d, s) for d, s in scores.items()
         if (not conjunctive or hits[d] == len(terms))
+        and (allow is None or d in allow)
         and (phrase is None or any(
             corpus[d][i:i + len(phrase)] == phrase
             for i in range(len(corpus[d]) - len(phrase) + 1)))
@@ -138,10 +153,10 @@ def _phrase_query(qterms, conjunctive, phrase):
 @settings(max_examples=120, deadline=None)
 @given(
     corpus_strategy, query_strategy, st.booleans(), st.integers(2, 6),
-    st.integers(1, 9), phrase_strategy,
+    st.integers(1, 9), phrase_strategy, allowed_strategy,
 )
 def test_wand_multishard_rank_identical(corpus, qterms, conjunctive, k,
-                                        range_size, phrase):
+                                        range_size, phrase, allowed):
     """Multi-shard regression for the shard-clipping bug: blocks spanning
     several doc-range shards are replicated to each shard (the query-side
     explode), and the union of shard-local top-k must be duplicate-free and
@@ -158,7 +173,7 @@ def test_wand_multishard_rank_identical(corpus, qterms, conjunctive, k,
         return
     scorer = _wand_shard_scorer(
         stats, K1, B, avgdl, k, conjunctive, len(sterms), range_size,
-        phrase=sphrase,
+        phrase=sphrase, allowed=allowed,
     )
     # replicate each block to every shard it overlaps, exactly as query_topk
     parts = []
@@ -175,41 +190,69 @@ def test_wand_multishard_rank_identical(corpus, qterms, conjunctive, k,
     merged = merged.sort_values(
         ["score", "doc_id"], ascending=[False, True], kind="mergesort"
     ).head(k)
-    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase)[:k]
+    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase,
+                  allowed)[:k]
     assert list(merged["doc_id"]) == [d for d, _ in want], (
-        corpus, qterms, conjunctive, k, range_size, phrase,
+        corpus, qterms, conjunctive, k, range_size, phrase, allowed,
         list(zip(merged["doc_id"], merged["score"])), want,
     )
     for gs, (_, ws) in zip(merged["score"], want):
         assert abs(gs - ws) < 1e-9
 
 
+N_BUCKETS = 3
+
+
+def _local_handle(blocks, avgdl):
+    """A stand-in index handle for the driver-local kernel: the blocks as
+    an in-memory pyarrow dataset with the build's `bucket` column, where
+    _pa_dataset finds it memoized."""
+    tbl = pa.Table.from_pandas(blocks.assign(bucket=[
+        zlib.crc32(t.encode("utf-8")) % N_BUCKETS for t in blocks["term"]
+    ]), preserve_index=False)
+    h = types.SimpleNamespace(
+        postings_path=None,
+        stats={"k1": K1, "b": B, "avgdl": avgdl, "n_term_buckets": N_BUCKETS},
+    )
+    h._postings_ds = ds.dataset(tbl)
+    return h
+
+
 @settings(max_examples=120, deadline=None)
-@given(corpus_strategy, query_strategy, st.booleans(), st.integers(2, 6))
+@given(corpus_strategy, query_strategy, st.booleans(), st.integers(2, 6),
+       allowed_strategy)
 def test_shared_kernel_matches_brute_and_wand_bit_equal(corpus, qterms,
-                                                        conjunctive, k):
-    """The shared decoder + per-doc aggregator over the full block table
-    equals brute force, and its top-k scores are bit-equal (==) to the WAND
-    shard scorer's — the invariant the url tie-break relies on when it
-    compares scores from different paths exactly."""
+                                                        conjunctive, k,
+                                                        allowed):
+    """The driver-local kernel and the distributed brute scorer (one Arrow
+    batch) over the full block table equal brute force under the allowed
+    set, and their scores are bit-equal (==) to each other and, at the
+    top k, to the WAND shard scorer's — the invariant the url tie-break
+    relies on when it compares scores from different paths exactly."""
     blocks, stats, avgdl, n_docs, tf, dls = _build_blocks(corpus)
     terms = [t for t in qterms if t in tf]
     if not terms:
         return
     sterms = [str(t) for t in terms]
     pdf = blocks[blocks["term"].isin(sterms)].assign(shard=0)
-    ids, scores, nts = _score_blocks(pdf.to_dict("list"), stats, K1, B, avgdl)
-    if conjunctive:
-        sel = nts == len(sterms)
-        ids, scores = ids[sel], scores[sel]
+    ids, scores = _local_scored(_local_handle(blocks, avgdl), sterms, stats,
+                                conjunctive, allowed=allowed)
     order = np.lexsort((ids, -scores))
     ids, scores = ids[order], scores[order]
-    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive)
-    assert ids.tolist() == [d for d, _ in want], (corpus, qterms, conjunctive)
+    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive,
+                  allowed=allowed)
+    assert ids.tolist() == [d for d, _ in want], (
+        corpus, qterms, conjunctive, allowed)
     for s, (_, ws) in zip(scores, want):
         assert abs(s - ws) < 1e-9
+    (part,) = _brute_scorer(stats, K1, B, avgdl, allowed)(iter([pdf]))
+    if conjunctive:
+        part = part[part["nt"] == len(sterms)]
+    assert dict(zip(part["doc_id"], part["contrib"])) \
+        == dict(zip(ids.tolist(), scores.tolist()))
     wand = _wand_shard_scorer(
-        stats, K1, B, avgdl, k, conjunctive, len(sterms), range_size=n_docs + 1
+        stats, K1, B, avgdl, k, conjunctive, len(sterms),
+        range_size=n_docs + 1, allowed=allowed,
     )(pdf)
     assert wand["doc_id"].tolist() == ids[:k].tolist()
     assert wand["score"].tolist() == scores[:k].tolist()
@@ -231,9 +274,10 @@ def _shard_frames(pdf, range_size):
 @given(
     corpus_strategy, query_strategy, st.booleans(), st.integers(1, 6),
     st.one_of(st.none(), st.integers(1, 9)), phrase_strategy,
+    allowed_strategy,
 )
 def test_wand_url_tiebreak_contract(corpus, qterms, conjunctive, k,
-                                    range_size, phrase):
+                                    range_size, phrase, allowed):
     """The kernel's side of the url tie-break, per shard (range_size None =
     one shard): floor mode at the shard's kth score returns exactly the
     brute docs of the shard scoring >= it, with bit-equal scores; and
@@ -247,12 +291,13 @@ def test_wand_url_tiebreak_contract(corpus, qterms, conjunctive, k,
         return
     sterms = [str(t) for t in terms]
     range_size = range_size or n_docs + 1
-    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase)
+    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase,
+                  allowed)
 
     def scorer(floor=None):
         return _wand_shard_scorer(stats, K1, B, avgdl, k, conjunctive,
                                   len(sterms), range_size, floor=floor,
-                                  phrase=sphrase)
+                                  allowed=allowed, phrase=sphrase)
 
     for shard, g in _shard_frames(
         blocks[blocks["term"].isin(sterms)], range_size
@@ -267,7 +312,8 @@ def test_wand_url_tiebreak_contract(corpus, qterms, conjunctive, k,
         assert dropped_max <= s_k
         tie_cut = any(s == s_k for _, s in home[len(ids):])
         assert (len(ids) == k and dropped_max == s_k) == tie_cut, (
-            corpus, qterms, conjunctive, k, range_size, phrase, shard)
+            corpus, qterms, conjunctive, k, range_size, phrase, allowed,
+            shard)
         flo = scorer(floor=s_k)(g)
         assert sorted(zip(flo["doc_id"].tolist(), flo["score"].tolist())) \
             == sorted((d, s) for d, s in home if s >= s_k)
