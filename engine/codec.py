@@ -162,8 +162,10 @@ def pfor_decode(buf: bytes, n: int) -> np.ndarray:
 
 
 def _pfor_width(values: np.ndarray) -> int:
-    """Candidate patch width: the 90th-percentile bit length (standard
-    PForDelta heuristic — ~10% exceptions max)."""
+    """Candidate patch width of one block: the 90th-percentile bit length
+    (standard PForDelta heuristic — ~10% exceptions max). encode_blocks
+    computes the same width for every block at once; this per-block form
+    is the reference it is checked against."""
     bl = np.zeros(values.size, dtype=np.int64)
     nz = values > 0
     if nz.any():
@@ -173,42 +175,6 @@ def _pfor_width(values: np.ndarray) -> int:
         )
         bl[nz] += (values[nz] >> bl[nz].astype(np.uint64)) > 0
     return int(min(63, np.percentile(bl, 90, method="lower")))
-
-
-def encode_best(values: np.ndarray) -> tuple[int, bytes]:
-    """Pick the smallest of varint / FOR / patched-FOR for this block
-    (PForDelta-style adaptive choice per block)."""
-    vi = varint_encode(values)
-    fo = for_encode(values)
-    best, buf = CODEC_VARINT, vi
-    if len(fo) < len(buf):
-        best, buf = CODEC_FOR, fo
-    if values.size:
-        pf = pfor_encode(values, _pfor_width(values))
-        if len(pf) < len(buf):
-            best, buf = CODEC_PFOR, pf
-    return best, buf
-
-
-def decode(codec: int, buf: bytes, n: int) -> np.ndarray:
-    if codec == CODEC_FOR:
-        return for_decode(buf, n)
-    if codec == CODEC_PFOR:
-        return pfor_decode(buf, n)
-    return varint_decode(buf)
-
-
-def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
-    """Gaps: first value kept absolute (caller stores first_doc_id too, but
-    encoding the absolute first keeps blocks self-contained)."""
-    v = np.ascontiguousarray(sorted_ids, dtype=np.uint64)
-    out = v.copy()
-    out[1:] = v[1:] - v[:-1]
-    return out
-
-
-def delta_decode(gaps: np.ndarray) -> np.ndarray:
-    return np.cumsum(gaps.astype(np.uint64), dtype=np.uint64)
 
 
 def bm25_tf_norm(

@@ -26,8 +26,7 @@ more predicate, adjacency, on the one top-k path of `engine.query` (`auto`
 mode, url tie-break). The driver-local kernel checks it once over all of
 the terms' blocks (zero Spark jobs); the WAND sweep checks it per chunk of
 intervals, so positions are decoded only for intervals whose bound can
-still reach the top k, and the url tie-break's floor rescan sees the same
-predicate. The check chain-intersects (doc, pos) keys along the ordered
+still reach the top k. The check chain-intersects (doc, pos) keys along the ordered
 tokens (`engine.query._phrase_mask`).
 
 Scale notes (100 TB): the query reads ONLY index blocks — for "the data"

@@ -16,16 +16,25 @@ are bit-equal:
   interval-sweep BMW as a columnar sweep — intervals between block
   boundaries are visited in descending upper-bound order, in chunks of
   1, 2, 4, … intervals, each decoding its new blocks in one decode step
-  and cutting the candidates to k with one lexsort; the sweep stops at the
-  first interval whose bound can't reach the shard's kth score. Only
+  and cutting the candidates with the top-k cut below; the sweep stops at
+  the first interval whose bound can't reach the shard's kth score. Only
   provably-dominated blocks are skipped, so results are rank-identical to
-  brute force (§2.B14 exactness guard). Local top-k per shard, then a
-  global TakeOrdered over ≤ shards·k rows.
+  brute force (§2.B14 exactness guard). The shards' rows are collected in
+  one Spark job and cut again on the driver.
 - ``local``: the kernel runs on the driver over a pyarrow read of the pruned
   blocks — zero Spark jobs, for interactive p50 (SURVEY.md §7.2.6).
 
 ``auto`` runs ``local`` when the query terms' postings fit
 LOCAL_MAX_POSTINGS and ``wand`` otherwise.
+
+The WAND sweep, the driver-local path and the driver merge of the shards'
+rows share one top-k cut, ``_cut``: order by (score desc, doc_id asc) and
+keep every candidate scoring at least the kth score, so the kth score's
+whole tie group survives. A shard's kth score is never above the global
+one, so the union of the shards' cuts holds the global cut — what the url
+tie-break (``tiebreak="url"``) needs to re-sort the tie group by url, with
+no second pass. Brute's url tie-break stays a SQL join + orderBy, the
+distributed reference.
 
 Facet-filtered search (engine.phrase) is the same top-k with one more
 predicate, the allowed set: a sorted doc-id array (``doc_filter``) tested
@@ -58,6 +67,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.dataset as ds
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -88,13 +98,6 @@ TOPK_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("score", T.DoubleType()),
-        # max score among candidates the shard's top-k cut DROPPED
-        # (constant per shard; -inf if nothing was dropped). It may count
-        # candidates that a one-interval-at-a-time sweep would have
-        # skipped, but never exceeds the shard's kth score, and equals it
-        # exactly when a doc tying that score was cut: the url tie-break
-        # needs its floor rescan only then — see query_topk
-        T.StructField("dropped_max", T.DoubleType()),
     ]
 )
 
@@ -282,6 +285,20 @@ def _in_sorted(allow: np.ndarray, ids: np.ndarray) -> np.ndarray:
     return hit
 
 
+def _cut(
+    ids: np.ndarray, scores: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The top-k cut of every strategy (k >= 1): the candidates scoring at
+    least the kth score — the top k plus the kth score's whole tie group —
+    ordered by (score desc, doc_id asc). Selects with np.partition and
+    sorts only the rows it keeps."""
+    if len(scores) > k:
+        keep = scores >= -np.partition(-scores, k - 1)[k - 1]
+        ids, scores = ids[keep], scores[keep]
+    order = np.lexsort((ids, -scores))
+    return ids[order], scores[order]
+
+
 def _term_codes(cols: dict, stats: dict) -> tuple[np.ndarray, np.ndarray]:
     """Per-block term codes in sorted-term order, and the idf per code."""
     terms, tcode = np.unique(np.asarray(cols["term"], dtype=object),
@@ -343,7 +360,6 @@ def _score_all(
 
 def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
                        conjunctive: bool, n_query_terms: int, range_size: int,
-                       floor: float | None = None,
                        allowed: np.ndarray | None = None,
                        phrase: list[str] | None = None):
     """Exact interval-sweep block-max WAND over one doc-range shard, as one
@@ -358,22 +374,12 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
     that are not decoded yet in one decode step (_decode_scored), scores
     the postings of its intervals with the shared per-doc aggregator in
     sorted-term order (so scores are bit-equal to brute and
-    driver-local), merges them with the kept candidates and keeps the top
-    k by (score desc, doc_id asc). Only intervals whose bound cannot reach
-    the kth score are skipped, so results are exact.
-
-    floor mode (``floor`` set): the same sweep with the threshold fixed at
-    ``floor`` and no cut — returns EVERY doc in the shard with score >=
-    floor, unordered. The url tie-break uses it to fetch the complete
-    kth-score tie group.
-
-    ``dropped_max`` is the max score of every candidate the cut dropped
-    (-inf if none, and always in floor mode). A chunk can score intervals
-    that a one-interval-at-a-time sweep would have skipped, so the value
-    can be higher than that sweep's; but a dropped doc never outranks the
-    shard's kth row, so dropped_max equals the shard's kth score s_k
-    exactly when a doc tying s_k was cut — the case query_topk's url
-    tie-break rescans for.
+    driver-local), merges them with the kept candidates and applies _cut.
+    Only intervals whose bound cannot reach the kth score are skipped, and
+    a candidate is dropped only when it scores below a threshold that never
+    falls, so the shard returns exactly its docs scoring at least its kth
+    score (all of them if fewer than k match), in (score desc, doc_id asc)
+    order.
 
     allowed mode (``allowed`` set, sorted int64 doc ids — either a plain
     array or a SparkContext.broadcast of one, resolved once per task so the
@@ -442,8 +448,7 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
         pend = (np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64),
                 np.empty(0, np.int64))
         top_ids, top_s = np.empty(0, np.int64), np.empty(0)
-        dropped_max = -np.inf
-        thr = -np.inf if floor is None else floor
+        thr = -np.inf
         pos, size = 0, 1
         while True:
             seg = ub_desc[pos:pos + size]  # ub descending: a prefix passes
@@ -478,22 +483,11 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
             if phrase:
                 m = _phrase_mask(cols, covering, phrase, uniq)
                 uniq, scores = uniq[m], scores[m]
-            if floor is not None:
-                top_ids = np.concatenate([top_ids, uniq[scores >= floor]])
-                top_s = np.concatenate([top_s, scores[scores >= floor]])
-                continue
-            cand_ids = np.concatenate([top_ids, uniq])
-            cand_s = np.concatenate([top_s, scores])
-            rank = np.lexsort((cand_ids, -cand_s))
-            if len(rank) > k:
-                dropped_max = max(dropped_max, float(cand_s[rank[k:]].max()))
-            top_ids, top_s = cand_ids[rank[:k]], cand_s[rank[:k]]
-            if len(top_s) == k:
-                thr = top_s[-1]
-        return pd.DataFrame(
-            {"doc_id": top_ids, "score": top_s,
-             "dropped_max": np.full(len(top_ids), dropped_max)}
-        )
+            top_ids, top_s = _cut(np.concatenate([top_ids, uniq]),
+                                  np.concatenate([top_s, scores]), k)
+            if len(top_s) >= k:
+                thr = top_s[k - 1]
+        return pd.DataFrame({"doc_id": top_ids, "score": top_s})
 
     return fn
 
@@ -515,9 +509,9 @@ def _url_topk(
     """The driver-side url tie-break: top-k of a candidate set ordered by
     (score desc, url asc), the order the ANSI-SQL oracle expresses. EXACT
     only when the candidates hold every doc scoring above the kth score
-    plus the ENTIRE kth-score tie group — callers guarantee that; ties are
-    exact float equalities because WAND and local sum with one kernel in
-    one order. Resolves the candidates' urls once. Returns (ids, scores,
+    plus the ENTIRE kth-score tie group — _cut's output; ties are exact
+    float equalities because WAND and local sum with one kernel in one
+    order. Resolves the candidates' urls once. Returns (ids, scores,
     urls)."""
     url_map = _resolve_urls(handle, ids)
     urls = [url_map.get(d) for d in ids]
@@ -535,23 +529,25 @@ def _result_df(
     schema = T.StructType(
         [f for f in RESULT_SCHEMA.fields if with_url or f.name != "url"]
     )
-    pdf = pd.DataFrame(
-        {
-            "doc_id": pd.Series(ids, dtype="int64"),
-            "url": urls,
-            "score": pd.Series(scores, dtype="float64"),
-        }
+    cols = {
+        "doc_id": pa.array(ids, pa.int64()),
+        "url": pa.array(urls if urls is not None else [None] * len(ids),
+                        pa.string()),
+        "score": pa.array(scores, pa.float64()),
+    }
+    # from an Arrow table even when empty: a 0-row pandas frame would
+    # collect through a parallelize job, an Arrow table through none
+    return spark.createDataFrame(
+        pa.table({n: cols[n] for n in schema.fieldNames()}), schema
     )
-    # pandas→Arrow createDataFrame is ~10x cheaper than the row-list path
-    return spark.createDataFrame(pdf[schema.fieldNames()], schema)
 
 
 def _run_shards(
-    blocks: DataFrame, n_groups: int, width: int, kernel_for, schema
+    blocks: DataFrame, n_groups: int, width: int, kernel_for
 ) -> DataFrame:
-    """The per-shard dispatcher of the WAND top-k and its floor rescan:
-    runs `kernel_for(range_size)` — a pandas frame → pandas frame kernel
-    over one doc-range shard — on the pruned block scan."""
+    """The per-shard dispatcher of the WAND top-k: runs
+    `kernel_for(range_size)` — a pandas frame → TOPK_SCHEMA pandas frame
+    kernel over one doc-range shard — on the pruned block scan."""
     if n_groups == 1:
         # single shard ⇒ no co-location needed: fold the pruned scan into
         # one task and run the kernel there — one stage, no shuffle. The
@@ -567,7 +563,7 @@ def _run_shards(
         return (
             blocks.withColumn("shard", F.lit(0).cast("long"))
             .coalesce(1)
-            .mapInPandas(_single, schema)
+            .mapInPandas(_single, TOPK_SCHEMA)
         )
     # a block overlapping multiple doc-range shards is replicated to each
     # (kernels clip to their own range); the shuffle payload is
@@ -581,22 +577,8 @@ def _run_shards(
     return (
         blocks.withColumn("shard", shard)
         .groupBy("shard")
-        .applyInPandas(kernel_for(width), schema)
+        .applyInPandas(kernel_for(width), TOPK_SCHEMA)
     )
-
-
-def _collect_topk(
-    scored: DataFrame, k: int
-) -> tuple[list[int], list[float]]:
-    """Top-k (doc_id, score) of a distributed scored frame in
-    (score desc, doc_id asc) order, collected in one Spark job."""
-    rows = (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .select("doc_id", "score")
-        .collect()
-    )
-    return [int(r["doc_id"]) for r in rows], [float(r["score"]) for r in rows]
 
 
 def _check_mode_k(mode: str, k: int) -> None:
@@ -625,7 +607,9 @@ def query_topk(
     (score desc, doc_id asc) — the golden tie-break (SURVEY.md §5.2).
     mode is "brute", "wand", "local" or "auto" (see the module docstring).
     tiebreak="url" breaks exact-score ties by url instead, which is what
-    the ANSI-SQL oracle can express. k=0 returns no rows without running a
+    the ANSI-SQL oracle can express; outside brute, the driver re-sorts
+    the kth score's whole tie group, which the top-k cut keeps, so WAND
+    runs no second pass for it. k=0 returns no rows without running a
     Spark job; an unknown mode or tiebreak, or k < 0, raises ValueError.
     shard_target overrides WAND_SHARD_TARGET (postings per WAND shard) —
     the scorer is exact for any doc-range partitioning, so this only moves
@@ -680,16 +664,6 @@ def _topk(
     if local:
         ids, scores = _local_scored(handle, terms, st, conjunctive, phrase,
                                     doc_filter)
-        if tiebreak == "url" and len(scores) > k:
-            # every matching doc's score is in memory here: keep every doc
-            # scoring >= the kth score — the ENTIRE kth-score tie group —
-            # for the url sort. No heuristic margin.
-            sel = scores >= -np.partition(-scores, k - 1)[k - 1]
-            ids, scores = ids[sel], scores[sel]
-        elif tiebreak == "doc_id":
-            order = np.lexsort((ids, -scores))[:k]
-            ids, scores = ids[order], scores[order]
-        ids, scores = ids.tolist(), scores.tolist()
     elif mode == "brute":
         scored = _score_all(spark, handle, terms, st, conjunctive, allowed)
         if tiebreak == "url":
@@ -703,7 +677,7 @@ def _topk(
                 .limit(k)
             )
             return topk if with_url else topk.drop("url")
-        ids, scores = _collect_topk(scored, k)
+        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     else:
         # Query-time shard width adapts to the query's posting volume: the
         # scorer is exact for ANY doc-range partitioning (it clips to its
@@ -717,72 +691,37 @@ def _topk(
         )
         k1, b = handle.stats["k1"], handle.stats["b"]
         avgdl = handle.stats["avgdl"]
+        # each shard returns its docs scoring >= its kth score: ≤
+        # shards·(k + ties) rows
+        top = _run_shards(
+            blocks, n_groups, width,
+            lambda rs: _wand_shard_scorer(
+                st, k1, b, avgdl, k, conjunctive, len(terms), rs,
+                allowed=allowed, phrase=phrase,
+            ),
+        )
+    if not local:  # brute's top k or the shards' rows, in one Spark job
+        rows = top.collect()
+        ids = np.asarray([r["doc_id"] for r in rows], np.int64)
+        scores = np.asarray([r["score"] for r in rows], np.float64)
 
-        def wand(floor=None):
-            return _run_shards(
-                blocks, n_groups, width,
-                lambda rs: _wand_shard_scorer(
-                    st, k1, b, avgdl, k, conjunctive, len(terms), rs,
-                    floor=floor, allowed=allowed, phrase=phrase,
-                ),
-                TOPK_SCHEMA,
-            )
-
-        if tiebreak == "doc_id":
-            ids, scores = _collect_topk(wand(), k)
-        else:
-            # ≤ shards·k candidate rows: collect, then the url sort. EXACT:
-            # every doc scoring strictly above the global kth candidate
-            # score s_k is provably in the candidate set (a shard that
-            # dropped it would have had k better rows, pushing s_k above
-            # that doc's score). Only docs TYING s_k can be missing —
-            # detectable as a shard that returned exactly k rows with min
-            # score == s_k. When detected, one floor-mode rescan
-            # (score >= s_k, block-max pruned) fetches the complete tie
-            # group before the url sort.
-            cand_rows = wand().collect()
-            cand = {int(r["doc_id"]): float(r["score"]) for r in cand_rows}
-            if len(cand) >= k:
-                s_k = sorted(cand.values(), reverse=True)[k - 1]
-                per_shard: dict[int, list[float]] = {}
-                per_shard_dm: dict[int, float] = {}
-                for r in cand_rows:
-                    sh = 0 if n_groups == 1 else int(r["doc_id"]) // width
-                    per_shard.setdefault(sh, []).append(float(r["score"]))
-                    dm = float(r["dropped_max"])
-                    if dm > per_shard_dm.get(sh, float("-inf")):
-                        per_shard_dm[sh] = dm
-                # a doc tying s_k can only be missing if its home shard's
-                # cut actually DROPPED a candidate scoring exactly s_k
-                # (every dropped score is <= the shard's final min, so
-                # dropped_max == s_k iff a true tie was lost). Without a
-                # recorded drop at s_k the candidate set provably contains
-                # the whole tie group and the rescan job is skipped — the
-                # previous shape-only test (k rows with min == s_k) fired
-                # on EVERY single-shard query and doubled its latency.
-                if any(len(v) == k and min(v) == s_k
-                       and per_shard_dm.get(sh2, float("-inf")) == s_k
-                       for sh2, v in per_shard.items()):
-                    for r in wand(floor=s_k).collect():
-                        cand.setdefault(int(r["doc_id"]), float(r["score"]))
-            ids, scores = list(cand), list(cand.values())
-
-    # urls of the ≤k rows (or of the tie group) come from a driver-side
-    # pyarrow lookup — avoids a second job scanning the docs table per
-    # query. Row order is preserved.
+    # every doc scoring above the kth score plus its whole tie group, so
+    # the url sort below is exact; urls of the result rows (or of the tie
+    # group) come from a driver-side pyarrow lookup, not a docs-table job
+    ids, scores = _cut(ids, scores, k)
     if tiebreak == "url":
-        ids, scores, urls = _url_topk(handle, ids, scores, k)
-    elif with_url:
-        url_map = _resolve_urls(handle, ids)
-        urls = [url_map.get(d) for d in ids]
+        ids, scores, urls = _url_topk(handle, ids.tolist(), scores.tolist(), k)
     else:
-        urls = None
+        ids, scores, urls = ids[:k].tolist(), scores[:k].tolist(), None
+        if with_url:
+            url_map = _resolve_urls(handle, ids)
+            urls = [url_map.get(d) for d in ids]
     return _result_df(spark, ids, scores, urls, with_url)
 
 
 # auto-mode crossover: the driver-local path decodes ~1M postings/s
-# single-threaded (incl. the pyarrow read), while the distributed WAND floor
-# is ~0.6 s — measured crossover sits near 500k postings
+# single-threaded (incl. the pyarrow read), while a distributed WAND query
+# costs at least ~0.6 s — measured crossover sits near 500k postings
 LOCAL_MAX_POSTINGS = 500_000
 
 

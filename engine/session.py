@@ -87,39 +87,34 @@ def _warm_python_workers(spark: SparkSession) -> None:
     amortizes this over long-lived executors; a fresh local session pays it
     inside whatever stage happens to run first. Initializing the pool here —
     session setup, before any query runs — keeps per-stage timings about
-    the dataflow. No engine data is touched or cached. Disable with
-    SPARK_GRAFT_NO_WARMUP=1."""
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP"):
-        return
+    the dataflow. No engine data is touched or cached. A failure raises
+    from get_spark."""
     if getattr(spark, "_graft_warmed", False):
         return
-    try:
-        n = spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
 
-        def _touch(batches):
-            import numpy  # noqa: F401
-            import pandas as _pd
-            import pyarrow  # noqa: F401
+    def _touch(batches):
+        import numpy  # noqa: F401
+        import pandas as _pd
+        import pyarrow  # noqa: F401
 
-            for b in batches:
-                yield _pd.DataFrame({"id": b["id"]})
+        for b in batches:
+            yield _pd.DataFrame({"id": b["id"]})
 
-        (
-            spark.range(n * 4, numPartitions=n)
-            .mapInPandas(_touch, "id long")
-            .write.format("noop").mode("overwrite").save()
-        )
-        # also warm the grouped-map (applyInPandas) serializer + exchange
-        # codegen path, which multi-shard WAND queries (phrases included)
-        # use — measured ~0.5 s of first-call JIT otherwise
-        from pyspark.sql import functions as _F
+    (
+        spark.range(n * 4, numPartitions=n)
+        .mapInPandas(_touch, "id long")
+        .write.format("noop").mode("overwrite").save()
+    )
+    # also warm the grouped-map (applyInPandas) serializer + exchange
+    # codegen path, which multi-shard WAND queries (phrases included)
+    # use — measured ~0.5 s of first-call JIT otherwise
+    from pyspark.sql import functions as _F
 
-        (
-            spark.range(n, numPartitions=4)
-            .groupBy((_F.col("id") % 4).alias("g"))
-            .applyInPandas(lambda pdf: pdf[["id"]], "id long")
-            .write.format("noop").mode("overwrite").save()
-        )
-    except Exception:
-        pass  # warm-up is best-effort; never block session creation
+    (
+        spark.range(n, numPartitions=4)
+        .groupBy((_F.col("id") % 4).alias("g"))
+        .applyInPandas(lambda pdf: pdf[["id"]], "id long")
+        .write.format("noop").mode("overwrite").save()
+    )
     spark._graft_warmed = True

@@ -7,12 +7,12 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from engine.build import _row_deltas
 from engine.codec import (
     bm25_tf_norm,
-    decode,
-    delta_decode,
-    delta_encode,
-    encode_best,
+    decode_concat,
+    delta_decode_blocks,
+    encode_blocks,
     for_decode,
     for_encode,
     idf,
@@ -61,20 +61,26 @@ def test_varint_roundtrip_property(vals):
     )
 )
 def test_best_codec_roundtrip_property(vals):
+    """One block through the build's codec chooser and the query decoder."""
     a = np.asarray(vals, dtype=np.uint64)
-    codec, buf = encode_best(a)
-    assert (decode(codec, buf, len(a)) == a).all()
+    codecs, bufs = encode_blocks(a, np.zeros(1, dtype=np.int64))
+    assert (decode_concat(codecs, bufs, [len(a)] * len(codecs)) == a).all()
 
 
 @settings(max_examples=100, deadline=None)
 @given(
     st.lists(
         st.integers(min_value=0, max_value=2**40), min_size=1, max_size=200, unique=True
-    )
+    ),
+    st.integers(min_value=1, max_value=64),
 )
-def test_delta_roundtrip_property(ids):
+def test_delta_roundtrip_property(ids, bs):
+    """The build's per-block deltas (absolute first value per block) and
+    the query's per-block delta reconstruction are inverses."""
     a = np.sort(np.asarray(ids, dtype=np.uint64))
-    assert (delta_decode(delta_encode(a)) == a).all()
+    starts = np.arange(0, len(a), bs, dtype=np.int64)
+    ns = np.diff(np.append(starts, len(a)))
+    assert (delta_decode_blocks(_row_deltas(a, starts), ns) == a).all()
 
 
 def test_block_max_is_upper_bound():
@@ -94,28 +100,17 @@ def test_idf_matches_lucene_formula():
 
 
 def test_batch_decode_matches_per_block():
-    import numpy as np
-
-    from engine.codec import (
-        decode_concat,
-        delta_decode_blocks,
-        delta_encode,
-        encode_best,
-    )
-
     rng = np.random.default_rng(11)
     ids = np.sort(rng.choice(10**7, size=1000, replace=False)).astype(np.uint64)
-    codecs, bufs, ns, want = [], [], [], []
-    for lo in range(0, 1000, 128):
-        blk = ids[lo : lo + 128]
-        c, b = encode_best(delta_encode(blk))
-        codecs.append(c)
-        bufs.append(b)
-        ns.append(len(blk))
-        want.append(blk)
-    gaps = decode_concat(codecs, bufs, ns)
-    got = delta_decode_blocks(gaps, ns)
-    assert (got == np.concatenate(want)).all()
+    starts = np.arange(0, 1000, 128, dtype=np.int64)
+    ns = np.diff(np.append(starts, 1000)).tolist()
+    codecs, bufs = encode_blocks(_row_deltas(ids, starts), starts)
+    got = delta_decode_blocks(decode_concat(codecs, bufs, ns), ns)
+    assert (got == ids).all()
+    for i, (lo, n) in enumerate(zip(starts, ns)):
+        one = delta_decode_blocks(decode_concat([codecs[i]], [bufs[i]], [n]),
+                                  [n])
+        assert (one == got[lo : lo + n]).all()
 
 
 class TestPFor:
@@ -145,13 +140,13 @@ class TestPFor:
                 got = pfor_decode(buf, len(v))
                 assert (got == v).all(), (w, v[:8])
 
-    def test_encode_best_picks_pfor_on_outliers(self):
+    def test_encode_blocks_picks_pfor_on_outliers(self):
         import numpy as np
 
         from engine.codec import (
             CODEC_PFOR,
-            decode,
-            encode_best,
+            decode_concat,
+            encode_blocks,
             for_encode,
             varint_encode,
         )
@@ -164,10 +159,10 @@ class TestPFor:
                 np.full(4, np.uint64(1) << np.uint64(44)),
             ]
         )
-        c, buf = encode_best(v)
+        (c,), (buf,) = encode_blocks(v, np.zeros(1, dtype=np.int64))
         assert c == CODEC_PFOR
         assert len(buf) < min(len(varint_encode(v)), len(for_encode(v)))
-        assert (decode(c, buf, len(v)) == v).all()
+        assert (decode_concat([c], [buf], [len(v)]) == v).all()
 
     @given(
         st.lists(

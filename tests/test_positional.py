@@ -263,8 +263,7 @@ def test_phrase_scan_reads_positions_not_corpus(spark, pos_index,
 
 def test_phrase_spark_jobs(spark, built_index, monkeypatch):
     """A phrase whose postings fit the driver starts no Spark job, and
-    through forced WAND it starts one, the sweep, when no tie rescan
-    fires."""
+    through forced WAND it starts one, the sweep."""
     import engine.query as Q
     from engine.positional import phrase_topk_positional
 

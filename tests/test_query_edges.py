@@ -5,7 +5,8 @@ Every query_topk mode must return the same rows on degenerate inputs —
 k=0, k beyond the match count, zero-hit, empty, punctuation-only, repeated
 and non-ASCII terms, mixed hit + zero-hit queries — under both tie-breaks;
 unknown modes and tie-breaks, and k < 0 on every entry point, are rejected
-up front; k=0 returns no rows without a Spark job; every entry point
+up front; an empty answer (k=0, zero hits, an empty allowed set) starts
+no Spark job, also when collected; every entry point
 returns the one result schema, also on its early-return paths;
 filtered_topk takes query_topk's modes, resolves its predicate in one
 Spark job, and its predicate probe sends only unresolved columns to the
@@ -161,6 +162,10 @@ def _no_spark_job(spark, fn):
 
 
 def test_k0_returns_empty_without_spark_job(spark, built_index, webpages):
+    """An empty answer — k=0, a zero-hit query, an empty allowed set —
+    starts no Spark job, neither to build the frame nor to collect it."""
+    import numpy as np
+
     from engine.phrase import filtered_topk
     from engine.positional import phrase_topk_positional
 
@@ -168,20 +173,35 @@ def test_k0_returns_empty_without_spark_job(spark, built_index, webpages):
         lambda: phrase_topk_positional(
             spark, built_index, built_index.postings_path, "the data", k=0),
     ] + [
-        lambda m=m: filtered_topk(spark, built_index, webpages, "spark join",
-                                  F.col("lang") == "en", k=0, mode=m)
+        call
         for m in MODES
+        for call in (
+            lambda m=m: filtered_topk(spark, built_index, webpages,
+                                      "spark join", F.col("lang") == "en",
+                                      k=0, mode=m),
+            lambda m=m: query_topk(spark, built_index, "spark join", k=0,
+                                   mode=m),
+            lambda m=m: query_topk(spark, built_index, "zzzqqq", mode=m),
+            lambda m=m: query_topk(spark, built_index, "spark zzzqqq",
+                                   mode=m, conjunctive=True),
+            lambda m=m: query_topk(spark, built_index, "spark join", mode=m,
+                                   doc_filter=np.empty(0, np.int64)),
+        )
     ]
+
+    def fields_and_rows(call):
+        df = call()
+        return _fields(df), df.collect()
+
     for call in calls:
-        df = _no_spark_job(spark, call)
-        assert _fields(df) == RESULT
-        assert df.collect() == []
+        fields, rows = _no_spark_job(spark, lambda: fields_and_rows(call))
+        assert fields == RESULT
+        assert rows == []
 
 
 def test_filtered_spark_jobs(spark, built_index, webpages):
     """filtered_topk resolves its predicate in one Spark job. auto and
-    local then score on the driver; WAND adds one job, the sweep, when no
-    tie rescan fires."""
+    local then score on the driver; WAND adds one job, the sweep."""
     from engine.phrase import filtered_topk
 
     for mode, want in (("auto", 1), ("local", 1), ("wand", 2)):
@@ -289,3 +309,47 @@ def test_unreadable_index_store_raises_without_spark_job(
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("unreadable-store")) == []
+
+
+def _top_df_terms(handle, n):
+    """The index's n highest-df terms (ties by term)."""
+    import pyarrow.dataset as ds
+
+    tbl = ds.dataset(handle.terms_path, format="parquet").to_table(
+        columns=["term", "df"]).to_pandas()
+    return tbl.sort_values(["df", "term"], ascending=[False, True])[
+        "term"].head(n).tolist()
+
+
+@pytest.mark.parametrize("tiebreak", ["doc_id", "url"])
+def test_stopword_queries_all_modes_equal_brute(spark, built_index,
+                                                monkeypatch, tiebreak):
+    """The analyzer keeps stopwords, so a query of the highest-df terms
+    matches most docs and has the largest kth-score tie groups. OR and
+    AND, at k=10 and at the first k that cuts a tie group, local, auto and
+    WAND — on one shard and at maximum fan-out — return exactly brute's
+    rows."""
+    import engine.query as eq
+
+    terms = _top_df_terms(built_index, 2)
+
+    def rows(query, conj, k, mode):
+        return [tuple(r) for r in query_topk(
+            spark, built_index, query, k=k, mode=mode, conjunctive=conj,
+            tiebreak=tiebreak).collect()]
+
+    cases = []
+    for query in (terms[0], " ".join(terms)):
+        for conj in (False, True):
+            scores = [s for _, _, s in rows(query, conj, 500, "brute")]
+            k_tie = next(k for k in range(10, len(scores))
+                         if scores[k - 1] == scores[k])
+            cases += [(query, conj, 10), (query, conj, k_tie)]
+    ref = {c: rows(*c, "brute") for c in cases}
+    assert all(len(r) == c[2] for c, r in ref.items())
+    for mode in ("local", "auto", "wand"):
+        for c in cases:
+            assert rows(*c, mode) == ref[c], (c, mode)
+    monkeypatch.setattr(eq, "WAND_SHARD_TARGET", 1)
+    for c in cases:
+        assert rows(*c, "wand") == ref[c], (c, "wand fan-out")

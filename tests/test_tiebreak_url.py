@@ -3,7 +3,8 @@ engine/query.py): every doc scores identically, and urls sort OPPOSITE to
 doc_ids, so any path that truncates the kth-score tie group by doc_id before
 the url re-sort returns the wrong top-k. Covers the driver-local path, the
 single-shard wand path, and the multi-shard wand path (forced by shrinking
-WAND_SHARD_TARGET), all against the brute oracle ordering."""
+WAND_SHARD_TARGET), all against the brute oracle ordering, and checks that
+the WAND path needs no second job to do it."""
 
 from __future__ import annotations
 
@@ -15,6 +16,7 @@ import engine.query as eq
 from engine.build import build_index
 from engine.config import IndexConfig
 from engine.query import query_topk
+from tests.test_query_edges import _spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -60,7 +62,7 @@ def test_url_tiebreak_exact_under_total_ties(spark, tied_index):
 
 def test_url_tiebreak_exact_multi_shard(spark, tied_index, monkeypatch):
     # force the sharded wand path on the tiny corpus: 64 postings / 8 per
-    # shard -> 4 shards, each returning its own doc_id-tiebroken top-k
+    # shard -> 4 shards, each returning its whole kth-score tie group
     monkeypatch.setattr(eq, "WAND_SHARD_TARGET", 8)
     k = 5
     expected = sorted(
@@ -70,7 +72,7 @@ def test_url_tiebreak_exact_multi_shard(spark, tied_index, monkeypatch):
         query_topk(spark, tied_index, "tie", k=k, mode="wand", tiebreak="url")
     )
     assert got == expected
-    # doc_id tiebreak unaffected by the floor rescan machinery
+    # the doc_id tie-break cuts the same tie group at the k lowest doc ids
     ids = [
         r["doc_id"]
         for r in query_topk(
@@ -100,3 +102,21 @@ def test_url_tiebreak_partial_tie_at_boundary(spark, tied_index):
     for mode in ("brute", "local", "wand"):
         got = _urls(query_topk(spark, h, "tie", k=4, mode=mode, tiebreak="url"))
         assert got == expected, mode
+
+
+def test_url_tiebreak_one_sweep_job(spark, tied_index, monkeypatch):
+    """Every shard keeps its whole kth-score tie group, so a url tie-break
+    whose tie group crosses the cut (64 ties, k=5) runs the one WAND sweep
+    and no second pass: one job on one shard, and at forced fan-out as
+    many jobs as the doc_id tie-break (the sweep's shuffle map stage and
+    its result stage)."""
+
+    def jobs(tiebreak, group):
+        return _spark_jobs(spark, lambda: query_topk(
+            spark, tied_index, "tie", k=5, mode="wand", tiebreak=tiebreak,
+        ).collect(), group)[1]
+
+    assert jobs("url", "one-sweep-single") == 1
+    monkeypatch.setattr(eq, "WAND_SHARD_TARGET", 8)
+    assert jobs("url", "one-sweep-fanout-url") \
+        == jobs("doc_id", "one-sweep-fanout-doc-id")

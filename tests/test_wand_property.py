@@ -7,7 +7,6 @@ an allowed doc-id set, the facet filter every strategy applies."""
 
 from __future__ import annotations
 
-import math
 import types
 import zlib
 
@@ -15,12 +14,13 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from engine.codec import (bm25_tf_norm, delta_encode, encode_best, idf,
-                          varint_encode_rows)
-from engine.query import _brute_scorer, _local_scored, _wand_shard_scorer
+from engine.build import _row_deltas
+from engine.codec import bm25_tf_norm, encode_blocks, idf, varint_encode_rows
+from engine.query import (_brute_scorer, _cut, _local_scored,
+                          _wand_shard_scorer)
 
 K1, B = 1.2, 0.75
 BLOCK = 4  # tiny blocks → many intervals → pruning actually exercised
@@ -49,8 +49,9 @@ allowed_strategy = st.one_of(
 
 def _build_blocks(corpus):
     """Replicates the merge/compress stage locally: per-term doc-sorted
-    postings → blocks of BLOCK with real codec bytes + block-max scores,
-    and each posting's positions (within-doc delta varint) in pos_enc."""
+    postings → blocks of BLOCK with real codec bytes (the build's own
+    per-block codec chooser, encode_blocks) + block-max scores, and each
+    posting's positions (within-doc delta varint) in pos_enc."""
     n_docs = len(corpus)
     dls = [len(d) for d in corpus]
     avgdl = sum(dls) / n_docs
@@ -73,19 +74,20 @@ def _build_blocks(corpus):
         gaps = np.concatenate([np.diff(at[t][d], prepend=0) for d in ids])
         starts = np.concatenate(([0], np.cumsum(tfs)[BLOCK - 1:-1:BLOCK]))
         pos_enc = varint_encode_rows(gaps, starts)
-        for i in range(math.ceil(len(ids) / BLOCK)):
-            lo, hi = i * BLOCK, min((i + 1) * BLOCK, len(ids))
-            ci, eb = encode_best(delta_encode(ids[lo:hi]).astype(np.uint64))
-            ct, tb = encode_best(tfs[lo:hi].astype(np.uint64))
-            cd, db = encode_best(dl[lo:hi].astype(np.uint64))
+        bstarts = np.arange(0, len(ids), BLOCK, dtype=np.int64)
+        ci, eb = encode_blocks(_row_deltas(ids, bstarts), bstarts)
+        ct, tb = encode_blocks(tfs.astype(np.uint64), bstarts)
+        cd, db = encode_blocks(dl.astype(np.uint64), bstarts)
+        for i, lo in enumerate(bstarts.tolist()):
+            hi = min(lo + BLOCK, len(ids))
             rows.append(
                 {
                     "term": str(t), "salt": 0, "block_seq": i, "n": hi - lo,
                     "first_doc_id": int(ids[lo]), "last_doc_id": int(ids[hi - 1]),
                     "max_score": float(contrib[lo:hi].max()),
-                    "codec_ids": ci, "ids_enc": eb,
-                    "codec_tfs": ct, "tfs_enc": tb,
-                    "codec_dls": cd, "dls_enc": db, "pos_enc": pos_enc[i],
+                    "codec_ids": ci[i], "ids_enc": eb[i],
+                    "codec_tfs": ct[i], "tfs_enc": tb[i],
+                    "codec_dls": cd[i], "dls_enc": db[i], "pos_enc": pos_enc[i],
                 }
             )
     return pd.DataFrame(rows), stats, avgdl, n_docs, tf, dls
@@ -118,6 +120,15 @@ def _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase=None,
     return items
 
 
+def _kept(items, k):
+    """The top-k cut every strategy makes, over (doc, score) items ordered
+    by (score desc, doc asc): the items scoring at least the kth score —
+    the top k plus the kth score's whole tie group."""
+    if len(items) <= k:
+        return items
+    return [(d, s) for d, s in items if s >= items[k - 1][1]]
+
+
 @settings(max_examples=120, deadline=None)
 @given(corpus_strategy, query_strategy, st.booleans(), st.integers(2, 6))
 def test_wand_rank_identical_to_brute(corpus, qterms, conjunctive, k):
@@ -133,7 +144,7 @@ def test_wand_rank_identical_to_brute(corpus, qterms, conjunctive, k):
         stats, K1, B, avgdl, k, conjunctive, len(sterms), range_size=n_docs + 1
     )
     got = scorer(pdf)
-    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive)[:k]
+    want = _kept(_brute(corpus, tf, dls, avgdl, terms, conjunctive), k)
     assert list(got["doc_id"]) == [d for d, _ in want], (
         corpus, qterms, conjunctive, k,
         list(zip(got["doc_id"], got["score"])), want,
@@ -161,7 +172,8 @@ def test_wand_multishard_rank_identical(corpus, qterms, conjunctive, k,
     several doc-range shards are replicated to each shard (the query-side
     explode), and the union of shard-local top-k must be duplicate-free and
     rank-identical to brute — i.e. each doc is scored exactly once, in its
-    home shard, with full score."""
+    home shard, with full score. The driver's cut over the shards' rows
+    yields brute's top k plus the kth score's whole tie group."""
     qterms, conjunctive, sphrase = _phrase_query(qterms, conjunctive, phrase)
     blocks, stats, avgdl, n_docs, tf, dls = _build_blocks(corpus)
     terms = [t for t in qterms if t in tf]
@@ -187,16 +199,16 @@ def test_wand_multishard_rank_identical(corpus, qterms, conjunctive, k,
     locals_ = [scorer(g) for _, g in rep.groupby("shard")]
     merged = pd.concat(locals_, ignore_index=True)
     assert merged["doc_id"].is_unique, "duplicate doc across shards"
-    merged = merged.sort_values(
-        ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-    ).head(k)
-    want = _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase,
-                  allowed)[:k]
-    assert list(merged["doc_id"]) == [d for d, _ in want], (
+    # the driver's merge: the same cut over the union of the shards' rows
+    ids, scores = _cut(merged["doc_id"].to_numpy(), merged["score"].to_numpy(),
+                       k)
+    want = _kept(_brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase,
+                        allowed), k)
+    assert ids.tolist() == [d for d, _ in want], (
         corpus, qterms, conjunctive, k, range_size, phrase, allowed,
-        list(zip(merged["doc_id"], merged["score"])), want,
+        list(zip(ids, scores)), want,
     )
-    for gs, (_, ws) in zip(merged["score"], want):
+    for gs, (_, ws) in zip(scores, want):
         assert abs(gs - ws) < 1e-9
 
 
@@ -226,9 +238,10 @@ def test_shared_kernel_matches_brute_and_wand_bit_equal(corpus, qterms,
                                                         allowed):
     """The driver-local kernel and the distributed brute scorer (one Arrow
     batch) over the full block table equal brute force under the allowed
-    set, and their scores are bit-equal (==) to each other and, at the
-    top k, to the WAND shard scorer's — the invariant the url tie-break
-    relies on when it compares scores from different paths exactly."""
+    set, and their scores are bit-equal (==) to each other and, over the
+    top k with the kth score's tie group, to the WAND shard scorer's — the
+    invariant the url tie-break relies on when it compares scores from
+    different paths exactly."""
     blocks, stats, avgdl, n_docs, tf, dls = _build_blocks(corpus)
     terms = [t for t in qterms if t in tf]
     if not terms:
@@ -254,8 +267,9 @@ def test_shared_kernel_matches_brute_and_wand_bit_equal(corpus, qterms,
         stats, K1, B, avgdl, k, conjunctive, len(sterms),
         range_size=n_docs + 1, allowed=allowed,
     )(pdf)
-    assert wand["doc_id"].tolist() == ids[:k].tolist()
-    assert wand["score"].tolist() == scores[:k].tolist()
+    n = len(_kept(list(zip(ids.tolist(), scores.tolist())), k))
+    assert wand["doc_id"].tolist() == ids[:n].tolist()
+    assert wand["score"].tolist() == scores[:n].tolist()
 
 
 def _shard_frames(pdf, range_size):
@@ -276,14 +290,19 @@ def _shard_frames(pdf, range_size):
     st.one_of(st.none(), st.integers(1, 9)), phrase_strategy,
     allowed_strategy,
 )
+# every doc ties: a cut to exactly k drops part of each shard's tie group
+@example(corpus=[[0]] * 9, qterms=[0], conjunctive=False, k=2,
+         range_size=None, phrase=None, allowed=None)
+@example(corpus=[[0]] * 9, qterms=[0], conjunctive=False, k=2,
+         range_size=4, phrase=None, allowed=None)
 def test_wand_url_tiebreak_contract(corpus, qterms, conjunctive, k,
                                     range_size, phrase, allowed):
     """The kernel's side of the url tie-break, per shard (range_size None =
-    one shard): floor mode at the shard's kth score returns exactly the
-    brute docs of the shard scoring >= it, with bit-equal scores; and
-    dropped_max never exceeds the kth score and equals it (with k rows
-    returned) exactly when a brute doc outside the result ties the kth
-    score — the case query_topk rescans for."""
+    one shard): the shard returns exactly its brute docs scoring at least
+    its kth score (all of them if fewer than k match) — so the whole
+    kth-score tie group — in (score desc, doc_id asc) order, with
+    bit-equal scores. The union over shards then holds the global tie
+    group, which query_topk re-sorts by url."""
     qterms, conjunctive, sphrase = _phrase_query(qterms, conjunctive, phrase)
     blocks, stats, avgdl, n_docs, tf, dls = _build_blocks(corpus)
     terms = [t for t in qterms if t in tf]
@@ -293,27 +312,14 @@ def test_wand_url_tiebreak_contract(corpus, qterms, conjunctive, k,
     range_size = range_size or n_docs + 1
     want = _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase,
                   allowed)
-
-    def scorer(floor=None):
-        return _wand_shard_scorer(stats, K1, B, avgdl, k, conjunctive,
-                                  len(sterms), range_size, floor=floor,
-                                  allowed=allowed, phrase=sphrase)
-
+    scorer = _wand_shard_scorer(stats, K1, B, avgdl, k, conjunctive,
+                                len(sterms), range_size, allowed=allowed,
+                                phrase=sphrase)
     for shard, g in _shard_frames(
         blocks[blocks["term"].isin(sterms)], range_size
     ).items():
-        home = [(d, s) for d, s in want if d // range_size == shard]
-        got = scorer()(g)
-        ids, scores = got["doc_id"].tolist(), got["score"].tolist()
-        assert ids == [d for d, _ in home[:k]]
-        if not ids:
-            continue
-        s_k, dropped_max = scores[-1], float(got["dropped_max"].iloc[0])
-        assert dropped_max <= s_k
-        tie_cut = any(s == s_k for _, s in home[len(ids):])
-        assert (len(ids) == k and dropped_max == s_k) == tie_cut, (
-            corpus, qterms, conjunctive, k, range_size, phrase, allowed,
-            shard)
-        flo = scorer(floor=s_k)(g)
-        assert sorted(zip(flo["doc_id"].tolist(), flo["score"].tolist())) \
-            == sorted((d, s) for d, s in home if s >= s_k)
+        home = _kept([(d, s) for d, s in want if d // range_size == shard], k)
+        got = scorer(g)
+        assert list(zip(got["doc_id"].tolist(), got["score"].tolist())) \
+            == home, (corpus, qterms, conjunctive, k, range_size, phrase,
+                      allowed, shard)
