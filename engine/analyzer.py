@@ -75,15 +75,6 @@ def extract_series(
     return out.fillna("")
 
 
-def tokenize_series(text: pd.Series) -> pd.Series:
-    """Vectorized tokenizer: pandas str ops (C-level), one findall pass."""
-    return text.fillna("").str.lower().str.findall(_TOKEN_RE)
-
-
-def doc_lengths(tokens: pd.Series) -> np.ndarray:
-    return tokens.str.len().fillna(0).to_numpy(dtype=np.int64)
-
-
 # Sentinel token used by tokenize_flat to mark document boundaries in the
 # single-pass joined scan. It is itself a valid token (word chars) and is
 # removed from the output; a (pathological) document containing it verbatim

@@ -426,40 +426,25 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
     return fn
 
 
-def _salt_split(cfg: IndexConfig, range_size: int, hot_df: dict[str, int]):
+def _salt_split(range_size: int, hot_df: dict[str, int]):
     """Narrow map: split hot-term partials at doc-range boundaries so the
-    term shuffle is salted (B7). Hotness comes from the closure-shipped
-    `hot_df` dict ({term: df}, only terms with df >= threshold): the hot set
-    is provably tiny (df >= N/n_doc_ranges bounds it to ~n_doc_ranges*avgdl
-    terms — thousands at any corpus size), so shipping it beats the previous
-    full-vocabulary `df` join, which forced the ENTIRE transit-encoded
-    partials payload through an extra exchange (guide §2.3/§2.4: the df
-    values ride a few KB of closure instead of re-shuffling the heavy rows;
-    cold groups recover df exactly as their own merged posting count). Cold
-    rows (the vast majority of the vocabulary) pass through untouched:
-    decoding and re-encoding a single-segment row is a byte identity, so
-    skipping it changes nothing downstream and saves a full decode+encode
-    pass over ~90% of rows."""
+    term shuffle is salted (B7). Its input is the hot rows only (cold
+    partials never cross the Python boundary, see the caller); each row's
+    df comes from the closure-shipped `hot_df` dict ({term: df}, only terms
+    with df >= threshold): the hot set is provably tiny (df >= N/n_doc_ranges
+    bounds it to ~n_doc_ranges*avgdl terms — thousands at any corpus size),
+    so shipping it beats a full-vocabulary `df` join, which would force the
+    ENTIRE transit-encoded partials payload through an extra exchange
+    (guide §2.3/§2.4: the df values ride a few KB of closure instead of
+    re-shuffling the heavy rows; cold groups recover df exactly as their
+    own merged posting count)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if hot_df:
-                df_col = (
-                    pdf["term"].map(hot_df).fillna(0).to_numpy(np.int64)
-                )
-            else:
-                df_col = np.zeros(len(pdf), dtype=np.int64)
-            pdf = pdf.assign(df=df_col)
-            hot_row = df_col > 0
-            cold = pdf.loc[~hot_row]
-            if len(cold):
-                yield cold  # already salt_schema-shaped, salt=0
-            pdf = pdf.loc[hot_row].reset_index(drop=True)
-            if len(pdf) == 0:
-                continue
-            # vectorized over the hot slice: bulk-decode the transit
+            pdf = pdf.assign(df=pdf["term"].map(hot_df).to_numpy(np.int64))
+            # vectorized over the batch: bulk-decode the transit
             # buffers once, compute per-posting salt keys, cut at
             # (row, salt) boundaries, and re-encode the segments with one
             # pass per stream. Postings inside a partial are doc-sorted
@@ -873,7 +858,7 @@ def build_index(
             "pid", "term", F.lit(0).cast("int").alias("salt"), "n",
             "ids_enc", "tfs_enc", "dls_enc", "pos_enc",
         )
-        .mapInPandas(_salt_split(cfg, range_size, hot_df), schema=salt_schema)
+        .mapInPandas(_salt_split(range_size, hot_df), schema=salt_schema)
     )
     salted = cold_salted.unionByName(hot_salted) if hot_terms else cold_salted
 

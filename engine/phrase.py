@@ -51,7 +51,7 @@ def filtered_topk(
     raises ValueError."""
     _check_mode_k(mode, k)
     if k == 0:
-        return _result_df(spark, [], [], None, with_url=True)
+        return _result_df(spark, [], [], [])
     handle = open_index(index) if isinstance(index, str) else index
     docs = _docs_df(spark, handle)
     # Resolve the predicate against the index's own docs table when it only
@@ -74,4 +74,4 @@ def filtered_topk(
         allowed = docs.join(keep_urls, "url", "left_semi")
     ids = allowed.select("doc_id").toPandas()["doc_id"].to_numpy(np.int64)
     return _topk(spark, handle, parse_query(query), k, mode, conjunctive,
-                 with_url=True, tiebreak="url", doc_filter=np.sort(ids))
+                 tiebreak="url", doc_filter=np.sort(ids))

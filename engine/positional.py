@@ -83,7 +83,7 @@ def phrase_topk_positional(
     ordered = tokenize(phrase)
     return _topk(
         spark, handle, list(dict.fromkeys(ordered)), k, "auto",
-        conjunctive=True, with_url=True, tiebreak="url",
+        conjunctive=True, tiebreak="url",
         phrase=ordered if len(ordered) > 1 else None,
     )
 

@@ -10,19 +10,23 @@ are bit-equal:
 - ``brute``: decode every posting of the query terms and sum per doc within
   each Arrow batch, then groupBy(doc_id).sum → TakeOrderedAndProject. Fully
   distributed, no pruning — the correctness baseline.
-- ``wand``: block-max WAND (BASELINE.json:6). Blocks are grouped into
-  doc-range shards (hot-term salts are doc-range-aligned by the build, so
-  most blocks land in exactly one shard); each shard runs an exact
-  interval-sweep BMW as a columnar sweep — intervals between block
-  boundaries are visited in descending upper-bound order, in chunks of
-  1, 2, 4, … intervals, each decoding its new blocks in one decode step
-  and cutting the candidates with the top-k cut below; the sweep stops at
-  the first interval whose bound can't reach the shard's kth score. Only
-  provably-dominated blocks are skipped, so results are rank-identical to
-  brute force (§2.B14 exactness guard). The shards' rows are collected in
-  one Spark job and cut again on the driver.
-- ``local``: the kernel runs on the driver over a pyarrow read of the pruned
-  blocks — zero Spark jobs, for interactive p50 (SURVEY.md §7.2.6).
+- ``wand``: block-max WAND (BASELINE.json:6) over doc-range shards. Every
+  shard is a task of one ``spark.range(n_shards).mapInPandas`` job (shards
+  packed into at most defaultParallelism tasks, no shuffle): it reads the
+  blocks overlapping its own doc range with the driver-local path's
+  pyarrow read (hot-term salts are doc-range-aligned by the build, so most
+  blocks overlap exactly one shard) and runs an exact interval-sweep BMW
+  as a columnar sweep — intervals between block boundaries are visited in
+  descending upper-bound order, in chunks of 1, 2, 4, … intervals, each
+  decoding its new blocks in one decode step and cutting the candidates
+  with the top-k cut below; the sweep stops at the first interval whose
+  bound can't reach the shard's kth score. Only provably-dominated blocks
+  are skipped, so results are rank-identical to brute force (§2.B14
+  exactness guard). The shards' rows are collected in that one Spark job
+  and cut again on the driver.
+- ``local``: the kernel runs on the driver over the same pyarrow read of
+  the pruned blocks — zero Spark jobs, for interactive p50 (SURVEY.md
+  §7.2.6).
 
 ``auto`` runs ``local`` when the query terms' postings fit
 LOCAL_MAX_POSTINGS and ``wand`` otherwise.
@@ -49,12 +53,13 @@ predicate, adjacency (``_phrase_mask``): a doc counts only when its token
 stream holds the phrase's terms consecutively, read from the blocks'
 ``pos_enc`` column. ``local`` applies it once to all candidates; the WAND
 sweep applies it to each chunk's candidates, so positions are decoded only
-for intervals whose bound can still reach the top k. Only a phrase scan
+for intervals whose bound can still reach the top k. Only a phrase read
 selects ``pos_enc``.
 
-Every scan prunes the postings to the query terms' hash buckets (partition
+Every read prunes the postings to the query terms' hash buckets (partition
 pruning on the `bucket=` directory column) and pushes `term IN` down to
-parquet row groups (rows are term-sorted within buckets).
+parquet row groups (rows are term-sorted within buckets); a WAND shard's
+read also skips the blocks outside its doc range.
 
 Term stats (df/idf) are broadcast to executors (B11) — they ride the
 mapInPandas closure after a driver-side lookup of ≤|query| rows.
@@ -116,19 +121,6 @@ def parse_query(query: str) -> list[str]:
     return list(seen)
 
 
-def _postings_df(spark: SparkSession, handle: IndexHandle) -> DataFrame:
-    """Base postings scan, built once per handle: the explicit schema skips
-    footer-based inference and the memoized plan skips re-listing the bucket
-    directories on every query (~0.1 s/query of driver-only work measured at
-    sf1.0). This memoizes a LAZY plan, never data — every execution still
-    reads the parquet files."""
-    df = handle.__dict__.get("_postings_df")
-    if df is None:
-        df = spark.read.schema(POSTINGS_SCHEMA).parquet(handle.postings_path)
-        handle.__dict__["_postings_df"] = df
-    return df
-
-
 def _pa_dataset(handle: IndexHandle, key: str, path: str, partitioning=None):
     """Driver-side pyarrow dataset for an index table, memoized per handle —
     skips re-listing the directory on every query. Lazy metadata only; data
@@ -141,8 +133,9 @@ def _pa_dataset(handle: IndexHandle, key: str, path: str, partitioning=None):
 
 
 def _docs_df(spark: SparkSession, handle: IndexHandle) -> DataFrame:
-    """Docs table scan, plan memoized per handle (same rationale as
-    _postings_df)."""
+    """Docs table scan, plan memoized per handle: skips re-listing the
+    table on every query. This memoizes a LAZY plan, never data — every
+    execution still reads the parquet files."""
     df = handle.__dict__.get("_docs_df")
     if df is None:
         df = spark.read.parquet(handle.docs_path)
@@ -165,18 +158,23 @@ _SCORE_COLS = ["term", *_CODEC_COLS]
 _WAND_COLS = _SCORE_COLS + ["first_doc_id", "last_doc_id", "max_score"]
 
 
-def _pruned_postings(
-    spark: SparkSession, handle: IndexHandle, terms: list[str],
-    columns: list[str],
-) -> DataFrame:
-    """The terms' postings blocks, pruned to their term buckets and rows,
-    reading only `columns` (the ones the caller decodes)."""
-    return (
-        _postings_df(spark, handle)
-        .filter(F.col("bucket").isin(_term_buckets(handle, terms)))
-        .filter(F.col("term").isin(terms))
-        .select(*columns)
-    )
+def _read_blocks(
+    dset: ds.Dataset, buckets: list[int], terms: list[str],
+    columns: list[str], lo: int = 0, hi: int | None = None,
+) -> pa.Table:
+    """The one postings-block read of the driver-local path and of every
+    WAND shard task: the pyarrow postings dataset (`partitioning="hive"`)
+    pruned to the `bucket=` partitions `buckets` and to the rows of
+    `terms`, reading only `columns`. With a doc range [lo, hi) (hi None =
+    unbounded) it keeps only the blocks that overlap it. The filter is
+    applied in to_table: `dset` must stay the plain dataset, which
+    pickles into a task closure, where a filtered one does not."""
+    filt = ds.field("bucket").isin(buckets) & ds.field("term").isin(terms)
+    if lo:
+        filt &= ds.field("last_doc_id") >= lo
+    if hi is not None:
+        filt &= ds.field("first_doc_id") < hi
+    return dset.to_table(columns=columns, filter=filt)
 
 
 def _local_term_stats(handle: IndexHandle, terms: list[str]) -> dict:
@@ -347,8 +345,20 @@ def _score_all(
     set) with its BM25 sum, no top-k cut → (doc_id, score). `terms` are
     the query's live terms."""
     k1, b = handle.stats["k1"], handle.stats["b"]
-    scored = _pruned_postings(spark, handle, terms, _SCORE_COLS).mapInPandas(
-        _brute_scorer(st, k1, b, handle.stats["avgdl"], allowed), SCORE_SCHEMA
+    # a lazy plan memoized per handle, as in _docs_df: the explicit schema
+    # skips footer inference and the memo skips re-listing the bucket
+    # directories on every query
+    postings = handle.__dict__.get("_postings_df")
+    if postings is None:
+        postings = spark.read.schema(POSTINGS_SCHEMA).parquet(
+            handle.postings_path)
+        handle.__dict__["_postings_df"] = postings
+    scored = (
+        postings.filter(F.col("bucket").isin(_term_buckets(handle, terms)))
+        .filter(F.col("term").isin(terms))
+        .select(*_SCORE_COLS)
+        .mapInPandas(_brute_scorer(st, k1, b, handle.stats["avgdl"], allowed),
+                     SCORE_SCHEMA)
     )
     agg = scored.groupBy("doc_id").agg(
         F.sum("contrib").alias("score"), F.sum("nt").alias("nt")
@@ -359,11 +369,13 @@ def _score_all(
 
 
 def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
-                       conjunctive: bool, n_query_terms: int, range_size: int,
+                       conjunctive: bool, n_query_terms: int,
                        allowed: np.ndarray | None = None,
                        phrase: list[str] | None = None):
     """Exact interval-sweep block-max WAND over one doc-range shard, as one
-    columnar sweep.
+    columnar sweep: the returned kernel maps (blocks frame, shard_lo,
+    shard_hi) → its TOPK_SCHEMA frame, for the shard's doc ids
+    [shard_lo, shard_hi) (shard_hi None = unbounded).
 
     The shard's block edges cut its doc range into intervals; an
     interval's upper bound ``ub`` is the sum, over the terms, of the
@@ -399,16 +411,16 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
     ids. The bounds and the cut are unchanged, so the sweep stays exact,
     and positions are decoded only for chunks the sweep reaches.
 
-    A block overlapping several doc-range shards is replicated to each (the
-    explode in _run_shards), so every shard sees every block covering its
-    own doc range — the intervals are therefore clipped to
-    [shard*range_size, (shard+1)*range_size): each doc is scored exactly
-    once, in its home shard, with all its covering blocks present (full
-    scores). Without the clip a spanning cold-term block would be scored in
-    every shard it was replicated to, emitting duplicate doc_ids into the
-    global top-k."""
+    Each shard task reads every block that overlaps its own doc range
+    (_read_blocks), so a block spanning several shards is read by each of
+    them — the intervals are therefore clipped to [shard_lo, shard_hi):
+    each doc is scored exactly once, in its home shard, with all its
+    covering blocks present (full scores). Without the clip a spanning
+    cold-term block would be scored in every shard that read it, emitting
+    duplicate doc_ids into the global top-k."""
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(pdf: pd.DataFrame, shard_lo: int = 0,
+           shard_hi: int | None = None) -> pd.DataFrame:
         allow = allowed.value if hasattr(allowed, "value") else allowed
         cols = {c: pdf[c].tolist()
                 for c in _WAND_COLS + (["pos_enc"] if phrase else [])}
@@ -417,10 +429,9 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
         last = np.asarray(cols["last_doc_id"], np.int64)
         max_score = np.asarray(cols["max_score"], np.float64)
         # intervals between block edges, clipped to the shard's range
-        shard_lo = int(pdf["shard"].iat[0]) * range_size
         edges = np.unique(np.concatenate([first, last + 1]))
-        lo = np.clip(edges[:-1], shard_lo, shard_lo + range_size)
-        hi = np.clip(edges[1:], shard_lo, shard_lo + range_size)
+        lo = np.clip(edges[:-1], shard_lo, shard_hi)
+        hi = np.clip(edges[1:], shard_lo, shard_hi)
         lo, hi = lo[lo < hi], hi[lo < hi]
         # per-term block tables (rows by term, then first_doc_id) →
         # cover[t, i]: the block row of term t covering interval i, or -1
@@ -492,6 +503,32 @@ def _wand_shard_scorer(stats: dict, k1: float, b: float, avgdl: float, k: int,
     return fn
 
 
+def _wand_shards(
+    dset: ds.Dataset, buckets: list[int], terms: list[str],
+    columns: list[str], kernel, n_groups: int, width: int,
+):
+    """The task of the WAND dispatch, over batches of shard ids (the `id`
+    column of spark.range(n_groups)): shard s owns doc ids [s·width,
+    (s+1)·width), and the last shard every id above too — skewed id
+    buckets can exceed n_groups·width. Each shard reads the blocks that
+    overlap its range (_read_blocks) and, unless it has none, yields
+    kernel(blocks, lo, hi) — a _wand_shard_scorer kernel. The closure
+    ships the plain pyarrow dataset, never the index handle, whose
+    __dict__ holds Spark DataFrames."""
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            for s in batch["id"].tolist():
+                lo = s * width
+                hi = lo + width if s < n_groups - 1 else None
+                pdf = _read_blocks(dset, buckets, terms, columns, lo,
+                                   hi).to_pandas()
+                if len(pdf):
+                    yield kernel(pdf, lo, hi)
+
+    return fn
+
+
 def _resolve_urls(handle: IndexHandle, ids: list[int]) -> dict[int, str]:
     """doc_id → url for a tiny id set: a driver-side pyarrow lookup (no
     Spark job)."""
@@ -520,64 +557,18 @@ def _url_topk(
             [urls[i] for i in top])
 
 
-def _result_df(
-    spark: SparkSession, ids, scores, urls: list | None, with_url: bool
-) -> DataFrame:
-    """The one top-k result frame: RESULT_SCHEMA rows in the given order,
-    url null where `urls` (aligned with ids) is None, and no url column
-    when with_url is False."""
-    schema = T.StructType(
-        [f for f in RESULT_SCHEMA.fields if with_url or f.name != "url"]
-    )
-    cols = {
-        "doc_id": pa.array(ids, pa.int64()),
-        "url": pa.array(urls if urls is not None else [None] * len(ids),
-                        pa.string()),
-        "score": pa.array(scores, pa.float64()),
-    }
+def _result_df(spark: SparkSession, ids, scores, urls) -> DataFrame:
+    """The one top-k result frame: RESULT_SCHEMA rows in the given order
+    (`urls` aligned with `ids`)."""
     # from an Arrow table even when empty: a 0-row pandas frame would
     # collect through a parallelize job, an Arrow table through none
     return spark.createDataFrame(
-        pa.table({n: cols[n] for n in schema.fieldNames()}), schema
-    )
-
-
-def _run_shards(
-    blocks: DataFrame, n_groups: int, width: int, kernel_for
-) -> DataFrame:
-    """The per-shard dispatcher of the WAND top-k: runs
-    `kernel_for(range_size)` — a pandas frame → TOPK_SCHEMA pandas frame
-    kernel over one doc-range shard — on the pruned block scan."""
-    if n_groups == 1:
-        # single shard ⇒ no co-location needed: fold the pruned scan into
-        # one task and run the kernel there — one stage, no shuffle. The
-        # range is unbounded: doc ids may exceed range_size × n_ranges when
-        # the id buckets are skewed, and nothing may be clipped away here.
-        kernel = kernel_for(1 << 62)
-
-        def _single(batches):
-            pdfs = [p for p in batches if len(p)]
-            if pdfs:
-                yield kernel(pd.concat(pdfs, ignore_index=True))
-
-        return (
-            blocks.withColumn("shard", F.lit(0).cast("long"))
-            .coalesce(1)
-            .mapInPandas(_single, TOPK_SCHEMA)
-        )
-    # a block overlapping multiple doc-range shards is replicated to each
-    # (kernels clip to their own range); the shuffle payload is
-    # ≤ blocks × spanned shards rows
-    shard = F.explode(
-        F.sequence(
-            (F.col("first_doc_id") / width).cast("long"),
-            (F.col("last_doc_id") / width).cast("long"),
-        )
-    )
-    return (
-        blocks.withColumn("shard", shard)
-        .groupBy("shard")
-        .applyInPandas(kernel_for(width), TOPK_SCHEMA)
+        pa.table({
+            "doc_id": pa.array(ids, pa.int64()),
+            "url": pa.array(urls, pa.string()),
+            "score": pa.array(scores, pa.float64()),
+        }),
+        RESULT_SCHEMA,
     )
 
 
@@ -598,12 +589,11 @@ def query_topk(
     k: int = 10,
     mode: str = "wand",
     conjunctive: bool = False,
-    with_url: bool = True,
     tiebreak: str = "doc_id",
     shard_target: int | None = None,
     doc_filter: np.ndarray | None = None,
 ) -> DataFrame:
-    """Top-k BM25. Returns (doc_id, url?, score) ordered by
+    """Top-k BM25. Returns (doc_id, url, score) ordered by
     (score desc, doc_id asc) — the golden tie-break (SURVEY.md §5.2).
     mode is "brute", "wand", "local" or "auto" (see the module docstring).
     tiebreak="url" breaks exact-score ties by url instead, which is what
@@ -613,8 +603,9 @@ def query_topk(
     Spark job; an unknown mode or tiebreak, or k < 0, raises ValueError.
     shard_target overrides WAND_SHARD_TARGET (postings per WAND shard) —
     the scorer is exact for any doc-range partitioning, so this only moves
-    the fan-out/latency trade-off; the bench uses it to exercise the
-    multi-shard path at small corpus sizes.
+    the fan-out/latency trade-off; the bench uses it to exercise
+    fan-out at small corpus sizes. WAND runs one Spark job at any shard
+    count, its collect included.
     doc_filter (any mode): sorted int64 array of allowed doc ids — the
     top-k is cut over allowed docs only, with unchanged scores, and WAND
     skips allowed-empty intervals before any block decode (B19;
@@ -625,12 +616,12 @@ def query_topk(
         raise ValueError(f"tiebreak must be 'doc_id' or 'url', got {tiebreak!r}")
     handle = open_index(index) if isinstance(index, str) else index
     return _topk(spark, handle, parse_query(query), k, mode, conjunctive,
-                 with_url, tiebreak, shard_target, doc_filter)
+                 tiebreak, shard_target, doc_filter)
 
 
 def _topk(
     spark: SparkSession, handle: IndexHandle, all_terms: list[str], k: int,
-    mode: str, conjunctive: bool, with_url: bool, tiebreak: str,
+    mode: str, conjunctive: bool, tiebreak: str,
     shard_target: int | None = None, doc_filter: np.ndarray | None = None,
     phrase: list[str] | None = None,
 ) -> DataFrame:
@@ -642,13 +633,13 @@ def _topk(
     if k == 0 or not all_terms or (
         doc_filter is not None and len(doc_filter) == 0
     ):
-        return _result_df(spark, [], [], None, with_url)
+        return _result_df(spark, [], [], [])
     # the dict is shipped to executors in the scoring closure (B11
     # broadcast stats)
     st = _local_term_stats(handle, all_terms)
     terms = [t for t in all_terms if t in st]  # zero-hit terms drop out
     if not terms or (conjunctive and len(terms) < len(all_terms)):
-        return _result_df(spark, [], [], None, with_url)
+        return _result_df(spark, [], [], [])
 
     local = mode == "local" or (
         mode == "auto" and sum(st[t]["df"] for t in terms) <= LOCAL_MAX_POSTINGS
@@ -676,30 +667,34 @@ def _topk(
                 .orderBy(F.desc("score"), F.asc("url"))
                 .limit(k)
             )
-            return topk if with_url else topk.drop("url")
+            return topk
         top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     else:
         # Query-time shard width adapts to the query's posting volume: the
         # scorer is exact for ANY doc-range partitioning (it clips to its
-        # own range), so light queries run as one shard (one Python task,
-        # no per-group scheduling overhead) while stopword-grade queries fan
+        # own range), so light queries run as one shard (one Python task)
+        # while stopword-grade queries fan
         # out to up to n_doc_ranges shards (~TARGET postings each — seconds
         # of vectorized kernel work per task at 10^12 docs, bounded memory).
         n_groups, width = _shard_layout(handle, st, terms, shard_target)
-        blocks = _pruned_postings(
-            spark, handle, terms, _WAND_COLS + (["pos_enc"] if phrase else [])
+        kernel = _wand_shard_scorer(
+            st, handle.stats["k1"], handle.stats["b"], handle.stats["avgdl"],
+            k, conjunctive, len(terms), allowed=allowed, phrase=phrase,
         )
-        k1, b = handle.stats["k1"], handle.stats["b"]
-        avgdl = handle.stats["avgdl"]
+        shards = _wand_shards(
+            _pa_dataset(handle, "_postings_ds", handle.postings_path,
+                        partitioning="hive"),
+            _term_buckets(handle, terms), terms,
+            _WAND_COLS + (["pos_enc"] if phrase else []),
+            kernel, n_groups, width,
+        )
+        # shards packed into at most defaultParallelism tasks, no shuffle;
         # each shard returns its docs scoring >= its kth score: ≤
         # shards·(k + ties) rows
-        top = _run_shards(
-            blocks, n_groups, width,
-            lambda rs: _wand_shard_scorer(
-                st, k1, b, avgdl, k, conjunctive, len(terms), rs,
-                allowed=allowed, phrase=phrase,
-            ),
-        )
+        top = spark.range(
+            n_groups,
+            numPartitions=min(n_groups, spark.sparkContext.defaultParallelism),
+        ).mapInPandas(shards, TOPK_SCHEMA)
     if not local:  # brute's top k or the shards' rows, in one Spark job
         rows = top.collect()
         ids = np.asarray([r["doc_id"] for r in rows], np.int64)
@@ -712,11 +707,10 @@ def _topk(
     if tiebreak == "url":
         ids, scores, urls = _url_topk(handle, ids.tolist(), scores.tolist(), k)
     else:
-        ids, scores, urls = ids[:k].tolist(), scores[:k].tolist(), None
-        if with_url:
-            url_map = _resolve_urls(handle, ids)
-            urls = [url_map.get(d) for d in ids]
-    return _result_df(spark, ids, scores, urls, with_url)
+        ids, scores = ids[:k].tolist(), scores[:k].tolist()
+        url_map = _resolve_urls(handle, ids)
+        urls = [url_map.get(d) for d in ids]
+    return _result_df(spark, ids, scores, urls)
 
 
 # auto-mode crossover: the driver-local path decodes ~1M postings/s
@@ -744,7 +738,7 @@ def wand_shard_count(
     handle: IndexHandle, query: str, shard_target: int | None = None
 ) -> int:
     """How many doc-range shards the adaptive WAND path fans this query out
-    to (1 = single shuffle-free task). Exposed so the bench can report the
+    to (all run in its one sweep job). Exposed so the bench can report the
     salted-shard fan-out per query per round (BENCH_r{N}.json)."""
     terms = parse_query(query)
     return _shard_layout(
@@ -775,12 +769,10 @@ def _local_scored(
     dset = _pa_dataset(
         handle, "_postings_ds", handle.postings_path, partitioning="hive"
     )
-    tbl = dset.to_table(
-        columns=_SCORE_COLS + (["pos_enc"] if phrase else []),
-        filter=ds.field("bucket").isin(_term_buckets(handle, terms))
-        & ds.field("term").isin(terms),
-    )
-    cols = tbl.to_pydict()
+    cols = _read_blocks(
+        dset, _term_buckets(handle, terms), terms,
+        _SCORE_COLS + (["pos_enc"] if phrase else []),
+    ).to_pydict()
     ids, scores, nts = _score_blocks(
         cols, st, handle.stats["k1"], handle.stats["b"], handle.stats["avgdl"]
     )

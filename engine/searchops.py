@@ -71,10 +71,8 @@ def _bm25_entry(name: str, query: str, conjunctive: bool = False):
     @register(name, _bm25_sql(terms, 10, conjunctive))
     def run(spark, sf_dir, _q=query, _c=conjunctive):
         h = get_index(spark, sf_dir)
-        out = query_topk(
-            spark, h, _q, k=10, mode="brute", conjunctive=_c,
-            with_url=True, tiebreak="url",
-        )
+        out = query_topk(spark, h, _q, k=10, mode="brute", conjunctive=_c,
+                         tiebreak="url")
         return out.select("url", F.round("score", 4).alias("score"))
 
     return run
@@ -92,10 +90,8 @@ def bm25_topk_wand(spark, sf_dir):
     (mode='wand' — distributed shard sweep with pruning), not the brute
     fallback the other bm25 entries exercise (B14)."""
     h = get_index(spark, sf_dir)
-    out = query_topk(
-        spark, h, "sort merge join", k=10, mode="wand", with_url=True,
-        tiebreak="url",
-    )
+    out = query_topk(spark, h, "sort merge join", k=10, mode="wand",
+                     tiebreak="url")
     return out.select("url", F.round("score", 4).alias("score"))
 
 
@@ -105,10 +101,8 @@ def bm25_topk_auto(spark, sf_dir):
     the pruned buckets when the postings volume is small; SURVEY.md §7.2.6)
     must be rank-identical to the oracle too."""
     h = get_index(spark, sf_dir)
-    out = query_topk(
-        spark, h, "big data table", k=10, mode="auto", with_url=True,
-        tiebreak="url",
-    )
+    out = query_topk(spark, h, "big data table", k=10, mode="auto",
+                     tiebreak="url")
     return out.select("url", F.round("score", 4).alias("score"))
 
 
@@ -117,9 +111,7 @@ def bm25_topk_wand_cold(spark, sf_dir):
     """WAND over a cold (unsalted) term whose single block spans every
     doc-range shard — the shard-clipping regression as a driver row."""
     h = get_index(spark, sf_dir)
-    out = query_topk(
-        spark, h, "dup", k=10, mode="wand", with_url=True, tiebreak="url"
-    )
+    out = query_topk(spark, h, "dup", k=10, mode="wand", tiebreak="url")
     return out.select("url", F.round("score", 4).alias("score"))
 
 

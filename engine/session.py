@@ -81,14 +81,16 @@ def get_spark(
 
 def _warm_python_workers(spark: SparkSession) -> None:
     """One-time Python-worker pool warm-up at session creation (idempotent
-    per session). The first Arrow stage of a fresh session pays worker
-    spawn + numpy/pandas/pyarrow imports in every reused worker (~3 s wall
-    on local[32], measured as the SPIMI stage cold/warm gap). A cluster
-    amortizes this over long-lived executors; a fresh local session pays it
-    inside whatever stage happens to run first. Initializing the pool here —
-    session setup, before any query runs — keeps per-stage timings about
-    the dataflow. No engine data is touched or cached. A failure raises
-    from get_spark."""
+    per session): one mapInPandas stage, the Arrow path that the build's
+    kernels and every query strategy's scoring tasks (the WAND shards
+    included) run on. The first Arrow stage of a fresh session pays
+    worker spawn + numpy/pandas/pyarrow imports in every reused worker
+    (~3 s wall on local[32], measured as the SPIMI stage cold/warm gap). A
+    cluster amortizes this over long-lived executors; a fresh local session
+    pays it inside whatever stage happens to run first. Initializing the
+    pool here — session setup, before any query runs — keeps per-stage
+    timings about the dataflow. No engine data is touched or cached. A
+    failure raises from get_spark."""
     if getattr(spark, "_graft_warmed", False):
         return
     n = spark.sparkContext.defaultParallelism
@@ -104,17 +106,6 @@ def _warm_python_workers(spark: SparkSession) -> None:
     (
         spark.range(n * 4, numPartitions=n)
         .mapInPandas(_touch, "id long")
-        .write.format("noop").mode("overwrite").save()
-    )
-    # also warm the grouped-map (applyInPandas) serializer + exchange
-    # codegen path, which multi-shard WAND queries (phrases included)
-    # use — measured ~0.5 s of first-call JIT otherwise
-    from pyspark.sql import functions as _F
-
-    (
-        spark.range(n, numPartitions=4)
-        .groupBy((_F.col("id") % 4).alias("g"))
-        .applyInPandas(lambda pdf: pdf[["id"]], "id long")
         .write.format("noop").mode("overwrite").save()
     )
     spark._graft_warmed = True

@@ -10,12 +10,7 @@ import re
 
 import pandas as pd
 
-from engine.analyzer import (
-    extract_series,
-    extract_text,
-    tokenize,
-    tokenize_series,
-)
+from engine.analyzer import extract_series, extract_text, tokenize
 
 GOLDEN_TOKENS = [
     ("Spark JOIN the", ["spark", "join", "the"]),
@@ -31,13 +26,6 @@ GOLDEN_TOKENS = [
 def test_tokenize_goldens():
     for text, want in GOLDEN_TOKENS:
         assert tokenize(text) == want, text
-
-
-def test_tokenize_series_matches_pure():
-    texts = [t for t, _ in GOLDEN_TOKENS] + [None]
-    got = tokenize_series(pd.Series(texts, dtype=object)).tolist()
-    want = [tokenize(t or "") for t in texts]
-    assert got == want
 
 
 def test_extract_passthrough_byte_identical():

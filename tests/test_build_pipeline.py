@@ -105,8 +105,8 @@ def test_incremental_reindex_recomputes_only_changed_pids(spark, index_cfg):
     assert h2.stats["n_docs"] == clean.stats["n_docs"]
     assert abs(h2.stats["avgdl"] - clean.stats["avgdl"]) < 1e-12
     for q in ("freshdup", "spark join"):
-        a = query_topk(spark, clean, q, mode="brute", with_url=False).collect()
-        b_ = query_topk(spark, h2, q, mode="brute", with_url=False).collect()
+        a = query_topk(spark, clean, q, mode="brute").collect()
+        b_ = query_topk(spark, h2, q, mode="brute").collect()
         assert [(r["doc_id"], round(r["score"], 9)) for r in a] == [
             (r["doc_id"], round(r["score"], 9)) for r in b_
         ]
@@ -146,8 +146,8 @@ def test_resume_from_partial_checkpoint(spark, index_cfg):
     assert abs(h2.stats["avgdl"] - clean.stats["avgdl"]) < 1e-12
 
     for q in ("spark join", "the data", "vector"):
-        a = query_topk(spark, clean, q, mode="brute", with_url=False).collect()
-        b_ = query_topk(spark, h2, q, mode="brute", with_url=False).collect()
+        a = query_topk(spark, clean, q, mode="brute").collect()
+        b_ = query_topk(spark, h2, q, mode="brute").collect()
         assert [(r["doc_id"], round(r["score"], 9)) for r in a] == [
             (r["doc_id"], round(r["score"], 9)) for r in b_
         ]
@@ -227,6 +227,49 @@ def test_sink_failure_publishes_nothing(spark, index_cfg, monkeypatch, sink):
     assert open_index(root).version_dir.endswith("v_0")
     with pytest.raises(KeyError):
         open_index(root, version="v_1")
+
+
+def test_killed_checkpointed_build_resumes_byte_identical(
+    spark, index_cfg, built_index, monkeypatch
+):
+    """A checkpointed build killed in its postings sink publishes nothing;
+    re-run with the same checkpoint_dir, it recomputes no pid (every
+    partial and the checkpoint manifest keep their mtimes) and publishes
+    postings and positions byte-identical to a clean build's."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    wp = load_webpages(spark, SF_DIR_001)
+    root = tempfile.mkdtemp(prefix="idx_killed_")
+    ck = tempfile.mkdtemp(prefix="ckpt_killed_")
+    parquet = DataFrameWriter.parquet
+
+    def crash(self, path, *args, **kwargs):
+        if os.path.basename(path) == "postings":
+            raise RuntimeError("postings sink crashed")
+        return parquet(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", crash)
+        with pytest.raises(RuntimeError, match="postings sink crashed"):
+            build_index(spark, wp, root, index_cfg, checkpoint_dir=ck)
+    assert not os.path.exists(os.path.join(root, "_manifest.json"))
+    with pytest.raises(FileNotFoundError):
+        open_index(root)
+
+    pdir = os.path.join(ck, "partials")
+    mpath = os.path.join(ck, "_partials_manifest.json")
+    mtimes = {d: os.path.getmtime(os.path.join(pdir, d))
+              for d in os.listdir(pdir) if d.startswith("pid=")}
+    assert len(mtimes) == index_cfg.n_build_partitions
+    manifest_mtime = os.path.getmtime(mpath)
+
+    h = build_index(spark, wp, root, index_cfg, checkpoint_dir=ck)
+    assert {d: os.path.getmtime(os.path.join(pdir, d)) for d in mtimes} \
+        == mtimes, "a checkpointed pid was recomputed"
+    assert os.path.getmtime(mpath) == manifest_mtime
+    assert open_index(root).version_dir == h.version_dir
+    assert _postings_hash(spark, h) == _postings_hash(spark, built_index)
+    assert _positions_hash(spark, h) == _positions_hash(spark, built_index)
 
 
 def test_build_shape_and_job_group(spark, index_cfg):

@@ -119,7 +119,6 @@ def test_filtered_wand_prunes_blocks(spark, lang_corpus, monkeypatch):
     pdf = tbl.to_pandas()
     pdf = pdf[pdf["term"] == "spark"].reset_index(drop=True)
     assert len(pdf) > 1, "need a multi-block posting list for this test"
-    pdf["shard"] = 0
     st = Q._local_term_stats(h, ["spark"])
     k1, b = h.stats["k1"], h.stats["b"]
     avgdl = h.stats["avgdl"]
@@ -138,14 +137,13 @@ def test_filtered_wand_prunes_blocks(spark, lang_corpus, monkeypatch):
         F.col("url") == "https://fr.example.com/doc/0"
     ).collect()
     allowed = np.asarray([docs[0]["doc_id"]], dtype=np.int64)
-    scorer = Q._wand_shard_scorer(
-        st, k1, b, avgdl, 10, False, 1, 1 << 62, allowed=allowed
-    )
+    scorer = Q._wand_shard_scorer(st, k1, b, avgdl, 10, False, 1,
+                                  allowed=allowed)
     out = scorer(pdf)
     assert calls["n"] < len(pdf)  # blocks skipped > 0
     assert set(out["doc_id"]) == {int(allowed[0])}
 
     calls["n"] = 0
-    unfiltered = Q._wand_shard_scorer(st, k1, b, avgdl, 10, False, 1, 1 << 62)
+    unfiltered = Q._wand_shard_scorer(st, k1, b, avgdl, 10, False, 1)
     unfiltered(pdf)
     assert calls["n"] >= 1

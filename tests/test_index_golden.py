@@ -10,10 +10,8 @@ from engine.query import query_topk
 
 
 def _collect(spark, built_index, q, mode, conjunctive=False):
-    df = query_topk(
-        spark, built_index, q, k=10, mode=mode, conjunctive=conjunctive,
-        with_url=False,
-    )
+    df = query_topk(spark, built_index, q, k=10, mode=mode,
+                    conjunctive=conjunctive)
     rows = df.orderBy(df.score.desc(), df.doc_id.asc()).collect()
     return [(r["doc_id"], r["score"]) for r in rows]
 

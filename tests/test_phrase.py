@@ -73,7 +73,7 @@ def test_phrase_scores_match_conjunctive_brute(spark, tiny_index):
               for r in _phrase(spark, h, "data table", 10).collect()}
     brute = {r["url"]: r["score"]
              for r in query_topk(spark, h, "data table", k=10, mode="brute",
-                                 conjunctive=True, with_url=True).collect()}
+                                 conjunctive=True).collect()}
     for url, s in phrase.items():
         assert brute[url] == pytest.approx(s, abs=1e-9)
 
@@ -146,8 +146,7 @@ def test_filtered_topk_filters_before_cut(spark, lang_index):
     assert len(out) == 6
     assert all(r["url"].startswith("https://fr.") for r in out)
     # the naive plan: unfiltered top-10 then post-filter → zero fr docs
-    naive = query_topk(spark, h, "spark", k=10, mode="brute",
-                       with_url=True).collect()
+    naive = query_topk(spark, h, "spark", k=10, mode="brute").collect()
     assert all(r["url"].startswith("https://en.") for r in naive)
 
 
@@ -164,7 +163,7 @@ def test_filtered_topk_scores_match_unfiltered_brute(spark, lang_index):
             for r in filtered_topk(spark, h, wp, "spark",
                                    F.col("lang") == "fr", k=10).collect()}
     full = {r["url"]: r["score"]
-            for r in query_topk(spark, h, "spark", k=100, mode="brute",
-                                with_url=True).collect()}
+            for r in query_topk(spark, h, "spark", k=100,
+                                mode="brute").collect()}
     for url, s in filt.items():
         assert full[url] == pytest.approx(s, abs=1e-9)

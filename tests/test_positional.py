@@ -17,7 +17,7 @@ import pytest
 
 from tests.phrase_reference import PhraseReference, assert_same_topk
 from tests.test_build_pipeline import _positions_hash
-from tests.test_scale_plans import _file_scans, _plan
+from tests.test_scale_plans import _assert_shard_read, _wand_reads
 
 # positions content hash (xor of per-block xxhash64 over the block keys and
 # pos_enc) of the session index, tests/conftest.py::built_index over sf0.001
@@ -231,34 +231,25 @@ def test_positions_match_terms_on_recrawls(spark, index_cfg):
 
 def test_phrase_scan_reads_positions_not_corpus(spark, pos_index,
                                                  monkeypatch):
-    """The phrase's WAND scan reads the postings blocks with term-bucket
-    partition pruning, together with their positions, and never the
-    corpus."""
+    """Every WAND shard task of a phrase reads the postings blocks with
+    term-bucket partition pruning, together with their positions, and
+    never the corpus."""
     import engine.query as Q
     from engine.positional import phrase_topk_positional
 
     h, _, pos_dir = pos_index
-    scanned = []
-    run_shards = Q._run_shards
-
-    def spy(blocks, *args):
-        scanned.append(blocks)
-        return run_shards(blocks, *args)
-
     monkeypatch.setattr(Q, "LOCAL_MAX_POSTINGS", 0)
-    monkeypatch.setattr(Q, "_run_shards", spy)
-    phrase_topk_positional(spark, h, pos_dir, "data table", k=10).collect()
-    assert scanned
-    for df in scanned:
-        scans = _file_scans(df)
-        assert scans
-        for ln, cols in scans:
-            assert "postings" in ln
-            assert "PartitionFilters" in ln and "bucket" in ln
-            assert "pos_enc" in cols
-        # corpus (webpages) columns never appear in the plan
-        plan = _plan(df)
-        assert "text#" not in plan and "html#" not in plan
+
+    def run():
+        for target in (Q.WAND_SHARD_TARGET, 1):  # one shard, max fan-out
+            monkeypatch.setattr(Q, "WAND_SHARD_TARGET", target)
+            phrase_topk_positional(spark, h, pos_dir, "data table",
+                                   k=10).collect()
+
+    reads = _wand_reads(monkeypatch, run)
+    assert len(reads) == 2
+    for read in reads:
+        _assert_shard_read(h, ["data", "table"], read, phrase=True)
 
 
 def test_phrase_spark_jobs(spark, built_index, monkeypatch):

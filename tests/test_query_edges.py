@@ -38,7 +38,6 @@ EDGE_INPUTS = [
 ]
 
 RESULT = [("doc_id", "bigint"), ("url", "string"), ("score", "double")]
-RESULT_NO_URL = [("doc_id", "bigint"), ("score", "double")]
 
 
 def _fields(df):
@@ -53,7 +52,7 @@ def test_edge_inputs_all_modes_agree(spark, built_index, tiebreak):
                 (r["doc_id"], r["score"])
                 for r in query_topk(
                     spark, built_index, query, k=k, mode=mode,
-                    conjunctive=conj, with_url=False, tiebreak=tiebreak,
+                    conjunctive=conj, tiebreak=tiebreak,
                 ).collect()
             ]
             for mode in MODES
@@ -67,7 +66,7 @@ def test_edge_inputs_all_modes_agree(spark, built_index, tiebreak):
             for (_, s), (_, rs) in zip(rows, ref):
                 assert abs(s - rs) < 1e-9, (query, k, conj, mode)
     dup = query_topk(spark, built_index, "dup", k=100, mode="brute",
-                     with_url=False, tiebreak=tiebreak).collect()
+                     tiebreak=tiebreak).collect()
     assert 0 < len(dup) < 100
     # a repeated term counts once
     assert (
@@ -113,14 +112,12 @@ def webpages(spark):
 
 
 @pytest.mark.parametrize("mode", MODES)
-@pytest.mark.parametrize("with_url", [True, False])
-def test_query_topk_result_schema(spark, built_index, mode, with_url):
-    want = RESULT if with_url else RESULT_NO_URL
+def test_query_topk_result_schema(spark, built_index, mode):
     for query in ("spark join", "zzzqqq"):
         for tiebreak in ("doc_id", "url"):
             df = query_topk(spark, built_index, query, mode=mode,
-                            with_url=with_url, tiebreak=tiebreak)
-            assert _fields(df) == want, (query, tiebreak)
+                            tiebreak=tiebreak)
+            assert _fields(df) == RESULT, (query, tiebreak)
 
 
 @pytest.mark.parametrize("mode", MODES)

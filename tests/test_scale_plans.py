@@ -4,8 +4,11 @@ pruning, broadcast joins, no-html scans — the things that must hold for the
 
 from __future__ import annotations
 
+import os
 import tempfile
+import zlib
 
+import pyarrow.dataset as ds
 import pyspark.sql.functions as F
 
 from engine.build import build_index
@@ -123,29 +126,67 @@ def test_ann_index_probe_scan_pruned(spark, tmp_path):
     assert "PushedFilters" in plan and "sig" in plan
 
 
+def _wand_reads(monkeypatch, run) -> list[tuple]:
+    """The driver-side arguments (dset, buckets, terms, columns) of the
+    block read of every WAND shard task that `run` dispatches."""
+    import engine.query as q
+
+    reads = []
+    wand_shards = q._wand_shards
+
+    def spy(dset, buckets, terms, columns, *args):
+        reads.append((dset, buckets, terms, columns))
+        return wand_shards(dset, buckets, terms, columns, *args)
+
+    monkeypatch.setattr(q, "_wand_shards", spy)
+    run()
+    assert reads
+    return reads
+
+
+def _assert_shard_read(handle, terms, read, phrase):
+    """A WAND shard task reads the postings table's files of only the
+    query terms' `bucket=` partitions, the rows of only those terms, the
+    column tfs_enc, pos_enc only for a phrase, and no corpus column."""
+    dset, buckets, read_terms, columns = read
+    n = int(handle.stats["n_term_buckets"])
+    want = {zlib.crc32(t.encode("utf-8")) % n for t in terms}
+    root = os.path.normpath(handle.postings_path)
+    assert sorted(read_terms) == sorted(terms)
+    assert all(f.startswith(root + os.sep) for f in dset.files)
+    files = [f.path for f in dset.get_fragments(
+        filter=ds.field("bucket").isin(buckets))]
+    assert files and len(files) < len(dset.files)
+    assert {os.path.basename(os.path.dirname(f)) for f in files} \
+        == {f"bucket={b}" for b in want}
+    assert "tfs_enc" in columns and ("pos_enc" in columns) == phrase
+    assert not {"url", "text", "html", "warc_ts", "lang"} & set(columns)
+
+
 def test_query_scan_prunes_term_buckets(spark, built_index, monkeypatch):
-    """The scoring scans (brute and WAND) must hit only the query terms'
-    bucket directories (partition pruning), not the full postings table,
-    and read only the columns the scoring kernel decodes: never the
-    blocks' positions (pos_enc), which only phrase search reads."""
+    """The scoring reads (brute's Spark scan and every WAND shard task's
+    pyarrow read) must hit only the query terms' bucket directories
+    (partition pruning), not the full postings table, and read only the
+    columns the scoring kernel decodes: never the blocks' positions
+    (pos_enc), which only phrase search reads."""
     import engine.query as q
 
     terms = ["spark", "join"]
-    wand_blocks = []
-    run_shards = q._run_shards
 
-    def spy(blocks, *args):
-        wand_blocks.append(blocks)
-        return run_shards(blocks, *args)
+    def run():
+        for target in (q.WAND_SHARD_TARGET, 1):  # one shard, max fan-out
+            monkeypatch.setattr(q, "WAND_SHARD_TARGET", target)
+            q.query_topk(spark, built_index, "spark join",
+                         mode="wand").collect()
 
-    monkeypatch.setattr(q, "_run_shards", spy)
-    q.query_topk(spark, built_index, "spark join", mode="wand").collect()
-    assert wand_blocks
+    reads = _wand_reads(monkeypatch, run)
+    assert len(reads) == 2
+    for read in reads:
+        _assert_shard_read(built_index, terms, read, phrase=False)
     brute = q._score_all(spark, built_index, terms,
                          q._local_term_stats(built_index, terms), False)
-    for df in [brute, *wand_blocks]:
-        scans = _file_scans(df)
-        assert scans
-        for ln, cols in scans:
-            assert "PartitionFilters" in ln and "bucket" in ln
-            assert "tfs_enc" in cols and "pos_enc" not in cols
+    scans = _file_scans(brute)
+    assert scans
+    for ln, cols in scans:
+        assert "PartitionFilters" in ln and "bucket" in ln
+        assert "tfs_enc" in cols and "pos_enc" not in cols

@@ -107,9 +107,9 @@ def test_url_tiebreak_partial_tie_at_boundary(spark, tied_index):
 def test_url_tiebreak_one_sweep_job(spark, tied_index, monkeypatch):
     """Every shard keeps its whole kth-score tie group, so a url tie-break
     whose tie group crosses the cut (64 ties, k=5) runs the one WAND sweep
-    and no second pass: one job on one shard, and at forced fan-out as
-    many jobs as the doc_id tie-break (the sweep's shuffle map stage and
-    its result stage)."""
+    and no second pass; every shard is a task of that one job, so the
+    query runs exactly one Spark job, collect included, on one shard and
+    at forced fan-out, under either tie-break."""
 
     def jobs(tiebreak, group):
         return _spark_jobs(spark, lambda: query_topk(
@@ -118,5 +118,5 @@ def test_url_tiebreak_one_sweep_job(spark, tied_index, monkeypatch):
 
     assert jobs("url", "one-sweep-single") == 1
     monkeypatch.setattr(eq, "WAND_SHARD_TARGET", 8)
-    assert jobs("url", "one-sweep-fanout-url") \
-        == jobs("doc_id", "one-sweep-fanout-doc-id")
+    assert jobs("url", "one-sweep-fanout-url") == 1
+    assert jobs("doc_id", "one-sweep-fanout-doc-id") == 1

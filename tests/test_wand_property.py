@@ -1,6 +1,7 @@
 """Property test (SURVEY.md §5.2): block-max WAND pruning is rank-identical
 to brute force on random corpora — exercised directly on the shard-scorer
-function (no Spark), with tiny blocks so pruning paths actually trigger.
+function and on the WAND dispatch's task function over parquet blocks (no
+Spark), with tiny blocks so pruning paths actually trigger.
 A phrase (ordered term ids, repeats allowed) is one more input: the sweep's
 adjacency predicate must match pure-Python adjacency over the docs. So is
 an allowed doc-id set, the facet filter every strategy applies."""
@@ -14,13 +15,14 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from engine.build import _row_deltas
 from engine.codec import bm25_tf_norm, encode_blocks, idf, varint_encode_rows
-from engine.query import (_brute_scorer, _cut, _local_scored,
-                          _wand_shard_scorer)
+from engine.query import (_WAND_COLS, _brute_scorer, _cut, _local_scored,
+                          _wand_shard_scorer, _wand_shards)
 
 K1, B = 1.2, 0.75
 BLOCK = 4  # tiny blocks → many intervals → pruning actually exercised
@@ -137,12 +139,11 @@ def test_wand_rank_identical_to_brute(corpus, qterms, conjunctive, k):
     if not terms:
         return
     sterms = [str(t) for t in terms]
-    pdf = blocks[blocks["term"].isin(sterms)].assign(shard=0)
+    pdf = blocks[blocks["term"].isin(sterms)]
     if len(pdf) == 0:
         return
-    scorer = _wand_shard_scorer(
-        stats, K1, B, avgdl, k, conjunctive, len(sterms), range_size=n_docs + 1
-    )
+    scorer = _wand_shard_scorer(stats, K1, B, avgdl, k, conjunctive,
+                                len(sterms))
     got = scorer(pdf)
     want = _kept(_brute(corpus, tf, dls, avgdl, terms, conjunctive), k)
     assert list(got["doc_id"]) == [d for d, _ in want], (
@@ -161,79 +162,106 @@ def _phrase_query(qterms, conjunctive, phrase):
     return list(dict.fromkeys(phrase)), True, [str(t) for t in phrase]
 
 
+N_BUCKETS = 3
+
+
+def _dataset(blocks, root):
+    """The blocks as the build lays them out — parquet files under hive
+    `bucket=` dirs, bucket crc32(term) % N_BUCKETS — opened as the
+    pyarrow dataset the driver-local read and the WAND shard tasks use."""
+    pq.write_to_dataset(pa.Table.from_pandas(blocks.assign(bucket=[
+        zlib.crc32(t.encode("utf-8")) % N_BUCKETS for t in blocks["term"]
+    ]), preserve_index=False), str(root), partition_cols=["bucket"])
+    return ds.dataset(str(root), format="parquet", partitioning="hive")
+
+
+def _sweep(dset, sterms, kernel, n_groups, width, phrase=None):
+    """{(lo, hi): kernel output} over every shard of the WAND dispatch's
+    task (_wand_shards) given all n_groups shard ids: each shard reads its
+    blocks from `dset` and runs `kernel` — the scorer, as query_topk
+    wires it."""
+    out = {}
+
+    def recording(pdf, lo, hi):
+        out[lo, hi] = kernel(pdf, lo, hi)
+        return out[lo, hi]
+
+    task = _wand_shards(
+        dset, sorted({zlib.crc32(t.encode("utf-8")) % N_BUCKETS
+                      for t in sterms}),
+        sterms, _WAND_COLS + (["pos_enc"] if phrase else []), recording,
+        n_groups, width,
+    )
+    assert len(list(task(iter([pd.DataFrame({"id": np.arange(n_groups)})])))) \
+        == len(out)
+    return out
+
+
 @settings(max_examples=120, deadline=None)
 @given(
     corpus_strategy, query_strategy, st.booleans(), st.integers(2, 6),
-    st.integers(1, 9), phrase_strategy, allowed_strategy,
+    st.integers(1, 9), st.integers(1, 6), phrase_strategy, allowed_strategy,
 )
-def test_wand_multishard_rank_identical(corpus, qterms, conjunctive, k,
-                                        range_size, phrase, allowed):
-    """Multi-shard regression for the shard-clipping bug: blocks spanning
-    several doc-range shards are replicated to each shard (the query-side
-    explode), and the union of shard-local top-k must be duplicate-free and
-    rank-identical to brute — i.e. each doc is scored exactly once, in its
-    home shard, with full score. The driver's cut over the shards' rows
-    yields brute's top k plus the kth score's whole tie group."""
+# 20 docs over 3 shards of width 2: the unbounded last shard owns ids 4-19
+@example(corpus=[[i % 3, 0] for i in range(20)], qterms=[0, 1],
+         conjunctive=False, k=3, range_size=2, n_groups=3, phrase=None,
+         allowed=None)
+def test_wand_multishard_rank_identical(tmp_path_factory, corpus, qterms,
+                                        conjunctive, k, range_size, n_groups,
+                                        phrase, allowed):
+    """Multi-shard regression for the shard-clipping bug: the dispatch's
+    task runs n_groups shards of width range_size, each reading every block
+    that overlaps its doc range from parquet, so a block spanning several
+    shards is read by each; the last shard is unbounded, so doc ids at or
+    above n_groups·range_size (skewed id buckets) are scored there. The
+    union of the shards' rows must be duplicate-free and rank-identical to
+    brute — each doc scored exactly once, in its home shard, with full
+    score. The driver's cut over the shards' rows yields brute's top k
+    plus the kth score's whole tie group."""
     qterms, conjunctive, sphrase = _phrase_query(qterms, conjunctive, phrase)
     blocks, stats, avgdl, n_docs, tf, dls = _build_blocks(corpus)
     terms = [t for t in qterms if t in tf]
     if not terms:
         return
     sterms = [str(t) for t in terms]
-    pdf = blocks[blocks["term"].isin(sterms)]
-    if len(pdf) == 0:
-        return
     scorer = _wand_shard_scorer(
-        stats, K1, B, avgdl, k, conjunctive, len(sterms), range_size,
+        stats, K1, B, avgdl, k, conjunctive, len(sterms),
         phrase=sphrase, allowed=allowed,
     )
-    # replicate each block to every shard it overlaps, exactly as query_topk
-    parts = []
-    for _, row in pdf.iterrows():
-        for shard in range(
-            int(row.first_doc_id) // range_size,
-            int(row.last_doc_id) // range_size + 1,
-        ):
-            parts.append({**row.to_dict(), "shard": shard})
-    rep = pd.DataFrame(parts)
-    locals_ = [scorer(g) for _, g in rep.groupby("shard")]
-    merged = pd.concat(locals_, ignore_index=True)
+    dset = _dataset(blocks, tmp_path_factory.mktemp("blocks"))
+    shards = _sweep(dset, sterms, scorer, n_groups, range_size, sphrase)
+    assert len(shards) <= n_groups
+    merged = pd.concat(list(shards.values()), ignore_index=True)
     assert merged["doc_id"].is_unique, "duplicate doc across shards"
     # the driver's merge: the same cut over the union of the shards' rows
-    ids, scores = _cut(merged["doc_id"].to_numpy(), merged["score"].to_numpy(),
-                       k)
+    ids, scores = _cut(merged["doc_id"].to_numpy(np.int64),
+                       merged["score"].to_numpy(np.float64), k)
     want = _kept(_brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase,
                         allowed), k)
     assert ids.tolist() == [d for d, _ in want], (
-        corpus, qterms, conjunctive, k, range_size, phrase, allowed,
-        list(zip(ids, scores)), want,
+        corpus, qterms, conjunctive, k, range_size, n_groups, phrase,
+        allowed, list(zip(ids, scores)), want,
     )
     for gs, (_, ws) in zip(scores, want):
         assert abs(gs - ws) < 1e-9
 
 
-N_BUCKETS = 3
-
-
-def _local_handle(blocks, avgdl):
-    """A stand-in index handle for the driver-local kernel: the blocks as
-    an in-memory pyarrow dataset with the build's `bucket` column, where
-    _pa_dataset finds it memoized."""
-    tbl = pa.Table.from_pandas(blocks.assign(bucket=[
-        zlib.crc32(t.encode("utf-8")) % N_BUCKETS for t in blocks["term"]
-    ]), preserve_index=False)
-    h = types.SimpleNamespace(
-        postings_path=None,
+def _local_handle(blocks, avgdl, root):
+    """A stand-in index handle for the driver-local kernel: the blocks
+    written under `root` as the build lays them out (_dataset), where
+    _pa_dataset opens them."""
+    _dataset(blocks, root)
+    return types.SimpleNamespace(
+        postings_path=str(root),
         stats={"k1": K1, "b": B, "avgdl": avgdl, "n_term_buckets": N_BUCKETS},
     )
-    h._postings_ds = ds.dataset(tbl)
-    return h
 
 
 @settings(max_examples=120, deadline=None)
 @given(corpus_strategy, query_strategy, st.booleans(), st.integers(2, 6),
        allowed_strategy)
-def test_shared_kernel_matches_brute_and_wand_bit_equal(corpus, qterms,
+def test_shared_kernel_matches_brute_and_wand_bit_equal(tmp_path_factory,
+                                                        corpus, qterms,
                                                         conjunctive, k,
                                                         allowed):
     """The driver-local kernel and the distributed brute scorer (one Arrow
@@ -247,9 +275,10 @@ def test_shared_kernel_matches_brute_and_wand_bit_equal(corpus, qterms,
     if not terms:
         return
     sterms = [str(t) for t in terms]
-    pdf = blocks[blocks["term"].isin(sterms)].assign(shard=0)
-    ids, scores = _local_scored(_local_handle(blocks, avgdl), sterms, stats,
-                                conjunctive, allowed=allowed)
+    pdf = blocks[blocks["term"].isin(sterms)]
+    ids, scores = _local_scored(
+        _local_handle(blocks, avgdl, tmp_path_factory.mktemp("blocks")),
+        sterms, stats, conjunctive, allowed=allowed)
     order = np.lexsort((ids, -scores))
     ids, scores = ids[order], scores[order]
     want = _brute(corpus, tf, dls, avgdl, terms, conjunctive,
@@ -264,24 +293,11 @@ def test_shared_kernel_matches_brute_and_wand_bit_equal(corpus, qterms,
     assert dict(zip(part["doc_id"], part["contrib"])) \
         == dict(zip(ids.tolist(), scores.tolist()))
     wand = _wand_shard_scorer(
-        stats, K1, B, avgdl, k, conjunctive, len(sterms),
-        range_size=n_docs + 1, allowed=allowed,
+        stats, K1, B, avgdl, k, conjunctive, len(sterms), allowed=allowed,
     )(pdf)
     n = len(_kept(list(zip(ids.tolist(), scores.tolist())), k))
     assert wand["doc_id"].tolist() == ids[:n].tolist()
     assert wand["score"].tolist() == scores[:n].tolist()
-
-
-def _shard_frames(pdf, range_size):
-    """{shard: the blocks it sees}: each block replicated to every doc-range
-    shard it overlaps, as query_topk's explode does."""
-    parts = [
-        {**row.to_dict(), "shard": shard}
-        for _, row in pdf.iterrows()
-        for shard in range(int(row.first_doc_id) // range_size,
-                           int(row.last_doc_id) // range_size + 1)
-    ]
-    return dict(list(pd.DataFrame(parts).groupby("shard")))
 
 
 @settings(max_examples=120, deadline=None)
@@ -295,8 +311,9 @@ def _shard_frames(pdf, range_size):
          range_size=None, phrase=None, allowed=None)
 @example(corpus=[[0]] * 9, qterms=[0], conjunctive=False, k=2,
          range_size=4, phrase=None, allowed=None)
-def test_wand_url_tiebreak_contract(corpus, qterms, conjunctive, k,
-                                    range_size, phrase, allowed):
+def test_wand_url_tiebreak_contract(tmp_path_factory, corpus, qterms,
+                                    conjunctive, k, range_size, phrase,
+                                    allowed):
     """The kernel's side of the url tie-break, per shard (range_size None =
     one shard): the shard returns exactly its brute docs scoring at least
     its kth score (all of them if fewer than k match) — so the whole
@@ -309,17 +326,20 @@ def test_wand_url_tiebreak_contract(corpus, qterms, conjunctive, k,
     if not terms:
         return
     sterms = [str(t) for t in terms]
-    range_size = range_size or n_docs + 1
+    range_size = range_size or n_docs
     want = _brute(corpus, tf, dls, avgdl, terms, conjunctive, phrase,
                   allowed)
     scorer = _wand_shard_scorer(stats, K1, B, avgdl, k, conjunctive,
-                                len(sterms), range_size, allowed=allowed,
-                                phrase=sphrase)
-    for shard, g in _shard_frames(
-        blocks[blocks["term"].isin(sterms)], range_size
-    ).items():
-        home = _kept([(d, s) for d, s in want if d // range_size == shard], k)
-        got = scorer(g)
+                                len(sterms), allowed=allowed, phrase=sphrase)
+    shards = _sweep(_dataset(blocks, tmp_path_factory.mktemp("blocks")),
+                    sterms, scorer, -(-n_docs // range_size), range_size,
+                    sphrase)
+    for (lo, hi), got in shards.items():
+        home = _kept([(d, s) for d, s in want
+                      if lo <= d and (hi is None or d < hi)], k)
         assert list(zip(got["doc_id"].tolist(), got["score"].tolist())) \
             == home, (corpus, qterms, conjunctive, k, range_size, phrase,
-                      allowed, shard)
+                      allowed, lo)
+    # a shard that read no block holds no matching doc
+    seen = {lo for lo, _ in shards}
+    assert all(d // range_size * range_size in seen for d, _ in want)
