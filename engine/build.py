@@ -139,23 +139,6 @@ def latest_crawl(webpages: DataFrame) -> DataFrame:
     )
 
 
-def assign_doc_ids(webpages: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """Deterministic dense-ish doc ids: bucket = crc32(url) % P (same value
-    as python zlib.crc32 — replicated by the independent golden scorer),
-    doc_id = rank_in_bucket * P + bucket. Scales: only a per-bucket sort
-    (window), no global sort; documented partition-offset variant of
-    SURVEY.md §7.2.5."""
-    P = cfg.n_build_partitions
-    bucketed = webpages.withColumn(
-        "pid", (F.crc32(F.encode(F.col("url"), "utf-8")) % P).cast("int")
-    )
-    w = Window.partitionBy("pid").orderBy("url")
-    return bucketed.withColumn(
-        "doc_id",
-        ((F.row_number().over(w) - F.lit(1)).cast("long") * P + F.col("pid")),
-    )
-
-
 def _row_deltas(values: np.ndarray, starts: np.ndarray) -> np.ndarray:
     """uint64 deltas of `values` with the absolute value at each row start:
     every encoded row or block is a self-contained delta stream."""

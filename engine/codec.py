@@ -1,22 +1,28 @@
-"""Posting-block codec: delta + varint (LEB128) compression with per-block
-max-score metadata (SURVEY.md §2.B8; BASELINE.json:6 "delta-encoded
-varint/PForDelta-compressed posting blocks with per-block max-score").
+"""Posting-block codec: delta + varint (LEB128) or bit-packed compression
+with per-block max-score metadata (SURVEY.md §2.B8; BASELINE.json:6
+"delta-encoded varint/PForDelta-compressed posting blocks with per-block
+max-score").
 
 All codecs are numpy-vectorized (no per-element Python in the hot loop) and
 pure — unit/property-tested for encode∘decode == identity on adversarial gap
 distributions (SURVEY.md §5.2).
 
-Three codecs, chosen per block by predicted size:
+Two layouts, three codecs, chosen per block by exact predicted size:
 - ``varint``: LEB128 unsigned, byte-aligned — robust default.
-- ``for``: frame-of-reference fixed-width bit-packing (no exceptions):
-  each block stores a bit width w and packs values into ceil(n*w/8) bytes.
-- ``pfor``: patched frame-of-reference (PForDelta, Zukowski et al. 2006):
-  low bits packed at the 90th-percentile width, outliers patched via a
-  varint exception tail — wins on outlier-heavy gap distributions where
-  one large gap would otherwise force FOR's width up or varint's bytes.
-"""
+- bit-packed, ``[w:1B][n·w-bit little-endian body][PFOR tail]``:
+  - ``for``: frame-of-reference, w = the block's full bit width, no tail;
+  - ``pfor``: patched frame-of-reference (PForDelta, Zukowski et al. 2006):
+    w = the 90th-percentile bit length, and the outliers' high bits are
+    patched from a varint exception tail — wins on outlier-heavy gap
+    distributions where one large gap would otherwise force FOR's width
+    up or varint's bytes.
+One packer (``_pack``) writes both bit-packed codecs and one batched
+unpacker (``_unpack``) reads every bit-packed block of a decode_concat call
+in one pass. Values must be below 2^63 (w ≤ 63)."""
 
 from __future__ import annotations
+
+from itertools import compress
 
 import numpy as np
 
@@ -69,41 +75,18 @@ def varint_decode(buf: bytes) -> np.ndarray:
     return vals
 
 
-def for_encode(values: np.ndarray) -> bytes:
-    """Frame-of-reference bit-packing: 1 header byte (width w), then values
-    packed little-endian at w bits each. w=0 ⇒ all values are zero."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = v.size
-    if n == 0:
-        return b"\x00"
-    mx = int(v.max())
-    w = max(0, mx.bit_length())
-    header = np.array([w], dtype=np.uint8)
-    if w == 0:
-        return header.tobytes()
-    # expand each value into w bits (little-endian bit order), then packbits
-    shifts = np.arange(w, dtype=np.uint64)
-    bits = ((v[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.uint8)
-    packed = np.packbits(bits.reshape(-1), bitorder="little")
-    return header.tobytes() + packed.tobytes()
-
-
-def for_decode(buf: bytes, n: int) -> np.ndarray:
-    b = np.frombuffer(buf, dtype=np.uint8)
-    w = int(b[0])
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
-    if w == 0:
-        return np.zeros(n, dtype=np.uint64)
-    bits = np.unpackbits(b[1:], bitorder="little")[: n * w]
-    bits = bits.reshape(n, w).astype(np.uint64)
-    shifts = np.arange(w, dtype=np.uint64)
-    return (bits << shifts[None, :]).sum(axis=1, dtype=np.uint64)
-
-
 CODEC_VARINT = 0
 CODEC_FOR = 1
 CODEC_PFOR = 2
+
+
+def _pack(v: np.ndarray, w: int) -> bytes:
+    """The low ``w`` bits of each uint64 value, packed little-endian: bit i
+    of value j is bit j·w + i of the ceil(n·w/8)-byte body."""
+    if w == 0:
+        return b""
+    bits = np.unpackbits(v.astype("<u8").view(np.uint8), bitorder="little")
+    return np.packbits(bits.reshape(-1, 64)[:, :w], bitorder="little").tobytes()
 
 
 def pfor_encode(values: np.ndarray, w: int) -> bytes:
@@ -113,52 +96,58 @@ def pfor_encode(values: np.ndarray, w: int) -> bytes:
     exception positions (delta, first absolute), exception high bits
     (v >> w, nonzero by construction)]. The fixed-size body comes first so
     the self-delimiting varint tail needs no length prefix."""
+    if not 0 <= w <= 63:
+        raise ValueError(f"pfor_encode: width must be in 0..63, got {w}")
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = v.size
-    assert 0 <= w <= 63
-    wu = np.uint64(w)
-    if w == 0:
-        low = np.zeros(n, dtype=np.uint64)
-        high = v
-        body = b""
-    else:
-        low = v & np.uint64((1 << w) - 1)
-        high = v >> wu
-        bits = ((low[:, None] >> np.arange(w, dtype=np.uint64)[None, :])
-                & np.uint64(1)).astype(np.uint8)
-        body = np.packbits(bits.reshape(-1), bitorder="little").tobytes()
-    pos = np.flatnonzero(high > 0)
-    posd = pos.astype(np.uint64).copy()
-    if len(pos):
-        posd[1:] = (pos[1:] - pos[:-1]).astype(np.uint64)
-    tail = varint_encode(
-        np.concatenate(
-            (np.asarray([len(pos)], dtype=np.uint64), posd, high[pos])
-        )
-    )
-    return bytes([w]) + body + tail
+    high = v >> np.uint64(w)
+    pos = np.flatnonzero(high)
+    head = np.concatenate(([len(pos)], pos[:1], np.diff(pos)))
+    tail = varint_encode(np.concatenate((head.astype(np.uint64), high[pos])))
+    return bytes([w]) + _pack(v, w) + tail
 
 
-def pfor_decode(buf: bytes, n: int) -> np.ndarray:
-    w = buf[0]
-    body_len = (n * w + 7) // 8
-    if w == 0:
-        low = np.zeros(n, dtype=np.uint64)
-    else:
-        bits = np.unpackbits(
-            np.frombuffer(buf[1 : 1 + body_len], dtype=np.uint8),
-            bitorder="little",
-        )[: n * w]
-        shifts = np.arange(w, dtype=np.uint64)
-        low = (bits.reshape(n, w).astype(np.uint64) << shifts[None, :]).sum(
-            axis=1, dtype=np.uint64
-        )
-    tail = varint_decode(buf[1 + body_len :])
-    n_exc = int(tail[0])
-    if n_exc:
-        pos = np.cumsum(tail[1 : 1 + n_exc].astype(np.int64))
-        low[pos] |= tail[1 + n_exc : 1 + 2 * n_exc] << np.uint64(w)
-    return low
+def _unpack(bufs: list[bytes], ns: np.ndarray) -> np.ndarray:
+    """Decode bit-packed blocks (FOR or PFOR, every n > 0) → one
+    concatenated uint64 array, in one vectorized pass. Each value is read
+    from the 9 bytes its bits start in: the little-endian 64-bit word
+    there shifted right by the bit offset, the 9th byte shifted in above
+    it, masked to w bits — exact for w ≤ 63. The PFOR tails are joined
+    and decoded by one varint pass, and their exception highs ORed in."""
+    raw = b"".join(bufs) + bytes(9)
+    b = np.frombuffer(raw, np.uint8)
+    lens = np.fromiter(map(len, bufs), np.int64, len(bufs))
+    start = np.cumsum(lens) - lens
+    w = b[start].astype(np.int64)
+    body = (ns * w + 7) // 8
+    out_start = np.cumsum(ns) - ns
+    blk = np.repeat(np.arange(len(bufs)), ns)
+    # every value's bit offset in raw: body start + j·w
+    bit = 8 * (start + 1)[blk] + (np.arange(len(blk)) - out_start[blk]) * w[blk]
+    at, s = bit >> 3, (bit & 7).astype(np.uint64)
+    # the unaligned little-endian 64-bit word at each byte offset of raw
+    word = np.ndarray((len(raw) - 7,), "<u8", raw, 0, (1,))[at]
+    ninth = b[at + 8].astype(np.uint64) << (np.uint64(63) - s) << np.uint64(1)
+    wu = w.astype(np.uint64)
+    out = ((word >> s) | ninth) & ((np.uint64(1) << wu[blk]) - np.uint64(1))
+    tl = lens - 1 - body  # tail bytes (none for FOR)
+    t = np.flatnonzero(tl > 0)
+    if not len(t):
+        return out
+    t_at = np.cumsum(tl[t]) - tl[t]  # each tail's offset in the joined tails
+    tails = b[np.repeat(start[t] + 1 + body[t] - t_at, tl[t])
+              + np.arange(int(tl[t].sum()))]
+    vals = varint_decode(tails)
+    # each tail's first value index: the terminator bytes before it
+    first = np.concatenate(([0], np.cumsum(tails < 0x80)))[t_at]
+    n_exc = vals[first].astype(np.int64)
+    seg = np.repeat(np.cumsum(n_exc) - n_exc, n_exc)
+    e = np.repeat(first + 1, n_exc) + np.arange(len(seg)) - seg
+    d = vals[e].astype(np.int64)
+    c = np.cumsum(d)
+    pos = c - (c - d)[seg]  # block-local positions: segmented cumsum
+    eb = np.repeat(t, n_exc)
+    out[out_start[eb] + pos] |= vals[e + np.repeat(n_exc, n_exc)] << wu[eb]
+    return out
 
 
 def _pfor_width(values: np.ndarray) -> int:
@@ -196,26 +185,19 @@ def idf(N: int, df: np.ndarray | int) -> np.ndarray | float:
 
 
 def decode_concat(codecs, bufs, ns) -> np.ndarray:
-    """Decode many blocks in bulk → one concatenated uint64 array in block
-    order. All varint blocks are decoded in a single vectorized pass over
-    their concatenated bytes (LEB128 is self-delimiting); FOR blocks decode
-    per block (they carry a width header). ~100x fewer numpy calls than
-    block-at-a-time decoding on long posting lists."""
-    total = int(sum(ns))
-    out = np.empty(total, dtype=np.uint64)
-    pos = np.concatenate(([0], np.cumsum(ns))).astype(np.int64)
-    vi = [i for i, c in enumerate(codecs) if c == CODEC_VARINT and ns[i]]
-    if vi:
-        vals = varint_decode(b"".join(bufs[i] for i in vi))
-        o = 0
-        for i in vi:
-            out[pos[i] : pos[i + 1]] = vals[o : o + ns[i]]
-            o += ns[i]
-    for i, c in enumerate(codecs):
-        if ns[i] and c == CODEC_FOR:
-            out[pos[i] : pos[i + 1]] = for_decode(bufs[i], ns[i])
-        elif ns[i] and c == CODEC_PFOR:
-            out[pos[i] : pos[i + 1]] = pfor_decode(bufs[i], ns[i])
+    """Decode many blocks of any codec mix in bulk → one concatenated
+    uint64 array in block order: one varint pass over the joined varint
+    blocks (LEB128 is self-delimiting) and one _unpack pass over every
+    bit-packed (FOR or PFOR) block. Blocks with n = 0 add nothing."""
+    ns = np.asarray(ns, dtype=np.int64)
+    out = np.empty(int(ns.sum()), dtype=np.uint64)
+    vi = np.asarray(codecs) == CODEC_VARINT
+    var, packed = vi & (ns > 0), ~vi & (ns > 0)
+    if var.any():
+        out[np.repeat(var, ns)] = varint_decode_concat(compress(bufs, var))
+    if packed.any():
+        out[np.repeat(packed, ns)] = _unpack(list(compress(bufs, packed)),
+                                             ns[packed])
     return out
 
 
@@ -264,11 +246,14 @@ def encode_blocks(values: np.ndarray, starts: np.ndarray) -> tuple[list[int], li
     array, first element 0). Codec choice per block is analytic (predicted
     varint size vs FOR size — nothing encoded twice); varint blocks are
     produced by ONE whole-group encode pass sliced at block byte offsets.
-    Returns (codecs, buffers) per block."""
+    Returns (codecs, buffers) per block. Values must be below 2^63: a
+    bit-packed block's width byte and _unpack's window assume w ≤ 63."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
     n = v.size
     if n == 0:
         return [], []
+    if int(v.max()) >> 63:
+        raise ValueError("encode_blocks: values must be below 2**63")
     starts = np.asarray(starts, dtype=np.int64)
     ends = np.append(starts[1:], n)
     sizes = varint_sizes(v)
@@ -333,8 +318,10 @@ def encode_blocks(values: np.ndarray, starts: np.ndarray) -> tuple[list[int], li
             codecs.append(CODEC_PFOR)
             bufs.append(pfor_encode(v[starts[i]:ends[i]], int(w_blk[i])))
         elif use_for[i]:
+            # FOR: the bit-packed layout at the block's full width, no tail
             codecs.append(CODEC_FOR)
-            bufs.append(for_encode(v[starts[i]:ends[i]]))
+            bufs.append(bytes([width[i]]) + _pack(v[starts[i]:ends[i]],
+                                                  int(width[i])))
         else:
             codecs.append(CODEC_VARINT)
             bufs.append(full[csum[starts[i]]:csum[ends[i]]])

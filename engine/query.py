@@ -195,21 +195,25 @@ def _local_term_stats(handle: IndexHandle, terms: list[str]) -> dict:
     }
 
 
-def _decode_blocks(cols: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def _decode_blocks(
+    cols: dict, fields: tuple[str, ...] = ("ids", "tfs", "dls"),
+) -> list[np.ndarray]:
     """The query-time postings decoder: blocks as postings columns
-    (column name → per-block values) → concatenated int64 (doc_ids, tfs,
-    dls), one batched decode pass per column. Each block's ids are
-    delta-coded from an absolute first id, so any set of blocks, of any
-    terms, decodes on its own."""
-    ns = cols["n"]
-    gaps = decode_concat(cols["codec_ids"], cols["ids_enc"], ns)
-    tfs = decode_concat(cols["codec_tfs"], cols["tfs_enc"], ns)
-    dls = decode_concat(cols["codec_dls"], cols["dls_enc"], ns)
-    return (
-        delta_decode_blocks(gaps, ns).astype(np.int64),
-        tfs.astype(np.int64),
-        dls.astype(np.int64),
+    (column name → per-block values) → one concatenated int64 array per
+    field, doc ids first, from one decode_concat call over the fields'
+    blocks: a call's cost is mostly fixed, and the WAND sweep decodes a
+    few blocks per chunk. Each block's ids are delta-coded from an
+    absolute first id, so any set of blocks, of any terms, decodes on its
+    own."""
+    ns = np.asarray(cols["n"], np.int64)
+    vals = decode_concat(
+        [c for f in fields for c in cols["codec_" + f]],
+        [b for f in fields for b in cols[f + "_enc"]],
+        np.tile(ns, len(fields)),
     )
+    out = np.split(vals, len(fields))
+    out[0] = delta_decode_blocks(out[0], ns)
+    return [x.astype(np.int64) for x in out]
 
 
 def _decode_scored(
@@ -243,8 +247,9 @@ def _phrase_mask(
     if not len(cand):
         return np.zeros(0, bool)
     sub = {c: [cols[c][i] for i in rows.tolist()]
-           for c in (*_SCORE_COLS, "pos_enc")}
-    ids, tfs, _ = _decode_blocks(sub)
+           for c in ("term", "n", "codec_ids", "ids_enc", "codec_tfs",
+                     "tfs_enc", "pos_enc")}
+    ids, tfs = _decode_blocks(sub, ("ids", "tfs"))
     pos = delta_decode_blocks(varint_decode_concat(sub["pos_enc"]), tfs)
     at = np.minimum(np.searchsorted(cand, ids), len(cand) - 1)
     hit = cand[at] == ids
@@ -510,21 +515,32 @@ def _wand_shards(
     """The task of the WAND dispatch, over batches of shard ids (the `id`
     column of spark.range(n_groups)): shard s owns doc ids [s·width,
     (s+1)·width), and the last shard every id above too — skewed id
-    buckets can exceed n_groups·width. Each shard reads the blocks that
-    overlap its range (_read_blocks) and, unless it has none, yields
-    kernel(blocks, lo, hi) — a _wand_shard_scorer kernel. The closure
-    ships the plain pyarrow dataset, never the index handle, whose
+    buckets can exceed n_groups·width. The task reads the blocks that
+    overlap its shards' whole range once (_read_blocks); each shard
+    takes the rows that overlap its own range and, unless it has none,
+    yields kernel(blocks, lo, hi) — a _wand_shard_scorer kernel. The
+    closure ships the plain pyarrow dataset, never the index handle, whose
     __dict__ holds Spark DataFrames."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            for s in batch["id"].tolist():
-                lo = s * width
-                hi = lo + width if s < n_groups - 1 else None
-                pdf = _read_blocks(dset, buckets, terms, columns, lo,
-                                   hi).to_pandas()
-                if len(pdf):
-                    yield kernel(pdf, lo, hi)
+        shards = [s for batch in batches for s in batch["id"].tolist()]
+        if not shards:
+            return
+        unbounded = max(shards) == n_groups - 1
+        pdf = _read_blocks(
+            dset, buckets, terms, columns, min(shards) * width,
+            None if unbounded else (max(shards) + 1) * width,
+        ).to_pandas()
+        first = pdf["first_doc_id"].to_numpy()
+        last = pdf["last_doc_id"].to_numpy()
+        for s in shards:
+            lo = s * width
+            hi = lo + width if s < n_groups - 1 else None
+            m = last >= lo
+            if hi is not None:
+                m &= first < hi
+            if m.any():
+                yield kernel(pdf[m], lo, hi)
 
     return fn
 

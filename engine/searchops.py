@@ -218,7 +218,6 @@ def index_postings_blocks(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from engine.build import POSTINGS_SCHEMA  # noqa: F401
     from engine.codec import decode_concat
 
     h = get_index(spark, sf_dir)

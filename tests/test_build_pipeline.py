@@ -11,7 +11,7 @@ import tempfile
 import pyspark.sql.functions as F
 import pytest
 
-from engine.build import assign_doc_ids, build_index, latest_crawl, open_index
+from engine.build import build_index, latest_crawl, open_index
 from engine.query import query_topk
 from engine.webpages import load_webpages, with_recrawl
 from tests.conftest import SF_DIR_001
@@ -29,14 +29,16 @@ def test_latest_crawl_dedup(spark):
     assert kept and all(r["text"].endswith(" dup") for r in kept)
 
 
-def test_doc_id_assignment_matches_independent_scheme(spark, index_cfg):
-    wp = load_webpages(spark, SF_DIR_001)
-    got = {
-        r["url"]: r["doc_id"]
-        for r in assign_doc_ids(wp, index_cfg).select("url", "doc_id").collect()
-    }
-    want = assign_ids(list(got), index_cfg.n_build_partitions)
-    assert got == want
+def test_doc_id_assignment_matches_independent_scheme(spark, built_index,
+                                                     index_cfg):
+    """The fused SPIMI pass's doc ids, as the docs table stores them, are
+    the independent scheme's over every url of the corpus."""
+    docs = spark.read.parquet(built_index.docs_path).select("url", "doc_id")
+    got = {r["url"]: r["doc_id"] for r in docs.collect()}
+    urls = [r["url"] for r in
+            load_webpages(spark, SF_DIR_001).select("url").collect()]
+    assert sorted(got) == sorted(set(urls))
+    assert got == assign_ids(list(got), index_cfg.n_build_partitions)
 
 
 def test_extraction_invariant_on_fixture(spark):

@@ -343,3 +343,85 @@ def test_wand_url_tiebreak_contract(tmp_path_factory, corpus, qterms,
     # a shard that read no block holds no matching doc
     seen = {lo for lo, _ in shards}
     assert all(d // range_size * range_size in seen for d, _ in want)
+
+
+def test_decode_is_one_decode_concat_call(monkeypatch):
+    """_decode_blocks decodes ids, tfs and dls of any block set with one
+    decode_concat call over the three columns' blocks, and the phrase
+    predicate decodes only ids and tfs, in one call too; the values are
+    the ones each column decodes to on its own."""
+    import engine.query as q
+    from engine.codec import decode_concat, delta_decode_blocks
+
+    corpus = [[i % 6, (i * 7) % 5, i % 2, 3] * (1 + i % 3) for i in range(30)]
+    blocks, *_ = _build_blocks(corpus)
+    cols = blocks.to_dict("list")
+    calls = []
+
+    def spy(codecs, bufs, ns):
+        calls.append(len(codecs))
+        return decode_concat(codecs, bufs, ns)
+
+    monkeypatch.setattr(q, "decode_concat", spy)
+    ids, tfs, dls = q._decode_blocks(cols)
+    assert calls == [3 * len(blocks)]
+    ns = cols["n"]
+    assert ids.tolist() == delta_decode_blocks(
+        decode_concat(cols["codec_ids"], cols["ids_enc"], ns), ns).tolist()
+    assert tfs.tolist() == decode_concat(
+        cols["codec_tfs"], cols["tfs_enc"], ns).tolist()
+    assert dls.tolist() == decode_concat(
+        cols["codec_dls"], cols["dls_enc"], ns).tolist()
+
+    calls.clear()
+    q._phrase_mask(cols, np.arange(len(blocks)), ["0", "3"],
+                   np.unique(ids))
+    assert calls == [2 * len(blocks)]
+
+
+def test_task_reads_its_packed_range_once(tmp_path, monkeypatch):
+    """A WAND task that packs several shards reads their whole doc range
+    once, with its shard ids spread over several batches, and gives each
+    shard exactly the blocks a read of that shard's own range returns;
+    the task holding the last shard reads every id above too."""
+    import engine.query as q
+
+    corpus = [[i % 6, (i * 5) % 4, 0] for i in range(40)]
+    blocks, *_ = _build_blocks(corpus)
+    dset = _dataset(blocks, tmp_path)
+    sterms = ["0", "1", "3"]
+    buckets = sorted({zlib.crc32(t.encode("utf-8")) % N_BUCKETS
+                      for t in sterms})
+    reads = []
+    read_blocks = q._read_blocks
+
+    def counting(*args):
+        reads.append(args[4:])
+        return read_blocks(*args)
+
+    def key(pdf):
+        return sorted(zip(pdf["term"], pdf["first_doc_id"]))
+
+    got = {}
+
+    def kernel(pdf, lo, hi):
+        got[lo, hi] = key(pdf)
+        return pd.DataFrame({"doc_id": [], "score": []})
+
+    monkeypatch.setattr(q, "_read_blocks", counting)
+    n_groups, width = 8, 4
+    task = _wand_shards(dset, buckets, sterms, _WAND_COLS, kernel, n_groups,
+                        width)
+    for ids in ([2, 3, 4], [6, 7]):
+        reads.clear()
+        list(task(iter([pd.DataFrame({"id": ids[:1]}),
+                        pd.DataFrame({"id": ids[1:]})])))
+        assert len(reads) == 1
+        last = ids[-1] == n_groups - 1
+        assert reads[0] == (ids[0] * width,
+                            None if last else (ids[-1] + 1) * width)
+    assert sorted(got) == [(s * width, None if s == n_groups - 1
+                            else (s + 1) * width) for s in (2, 3, 4, 6, 7)]
+    for (lo, hi), rows in got.items():
+        assert rows == key(read_blocks(dset, buckets, sterms, _WAND_COLS, lo,
+                                       hi).to_pandas())
