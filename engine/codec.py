@@ -150,19 +150,28 @@ def _unpack(bufs: list[bytes], ns: np.ndarray) -> np.ndarray:
     return out
 
 
+def _bit_lengths(v: np.ndarray) -> np.ndarray:
+    """Exact per-value bit lengths of a uint64 array (0 for 0). float64
+    log2 can be one off either way for values above 2^53 (the cast rounds
+    to the neighbouring power of two), so the estimate is corrected both
+    ways with integer shifts."""
+    bl = np.zeros(v.size, dtype=np.int64)
+    nz = v > 0
+    if nz.any():
+        x = v[nz]
+        b = np.floor(np.log2(x.astype(np.float64))).astype(np.int64) + 1
+        b += (x >> b.astype(np.uint64)) > 0
+        b -= (x >> (b - 1).astype(np.uint64)) == 0
+        bl[nz] = b
+    return bl
+
+
 def _pfor_width(values: np.ndarray) -> int:
     """Candidate patch width of one block: the 90th-percentile bit length
     (standard PForDelta heuristic — ~10% exceptions max). encode_blocks
     computes the same width for every block at once; this per-block form
     is the reference it is checked against."""
-    bl = np.zeros(values.size, dtype=np.int64)
-    nz = values > 0
-    if nz.any():
-        bl[nz] = (
-            np.floor(np.log2(values[nz].astype(np.float64))).astype(np.int64)
-            + 1
-        )
-        bl[nz] += (values[nz] >> bl[nz].astype(np.uint64)) > 0
+    bl = _bit_lengths(np.ascontiguousarray(values, dtype=np.uint64))
     return int(min(63, np.percentile(bl, 90, method="lower")))
 
 
@@ -260,12 +269,7 @@ def encode_blocks(values: np.ndarray, starts: np.ndarray) -> tuple[list[int], li
     csum = np.concatenate(([0], np.cumsum(sizes)))
     vi_block = csum[ends] - csum[starts]  # varint bytes per block
     lens = ends - starts
-    # per-value bit lengths (exact, float-log2 with power-of-two fixup)
-    bl = np.zeros(n, dtype=np.int64)
-    nzv = v > 0
-    if nzv.any():
-        bl[nzv] = np.floor(np.log2(v[nzv].astype(np.float64))).astype(np.int64) + 1
-        bl[nzv] += (v[nzv] >> bl[nzv].astype(np.uint64)) > 0
+    bl = _bit_lengths(v)
     # FOR bytes per block: 1 header + ceil(len * bitwidth(max) / 8)
     width = np.maximum.reduceat(bl, starts)
     fo_block = 1 + (lens * width + 7) // 8

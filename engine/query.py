@@ -731,7 +731,9 @@ def _topk(
 
 # auto-mode crossover: the driver-local path decodes ~1M postings/s
 # single-threaded (incl. the pyarrow read), while a distributed WAND query
-# costs at least ~0.6 s — measured crossover sits near 500k postings
+# costs at least ~0.13 s (bench.py sf0.1 q_wand leaves 0.13-0.27 s, p50
+# 158 ms, local[4] on a 4-core VM). The 500k cut was measured when that
+# floor was ~0.6 s; the crossover at the lower floor is not re-derived yet.
 LOCAL_MAX_POSTINGS = 500_000
 
 

@@ -4,7 +4,7 @@ adversarial gap distributions)."""
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from engine.build import _row_deltas
@@ -209,6 +209,9 @@ class TestExactCodecChoice:
         ),
         st.integers(min_value=1, max_value=64),
     )
+    # 2**54 - 45 rounds up to 2**54 as a float64: its bit length (54) must
+    # not be read off float log2 as 55
+    @example(vals=[2**49, 2**54 - 45], bs=2)
     @settings(deadline=None, max_examples=200)
     def test_chosen_codec_is_argmin_of_actual_sizes(self, vals, bs):
         import numpy as np
