@@ -46,9 +46,9 @@ def _noop(df) -> float:
 
 def mode_noop() -> None:
     from engine.build import (
-        DOC_PSEUDO_TERM,
         PARTIALS_SCHEMA,
         _fused_spimi,
+        _spimi_input,
         build_index,
     )
     from engine.config import IndexConfig
@@ -64,19 +64,7 @@ def mode_noop() -> None:
     out: dict = {"mode": "noop", "sf": sf_dir, "n_input_rows": n}
 
     spark.sparkContext.setJobDescription("noop: spimi partials")
-    P = cfg.n_build_partitions
-    pre = wp.withColumn(
-        "pid", (F.crc32(F.encode(F.col("url"), "utf-8")) % P).cast("int")
-    ).withColumn("html", F.when(F.col("text").isNull(), F.col("html")))
-    spimi_input = (
-        pre.select("pid", "url", "text", "warc_ts", "html", "lang")
-        .repartition(P, "pid")
-        .sortWithinPartitions(
-            F.asc("url"), F.desc("warc_ts"),
-            F.desc(F.length("text")), F.desc(F.md5("text")),
-        )
-    )
-    partials = spimi_input.mapInPandas(
+    partials = _spimi_input(wp, cfg).mapInPandas(
         _fused_spimi(cfg, True), schema=PARTIALS_SCHEMA
     )
     out["spimi_partials_noop_sec"] = _noop(partials)

@@ -13,8 +13,10 @@ Pipeline (all DataFrame-declared; Python boundaries are Arrow-batched):
     tokenize+extract via Arrow kernels, per-partition term→postings grouping,
     emits TRANSIT-ENCODED partials (one row per term per partition, postings
     as varint-delta binary — shuffle row count is O(distinct terms ×
-    partitions) and shuffle bytes ~2-4 B/posting instead of 16).
-4.  stats: docs (doc_id,url,dl), N, avgdl, terms (df, cf) — partial+final agg.
+    partitions) and shuffle bytes ~2-4 B/posting instead of 16), plus one
+    docmap row per doc, yielded as soon as the doc's batch is tokenized.
+4.  stats: docs (doc_id,url,dl) selected from the docmap rows, N, avgdl,
+    terms (df, cf) — partial+final agg.
 5.  salted repartition-by-term merge (BASELINE.json:6): hot terms
     (df ≥ threshold) are split by doc-range salt = doc_id // range_size
     *before* the term shuffle, bounding per-group memory under stopword-grade
@@ -64,8 +66,9 @@ from engine.codec import (
 from engine.config import IndexConfig
 from engine.publish import atomic_publish, read_manifest
 
-# Pseudo-term row carrying (doc_id, dl) pairs per build partition so doc
-# lengths ride the same SPIMI pass (empty string is never a tokenizer output).
+# Pseudo term of the docmap rows: one partial row per doc carries its
+# (doc_id, dl, url, lang, fp) so doc lengths ride the same SPIMI pass (empty
+# string is never a tokenizer output).
 DOC_PSEUDO_TERM = ""
 
 # Term partials travel TRANSIT-ENCODED (varint bytes, ~4-6x smaller than
@@ -76,9 +79,10 @@ DOC_PSEUDO_TERM = ""
 # the doc's tf is its count) — the same layout as the postings blocks'
 # pos_enc column, so salt split and merge cut it without a re-delta. The
 # at-rest block codec in the merge stage is unchanged — index bytes stay
-# identical. Pseudo rows (term="") carry the
-# per-pid docmap as plain arrays (they are exploded JVM-side for the docs
-# table and are a tiny fraction of the volume).
+# identical. Every column is a scalar: a posting row (one per term per pid
+# per SPIMI run) leaves the docmap columns null, a docmap row (term="", one
+# per doc, n = tf_sum = 0) leaves the transit streams null, and the docs
+# table is a plain select of the docmap rows.
 PARTIALS_SCHEMA = T.StructType(
     [
         T.StructField("pid", T.IntegerType()),
@@ -89,14 +93,14 @@ PARTIALS_SCHEMA = T.StructType(
         T.StructField("tfs_enc", T.BinaryType()),
         T.StructField("dls_enc", T.BinaryType()),
         T.StructField("pos_enc", T.BinaryType()),
-        # docmap payload, set only on the pseudo row (term = "")
-        T.StructField("doc_ids", T.ArrayType(T.LongType())),
-        T.StructField("dls", T.ArrayType(T.IntegerType())),
-        T.StructField("urls", T.ArrayType(T.StringType())),
-        T.StructField("langs", T.ArrayType(T.StringType())),
-        # per-doc extracted-text fingerprint (vectorized 64-bit hash) —
-        # backs snapshot-diff change detection (docs_changed_between)
-        T.StructField("fps", T.ArrayType(T.LongType())),
+        # docmap columns, set only on the docmap rows (term = "")
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("dl", T.IntegerType()),
+        T.StructField("url", T.StringType()),
+        T.StructField("lang", T.StringType()),
+        # extracted-text fingerprint (vectorized 64-bit hash) — backs
+        # snapshot-diff change detection (docs_changed_between)
+        T.StructField("fp", T.LongType()),
     ]
 )
 
@@ -164,6 +168,67 @@ def _term_bucket(terms: np.ndarray, n_buckets: int) -> np.ndarray:
     )
 
 
+def _partials_frame(**cols) -> pd.DataFrame:
+    """One frame of partial rows in PARTIALS_SCHEMA's column order. Every
+    column a row kind does not use (a posting row's docmap columns, a
+    docmap row's transit streams) is null."""
+    return pd.DataFrame({f: cols.get(f) for f in PARTIALS_SCHEMA.fieldNames()})
+
+
+def _posting_partials(
+    terms: np.ndarray, codes: np.ndarray, docs: np.ndarray, dls: np.ndarray,
+    pids: np.ndarray, pos: np.ndarray,
+) -> pd.DataFrame:
+    """The SPIMI run of an accumulated token stream (one entry per token:
+    term code into `terms`, doc id, doc length, pid, position in the doc):
+    one partial row per (pid, term), its postings doc-sorted and transit-
+    encoded. Every row is a self-contained delta stream with an absolute
+    first value, and the merge stage lexsorts each (term, salt) group's
+    postings before block-cutting, so the rows of several runs of one
+    (term, pid) merge exactly like partials from distinct pids."""
+    # ONE stable argsort on a combined (pid, code) key: doc_ids are
+    # already ascending within each pid (rows arrive url-sorted), so
+    # stability gives doc-sorted runs for free — ~3x cheaper than a
+    # 3-key lexsort, which dominated this stage at 32 workers.
+    # Stability also keeps each posting's positions ascending.
+    V = np.int64(len(terms))
+    key = pids.astype(np.int64) * V + codes
+    order = np.argsort(key, kind="stable")
+    key_s = key[order]
+    docs = docs[order]
+    dls = dls[order]
+    pos = pos[order]
+    # run boundaries at (key, doc) change → tf per posting
+    change = np.empty(len(key_s), dtype=bool)
+    change[0] = True
+    change[1:] = (key_s[1:] != key_s[:-1]) | (docs[1:] != docs[:-1])
+    starts = np.flatnonzero(change)
+    tf = np.diff(np.append(starts, len(key_s))).astype(np.int32)
+    p_doc = docs[starts]
+    p_dl = dls[starts].astype(np.int32)
+    p_key = key_s[starts]
+    # row boundaries at (pid, code) change
+    rchange = np.empty(len(starts), dtype=bool)
+    rchange[0] = True
+    rchange[1:] = p_key[1:] != p_key[:-1]
+    rstarts = np.flatnonzero(rchange)
+    r_key = p_key[rstarts]
+    return _partials_frame(
+        pid=(r_key // V).astype(np.int32),
+        term=terms[r_key % V],
+        n=np.diff(np.append(rstarts, len(starts))),
+        tf_sum=np.add.reduceat(tf.astype(np.int64), rstarts),
+        # transit encode (one vectorized pass per stream): doc ids as
+        # within-row deltas with an absolute first value
+        ids_enc=varint_encode_rows(_row_deltas(p_doc, rstarts), rstarts),
+        tfs_enc=varint_encode_rows(tf.astype(np.uint64), rstarts),
+        dls_enc=varint_encode_rows(p_dl.astype(np.uint64), rstarts),
+        # positions: within-posting deltas, absolute at each posting
+        # start; a row's buffer is its postings' streams back to back
+        pos_enc=varint_encode_rows(_row_deltas(pos, starts), starts[rstarts]),
+    )
+
+
 def _fused_spimi(cfg: IndexConfig, dedup: bool):
     """mapInPandas body fusing three stages into the single corpus shuffle
     (repartition by pid + sortWithinPartitions(url, warc_ts desc, len desc)):
@@ -181,149 +246,39 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
        groupby — that is memory-bandwidth-bound at high core counts.
 
     A Spark partition can hold several pids (hash distribution is not
-    bijective) — all state is per pid. The pseudo row (term="") carries the
-    docmap (doc_id, dl, url, lang) so stats need no extra corpus pass.
+    bijective); the doc-id rank counter is one slot per pid. A doc's docmap
+    row (term="", with doc_id, dl, url, lang and text fingerprint) is final
+    once its batch is tokenized, so each batch's docmap rows are yielded
+    before the next batch is read and stats need no extra corpus pass. Only
+    the posting accumulators live across batches: they are drained at the
+    end of the partition and, with `spimi_flush_mb` set, whenever they
+    exceed that budget (classic SPIMI spill-to-run, bounding task memory
+    independent of partition size). Flushed and unflushed builds are
+    byte-identical: doc ids keep ascending across flushes of a pid (the
+    rank counter carries) and the merge unions a (term, pid)'s runs.
     """
     P = cfg.n_build_partitions
+    budget_cells = (  # accumulated token cells ≈ 24 B each across streams
+        max(1, int(cfg.spimi_flush_mb * (1 << 20)) // 24)
+        if cfg.spimi_flush_mb
+        else None
+    )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vocab: dict[str, int] = {}
-        vocab_list: list[str] = []
-        acc_codes: list[np.ndarray] = []
-        acc_docs: list[np.ndarray] = []
-        acc_dls: list[np.ndarray] = []
-        acc_pids: list[np.ndarray] = []
-        acc_pos: list[np.ndarray] = []
-        doc_ids_all: dict[int, list[np.ndarray]] = {}
-        dls_all: dict[int, list[np.ndarray]] = {}
-        urls_all: dict[int, list[np.ndarray]] = {}
-        langs_all: dict[int, list[np.ndarray]] = {}
-        fps_all: dict[int, list[np.ndarray]] = {}
-        rank_ctr: dict[int, int] = {}
+        vocab: dict[str, int] = {}  # term → code, codes in insertion order
+        acc: list[tuple[np.ndarray, ...]] = []  # per batch (code, doc, dl, pid, pos)
+        n_cells = 0
+        rank_ctr = np.zeros(P, np.int64)  # docs seen so far per pid
         last_url: str | None = None
-        n_cells = 0  # accumulated token cells ≈ 24 B each across streams
-        n_dcells = 0  # docmap entries ≈ 32 B/doc, counted as 2 cells each
-        budget_cells = (
-            max(1, int(cfg.spimi_flush_mb * (1 << 20)) // 24)
-            if cfg.spimi_flush_mb
-            else None
-        )
-        _ROW_COLS = (
-            "pid", "term", "n", "tf_sum", "ids_enc", "tfs_enc", "dls_enc",
-            "pos_enc", "doc_ids", "dls", "urls", "langs", "fps",
-        )
 
-        def _drain_postings(out_rows: dict) -> None:
-            """Emit the accumulated posting partials into out_rows and reset
-            the posting accumulators (docmap/rank/dedup state is untouched).
-            Called at end-of-partition and mid-stream whenever the configured
-            spimi_flush_mb budget is exceeded (classic SPIMI spill-to-run,
-            bounding task memory independent of partition size). Flushed and
-            unflushed builds are byte-identical: doc ids keep ascending
-            across flushes of a pid (rank_ctr carries), every flushed row is
-            a self-contained delta stream with an absolute first value, and
-            the merge stage lexsorts each (term, salt) group's postings
-            before block-cutting, so extra partial rows per (term, pid)
-            merge exactly like partials from distinct pids."""
-            nonlocal vocab, vocab_list, acc_codes, acc_docs, acc_dls
-            nonlocal acc_pids, acc_pos, n_cells
-            if not acc_codes:
-                return
-            codes = np.concatenate(acc_codes)
-            docs_f = np.concatenate(acc_docs)
-            dls_f = np.concatenate(acc_dls)
-            pids_f = np.concatenate(acc_pids)
-            # ONE stable argsort on a combined (pid, code) key: doc_ids are
-            # already ascending within each pid (rows arrive url-sorted), so
-            # stability gives doc-sorted runs for free — ~3x cheaper than a
-            # 3-key lexsort, which dominated this stage at 32 workers.
-            # Stability also keeps each posting's positions ascending.
-            V = np.int64(len(vocab_list))
-            key = pids_f.astype(np.int64) * V + codes
-            order = np.argsort(key, kind="stable")
-            key_s = key[order]
-            docs_f = docs_f[order]
-            dls_f = dls_f[order]
-            pos_f = np.concatenate(acc_pos)[order]
-            # run boundaries at (key, doc) change → tf per posting
-            change = np.empty(len(key_s), dtype=bool)
-            change[0] = True
-            change[1:] = (key_s[1:] != key_s[:-1]) | (docs_f[1:] != docs_f[:-1])
-            starts = np.flatnonzero(change)
-            tf = np.diff(np.append(starts, len(key_s))).astype(np.int32)
-            p_doc = docs_f[starts]
-            p_dl = dls_f[starts].astype(np.int32)
-            p_key = key_s[starts]
-            p_code = (p_key % V).astype(np.int64)
-            p_pid = (p_key // V).astype(np.int64)
-            # row boundaries at (pid, code) change
-            rchange = np.empty(len(starts), dtype=bool)
-            rchange[0] = True
-            rchange[1:] = p_key[1:] != p_key[:-1]
-            rstarts = np.flatnonzero(rchange)
-            # transit encode (one vectorized pass per stream): doc ids as
-            # within-row deltas with an absolute first value
-            ids_bufs = varint_encode_rows(_row_deltas(p_doc, rstarts), rstarts)
-            tfs_bufs = varint_encode_rows(tf.astype(np.uint64), rstarts)
-            dls_bufs = varint_encode_rows(p_dl.astype(np.uint64), rstarts)
-            # positions: within-posting deltas, absolute at each posting
-            # start; a row's buffer is its postings' streams back to back
-            pos_bufs = varint_encode_rows(
-                _row_deltas(pos_f, starts), starts[rstarts]
+        def drain() -> pd.DataFrame:
+            nonlocal vocab, acc, n_cells
+            out = _posting_partials(
+                np.asarray(list(vocab), dtype=object),
+                *map(np.concatenate, zip(*acc)),
             )
-            row_n = np.diff(np.append(rstarts, len(starts)))
-            row_tf_sum = np.add.reduceat(tf.astype(np.int64), rstarts)
-            out_rows["pid"].extend(p_pid[rstarts].tolist())
-            out_rows["term"].extend(
-                vocab_list[int(c)] for c in p_code[rstarts]
-            )
-            out_rows["n"].extend(row_n.tolist())
-            out_rows["tf_sum"].extend(row_tf_sum.tolist())
-            out_rows["ids_enc"].extend(ids_bufs)
-            out_rows["tfs_enc"].extend(tfs_bufs)
-            out_rows["dls_enc"].extend(dls_bufs)
-            out_rows["pos_enc"].extend(pos_bufs)
-            nrows_t = len(rstarts)
-            for col in ("doc_ids", "dls", "urls", "langs", "fps"):
-                out_rows[col].extend([None] * nrows_t)
-            vocab = {}
-            vocab_list = []
-            acc_codes, acc_docs, acc_dls, acc_pids, acc_pos = [], [], [], [], []
-            n_cells = 0
-
-        def _drain_docmap(out_rows: dict) -> None:
-            """Emit the accumulated per-pid docmap arrays as pseudo rows
-            (term="") and reset them — called at end-of-partition and at
-            every budget flush, so the flush contract bounds BOTH
-            accumulator families (r4 verdict "What's wrong #4"): a
-            partition of pathologically many tiny docs can no longer grow
-            the docmap unbounded. Multiple pseudo rows per pid are exact:
-            the docs stage explodes each row independently (no groupBy),
-            doc ids keep ascending across flushes (rank_ctr carries), and
-            the docs table is keyed by doc_id — row multiplicity per pid
-            never matters downstream."""
-            nonlocal doc_ids_all, dls_all, urls_all, langs_all, fps_all
-            nonlocal n_dcells
-            for pid, ids in doc_ids_all.items():
-                out_rows["pid"].append(pid)
-                out_rows["term"].append(DOC_PSEUDO_TERM)
-                out_rows["n"].append(0)
-                out_rows["tf_sum"].append(0)
-                out_rows["ids_enc"].append(None)
-                out_rows["tfs_enc"].append(None)
-                out_rows["dls_enc"].append(None)
-                out_rows["pos_enc"].append(None)
-                out_rows["doc_ids"].append(np.concatenate(ids))
-                out_rows["dls"].append(
-                    np.concatenate(dls_all[pid]).astype(np.int32)
-                )
-                out_rows["urls"].append(np.concatenate(urls_all[pid]))
-                out_rows["langs"].append(np.concatenate(langs_all[pid]))
-                out_rows["fps"].append(np.concatenate(fps_all[pid]))
-            doc_ids_all, dls_all, urls_all, langs_all, fps_all = (
-                {}, {}, {}, {}, {}
-            )
-            n_dcells = 0
+            vocab, acc, n_cells = {}, [], 0
+            return out
 
         for pdf in batches:
             if len(pdf) == 0:
@@ -340,11 +295,8 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
             pids = pdf["pid"].to_numpy(dtype=np.int64)
             # per-pid rank with cross-batch carry
             ranks = pd.Series(pids).groupby(pids).cumcount().to_numpy(np.int64)
-            for pid in np.unique(pids):
-                pid = int(pid)
-                sel = pids == pid
-                ranks[sel] += rank_ctr.get(pid, 0)
-                rank_ctr[pid] = int(ranks[sel][-1]) + 1
+            ranks += rank_ctr[pids]
+            rank_ctr += np.bincount(pids, minlength=P)
             doc_ids = ranks * P + pids
             text = extract_series(pdf["url"], pdf.get("html"), pdf["text"])
             # Arrow-kernel tokenize + dictionary-encode: the token stream
@@ -354,79 +306,49 @@ def _fused_spimi(cfg: IndexConfig, dedup: bool):
             if dls.sum():
                 remap = np.empty(len(buniq), dtype=np.int64)
                 for j, tm in enumerate(buniq):
-                    code = vocab.get(tm)
-                    if code is None:
-                        code = len(vocab_list)
-                        vocab[tm] = code
-                        vocab_list.append(tm)
-                    remap[j] = code
-                acc_codes.append(remap[bcodes].astype(np.int32))
-                acc_docs.append(np.repeat(doc_ids, dls))
-                acc_pids.append(np.repeat(pids.astype(np.int32), dls))
-                acc_dls.append(np.repeat(dls.astype(np.int32), dls))
-                # token position within its doc
-                acc_pos.append(
+                    remap[j] = vocab.setdefault(tm, len(vocab))
+                acc.append((
+                    remap[bcodes].astype(np.int32),
+                    np.repeat(doc_ids, dls),
+                    np.repeat(dls.astype(np.int32), dls),
+                    np.repeat(pids.astype(np.int32), dls),
+                    # token position within its doc
                     np.arange(len(bcodes), dtype=np.int32)
-                    - np.repeat((np.cumsum(dls) - dls).astype(np.int32), dls)
-                )
+                    - np.repeat((np.cumsum(dls) - dls).astype(np.int32), dls),
+                ))
                 n_cells += int(dls.sum())
-            url_arr = pdf["url"].to_numpy(dtype=object)
-            lang_arr = (
-                pdf["lang"].to_numpy(dtype=object)
-                if "lang" in pdf.columns
-                else np.full(len(pdf), None, dtype=object)
-            )
-            # vectorized 64-bit content fingerprint of the extracted text
-            # (deterministic: fixed default hash key) — docmap lineage column
-            fp_arr = (
-                pd.util.hash_pandas_object(text, index=False)
+            yield _partials_frame(
+                pid=pids.astype(np.int32),
+                term=DOC_PSEUDO_TERM,
+                n=0,
+                tf_sum=0,
+                doc_id=doc_ids,
+                dl=dls.astype(np.int32),
+                url=pdf["url"].to_numpy(dtype=object),
+                lang=pdf["lang"].to_numpy(dtype=object) if "lang" in pdf else None,
+                # vectorized 64-bit content fingerprint of the extracted
+                # text (deterministic: fixed default hash key)
+                fp=pd.util.hash_pandas_object(text, index=False)
                 .to_numpy(np.uint64)
-                .view(np.int64)
+                .view(np.int64),
             )
-            for pid in np.unique(pids):
-                pid = int(pid)
-                sel_doc = pids == pid
-                doc_ids_all.setdefault(pid, []).append(doc_ids[sel_doc])
-                dls_all.setdefault(pid, []).append(dls[sel_doc])
-                urls_all.setdefault(pid, []).append(url_arr[sel_doc])
-                langs_all.setdefault(pid, []).append(lang_arr[sel_doc])
-                fps_all.setdefault(pid, []).append(fp_arr[sel_doc])
-            n_dcells += 2 * len(pdf)
-            if budget_cells is not None and (
-                n_cells + n_dcells >= budget_cells
-            ):
-                flushed: dict[str, list] = {c: [] for c in _ROW_COLS}
-                _drain_postings(flushed)
-                _drain_docmap(flushed)
-                if flushed["pid"]:
-                    yield pd.DataFrame(flushed)
-        out_rows: dict[str, list] = {c: [] for c in _ROW_COLS}
-        _drain_postings(out_rows)
-        _drain_docmap(out_rows)
-        if out_rows["pid"]:  # empty partitions yield nothing (pandas gives
-            yield pd.DataFrame(out_rows)  # empty cols float64 → Arrow error
+            if budget_cells is not None and n_cells >= budget_cells:
+                yield drain()
+        if acc:
+            yield drain()
 
     return fn
 
 
-def _salt_split(range_size: int, hot_df: dict[str, int]):
+def _salt_split(range_size: int):
     """Narrow map: split hot-term partials at doc-range boundaries so the
     term shuffle is salted (B7). Its input is the hot rows only (cold
-    partials never cross the Python boundary, see the caller); each row's
-    df comes from the closure-shipped `hot_df` dict ({term: df}, only terms
-    with df >= threshold): the hot set is provably tiny (df >= N/n_doc_ranges
-    bounds it to ~n_doc_ranges*avgdl terms — thousands at any corpus size),
-    so shipping it beats a full-vocabulary `df` join, which would force the
-    ENTIRE transit-encoded partials payload through an extra exchange
-    (guide §2.3/§2.4: the df values ride a few KB of closure instead of
-    re-shuffling the heavy rows; cold groups recover df exactly as their
-    own merged posting count)."""
+    partials never cross the Python boundary, see the caller)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            pdf = pdf.assign(df=pdf["term"].map(hot_df).to_numpy(np.int64))
             # vectorized over the batch: bulk-decode the transit
             # buffers once, compute per-posting salt keys, cut at
             # (row, salt) boundaries, and re-encode the segments with one
@@ -458,7 +380,6 @@ def _salt_split(range_size: int, hot_df: dict[str, int]):
                     "pid": pdf["pid"].to_numpy()[seg_row],
                     "term": pdf["term"].to_numpy(object)[seg_row],
                     "salt": salt_f[starts].astype(np.int32),
-                    "df": pdf["df"].to_numpy()[seg_row],
                     "n": np.diff(np.append(starts, len(ids_f))).astype(
                         np.int32
                     ),
@@ -477,11 +398,23 @@ def _salt_split(range_size: int, hot_df: dict[str, int]):
     return fn
 
 
-def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float, bucket_acc):
+def _merge_compress(
+    cfg: IndexConfig, n_docs: int, avgdl: float, hot_df: dict[str, int],
+    bucket_acc,
+):
     """Merge + compress over a (term, salt)-sorted partition stream: merge-
     sort each group's partials, block-chunk, delta + varint/FOR compress
     (analytic per-block codec choice, one vectorized encode pass per
     stream), per-block max BM25 score (B8/B13).
+
+    A group's df comes from the closure-shipped `hot_df` ({term: df}, only
+    terms with df >= the hot threshold) when its term is hot, and is its own
+    merged posting count otherwise (a cold term's single salt-0 group holds
+    ALL its postings, one per containing doc). The hot set is provably tiny
+    (df >= N/n_doc_ranges bounds it to ~n_doc_ranges*avgdl terms —
+    thousands at any corpus size), so shipping it beats a full-vocabulary
+    `df` join, which would force the ENTIRE transit-encoded partials
+    payload through an extra exchange (guide §2.3/§2.4).
 
     Runs as mapInPandas over `repartition(term, salt).sortWithinPartitions`
     rather than groupBy().applyInPandas: the vocabulary has millions of
@@ -544,11 +477,9 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float, bucket_acc):
         starts = np.flatnonzero(pos_in_grp % bs == 0)
         ends = np.append(starts[1:], len(ids))
         blk_grp = gsorted[starts]
-        # per-group scoring inputs: hot groups carry their true df from the
-        # closure-shipped hot set; cold groups (df=0 sentinel) recover it
-        # exactly as their own merged posting count (a cold term's single
-        # salt-0 group holds ALL its postings, one per containing doc)
-        df_g = pdf["df"].to_numpy(np.int64)[grp_first_row]
+        # per-group df: the hot set's, else the group's posting count
+        term_g = terms_arr[grp_first_row]
+        df_g = np.fromiter((hot_df.get(t, 0) for t in term_g), np.int64, n_grp)
         df_g = np.where(df_g > 0, df_g, grp_counts)
         contrib = idf(n_docs, df_g)[gsorted] * bm25_tf_norm(
             tfs, dls, k1, b, avgdl
@@ -561,7 +492,6 @@ def _merge_compress(cfg: IndexConfig, n_docs: int, avgdl: float, bucket_acc):
         ct, tbufs = encode_blocks(tfs.astype(np.uint64), starts)
         cd, dbufs = encode_blocks(dls.astype(np.uint64), starts)
         pbufs = varint_encode_rows(pos_g, run_dst[starts])
-        term_g = terms_arr[grp_first_row]
         bucket = _term_bucket(term_g, n_buckets)[blk_grp]
         enc = [len(i) + len(t) + len(d) for i, t, d in zip(ebufs, tbufs, dbufs)]
         per_bucket = np.zeros((n_buckets, 3), np.int64)
@@ -684,6 +614,47 @@ def docs_changed_between(
     )
 
 
+def _spimi_input(
+    webpages: DataFrame,
+    cfg: IndexConfig,
+    dedup_latest: bool = True,
+    use_html_fallback: bool = True,
+) -> DataFrame:
+    """The fused SPIMI pass's input, the build's single corpus shuffle:
+    rows partitioned by pid = crc32(url) % P and sorted so the newest crawl
+    of each url comes first; _fused_spimi then dedups, ranks and builds
+    SPIMI partials in one pass."""
+    P = cfg.n_build_partitions
+    pre = webpages.withColumn(
+        "pid", (F.crc32(F.encode(F.col("url"), "utf-8")) % P).cast("int")
+    )
+    if use_html_fallback and "html" in pre.columns:
+        # ship the html payload only for rows that need the fallback —
+        # extraction uses html iff text is null, and moving the (dominant)
+        # binary column through Arrow for every row costs more than the
+        # whole tokenize stage
+        pre = pre.withColumn(
+            "html", F.when(F.col("text").isNull(), F.col("html"))
+        )
+    input_cols = ["pid", "url", "text"]
+    opt_cols = ("warc_ts", "html", "lang") if use_html_fallback else ("warc_ts", "lang")
+    for opt in opt_cols:
+        if opt in pre.columns:
+            input_cols.append(opt)
+    sort_keys = [F.asc("url")]
+    if dedup_latest and "warc_ts" in pre.columns:
+        # same full tie-break chain as latest_crawl (content hash last) so
+        # the kept row is deterministic for any input row set
+        sort_keys += [
+            F.desc("warc_ts"), F.desc(F.length("text")), F.desc(F.md5("text"))
+        ]
+    return (
+        pre.select(*input_cols)
+        .repartition(P, "pid")
+        .sortWithinPartitions(*sort_keys)
+    )
+
+
 def build_index(
     spark: SparkSession,
     webpages: DataFrame,
@@ -709,38 +680,7 @@ def build_index(
     t0 = time.time()
     phases: dict[str, float] = {}
 
-    # single corpus shuffle: partition by pid, sort so the newest crawl of
-    # each url comes first; the fused mapInPandas then dedups, ranks and
-    # builds SPIMI partials in one pass (see _fused_spimi docstring).
-    P = cfg.n_build_partitions
-    pre = webpages.withColumn(
-        "pid", (F.crc32(F.encode(F.col("url"), "utf-8")) % P).cast("int")
-    )
-    if use_html_fallback and "html" in pre.columns:
-        # ship the html payload only for rows that need the fallback —
-        # extraction uses html iff text is null, and moving the (dominant)
-        # binary column through Arrow for every row costs more than the
-        # whole tokenize stage
-        pre = pre.withColumn(
-            "html", F.when(F.col("text").isNull(), F.col("html"))
-        )
-    input_cols = ["pid", "url", "text"]
-    opt_cols = ("warc_ts", "html", "lang") if use_html_fallback else ("warc_ts", "lang")
-    for opt in opt_cols:
-        if opt in pre.columns:
-            input_cols.append(opt)
-    sort_keys = [F.asc("url")]
-    if dedup_latest and "warc_ts" in pre.columns:
-        # same full tie-break chain as latest_crawl (content hash last) so
-        # the kept row is deterministic for any input row set
-        sort_keys += [
-            F.desc("warc_ts"), F.desc(F.length("text")), F.desc(F.md5("text"))
-        ]
-    spimi_input = (
-        pre.select(*input_cols)
-        .repartition(P, "pid")
-        .sortWithinPartitions(*sort_keys)
-    )
+    spimi_input = _spimi_input(webpages, cfg, dedup_latest, use_html_fallback)
     partials_raw = spimi_input.mapInPandas(
         _fused_spimi(cfg, dedup_latest), schema=PARTIALS_SCHEMA
     )
@@ -752,32 +692,18 @@ def build_index(
         partials = partials_raw
     partials = partials.persist()
 
-    doc_rows = partials.filter(F.col("term") == DOC_PSEUDO_TERM)
-    term_partials = partials.filter(
-        F.col("term") != DOC_PSEUDO_TERM
-    ).select(
-        "pid", "term", "n", "tf_sum", "ids_enc", "tfs_enc", "dls_enc", "pos_enc"
-    )
+    term_partials = partials.filter(F.col("term") != DOC_PSEUDO_TERM)
 
-    # --- stage: stats (B5/B6): docmap rides the pseudo rows -----------------
-    docs = doc_rows.select(
-        F.col("pid"),
-        F.explode(F.arrays_zip("doc_ids", "dls", "urls", "langs", "fps")).alias("z"),
-    ).select(
-        "pid",
-        F.col("z.doc_ids").alias("doc_id"),
-        F.col("z.dls").cast("int").alias("dl"),
-        F.col("z.urls").alias("url"),
-        F.col("z.langs").alias("lang"),
-        F.col("z.fps").alias("text_fp"),
+    # --- stage: stats (B5/B6): one docmap row per doc ---------------------
+    docs = partials.filter(F.col("term") == DOC_PSEUDO_TERM).select(
+        "pid", "doc_id", "dl", "url", "lang", F.col("fp").alias("text_fp")
     )
     # per-pid lineage (B15) and the global stats in one pass over the
-    # partials (pseudo rows carry n = tf_sum = 0): a doc's tfs sum to its dl
+    # partials (docmap rows carry n = tf_sum = 0): a doc's tfs sum to its dl
     # and both sums are exact integers, so n_tokens / n_docs is bit-equal to
     # avg(dl) over the docs table
     pid_metrics = [r.asDict() for r in sorted(partials.groupBy("pid").agg(
-        F.sum(F.when(F.col("term") == DOC_PSEUDO_TERM, F.size("doc_ids")))
-        .alias("n_docs"),
+        F.count(F.when(F.col("term") == DOC_PSEUDO_TERM, 1)).alias("n_docs"),
         F.sum("n").alias("n_postings"),
         F.sum("tf_sum").alias("n_tokens"),
     ).collect())]
@@ -796,7 +722,7 @@ def build_index(
     # --- stage: salted merge + compress (B7/B8) -----------------------------
     # The hot-term set (df >= max(min_hot_df, N/n_doc_ranges)) is bounded by
     # ~n_doc_ranges * avgdl terms at ANY corpus size, so it is collected
-    # driver-side (<= a few thousand tiny rows) and shipped in the salt
+    # driver-side (<= a few thousand tiny rows) and shipped in the merge
     # closure — replacing the previous full-vocabulary df JOIN, which forced
     # the entire transit-encoded partials payload through an extra exchange
     # (guide §2.3: ship a few KB of metadata instead of re-shuffling the
@@ -813,7 +739,6 @@ def build_index(
             T.StructField("pid", T.IntegerType()),
             T.StructField("term", T.StringType()),
             T.StructField("salt", T.IntegerType()),
-            T.StructField("df", T.LongType()),
             T.StructField("n", T.IntegerType()),
             T.StructField("ids_enc", T.BinaryType()),
             T.StructField("tfs_enc", T.BinaryType()),
@@ -827,21 +752,14 @@ def build_index(
     # (guide §4.1: pass only the rows/columns the function needs). The hot
     # set is small enough for an isin predicate (thousands of terms max).
     hot_terms = list(hot_df)
-    cold_salted = (
-        term_partials.filter(~F.col("term").isin(hot_terms))
-        .select(
-            "pid", "term", F.lit(0).cast("int").alias("salt"),
-            F.lit(0).cast("long").alias("df"), "n",
-            "ids_enc", "tfs_enc", "dls_enc", "pos_enc",
-        )
+    is_hot = F.col("term").isin(hot_terms)
+    salt0 = term_partials.select(
+        "pid", "term", F.lit(0).cast("int").alias("salt"), "n",
+        "ids_enc", "tfs_enc", "dls_enc", "pos_enc",
     )
-    hot_salted = (
-        term_partials.filter(F.col("term").isin(hot_terms))
-        .select(
-            "pid", "term", F.lit(0).cast("int").alias("salt"), "n",
-            "ids_enc", "tfs_enc", "dls_enc", "pos_enc",
-        )
-        .mapInPandas(_salt_split(range_size, hot_df), schema=salt_schema)
+    cold_salted = salt0.filter(~is_hot)
+    hot_salted = salt0.filter(is_hot).mapInPandas(
+        _salt_split(range_size), schema=salt_schema
     )
     salted = cold_salted.unionByName(hot_salted) if hot_terms else cold_salted
 
@@ -867,7 +785,7 @@ def build_index(
         .sortWithinPartitions("term", "salt")
         .drop("bucket")
         .mapInPandas(
-            _merge_compress(cfg, n_docs, avgdl, bucket_acc), schema=POSTINGS_SCHEMA
+            _merge_compress(cfg, n_docs, avgdl, hot_df, bucket_acc), schema=POSTINGS_SCHEMA
         )
     )
 
@@ -1042,8 +960,4 @@ def _checkpointed_partials(
         os.replace(tmp, manifest_path)
     out = spark.read.parquet(ckpt_path)
     # partitionBy moved pid to a partition column; restore column order/types
-    return out.select(
-        F.col("pid").cast("int"), "term", "n", "tf_sum",
-        "ids_enc", "tfs_enc", "dls_enc", "pos_enc",
-        "doc_ids", "dls", "urls", "langs", "fps",
-    )
+    return out.select(F.col("pid").cast("int"), *PARTIALS_SCHEMA.fieldNames()[1:])

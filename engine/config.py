@@ -48,10 +48,9 @@ class IndexConfig:
     # fraction of executor memory at cluster scale). Float so tests can use
     # sub-MB budgets; ~20 bytes per token occurrence across the four
     # accumulated streams (int32 code + int64 doc + int32 dl + int32 pid).
-    # The budget also bounds the per-pid docmap accumulators (url/dl/lang/
-    # fingerprint arrays, ~32 B/doc counted as 2 cells): both families are
-    # drained at every flush, so task memory is bounded even on a
-    # partition of pathologically many tiny docs.
+    # The posting accumulators are the only SPIMI state held across input
+    # batches: each doc's docmap row (doc_id, dl, url, lang, fingerprint)
+    # leaves with its batch, so no budget is needed for it.
     spimi_flush_mb: float = 0
 
     # Auto-expire old index snapshots after each publish: keep the newest

@@ -606,7 +606,6 @@ def query_topk(
     mode: str = "wand",
     conjunctive: bool = False,
     tiebreak: str = "doc_id",
-    shard_target: int | None = None,
     doc_filter: np.ndarray | None = None,
 ) -> DataFrame:
     """Top-k BM25. Returns (doc_id, url, score) ordered by
@@ -617,11 +616,8 @@ def query_topk(
     the kth score's whole tie group, which the top-k cut keeps, so WAND
     runs no second pass for it. k=0 returns no rows without running a
     Spark job; an unknown mode or tiebreak, or k < 0, raises ValueError.
-    shard_target overrides WAND_SHARD_TARGET (postings per WAND shard) —
-    the scorer is exact for any doc-range partitioning, so this only moves
-    the fan-out/latency trade-off; the bench uses it to exercise
-    fan-out at small corpus sizes. WAND runs one Spark job at any shard
-    count, its collect included.
+    WAND runs one Spark job at any shard count (WAND_SHARD_TARGET postings
+    per shard), its collect included.
     doc_filter (any mode): sorted int64 array of allowed doc ids — the
     top-k is cut over allowed docs only, with unchanged scores, and WAND
     skips allowed-empty intervals before any block decode (B19;
@@ -632,14 +628,13 @@ def query_topk(
         raise ValueError(f"tiebreak must be 'doc_id' or 'url', got {tiebreak!r}")
     handle = open_index(index) if isinstance(index, str) else index
     return _topk(spark, handle, parse_query(query), k, mode, conjunctive,
-                 tiebreak, shard_target, doc_filter)
+                 tiebreak, doc_filter)
 
 
 def _topk(
     spark: SparkSession, handle: IndexHandle, all_terms: list[str], k: int,
     mode: str, conjunctive: bool, tiebreak: str,
-    shard_target: int | None = None, doc_filter: np.ndarray | None = None,
-    phrase: list[str] | None = None,
+    doc_filter: np.ndarray | None = None, phrase: list[str] | None = None,
 ) -> DataFrame:
     """query_topk over checked arguments and the query's unique terms.
     `phrase` (the ordered tokens, with conjunctive and mode "local", "auto"
@@ -692,7 +687,7 @@ def _topk(
         # while stopword-grade queries fan
         # out to up to n_doc_ranges shards (~TARGET postings each — seconds
         # of vectorized kernel work per task at 10^12 docs, bounded memory).
-        n_groups, width = _shard_layout(handle, st, terms, shard_target)
+        n_groups, width = _shard_layout(handle, st, terms)
         kernel = _wand_shard_scorer(
             st, handle.stats["k1"], handle.stats["b"], handle.stats["avgdl"],
             k, conjunctive, len(terms), allowed=allowed, phrase=phrase,
@@ -738,30 +733,24 @@ LOCAL_MAX_POSTINGS = 500_000
 
 
 def _shard_layout(
-    handle: IndexHandle, st: dict, terms: list[str],
-    shard_target: int | None = None,
+    handle: IndexHandle, st: dict, terms: list[str]
 ) -> tuple[int, int]:
     """The ONE (total_df, n_doc_ranges) → (shard count, shard width in doc
     ids) formula, shared by the WAND query path (phrases included) and
     wand_shard_count's report so they can never drift (ADVICE r3). Terms
     absent from the stats table contribute no postings."""
-    tgt = shard_target or WAND_SHARD_TARGET
     total_df = sum(st[t]["df"] for t in terms if t in st)
     n_ranges = handle.stats.get("n_doc_ranges", 32)
-    n_groups = max(1, min(n_ranges, -(-total_df // tgt)))
+    n_groups = max(1, min(n_ranges, -(-total_df // WAND_SHARD_TARGET)))
     return n_groups, handle.stats["range_size"] * (-(-n_ranges // n_groups))
 
 
-def wand_shard_count(
-    handle: IndexHandle, query: str, shard_target: int | None = None
-) -> int:
+def wand_shard_count(handle: IndexHandle, query: str) -> int:
     """How many doc-range shards the adaptive WAND path fans this query out
     to (all run in its one sweep job). Exposed so the bench can report the
     salted-shard fan-out per query per round (BENCH_r{N}.json)."""
     terms = parse_query(query)
-    return _shard_layout(
-        handle, _local_term_stats(handle, terms), terms, shard_target
-    )[0]
+    return _shard_layout(handle, _local_term_stats(handle, terms), terms)[0]
 
 
 def local_scored_arrays(

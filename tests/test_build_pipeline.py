@@ -339,6 +339,27 @@ def test_facet_counts(spark, built_index):
     assert set(facets) == {"de", "en", "es", "fr", "zh"}
 
 
+def test_docs_table_content_pinned(spark, built_index):
+    """The whole docs table of the sf0.001 index: its schema, and a sha256
+    over its (doc_id, url, dl, lang, text_fp, pid) rows sorted by doc_id."""
+    import hashlib
+
+    docs = spark.read.parquet(built_index.docs_path)
+    assert [(f.name, f.dataType.simpleString()) for f in docs.schema] == [
+        ("pid", "int"), ("doc_id", "bigint"), ("dl", "int"),
+        ("url", "string"), ("lang", "string"), ("text_fp", "bigint"),
+    ]
+    rows = sorted(
+        tuple(r) for r in docs.select(
+            "doc_id", "url", "dl", "lang", "text_fp", "pid"
+        ).collect()
+    )
+    assert len(rows) == 500
+    assert hashlib.sha256(json.dumps(rows).encode()).hexdigest() == (
+        "3a5316de25d002672f761a45c0f57c6117c2c533e0123519299783922d36fe04"
+    )
+
+
 def test_bucket_byte_metrics(spark, built_index, index_cfg):
     """B15: per-write-task byte metrics in stats.json, one row per term
     bucket, equal what the written postings/bucket=b partition holds: its
@@ -531,42 +552,58 @@ def test_spimi_flush_emits_multiple_partial_frames(index_cfg):
     assert max(seen.values()) > 1
 
 
-def test_spimi_flush_spills_docmap_accumulators(index_cfg):
-    """r4 verdict "What's wrong #4": the flush budget must bound the per-pid
-    docmap arrays too, not just the posting accumulators. A sub-MB budget
-    over a many-tiny-docs stream emits >1 pseudo (term="") docmap row per
-    pid, and the concatenated docmap is identical to the unflushed one
-    (doc ids keep ascending across flushes via rank_ctr)."""
+def test_spimi_yields_each_batch_docmap_before_next_pull(index_cfg):
+    """The SPIMI kernel keeps no docmap state across batches: every batch's
+    docmap rows (term="", one per doc) are yielded before the next batch is
+    pulled, with no flush budget and with a sub-MB one, and the docmap rows
+    are the same under both budgets (doc ids keep ascending per pid across
+    batches and flushes)."""
     import dataclasses
 
-    import numpy as np
     import pandas as pd
 
     from engine.build import _fused_spimi
 
-    def batches():
-        return [
-            pd.DataFrame(
-                {
-                    "url": [f"https://x.test/{i}/{j}" for j in range(50)],
-                    "pid": [0] * 50,
-                    "text": ["tok"] * 50,  # 1 token per doc: docmap-dominated
-                    "lang": ["en"] * 50,
+    batches = [
+        pd.DataFrame(
+            {
+                "url": [f"https://x.test/{i}/{j:02d}" for j in range(50)],
+                "pid": [j % 3 for j in range(50)],
+                "text": [f"tok{j % 5} common" for j in range(50)],
+                "lang": ["en"] * 50,
+            }
+        )
+        for i in range(6)
+    ]
+    docmap_cols = ["pid", "doc_id", "dl", "url", "lang", "fp"]
+
+    def run(cfg):
+        pulls = []
+
+        def source():
+            for i, b in enumerate(batches):
+                pulls.append(i)
+                yield b
+
+        docmap, n_posting_frames = [], 0
+        for out in _fused_spimi(cfg, dedup=False)(source()):
+            rows = out[out["term"] == ""]
+            n_posting_frames += len(rows) < len(out)
+            if len(rows):
+                # every docmap row comes from the batch pulled last
+                assert {u.split("/")[3] for u in rows["url"]} == {
+                    str(pulls[-1])
                 }
-            )
-            for i in range(6)
-        ]
+                assert rows["ids_enc"].isna().all()
+                docmap.append(rows[docmap_cols])
+        assert len(pulls) == len(batches)
+        rows = pd.concat(docmap, ignore_index=True)
+        assert rows["url"].tolist() == [u for b in batches for u in b["url"]]
+        return rows, n_posting_frames
 
-    def pseudo(cfg):
-        outs = list(_fused_spimi(cfg, dedup=False)(iter(batches())))
-        rows = pd.concat(outs, ignore_index=True)
-        return rows[rows["term"] == ""].reset_index(drop=True)
-
-    pa = pseudo(index_cfg)  # no flush budget
-    pb = pseudo(dataclasses.replace(index_cfg, spimi_flush_mb=0.001))
-    assert len(pa) == 1
-    assert len(pb) > 1  # docmap spilled mid-stream
-    for col in ("doc_ids", "dls", "urls", "fps"):
-        ca = np.concatenate([np.asarray(x) for x in pa[col]])
-        cb = np.concatenate([np.asarray(x) for x in pb[col]])
-        assert ca.tolist() == cb.tolist(), col
+    plain, n_plain = run(index_cfg)  # no flush budget
+    spilled, n_spilled = run(dataclasses.replace(index_cfg, spimi_flush_mb=0.001))
+    assert n_plain == 1 and n_spilled > 1  # the budget did flush
+    pd.testing.assert_frame_equal(plain, spilled)
+    for _, g in plain.groupby("pid"):
+        assert g["doc_id"].is_monotonic_increasing
